@@ -79,16 +79,17 @@ object Bench {
       .withColumn("lat", ((col("id") * 9973 + 12345) % 18000).cast("double") / lit(100.0) - lit(90.0))
       .withColumn("lon", ((col("id") * 31337 + 54321) % 36000).cast("double") / lit(100.0) - lit(180.0))
     val tiled = Tiling.tileAssign(pts, "lat", "lon", 8)
-    val joined = graft.plans.S2PipJoin.pipJoinExec(tiled, "lat", "lon", SparkEntryRegions.rects)
+    val joined = SpatialJoin.pipJoin(tiled, "lat", "lon", SparkEntryRegions.rects)
     val r = joined.agg(count(lit(1)), sum(length(col("tile_token")))).head()
     require(!r.isNullAt(1), "token sum must be forced")
     r.getLong(0)
   }
 
   /** Skew variant: 30% of rows land on one hot city tile (the north rule's
-    * "skewed hot cells" case). The covering join broadcasts its build side
-    * and never shuffles the big side by cell, so throughput should hold
-    * within noise of the uniform case; measuring proves it. */
+    * "skewed hot cells" case). The covering join probes interval tables
+    * shipped with each task and never shuffles the big side, so
+    * throughput should hold within noise of the uniform case; measuring
+    * proves it. */
   private def skewedJob(spark: SparkSession, nRows: Long): Long = {
     val cores = spark.sparkContext.defaultParallelism
     val pts = spark.range(nRows, 2 * nRows, 1, cores * 2)
@@ -97,7 +98,7 @@ object Bench {
       .withColumn("lon", when(col("id") % 10 < 3, lit(16.37))
         .otherwise(((col("id") * 31337 + 54321) % 36000).cast("double") / lit(100.0) - lit(180.0)))
     val tiled = Tiling.tileAssign(pts, "lat", "lon", 8)
-    val joined = graft.plans.S2PipJoin.pipJoinExec(tiled, "lat", "lon", SparkEntryRegions.rects)
+    val joined = SpatialJoin.pipJoin(tiled, "lat", "lon", SparkEntryRegions.rects)
     tiled.agg(sum(length(col("tile_token")))).collect()
     joined.count()
   }

@@ -22,7 +22,8 @@ private[graft] object CatalogSpatial {
       SpatialJoin.pipJoin(points(s, dir), "lat", "lon", rectRegions)
         .select("region_id", "o_orderkey")),
 
-    // same join through the custom physical operator (S2PipJoinExec)
+    // q_pip_rect through the S2PipJoin.pipJoinExec entry point: both run the
+    // one covering operator (S2PipJoinExec), so their answers must match
     "q_pip_rect_exec" -> ((s, dir) =>
       graft.plans.S2PipJoin.pipJoinExec(points(s, dir), "lat", "lon", rectRegions)
         .select("region_id", "o_orderkey")),

@@ -367,8 +367,7 @@ object Sequences {
     * vectors in order from depth 0 — per-key state is one tiny vector
     * per OCCUPIED bucket, never the events. Bucket width is
     * TASK-SIZING: pass 1 collects one bucket's rows into a list, so
-    * choose `bucketFor` to keep buckets in the ~100k-row range
-    * (ExecBench runs a 20M-row single key over 100k-row buckets; the
+    * choose `bucketFor` to keep buckets in the ~100k-row range (the
     * window-based [[topPathsBucketed]]/[[transitionCountsBucketed]]
     * only SORT per bucket and tolerate much larger ones). */
   def funnelDepthsBucketed(events: DataFrame, keyCol: String, tsCol: String,

@@ -4,48 +4,45 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.s2functions._
+import graft.plans.{CoverIntervals, S2PipJoin}
 import graft.s2._
 
 /** The covering point-in-region join: the engine's flagship operator.
   *
   * Plan shape (designed for a 10^12-row points table on a large cluster):
   *
-  *  1. Driver-side planning: each query region is covered by a small
+  *  1. A lat band (plus a lng band unless the regions' union spans every
+  *     longitude) from the regions' combined rect bound filters the points
+  *     side: plain comparisons Catalyst pushes into the parquet scan.
+  *  2. Driver-side planning: each query region is covered by a small
   *     (<= maxCells) set of disjoint cells via [[S2RegionCoverer]]; cells the
   *     region fully contains are flagged `interior` (reference analogue:
   *     `GetCovering`/`GetInteriorCovering`, `S2RegionCoverer.cs:214-282`).
-  *  2. The tiny (region_id, cell, level, interior) table is **broadcast**.
-  *  3. The points side computes its leaf cell once per row (codegen'd
-  *     `s2_cell_id`), then produces one ancestor per *distinct covering
-  *     level* (a handful) and equi-joins on the ancestor — a
-  *     BroadcastHashJoin with |levels| probes per row, never a shuffle of
-  *     the big side and never a nested-loop range join.
+  *     Each region's cells become sorted disjoint Hilbert intervals shipped
+  *     in the task closure ([[graft.plans.CoverIntervals]]).
+  *  3. [[graft.plans.S2PipJoinExec]] computes each row's leaf cell once and
+  *     binary-searches each region's intervals: no row is multiplied, no
+  *     hash table is built and the big side never shuffles.
   *  4. Points hitting an `interior` cell are accepted outright (the
   *     reference's interior-covering fast path); only boundary-cell hits run
-  *     the exact refinement predicate (`S2Polygon.Contains`,
-  *     `S2Polygon.cs:944-964`) against broadcast region objects.
-  *
-  * A global latitude band pre-filter derived from the regions' combined
-  * rect bound is pushed into the parquet scan for row-group pruning.
+  *     the exact refinement ([[regionContains]], e.g. `S2Polygon.Contains`,
+  *     `S2Polygon.cs:944-964`).
   */
 object SpatialJoin {
 
   final case class CoverCell(regionId: String, cell: Long, level: Int, interior: Boolean)
 
   /** Driver-side planning: region -> disjoint covering cells with interior
-    * flags, quantized to the given level set.
+    * flags, at levels from [[DefaultCoverLevels]].
     *
-    * Quantization matters at scale: the probe side explodes once per
-    * *distinct covering level*, so an unconstrained covering (levels 3..12)
-    * would multiply the 10^12-row side 8-10x. Re-expanding each covering
-    * cell to the next allowed level keeps the explode factor at
-    * |quantizeLevels| while only growing the (tiny, broadcast) build side;
+    * Each covering cell is re-expanded to the next level of that set;
     * children that don't intersect the region are pruned and children fully
-    * inside it upgrade to the interior fast path. */
-  def coverRegions(regions: Seq[(String, S2Region)], maxCells: Int,
-                   quantizeLevels: Seq[Int] = DefaultCoverLevels): Seq[CoverCell] = {
-    val levels = quantizeLevels.sorted
-    require(levels.nonEmpty)
+    * inside it upgrade to the interior fast path, so fewer points reach the
+    * exact refinement. The interval probe costs one binary search per region
+    * whatever the levels, so re-expansion only grows the per-region
+    * interval table. */
+  def coverRegions(regions: Seq[(String, S2Region)], maxCells: Int): Seq[CoverCell] = {
+    val levels = DefaultCoverLevels
     regions.flatMap { case (regionId, region) =>
       val coverer = new S2RegionCoverer().setMaxCells(maxCells).setMaxLevel(levels.max)
       val covering = coverer.getCoveringUnion(region)
@@ -71,7 +68,7 @@ object SpatialJoin {
     }
   }
 
-  /** Covering levels used by default: coarse / city / block granularity. */
+  /** Covering levels, ascending: coarse / city / block granularity. */
   val DefaultCoverLevels: Seq[Int] = Seq(4, 8, 12)
 
   /** Exact containment of a (lat, lon) point in a region, matching the
@@ -99,70 +96,40 @@ object SpatialJoin {
               latCol: String,
               lonCol: String,
               regions: Seq[(String, S2Region)],
-              maxCells: Int = 64,
-              prefilter: Boolean = true): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-
+              maxCells: Int = 64): DataFrame = {
     val cover = coverRegions(regions, maxCells)
     require(cover.nonEmpty, "regions produced an empty covering")
-    val levels = cover.map(_.level).distinct.sorted
 
-    val coverDf = cover.toDF()
-      .withColumnRenamed("regionId", "__region_id")
-      .withColumnRenamed("cell", "__cover_cell")
-      .withColumnRenamed("interior", "__interior")
-      .drop("level")
-
-    // Broadcast region objects for the exact boundary refinement.
-    val regionMap = spark.sparkContext.broadcast(regions.toMap)
-    val refineUdf = udf { (regionId: String, lat: Double, lon: Double) =>
-      regionContains(regionMap.value(regionId), lat, lon)
-    }
-
-    // Lat band + (when not antimeridian-wrapping) lng band from the union of
-    // region bounds: plain comparisons Catalyst pushes into the scan.
+    // Lat band + (unless the union spans every longitude) lng band from the
+    // union of region bounds: plain comparisons Catalyst pushes into the scan.
+    val bound = regions.map(_._2.rectBound).reduce(_ union _)
     val pre: DataFrame =
-      if (!prefilter) points
+      if (bound.lat.isEmpty) points.limit(0)
       else {
-        val bound = regions.map(_._2.rectBound).reduce(_ union _)
-        if (bound.lat.isEmpty) points.limit(0)
-        else {
-          val latLo = math.toDegrees(bound.lat.lo)
-          val latHi = math.toDegrees(bound.lat.hi)
-          val latPred = col(latCol) >= latLo && col(latCol) <= latHi
-          val pred =
-            if (bound.lng.isFull) latPred
-            else {
-              val lngLo = math.toDegrees(bound.lng.lo)
-              val lngHi = math.toDegrees(bound.lng.hi)
-              if (bound.lng.isInverted)
-                latPred && (col(lonCol) >= lngLo || col(lonCol) <= lngHi)
-              else
-                latPred && col(lonCol) >= lngLo && col(lonCol) <= lngHi
-            }
-          points.where(pred)
-        }
+        val latLo = math.toDegrees(bound.lat.lo)
+        val latHi = math.toDegrees(bound.lat.hi)
+        val latPred = col(latCol) >= latLo && col(latCol) <= latHi
+        val pred =
+          if (bound.lng.isFull) latPred
+          else {
+            val lngLo = math.toDegrees(bound.lng.lo)
+            val lngHi = math.toDegrees(bound.lng.hi)
+            if (bound.lng.isInverted)
+              latPred && (col(lonCol) >= lngLo || col(lonCol) <= lngHi)
+            else
+              latPred && col(lonCol) >= lngLo && col(lonCol) <= lngHi
+          }
+        points.where(pred)
       }
-
-    val withLeaf = pre.withColumn("__leaf", s2_cell_id(col(latCol), col(lonCol)))
-    val exploded = withLeaf
-      .withColumn("__cover_cell",
-        explode(array(levels.map(l => s2_parent(col("__leaf"), l)): _*)))
-
-    exploded
-      .join(broadcast(coverDf), "__cover_cell")
-      .where(col("__interior") || refineUdf(col("__region_id"), col(latCol), col(lonCol)))
-      .drop("__cover_cell", "__leaf", "__interior")
-      .withColumnRenamed("__region_id", "region_id")
+    S2PipJoin.plan(pre, latCol, lonCol, new CoverIntervals(cover, regions))
   }
 
   /** Doughnut (annulus) join: points with innerRadius < distance <= outer
     * radius of each query center. The reference's `DoughnutCoverage`
-    * include/exclude cell sets (`OpenSkyS2.cs:192-198`) become a broadcast
-    * covering join (include) with an interior fast-path on both sides and an
-    * exact haversine refinement; the exclude set's interior cells are the
-    * anti-join fast path.
+    * include/exclude cell sets (`OpenSkyS2.cs:192-198`) become the
+    * covering join [[pipJoin]] (include) with an interior fast-path on
+    * both sides and an exact haversine refinement; the exclude set's
+    * interior cells are the anti-join fast path.
     *
     * @param queries (query_id, latDeg, lonDeg, outerMeters, innerMeters)
     */
@@ -201,7 +168,7 @@ object SpatialJoin {
     * is emitted exactly once (the b-side is keyed by its unique own cell).
     * Shuffle volume: <= 9x (id, lat, lon) on one side — never a pair blowup
     * beyond genuine neighborhood density; skewed hot cells are AQE's
-    * skew-join case, same as the flagship join.
+    * skew-join case.
     *
     * Radius must not exceed the level-0 min width (~0.47 rad ~ 3000 km):
     * beyond that, opposite cube faces are non-adjacent and completeness

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -13,23 +13,21 @@ import graft.operators.SpatialJoin
 import graft.operators.SpatialJoin.CoverCell
 import graft.s2.{S2CellId, S2Region}
 
-/** Whole-operator form of the covering PIP join: a custom logical node,
-  * planning strategy and physical operator (SURVEY.md section 7.3 step c).
+/** The physical form of the covering PIP join ([[SpatialJoin.pipJoin]]):
+  * a custom logical node, planning strategy and physical operator
+  * (SURVEY.md section 7.3 step c).
   *
   * Physical semantics: for each input row, compute the leaf cell once and
-  * binary-search a broadcast array of disjoint-per-region Hilbert intervals
+  * binary-search the disjoint-per-region Hilbert intervals
   * [rangeMin, rangeMax] (unsigned); interior hits emit immediately, boundary
-  * hits run the exact refinement. Compared to the DataFrame composition
-  * (per-level ancestor explode + BroadcastHashJoin) this multiplies no rows
-  * and probes once per overlapping interval, at the cost of stepping outside
-  * whole-stage codegen — the engine exposes both and the flagship uses the
-  * declarative one.
+  * hits run the exact refinement. No row is multiplied and each region is
+  * probed once, at the cost of stepping outside whole-stage codegen. Every
+  * PIP join over a driver-side region list runs this operator.
   */
 case class S2PipJoinPlan(child: LogicalPlan,
-                         regions: Seq[(String, S2Region)],
+                         intervals: CoverIntervals,
                          latExpr: Expression,
                          lonExpr: Expression,
-                         maxCells: Int,
                          // constructor parameter so plan copies keep the same
                          // expression id (a fresh id per copy breaks binding)
                          regionIdAttr: Attribute) extends UnaryNode {
@@ -96,13 +94,14 @@ final class CoverIntervals(cover: Seq[CoverCell], regions: Seq[(String, S2Region
 
   def regionIndexAt(m: Int): Int = m & Int.MaxValue
   def isInterior(m: Int): Boolean = m < 0
+
+  override def toString: String = s"${regionIds.length} regions, ${starts.map(_.length).sum} cells"
 }
 
 case class S2PipJoinExec(child: SparkPlan,
-                         regions: Seq[(String, S2Region)],
+                         intervals: CoverIntervals,
                          latExpr: Expression,
                          lonExpr: Expression,
-                         maxCells: Int,
                          output: Seq[Attribute]) extends UnaryExecNode {
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
@@ -111,8 +110,7 @@ case class S2PipJoinExec(child: SparkPlan,
     copy(child = newChild)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val cover = SpatialJoin.coverRegions(regions, maxCells)
-    val intervals = new CoverIntervals(cover, regions)
+    val intervals = this.intervals
     val lat = latExpr
     val lon = lonExpr
     val childOutput = child.output
@@ -158,33 +156,38 @@ case class S2PipJoinExec(child: SparkPlan,
   }
 }
 
-/** Plans [[S2PipJoinPlan]] into [[S2PipJoinExec]]; injected via
-  * [[S2Extensions]] or `spark.experimental.extraStrategies`. */
+/** Plans [[S2PipJoinPlan]] into [[S2PipJoinExec]]; registered on the
+  * session's `spark.experimental.extraStrategies` by [[S2PipJoin.plan]]. */
 object S2PipJoinStrategy extends SparkStrategy {
-  import org.apache.spark.sql.execution.SparkPlan
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: S2PipJoinPlan =>
-      S2PipJoinExec(planLater(p.child), p.regions, p.latExpr, p.lonExpr, p.maxCells, p.output) :: Nil
+      S2PipJoinExec(planLater(p.child), p.intervals, p.latExpr, p.lonExpr, p.output) :: Nil
     case _ => Nil
   }
 }
 
 object S2PipJoin {
-  /** DataFrame API over the custom operator. */
+  /** Same as [[SpatialJoin.pipJoin]], which it forwards to; kept for the
+    * callers that name the operator by this entry point (the perfbench
+    * harness). */
   def pipJoinExec(points: DataFrame, latCol: String, lonCol: String,
-                  regions: Seq[(String, S2Region)], maxCells: Int = 64): DataFrame = {
+                  regions: Seq[(String, S2Region)], maxCells: Int = 64): DataFrame =
+    SpatialJoin.pipJoin(points, latCol, lonCol, regions, maxCells)
+
+  /** `points` + `region_id` through [[S2PipJoinPlan]]. The strategy is
+    * added to the session once, so a session built without any extension
+    * config still plans the node. */
+  private[graft] def plan(points: DataFrame, latCol: String, lonCol: String,
+                          intervals: CoverIntervals): DataFrame = {
     val spark = points.sparkSession
     if (!spark.experimental.extraStrategies.contains(S2PipJoinStrategy)) {
       spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ S2PipJoinStrategy
     }
-    import org.apache.spark.sql.graft.ColumnBridge
     val logical = points.queryExecution.analyzed
-    val latAttr = logical.output.find(_.name == latCol)
-      .getOrElse(throw new IllegalArgumentException(s"no column $latCol"))
-    val lonAttr = logical.output.find(_.name == lonCol)
-      .getOrElse(throw new IllegalArgumentException(s"no column $lonCol"))
-    val plan = S2PipJoinPlan(logical, regions, latAttr, lonAttr, maxCells,
-      AttributeReference("region_id", org.apache.spark.sql.types.StringType, nullable = false)())
+    def attr(name: String) = logical.output.find(_.name == name)
+      .getOrElse(throw new IllegalArgumentException(s"no column $name"))
+    val plan = S2PipJoinPlan(logical, intervals, attr(latCol), attr(lonCol),
+      AttributeReference("region_id", StringType, nullable = false)())
     org.apache.spark.sql.graft.DatasetBridge.ofRows(spark, plan)
   }
 }
