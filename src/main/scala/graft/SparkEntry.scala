@@ -835,3 +835,34 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     CatalogSeries.oracles ++ CatalogTrajectory.oracles ++ CatalogTiling.oracles ++ CatalogSpatial.oracles ++ CatalogGraphs.oracles ++ CatalogDedup.oracles ++ CatalogEmbedding.oracles ++ CatalogText.oracles ++ CatalogCuration.oracles ++ CatalogMedia.oracles ++ CatalogStreaming.oracles
 }
+
+/** Query regions shared by SparkEntry, the catalog files and perfbench. */
+object SparkEntryRegions {
+  import graft.s2.{R1Interval, S1Interval, S2LatLngRect, S2Region}
+
+  /** THE one definition of the query-rect bounds, in degrees
+    * (id, latLo, latHi, lonLo, lonHi; lonLo > lonHi wraps the
+    * antimeridian). Every kernel region, SQL oracle branch and pure-SQL
+    * query derives from this seq so the four former hand-copies cannot
+    * drift. Bounds sit on .005 offsets so no derived grid point can land
+    * within fp distance of a boundary. */
+  val rectBounds: Seq[(String, Double, Double, Double, Double)] = Seq(
+    ("r_europe", 35.005, 60.005, -10.005, 30.005),
+    ("r_andes", -40.005, -5.005, -80.005, -60.005),
+    ("r_pacific_wrap", -15.005, 15.005, 160.005, -160.005))
+
+  /** ANSI predicate for "point (lat, lon) in the rect", wrap-aware —
+    * shared by every SQL oracle branch that mentions these rects. */
+  def rectPredSql(latLo: Double, latHi: Double, lonLo: Double, lonHi: Double): String =
+    if (lonLo <= lonHi)
+      s"lat BETWEEN $latLo AND $latHi AND lon BETWEEN $lonLo AND $lonHi"
+    else
+      s"lat BETWEEN $latLo AND $latHi AND (lon >= $lonLo OR lon <= $lonHi)"
+
+  def rects: Seq[(String, S2Region)] =
+    rectBounds.map { case (rid, latLo, latHi, lonLo, lonHi) =>
+      rid -> (S2LatLngRect(
+        R1Interval(math.toRadians(latLo), math.toRadians(latHi)),
+        S1Interval(math.toRadians(lonLo), math.toRadians(lonHi))): S2Region)
+    }
+}

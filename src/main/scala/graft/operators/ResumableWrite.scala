@@ -3,6 +3,8 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,35 +43,6 @@ object ResumableWrite {
 
   private def manifestPath(outDir: String) = Paths.get(outDir, "_lineage_manifest.jsonl")
 
-  // --- JSON string escaping (quotes/backslashes/control chars) ------------
-
-  private def esc(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case o => sb.append(o); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   /** Decode hive-style %XX path escaping (what `partitionBy` writes for
     * special characters in partition values). */
   private def unescapePathName(s: String): String = {
@@ -90,24 +63,35 @@ object ResumableWrite {
   def committedPartitions(outDir: String): Set[String] =
     readManifest(outDir).map(_.partition).toSet
 
-  private val ManifestLine =
-    ("""\{"partition":"((?:[^"\\]|\\.)*)","rows":(\d+),"bytes":(\d+),"millis":(\d+),""" +
-      """"run_id":"((?:[^"\\]|\\.)*)","input":"((?:[^"\\]|\\.)*)"\}""").r
+  /** The manifest's one JSON codec; a line with anything after its
+    * closing brace is not a record. */
+  private val Json = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** A manifest line as a record, or None unless it is a complete record:
+    * a crash mid-append leaves a torn line, and that partition pending. */
+  private def parseManifestLine(line: String): Option[PartitionRecord] = {
+    val n = try Json.readTree(line) catch { case _: JsonProcessingException => null }
+    def str(k: String) = Option(n.get(k)).filter(_.isTextual).map(_.asText)
+    def num(k: String) = Option(n.get(k))
+      .filter(v => v.isIntegralNumber && v.canConvertToLong && v.asLong >= 0).map(_.asLong)
+    if (n == null || !n.isObject) None
+    else for (part <- str("partition"); rows <- num("rows"); bytes <- num("bytes");
+              millis <- num("millis"); runId <- str("run_id"); input <- str("input"))
+      yield PartitionRecord(part, rows, bytes, millis, runId, input)
+  }
 
   def readManifest(outDir: String): Seq[PartitionRecord] = {
     val p = manifestPath(outDir)
     if (!Files.exists(p)) return Nil
     import scala.jdk.CollectionConverters._
-    Files.readAllLines(p).asScala.toSeq.collect {
-      case ManifestLine(part, rows, bytes, millis, runId, input) =>
-        PartitionRecord(unesc(part), rows.toLong, bytes.toLong, millis.toLong,
-          unesc(runId), unesc(input))
-    }
+    Files.readAllLines(p).asScala.toSeq.flatMap(parseManifestLine)
   }
 
   private def appendManifest(outDir: String, rec: PartitionRecord): Unit = {
-    val line = s"""{"partition":"${esc(rec.partition)}","rows":${rec.rows},"bytes":${rec.bytes},""" +
-      s""""millis":${rec.millis},"run_id":"${esc(rec.runId)}","input":"${esc(rec.input)}"}\n"""
+    val line = Json.writeValueAsString(Json.createObjectNode()
+      .put("partition", rec.partition).put("rows", rec.rows).put("bytes", rec.bytes)
+      .put("millis", rec.millis).put("run_id", rec.runId).put("input", rec.input)) + "\n"
     Files.write(manifestPath(outDir), line.getBytes(StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
   }
@@ -168,7 +152,8 @@ object ResumableWrite {
     val obs = Observation(s"resumable_$runId")
     val observed =
       if (useObserve) {
-        val metrics = todo.map(v => sum(when(col("__part") === v, 1L).otherwise(0L)).as(s"rows_${esc(v)}"))
+        val metrics = todo.zipWithIndex.map { case (v, i) =>
+          sum(when(col("__part") === v, 1L).otherwise(0L)).as(s"rows_$i") }
         pending.observe(obs, metrics.head, metrics.tail: _*)
       } else pending
     val t0 = System.nanoTime()
@@ -178,7 +163,7 @@ object ResumableWrite {
     val rowCounts: Map[String, Long] =
       if (useObserve) {
         val metrics = obs.get
-        todo.map(v => v -> metrics(s"rows_${esc(v)}").asInstanceOf[Long]).toMap
+        todo.zipWithIndex.map { case (v, i) => v -> metrics(s"rows_$i").asInstanceOf[Long] }.toMap
       } else df.where(strCol.isin(todo: _*)).groupBy(strCol.as("__p")).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val totalRows = math.max(1L, rowCounts.values.sum)

@@ -131,14 +131,6 @@ object Similarity {
     Seq.fill(bits)(IndexedSeq.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Random-hyperplane signature: bit i = sign(dot(vec, plane_i)). For unit
-    * vectors P(bit agrees) = 1 - theta/pi, the classic cosine LSH. */
-  def hyperplaneBucket(vec: Column, planes: Seq[IndexedSeq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit): _*)
-      when(dot(vec, planeCol) > 0, lit(1L << i)).otherwise(0L)
-    }.reduce[Column](_ bitwiseOR _)
-
   private def vecDim(embeddings: DataFrame, vecCol: String): Int =
     embeddings.select(size(col(vecCol))).head().getInt(0)
 

@@ -660,6 +660,20 @@ object SpatialJoin {
       .select("id_a", "id_b")
   }
 
+  /** The raster side of the polygon-table joins: one row per (region,
+    * covering cell) — `region_id`, `__cell`, `__interior` — with the vertex
+    * arrays `__rlats`/`__rlons` nulled on interior cells, which never refine.
+    * `covering` is the per-region `array<struct<cell, interior>>`. */
+  private def rasterize(polys: DataFrame, idCol: String, latsCol: String, lonsCol: String,
+                        covering: Column): DataFrame =
+    polys
+      .select(col(idCol).as("region_id"), col(latsCol).as("__rlats"),
+        col(lonsCol).as("__rlons"), explode(covering).as("__rc"))
+      .select(col("region_id"),
+        col("__rc.cell").as("__cell"), col("__rc.interior").as("__interior"),
+        when(!col("__rc.interior"), col("__rlats")).as("__rlats"),
+        when(!col("__rc.interior"), col("__rlons")).as("__rlons"))
+
   /** PIP join against a TABLE of single-loop polygons — the many-polygon
     * form of [[pipJoin]]. [[pipJoin]]'s driver-side `Seq[(id, S2Region)]`
     * plan is right for a handful of broadcast query regions; a catalog of
@@ -697,14 +711,8 @@ object SpatialJoin {
     require(collisions.isEmpty,
       s"polygonPipJoin: reserved column name(s) in input: ${collisions.mkString(", ")}")
 
-    val raster = polys
-      .select(col(idCol).as("region_id"), col(latsCol).as("__rlats"),
-        col(lonsCol).as("__rlons"),
-        explode(s2_polygon_covering(col(latsCol), col(lonsCol), level)).as("__rc"))
-      .select(col("region_id"),
-        col("__rc.cell").as("__cell"), col("__rc.interior").as("__interior"),
-        when(!col("__rc.interior"), col("__rlats")).as("__rlats"),
-        when(!col("__rc.interior"), col("__rlons")).as("__rlons"))
+    val raster = rasterize(polys, idCol, latsCol, lonsCol,
+      s2_polygon_covering(col(latsCol), col(lonsCol), level))
 
     points
       .withColumn("__ptile", s2_tile(col(latCol), col(lonCol), level))
@@ -775,14 +783,8 @@ object SpatialJoin {
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(valueType),
       s"zonalStats: valueCol must be integral for exact sums, got $valueType")
 
-    val raster = polys
-      .select(col(idCol).as("region_id"), col(latsCol).as("__rlats"),
-        col(lonsCol).as("__rlons"),
-        explode(s2_polygon_covering(col(latsCol), col(lonsCol), level)).as("__rc"))
-      .select(col("region_id"),
-        col("__rc.cell").as("__cell"), col("__rc.interior").as("__interior"),
-        when(!col("__rc.interior"), col("__rlats")).as("__rlats"),
-        when(!col("__rc.interior"), col("__rlons")).as("__rlons"))
+    val raster = rasterize(polys, idCol, latsCol, lonsCol,
+      s2_polygon_covering(col(latsCol), col(lonsCol), level))
 
     val pts = points
       .select(col(latCol), col(lonCol), col(valueCol))
@@ -830,15 +832,8 @@ object SpatialJoin {
     require(collisions.isEmpty,
       s"polygonPipJoinAdaptive: reserved column name(s) in input: ${collisions.mkString(", ")}")
 
-    val raster = polys
-      .select(col(idCol).as("region_id"), col(latsCol).as("__rlats"),
-        col(lonsCol).as("__rlons"),
-        explode(s2_polygon_covering_adaptive(col(latsCol), col(lonsCol),
-          targetCells, quantizeLevels)).as("__rc"))
-      .select(col("region_id"),
-        col("__rc.cell").as("__cell"), col("__rc.interior").as("__interior"),
-        when(!col("__rc.interior"), col("__rlats")).as("__rlats"),
-        when(!col("__rc.interior"), col("__rlons")).as("__rlons"))
+    val raster = rasterize(polys, idCol, latsCol, lonsCol,
+      s2_polygon_covering_adaptive(col(latsCol), col(lonsCol), targetCells, quantizeLevels))
 
     points
       .withColumn("__pleaf", s2_cell_id(col(latCol), col(lonCol)))
@@ -952,15 +947,8 @@ object SpatialJoin {
     require(collisions.isEmpty,
       s"multiPolygonPipJoin: reserved column name(s) in input: ${collisions.mkString(", ")}")
 
-    val raster = polys
-      .select(col(idCol).as("region_id"), col(loopLatsCol).as("__rlats"),
-        col(loopLonsCol).as("__rlons"),
-        explode(s2_multipolygon_covering(col(loopLatsCol), col(loopLonsCol), level))
-          .as("__rc"))
-      .select(col("region_id"),
-        col("__rc.cell").as("__cell"), col("__rc.interior").as("__interior"),
-        when(!col("__rc.interior"), col("__rlats")).as("__rlats"),
-        when(!col("__rc.interior"), col("__rlons")).as("__rlons"))
+    val raster = rasterize(polys, idCol, loopLatsCol, loopLonsCol,
+      s2_multipolygon_covering(col(loopLatsCol), col(loopLonsCol), level))
 
     points
       .withColumn("__ptile", s2_tile(col(latCol), col(lonCol), level))

@@ -22,12 +22,6 @@ object TextAnalysis {
   def tokenCount(text: Column): Column =
     size(filter(split(text, "\\s+"), t => length(t) > 0))
 
-  /** BPE-ish subword count estimate: words + punctuation marks + digit runs. */
-  def subwordCountEstimate(text: Column): Column =
-    size(filter(split(text, "\\s+"), t => length(t) > 0)) +
-      length(regexp_replace(text, "[^\\p{Punct}]", "")) +
-      size(filter(split(regexp_replace(text, "[^0-9]", " "), "\\s+"), t => length(t) > 0))
-
   /** Stopword-vote language id over the distinct token set; "und"
     * (undetermined) when nothing matches. */
   def langId(df: DataFrame, idCol: String, textCol: String): DataFrame = {

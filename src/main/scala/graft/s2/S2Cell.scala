@@ -42,8 +42,6 @@ final class S2Cell private (val id: Long,
     case _ => -S2Projections.getUNorm(face, uv(0)(0))
   }
 
-  def getEdge(k: Int): S2Point = S2Point.normalize(getEdgeRaw(k))
-
   /** Fast 4-way subdivision reusing the uv midpoint (`S2Cell.cs:319-351`). */
   def subdivide(): Array[S2Cell] = {
     require(!S2CellId.isLeaf(id))

@@ -39,17 +39,8 @@ object S2CellId {
     Array(3, 1, 0, 2)
   )
 
-  /** orientation x ij index -> traversal position (`S2.cs:91-98`). */
-  private val IjToPosTable: Array[Array[Int]] = Array(
-    Array(0, 1, 3, 2),
-    Array(0, 3, 1, 2),
-    Array(2, 3, 1, 0),
-    Array(2, 1, 3, 0)
-  )
-
   def posToOrientation(position: Int): Int = PosToOrientationTable(position)
   def posToIj(orientation: Int, position: Int): Int = PosToIjTable(orientation)(position)
-  def ijToPos(orientation: Int, ijIndex: Int): Int = IjToPosTable(orientation)(ijIndex)
 
   // 4-level lookup tables: 10-bit key "iiiijjjjoo" <-> "ppppppppoo"
   // (`S2CellId.cs:52-80,1107-1130`).
@@ -133,7 +124,6 @@ object S2CellId {
   }
 
   def childBegin(id: Long): Long = { val lsb = lowestOnBit(id); id - lsb + (lsb >>> 2) }
-  def childEnd(id: Long): Long = { val lsb = lowestOnBit(id); id + lsb + (lsb >>> 2) }
 
   def childBeginForLevel(id: Long, level: Int): Long =
     id - lowestOnBit(id) + lowestOnBitForLevel(level)

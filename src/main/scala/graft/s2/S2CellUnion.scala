@@ -250,10 +250,6 @@ object S2CellUnion {
     new S2CellUnion(output)
   }
 
-  /** Build from ids that are already sorted + normalized. */
-  def fromNormalized(ids: Iterable[Long]): S2CellUnion =
-    new S2CellUnion(ArrayBuffer.from(ids))
-
   def empty: S2CellUnion = new S2CellUnion(ArrayBuffer.empty)
 
   private[s2] def indexedBinarySearch(list: ArrayBuffer[Long], key: Long, low0: Int): Int = {

@@ -64,6 +64,4 @@ object S2Point {
     val n = p.norm
     if (n != 0) p * (1.0 / n) else p * 0.0
   }
-
-  def fabs(p: S2Point): S2Point = S2Point(math.abs(p.x), math.abs(p.y), math.abs(p.z))
 }

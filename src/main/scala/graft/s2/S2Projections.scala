@@ -86,8 +86,6 @@ object S2Projections {
     case _ => S2Point(1, 0, v)
   }
 
-  def getNorm(face: Int): S2Point = faceUvToXyz(face, 0, 0)
-
   def getUAxis(face: Int): S2Point = face match {
     case 0 => S2Point(0, 1, 0)
     case 1 => S2Point(-1, 0, 0)

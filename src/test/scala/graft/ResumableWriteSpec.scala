@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.functions._
 
@@ -100,16 +101,26 @@ class ResumableWriteSpec extends SparkTestBase {
     val outDir = Files.createTempDirectory("resumable5").toString
     val v1 = """he said "hi"\now"""
     val v2 = "sp ace/slash=eq"
-    val tricky = Seq((1L, v1), (2L, v2), (3L, v2)).toDF("id", "p")
-    val recs = ResumableWrite.write(tricky, outDir, "p", runId = "r1", input = "in\"put")
-    assert(recs.map(_.partition).toSet == Set(v1, v2))
+    val v3 = "tab\there\u0001ctl"
+    // non-ASCII goes in the lineage: a partition value becomes a directory
+    // name, which a JVM whose file-name encoding is ASCII cannot write
+    val input = "in\"put caf\u00e9"
+    val tricky = Seq((1L, v1), (2L, v2), (3L, v2), (4L, v3)).toDF("id", "p")
+    val recs = ResumableWrite.write(tricky, outDir, "p", runId = "r1", input = input)
+    assert(recs.map(_.partition).toSet == Set(v1, v2, v3))
     val manifest = ResumableWrite.readManifest(outDir)
-    assert(manifest.map(_.partition).toSet == Set(v1, v2))
-    assert(manifest.map(_.rows).sum == 3)
-    assert(manifest.forall(_.input == "in\"put"))
+    assert(manifest.map(_.partition).toSet == Set(v1, v2, v3))
+    assert(manifest.map(_.rows).sum == 4)
+    assert(manifest.forall(_.input == input))
+    // a torn append (crash mid-line) is not a record: the manifest reads as before
+    val manifestFile = Paths.get(outDir, "_lineage_manifest.jsonl")
+    val firstLine = Files.readAllLines(manifestFile).get(0)
+    Files.write(manifestFile, firstLine.take(firstLine.length / 2).getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.APPEND)
+    assert(ResumableWrite.readManifest(outDir) == manifest)
     // resume sees them as committed (no rewrite), and read-back is intact
     assert(ResumableWrite.write(tricky, outDir, "p", runId = "r2").isEmpty)
-    assert(ResumableWrite.readCommitted(spark, outDir, "p").count() == 3)
+    assert(ResumableWrite.readCommitted(spark, outDir, "p").count() == 4)
   }
 
   test("snapshot reads: each run is a readable point-in-time version") {
