@@ -200,10 +200,9 @@ private[graft] object CatalogSpatial {
 
     // PIP join against a TABLE of polygons (vs q_pip_polygon's driver-side
     // Seq): 25 convex hexagon loops live as (region_id, lats, lons) rows,
-    // are rasterized executor-side to level-6 cells with interior flags,
-    // equi-join points on their level-6 tile, and only boundary-cell hits
-    // run the exact s2_loop_contains refinement — vertex arrays are nulled
-    // on interior cells so they never shuffle for fast-path rows
+    // are covered executor-side to level-6 cells with interior flags and
+    // broadcast to the cell-table probe; points probe with their level-6
+    // ancestor and only boundary-cell hits run the exact loop containment
     "q_poly_table_join" -> ((s, dir) =>
       SpatialJoin.polygonPipJoin(points(s, dir), "lat", "lon",
           hexPolyTable(s, dir), "region_id", "lats", "lons", level = 6)

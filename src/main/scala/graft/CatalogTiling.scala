@@ -457,10 +457,9 @@ private[graft] object CatalogTiling {
         .select("region_id", "o_orderkey")
     }),
 
-    // zonal statistics: per-region point count + integer-exact value sum
-    // with the aggregation PUSHED BELOW the join for interior cells —
-    // interior points collapse to per-tile partials before any join, only
-    // the boundary shell runs the per-point refine
+    // zonal statistics: per-region point count + integer-exact value sum —
+    // the polygon-table probe runs map-side, so only per-region partial
+    // aggregates cross the exchange
     "q_zonal_stats" -> ((s, dir) =>
       SpatialJoin.zonalStats(points(s, dir).select("o_orderkey", "lat", "lon"),
         "lat", "lon", "o_orderkey",

@@ -334,7 +334,7 @@ case class S2CapCovering(children: Seq[Expression])
   * would otherwise rebuild the loop once per (point, polygon) pair. Thread
   * confinement also keeps the loop's lazy internal state (edge iterator,
   * first-logical-vertex memo) race-free. */
-private[functions] object LoopCache {
+private[graft] object LoopCache {
   final class Key(val lats: Array[Double], val lons: Array[Double]) {
     override val hashCode: Int =
       31 * java.util.Arrays.hashCode(lats) + java.util.Arrays.hashCode(lons)
@@ -356,19 +356,23 @@ private[functions] object LoopCache {
   }
 
   def loopFor(lats: Array[Double], lons: Array[Double]): graft.s2.S2Loop = {
-    require(lats.length == lons.length,
-      s"loop vertex arrays differ in length: ${lats.length} vs ${lons.length}")
-    require(lats.length >= 3, s"a loop needs >= 3 vertices, got ${lats.length}")
     val key = new Key(lats, lons)
     val m = cache.get()
     var loop = m.get(key)
     if (loop == null) {
-      val verts = Array.tabulate(lats.length)(i =>
-        S2LatLng.fromDegrees(lats(i), lons(i)).toPoint)
-      loop = new graft.s2.S2Loop(verts.toIndexedSeq)
+      loop = build(lats, lons)
       m.put(key, loop)
     }
     loop
+  }
+
+  /** A fresh loop from parallel degree vertex arrays, uncached. */
+  def build(lats: Array[Double], lons: Array[Double]): graft.s2.S2Loop = {
+    require(lats.length == lons.length,
+      s"loop vertex arrays differ in length: ${lats.length} vs ${lons.length}")
+    require(lats.length >= 3, s"a loop needs >= 3 vertices, got ${lats.length}")
+    new graft.s2.S2Loop(Array.tabulate(lats.length)(i =>
+      S2LatLng.fromDegrees(lats(i), lons(i)).toPoint).toIndexedSeq)
   }
 }
 
@@ -461,7 +465,7 @@ case class S2LoopContainsPoint(first: Expression, second: Expression,
 /** Per-thread LRU of constructed [[graft.s2.S2Polygon]]s (multi-loop, XOR
   * parity) keyed by nested vertex content — the multi-loop sibling of
   * [[LoopCache]], same rationale. */
-private[functions] object PolygonCache {
+private[graft] object PolygonCache {
   final class Key(val lats: Array[Array[Double]], val lons: Array[Array[Double]]) {
     override val hashCode: Int =
       31 * java.util.Arrays.deepHashCode(lats.asInstanceOf[Array[AnyRef]]) +
@@ -488,6 +492,18 @@ private[functions] object PolygonCache {
 
   def polygonFor(lats: Array[Array[Double]],
                  lons: Array[Array[Double]]): graft.s2.S2Polygon = {
+    val key = new Key(lats, lons)
+    val m = cache.get()
+    var poly = m.get(key)
+    if (poly == null) {
+      poly = build(lats, lons)
+      m.put(key, poly)
+    }
+    poly
+  }
+
+  /** A fresh polygon from nested degree vertex arrays, uncached. */
+  def build(lats: Array[Array[Double]], lons: Array[Array[Double]]): graft.s2.S2Polygon = {
     require(lats.length == lons.length && lats.length >= 1,
       s"polygon needs >= 1 loop with matching lat/lon arrays, " +
         s"got ${lats.length}/${lons.length}")
@@ -497,18 +513,10 @@ private[functions] object PolygonCache {
         s"loop $i: vertex arrays ${lats(i).length}/${lons(i).length} (need >= 3, equal)")
       i += 1
     }
-    val key = new Key(lats, lons)
-    val m = cache.get()
-    var poly = m.get(key)
-    if (poly == null) {
-      val loops = lats.indices.map { j =>
-        new graft.s2.S2Loop(Array.tabulate(lats(j).length)(v =>
-          S2LatLng.fromDegrees(lats(j)(v), lons(j)(v)).toPoint).toIndexedSeq)
-      }
-      poly = new graft.s2.S2Polygon(loops)
-      m.put(key, poly)
-    }
-    poly
+    new graft.s2.S2Polygon(lats.indices.map { j =>
+      new graft.s2.S2Loop(Array.tabulate(lats(j).length)(v =>
+        S2LatLng.fromDegrees(lats(j)(v), lons(j)(v)).toPoint).toIndexedSeq)
+    })
   }
 }
 

@@ -4,12 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.s2functions._
-import graft.plans.{CoverIntervals, S2PipJoin}
+import graft.plans.{DriverRegions, S2PipJoin}
 import graft.s2._
 
-/** The covering point-in-region join: the engine's flagship operator.
+/** The spatial joins. The point-in-region (PIP) joins are one operator
+  * family: every one probes a cell table ([[graft.plans.CellTable]]) with
+  * one exact-match binary search per covering level, in one probe loop
+  * ([[graft.plans.S2PipProbeExec]]), and no PIP plan hash-joins on a cell id.
   *
-  * Plan shape (designed for a 10^12-row points table on a large cluster):
+  * [[pipJoin]], the flagship, over a driver-side region list (designed for
+  * a 10^12-row points table on a large cluster):
   *
   *  1. A lat band (plus a lng band unless the regions' union spans every
   *     longitude) from the regions' combined rect bound filters the points
@@ -18,15 +22,22 @@ import graft.s2._
   *     (<= maxCells) set of disjoint cells via [[S2RegionCoverer]]; cells the
   *     region fully contains are flagged `interior` (reference analogue:
   *     `GetCovering`/`GetInteriorCovering`, `S2RegionCoverer.cs:214-282`).
-  *     Each region's cells become sorted disjoint Hilbert intervals shipped
-  *     in the task closure ([[graft.plans.CoverIntervals]]).
+  *     The cells form one cell table shipped in the task closure
+  *     ([[graft.plans.DriverRegions]]).
   *  3. [[graft.plans.S2PipJoinExec]] computes each row's leaf cell once and
-  *     binary-searches each region's intervals: no row is multiplied, no
-  *     hash table is built and the big side never shuffles.
+  *     probes the table: no row is multiplied, no hash table is built and
+  *     the big side never shuffles.
   *  4. Points hitting an `interior` cell are accepted outright (the
   *     reference's interior-covering fast path); only boundary-cell hits run
   *     the exact refinement ([[regionContains]], e.g. `S2Polygon.Contains`,
   *     `S2Polygon.cs:944-964`).
+  *
+  * The polygon-TABLE joins ([[polygonPipJoin]], [[multiPolygonPipJoin]],
+  * [[polygonPipJoinAdaptive]], and through them [[polygonPipAntiJoin]] and
+  * [[zonalStats]]) cover each polygon row executor-side and broadcast that
+  * projection to [[graft.plans.S2PolygonTableJoinExec]], which runs the
+  * same probe. Rows with a NULL or non-finite (NaN, +-Inf) coordinate never
+  * match.
   */
 object SpatialJoin {
 
@@ -38,9 +49,8 @@ object SpatialJoin {
     * Each covering cell is re-expanded to the next level of that set;
     * children that don't intersect the region are pruned and children fully
     * inside it upgrade to the interior fast path, so fewer points reach the
-    * exact refinement. The interval probe costs one binary search per region
-    * whatever the levels, so re-expansion only grows the per-region
-    * interval table. */
+    * exact refinement. The cell-table probe costs one binary search per
+    * level present, so the fixed level set also bounds the probe. */
   def coverRegions(regions: Seq[(String, S2Region)], maxCells: Int): Seq[CoverCell] = {
     val levels = DefaultCoverLevels
     regions.flatMap { case (regionId, region) =>
@@ -97,8 +107,8 @@ object SpatialJoin {
               lonCol: String,
               regions: Seq[(String, S2Region)],
               maxCells: Int = 64): DataFrame = {
-    val cover = coverRegions(regions, maxCells)
-    require(cover.nonEmpty, "regions produced an empty covering")
+    val table = new DriverRegions(regions, maxCells)
+    require(table.table.numCells > 0, "regions produced an empty covering")
 
     // Lat band + (unless the union spans every longitude) lng band from the
     // union of region bounds: plain comparisons Catalyst pushes into the scan.
@@ -121,7 +131,7 @@ object SpatialJoin {
           }
         points.where(pred)
       }
-    S2PipJoin.plan(pre, latCol, lonCol, new CoverIntervals(cover, regions))
+    S2PipJoin.plan(pre, latCol, lonCol, table)
   }
 
   /** Doughnut (annulus) join: points with innerRadius < distance <= outer
@@ -660,48 +670,35 @@ object SpatialJoin {
       .select("id_a", "id_b")
   }
 
-  /** The raster side of the polygon-table joins: one row per (region,
-    * covering cell) — `region_id`, `__cell`, `__interior` — with the vertex
-    * arrays `__rlats`/`__rlons` nulled on interior cells, which never refine.
-    * `covering` is the per-region `array<struct<cell, interior>>`. */
-  private def rasterize(polys: DataFrame, idCol: String, latsCol: String, lonsCol: String,
-                        covering: Column): DataFrame =
-    polys
-      .select(col(idCol).as("region_id"), col(latsCol).as("__rlats"),
-        col(lonsCol).as("__rlons"), explode(covering).as("__rc"))
-      .select(col("region_id"),
-        col("__rc.cell").as("__cell"), col("__rc.interior").as("__interior"),
-        when(!col("__rc.interior"), col("__rlats")).as("__rlats"),
-        when(!col("__rc.interior"), col("__rlons")).as("__rlons"))
-
   /** PIP join against a TABLE of single-loop polygons — the many-polygon
     * form of [[pipJoin]]. [[pipJoin]]'s driver-side `Seq[(id, S2Region)]`
-    * plan is right for a handful of broadcast query regions; a catalog of
-    * 10^5-10^6 admin/geofence polygons must stay distributed. Plan:
+    * plan is right for a handful of query regions; a polygon catalog is a
+    * DataFrame. Plan:
     *
-    *  1. Rasterize the polygon table executor-side at one fixed `level`
-    *     ([[Vectorize.rasterizePolygons]] semantics, inlined slim): one
-    *     (region row) -> (cell, interior) per covering cell, with the
-    *     vertex arrays NULLED OUT on interior cells so the join below never
-    *     shuffles vertices for rows that skip refinement.
-    *  2. Equi-join points on their level-`level` tile. Same-level covering
-    *     cells are disjoint, so each (point, region) pair meets on at most
-    *     ONE cell — no pair dedup. Catalyst/AQE picks broadcast when the
-    *     raster side is small, shuffle-hash otherwise; either way the join
-    *     key is a plain long.
-    *  3. `interior` hits pass outright; boundary hits run the exact
-    *     `s2_loop_contains` refinement (loops built once per task thread
-    *     per polygon via the expression's LRU, not once per pair).
+    *  1. Cover the table executor-side at one fixed `level`
+    *     (`s2_polygon_covering`): one row per polygon row, holding the id,
+    *     the vertex arrays and the (cell, interior) covering.
+    *  2. Broadcast that projection to [[graft.plans.S2PolygonTableJoinExec]].
+    *     Each executor builds one [[graft.plans.CellTable]] from it; each
+    *     points row probes it with one binary search on its level-`level`
+    *     ancestor.
+    *     The points side never shuffles. The build side is bounded by
+    *     `spark.sql.maxBroadcastTableSize` and fails loudly above it.
+    *  3. `interior` hits pass outright; boundary hits run the exact loop
+    *     containment (`s2_loop_contains`'s test), with each loop built once
+    *     per task on its first boundary hit.
     *
-    * Level picks the raster granularity: finer -> more raster rows but a
-    * higher interior fraction (less refinement); `s2_polygon_covering`
-    * fails fast if a polygon would explode into > 2^17 cells at `level`.
+    * Level picks the covering granularity: finer -> more cells but a higher
+    * interior fraction (less refinement); `s2_polygon_covering` fails fast if
+    * a polygon would explode into > 2^17 cells at `level`. Each polygon row
+    * is its own table entry, so duplicate ids match once per row, a NULL id
+    * gives a NULL `region_id` and NULL vertex arrays never match.
     *
     * @param polys one row per region: `idCol`, parallel vertex-array
     *              columns `latsCol`/`lonsCol` (degrees, enclosed region on
     *              the left / CCW)
-    * @return points columns + `region_id`, one row per (point, containing
-    *         region) */
+    * @return points columns + `region_id` (the type of `idCol`), one row per
+    *         (point, containing region) */
   def polygonPipJoin(points: DataFrame, latCol: String, lonCol: String,
                      polys: DataFrame, idCol: String,
                      latsCol: String, lonsCol: String,
@@ -710,16 +707,8 @@ object SpatialJoin {
     val collisions = (points.columns ++ polys.columns).filter(reserved.contains)
     require(collisions.isEmpty,
       s"polygonPipJoin: reserved column name(s) in input: ${collisions.mkString(", ")}")
-
-    val raster = rasterize(polys, idCol, latsCol, lonsCol,
+    S2PipJoin.planTable(points, latCol, lonCol, polys, idCol, latsCol, lonsCol,
       s2_polygon_covering(col(latsCol), col(lonsCol), level))
-
-    points
-      .withColumn("__ptile", s2_tile(col(latCol), col(lonCol), level))
-      .join(raster, col("__ptile") === col("__cell"))
-      .where(col("__interior") ||
-        s2_loop_contains(col("__rlats"), col("__rlons"), col(latCol), col(lonCol)))
-      .drop("__ptile", "__cell", "__interior", "__rlats", "__rlons")
   }
 
   /** PIP ANTI join: the points contained by NO polygon of the table — the
@@ -727,10 +716,10 @@ object SpatialJoin {
     * geotagged inside any embargoed region"). Semantics are the exact
     * complement of [[polygonPipJoin]] over `pointIdCol`.
     *
-    * Scale shape: the matched-id set is produced by the covering equi-join
-    * (only ids + tiles shuffle, interior fast path skips the refine), is
-    * deduplicated with partial aggregation, and is then subtracted with a
-    * LEFT ANTI join on the point key. When few points match — the common
+    * Scale shape: the matched-id set is produced by the cell-table probe
+    * (the points side does not shuffle, the interior fast path skips the
+    * refine), is deduplicated with partial aggregation, and is then
+    * subtracted with a LEFT ANTI join on the point key. When few points match — the common
     * exclusion-zone case — AQE broadcasts the matched set and the
     * subtraction costs no shuffle of the point table; in the worst case it
     * is one key-partitioned exchange, the same class as any equi-join.
@@ -750,19 +739,11 @@ object SpatialJoin {
 
   /** Zonal statistics: per-region count + sum over the points each polygon
     * contains — the raster/vector aggregation a geo pipeline runs to score
-    * regions (images per country, revenue per zone) — with the aggregation
-    * PUSHED BELOW the join for interior cells.
-    *
-    * The naive plan ([[polygonPipJoin]] then groupBy) shuffles every
-    * matched POINT row to its region. Here interior-cell points never
-    * shuffle at all: one partial+final hash aggregation collapses the
-    * point table to per-tile (count, sum) partials — at most 6·4^level
-    * rows regardless of input size — and only those partials join the
-    * interior raster. Boundary cells (the thin shell where exactness
-    * needs the per-point `s2_loop_contains` refine) fall back to the
-    * per-point path, which the broadcast raster filters map-side. At
-    * 100 TB the shuffled bytes are ~|distinct tiles| + |boundary-shell
-    * points|, not |matched points|.
+    * regions (images per country, revenue per zone). Plan:
+    * [[polygonPipJoin]], then a group-by on `region_id`. The probe runs
+    * map-side and the points side never shuffles, so the partial
+    * aggregation collapses each partition to per-region (count, sum) rows
+    * and only those cross the exchange.
     *
     * `valueCol` must be integral (the sums stay integer-exact and
     * engine-order-independent); outputs `region_id, n_points, sum_value`,
@@ -783,45 +764,23 @@ object SpatialJoin {
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(valueType),
       s"zonalStats: valueCol must be integral for exact sums, got $valueType")
 
-    val raster = rasterize(polys, idCol, latsCol, lonsCol,
-      s2_polygon_covering(col(latsCol), col(lonsCol), level))
-
-    val pts = points
-      .select(col(latCol), col(lonCol), col(valueCol))
-      .withColumn("__ptile", s2_tile(col(latCol), col(lonCol), level))
-
-    // interior push-down: per-tile partials first, then the tiny tile->region join
-    val tileAgg = pts.groupBy("__ptile")
-      .agg(count(lit(1)).as("__n"), sum(col(valueCol)).cast("long").as("__sum"))
-    val interiorPart = tileAgg
-      .join(raster.where(col("__interior")).select(col("region_id"), col("__cell")),
-        col("__ptile") === col("__cell"))
-      .select(col("region_id"), col("__n"), col("__sum"))
-
-    // boundary shell: exact per-point refine, already pre-filtered map-side
-    // by the (broadcastable) boundary raster before anything aggregates
-    val boundaryPart = pts
-      .join(raster.where(!col("__interior")), col("__ptile") === col("__cell"))
-      .where(s2_loop_contains(col("__rlats"), col("__rlons"), col(latCol), col(lonCol)))
+    polygonPipJoin(points.select(col(latCol), col(lonCol), col(valueCol)), latCol, lonCol,
+        polys, idCol, latsCol, lonsCol, level)
       .groupBy("region_id")
-      .agg(count(lit(1)).as("__n"), sum(col(valueCol)).cast("long").as("__sum"))
-
-    interiorPart.unionByName(boundaryPart)
-      .groupBy("region_id")
-      .agg(sum("__n").as("n_points"), sum("__sum").as("sum_value"))
+      .agg(count(lit(1)).as("n_points"), sum(col(valueCol)).cast("long").as("sum_value"))
   }
 
   /** [[polygonPipJoin]] for HETEROGENEOUS polygon catalogs: each polygon
     * row picks its own covering level (the finest of `quantizeLevels`
     * whose estimated covering fits `targetCells`), so a continent and a
-    * parking lot both rasterize to ~targetCells cells instead of one
-    * exploding and the other degenerating to a single unselective bucket.
-    * The points side explodes ONE ancestor per menu level (|menu| rows, a
-    * plan-time constant — this is why the levels are quantized) and the
-    * equi-join meets each (point, polygon) pair on at most one cell
-    * (every polygon is covered at a single level with disjoint cells).
-    * Same interior fast path / vertex-array nulling / refine as the
-    * fixed-level join. */
+    * parking lot both cover to ~targetCells cells instead of one exploding
+    * and the other degenerating to a single unselective cell. The cell
+    * table then holds at most |quantizeLevels| levels, and each points row
+    * probes once per level present, on its ancestor there (this is why the
+    * levels are quantized). Every polygon is covered at a single level with
+    * disjoint cells, so a point meets each polygon at most once. Same
+    * broadcast table, interior fast path and refine as the fixed-level
+    * join. */
   def polygonPipJoinAdaptive(points: DataFrame, latCol: String, lonCol: String,
                              polys: DataFrame, idCol: String,
                              latsCol: String, lonsCol: String,
@@ -831,18 +790,8 @@ object SpatialJoin {
     val collisions = (points.columns ++ polys.columns).filter(reserved.contains)
     require(collisions.isEmpty,
       s"polygonPipJoinAdaptive: reserved column name(s) in input: ${collisions.mkString(", ")}")
-
-    val raster = rasterize(polys, idCol, latsCol, lonsCol,
+    S2PipJoin.planTable(points, latCol, lonCol, polys, idCol, latsCol, lonsCol,
       s2_polygon_covering_adaptive(col(latsCol), col(lonsCol), targetCells, quantizeLevels))
-
-    points
-      .withColumn("__pleaf", s2_cell_id(col(latCol), col(lonCol)))
-      .withColumn("__probe",
-        explode(array(quantizeLevels.map(l => s2_parent(col("__pleaf"), l)): _*)))
-      .join(raster, col("__probe") === col("__cell"))
-      .where(col("__interior") ||
-        s2_loop_contains(col("__rlats"), col("__rlons"), col(latCol), col(lonCol)))
-      .drop("__pleaf", "__probe", "__cell", "__interior", "__rlats", "__rlons")
   }
 
   /** Points within `radiusM` of any polyline in a TABLE of polylines — the
@@ -933,7 +882,8 @@ object SpatialJoin {
     * parity — the reference's `S2Polygon.Contains` semantics,
     * `S2Polygon.cs:944-964`, at table granularity). Identical plan shape;
     * the covering simply never emits cells inside holes (they don't
-    * intersect the region) and the exact refinement is the parity test.
+    * intersect the region) and the exact refinement is the parity test
+    * (`s2_polygon_contains`'s), each polygon built once per task.
     *
     * @param polys one row per region: `idCol`, nested vertex-array columns
     *              `loopLatsCol`/`loopLonsCol` (`array<array<double>>`,
@@ -947,14 +897,7 @@ object SpatialJoin {
     require(collisions.isEmpty,
       s"multiPolygonPipJoin: reserved column name(s) in input: ${collisions.mkString(", ")}")
 
-    val raster = rasterize(polys, idCol, loopLatsCol, loopLonsCol,
+    S2PipJoin.planTable(points, latCol, lonCol, polys, idCol, loopLatsCol, loopLonsCol,
       s2_multipolygon_covering(col(loopLatsCol), col(loopLonsCol), level))
-
-    points
-      .withColumn("__ptile", s2_tile(col(latCol), col(lonCol), level))
-      .join(raster, col("__ptile") === col("__cell"))
-      .where(col("__interior") ||
-        s2_polygon_contains(col("__rlats"), col("__rlons"), col(latCol), col(lonCol)))
-      .drop("__ptile", "__cell", "__interior", "__rlats", "__rlons")
   }
 }

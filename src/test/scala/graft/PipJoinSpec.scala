@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.SpatialJoin
 import graft.plans.{S2PipJoin, S2PipJoinExec}
-import graft.s2.{R1Interval, S1Interval, S2LatLngRect, S2Region}
+import graft.s2.{R1Interval, S1Interval, S2Cell, S2CellId, S2LatLng, S2LatLngRect, S2Loop, S2Region}
 
 /** Contracts of the one covering PIP join, [[SpatialJoin.pipJoin]]
   * (`S2PipJoin.pipJoinExec` forwards to it). Its brute-force agreement on
@@ -20,8 +20,13 @@ class PipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   private def collectSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
     df.select("region_id", "id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
 
-  // Full-longitude regions (where no lng band applies) and tileAssign's
-  // NULL contract for non-finite input stay open: ROADMAP item 4.
+  // NaN and +-Inf rows never match: the probe drops them before the leaf
+  // encode (they would encode to the valid leaf 0x4000000000000001). Checked
+  // behind a lng band, without one (a full-longitude rect) and through the
+  // polygon-table join. Unnormalized longitudes (370, -370) are finite: where
+  // no lng band applies they match as the point they denote, while the rect's
+  // exact test rejects them; that wrap decision and tileAssign's NULL
+  // contract stay open (ROADMAP item 4).
   test("non-finite and out-of-range coordinates: pipJoin and pipJoinExec == brute force") {
     val rows = Seq(
       (1L, Double.NaN, 10.0), (2L, 10.0, Double.NaN),
@@ -29,18 +34,46 @@ class PipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       (5L, 95.0, 10.0), (6L, -95.0, 10.0),
       (7L, 10.0, 370.0), (8L, 10.0, -370.0),
       (9L, 10.0, 10.0))
+    val nonFinite = Set(1L, 2L, 3L, 4L)
+    val unnormalizedLon = Set(7L, 8L)
+    def brute(region: S2Region): Set[(String, Long)] = rows.collect {
+      case (id, lat, lon) if SpatialJoin.regionContains(region, lat, lon) => ("r", id)
+    }.toSet
     val rect: S2Region = S2LatLngRect(
       R1Interval(math.toRadians(-60.0), math.toRadians(60.0)),
       S1Interval(math.toRadians(-120.0), math.toRadians(120.0)))
     val regions = Seq("r" -> rect)
     val pts = rows.toDF("id", "lat", "lon")
 
-    val brute = rows.collect {
-      case (id, lat, lon) if SpatialJoin.regionContains(rect, lat, lon) => ("r", id)
-    }.toSet
-    assert(brute == Set(("r", 9L)))
-    assert(collectSet(SpatialJoin.pipJoin(pts, "lat", "lon", regions)) == brute, "pipJoin")
-    assert(collectSet(S2PipJoin.pipJoinExec(pts, "lat", "lon", regions)) == brute, "pipJoinExec")
+    assert(brute(rect) == Set(("r", 9L)))
+    assert(collectSet(SpatialJoin.pipJoin(pts, "lat", "lon", regions)) == brute(rect), "pipJoin")
+    assert(collectSet(S2PipJoin.pipJoinExec(pts, "lat", "lon", regions)) == brute(rect),
+      "pipJoinExec")
+
+    // (a) every longitude: no lng band, so rows 2, 4, 7 and 8 reach the probe
+    val fullLng: S2Region = S2LatLngRect(
+      R1Interval(math.toRadians(-60.0), math.toRadians(60.0)), S1Interval.Full)
+    assert(brute(fullLng) == Set(("r", 9L)))
+    val gotFull = collectSet(SpatialJoin.pipJoin(pts, "lat", "lon", Seq("r" -> fullLng)))
+    assert(gotFull.forall { case (_, id) => !nonFinite(id) }, s"non-finite rows matched: $gotFull")
+    assert(gotFull.filterNot { case (_, id) => unnormalizedLon(id) } == brute(fullLng),
+      s"full-longitude rect: $gotFull")
+
+    // (b) the polygon-table join, against a square whose level-6 interior
+    // covering holds the leaf the non-finite rows would encode to
+    val nanLeaf = S2CellId.fromLatLngDegrees(10.0, Double.NaN)
+    assert(nanLeaf == 0x4000000000000001L)
+    val (cLat, cLon) = (S2CellId.toLatDegrees(nanLeaf), S2CellId.toLngDegrees(nanLeaf))
+    val lats = Array(cLat - 3, cLat - 3, cLat + 3, cLat + 3)
+    val lons = Array(cLon - 3, cLon + 3, cLon + 3, cLon - 3)
+    val square = new S2Loop(lats.indices.map(i => S2LatLng.fromDegrees(lats(i), lons(i)).toPoint))
+    assert(square.containsCell(S2Cell(S2CellId.parentForLevel(nanLeaf, 6))),
+      "the non-finite leaf's level-6 cell is not interior to the square")
+    val table = Seq(("r", lats, lons)).toDF("region_id", "lats", "lons")
+    val gotTable = collectSet(
+      SpatialJoin.polygonPipJoin(pts, "lat", "lon", table, "region_id", "lats", "lons", level = 6))
+    assert(gotTable.forall { case (_, id) => !nonFinite(id) }, s"non-finite rows matched: $gotTable")
+    assert(gotTable == brute(square), s"polygonPipJoin: $gotTable")
   }
 
   test("plan shape: S2PipJoinExec, no Generate or hash join, band pushed, pruned read") {

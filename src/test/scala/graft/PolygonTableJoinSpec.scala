@@ -1,15 +1,23 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec,
+  SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{SpatialJoin, Vectorize}
+import graft.plans.S2PolygonTableJoinExec
 import graft.s2.{S2Cell, S2LatLng, S2Loop, S2Predicates, S2RegionCoverer}
 
 /** The polygon-TABLE PIP join: oracle preconditions on the hexagon fixture
   * (convexity, orientation, edge-plane margin), the executor-side covering
-  * vs the driver kernel, the interior fast path, and brute-force equality
-  * of the full composition. */
-class PolygonTableJoinSpec extends SparkTestBase {
+  * vs the driver kernel, the interior fast path, brute-force equality of
+  * the full composition, the probe's SQL metrics and the plan shape. */
+class PolygonTableJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def loopOf(verts: Seq[(Double, Double)]): S2Loop =
     new S2Loop(verts.map { case (la, lo) => S2LatLng.fromDegrees(la, lo).toPoint }.toIndexedSeq)
@@ -70,22 +78,55 @@ class PolygonTableJoinSpec extends SparkTestBase {
   test("polygonPipJoin equals brute-force loop containment (sf0.001)") {
     import spark.implicits._
     val dir = sf("sf0.001")
-    val got = SpatialJoin.polygonPipJoin(SparkEntry.points(spark, dir), "lat", "lon",
+    val df = SpatialJoin.polygonPipJoin(SparkEntry.points(spark, dir), "lat", "lon",
         SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6)
-      .select("region_id", "o_orderkey").as[(Long, Long)].collect().toSet
-    val loops = SparkEntry.HexPolys.map { case (k, vs, _) => k -> loopOf(vs) }
+      .select("region_id", "o_orderkey")
+    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val got = rows.toSet
     val pts = SparkEntry.points(spark, dir)
       .select(col("o_orderkey").cast("long"), col("lat"), col("lon"))
       .as[(Long, Double, Double)].collect()
-    val want = (for {
-      (id, la, lo) <- pts.iterator
-      p = S2LatLng.fromDegrees(la, lo).toPoint
-      (k, loop) <- loops
-      if loop.contains(p)
-    } yield (k, id)).toSet
+    def brute(vertex: Double => Double): Set[(Long, Long)] = {
+      val loops = SparkEntry.HexPolys.map { case (k, vs, _) =>
+        k -> loopOf(vs.map { case (la, lo) => (vertex(la), vertex(lo)) }) }
+      (for {
+        (id, la, lo) <- pts.iterator
+        p = S2LatLng.fromDegrees(la, lo).toPoint
+        (k, loop) <- loops
+        if loop.contains(p)
+      } yield (k, id)).toSet
+    }
+    val want = brute(identity)
     assert(want.nonEmpty, "fixture produced an empty join — hexagons miss every point")
     assert(got == want,
       s"join diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+
+    // array<float> vertices: the covering and the boundary refine both read
+    // them widened to double, as the containment expressions do
+    val floats = SpatialJoin.polygonPipJoin(SparkEntry.points(spark, dir), "lat", "lon",
+        SparkEntry.HexPolys.map { case (k, vs, _) =>
+          (k, vs.map(_._1.toFloat).toArray, vs.map(_._2.toFloat).toArray) }
+          .toDF("region_id", "lats", "lons"),
+        "region_id", "lats", "lons", level = 6)
+      .select("region_id", "o_orderkey")
+    val gotF = floats.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val wantF = brute(_.toFloat.toDouble)
+    assert(gotF == wantF,
+      s"float join diverged: missing=${(wantF -- gotF).take(5)} extra=${(gotF -- wantF).take(5)}")
+    val floatExec = collect(floats.queryExecution.executedPlan) {
+      case e: S2PolygonTableJoinExec => e }
+    assert(floatExec.head.metrics("refinements").value > 0, "float run never refined")
+
+    // the probe's SQL metrics account for every cell hit and output row
+    val execs = collect(df.queryExecution.executedPlan) { case e: S2PolygonTableJoinExec => e }
+    assert(execs.size == 1)
+    val m = execs.head.metrics.map { case (k, v) => k -> v.value }
+    assert(m("interiorAccepts") > 0 && m("refinements") > 0 && m("refineRejects") > 0,
+      s"fixture misses a probe path: $m")
+    assert(m("cellHits") == m("interiorAccepts") + m("refinements"), s"$m")
+    assert(m("numOutputRows") == m("interiorAccepts") + m("refinements") - m("refineRejects"),
+      s"$m")
+    assert(m("numOutputRows") == rows.length, s"$m")
   }
 
   test("every holed fixture polygon: convex loops, annulus in / hole out / outside out") {
@@ -244,6 +285,38 @@ class PolygonTableJoinSpec extends SparkTestBase {
     assert(want.nonEmpty, "fixture produced an empty join")
     assert(got == want,
       s"adaptive join diverged: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+  }
+
+  test("plan shape: each polygon-table join probes a broadcast cell table, points never shuffle") {
+    val dir = sf("sf0.001")
+    val pq = Files.createTempDirectory("poly-plan").toString
+    SparkEntry.points(spark, dir).select("o_orderkey", "lat", "lon")
+      .write.mode("overwrite").parquet(pq)
+    val pts = spark.read.parquet(pq)
+    val joins = Seq(
+      "polygonPipJoin" -> SpatialJoin.polygonPipJoin(pts, "lat", "lon",
+        SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6),
+      "multiPolygonPipJoin" -> SpatialJoin.multiPolygonPipJoin(pts, "lat", "lon",
+        SparkEntry.holedPolyTable(spark, dir), "region_id", "loop_lats", "loop_lons", level = 6),
+      "polygonPipJoinAdaptive" -> SpatialJoin.polygonPipJoinAdaptive(pts, "lat", "lon",
+        SparkEntry.hexPolyVarTable(spark, dir), "region_id", "lats", "lons",
+        targetCells = 32, quantizeLevels = Seq(4, 6, 8)),
+      "zonalStats" -> SpatialJoin.zonalStats(pts, "lat", "lon", "o_orderkey",
+        SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6))
+    for ((name, df) <- joins) {
+      assert(df.collect().nonEmpty, s"$name: empty result")
+      val plan = df.queryExecution.executedPlan
+      val probes = collectWithSubqueries(plan) { case e: S2PolygonTableJoinExec => e }
+      assert(probes.size == 1, s"$name: expected one probe exec in:\n$plan")
+      val pointsSide = probes.head.left
+      def all[T](pf: PartialFunction[SparkPlan, T]): Seq[T] = collect(pointsSide)(pf)
+      assert(all { case j: BroadcastHashJoinExec => j; case j: ShuffledHashJoinExec => j;
+        case j: SortMergeJoinExec => j; case g: GenerateExec => g }.isEmpty,
+        s"$name: join or Generate on the points side:\n$plan")
+      assert(all { case e: Exchange => e; case q: QueryStageExec => q }.isEmpty,
+        s"$name: Exchange between the points scan and the probe:\n$plan")
+      assert(all { case s: FileSourceScanExec => s }.size == 1, s"$name: no points scan:\n$plan")
+    }
   }
 
   test("reserved-name collision fails loudly") {
