@@ -125,14 +125,16 @@ private[graft] object CatalogStreaming {
         .select("window_start", "total_events")
     }),
 
-    // the stream-stream join twin over the SAME batch input (the watermark
-    // node is eliminated on batch; the event-time range condition replaces
-    // the ±1 time-bucket explode) — identical semantics, identical oracle
+    // the stream-stream spatio-temporal self-join: the one operator
+    // SpatialJoin.spatioTemporalJoin (watermarked event time, ±W range in
+    // the join condition), here run over the batch table, where Catalyst
+    // eliminates the watermark node; StreamingStJoinSpec runs it on a
+    // MemoryStream with pairs that straddle micro-batches
     "q_st_join_stream" -> ((s, dir) => {
       val pts = events(s, dir)
         .withColumn("lat", expr(latSqlFor("event_id")))
         .withColumn("lon", expr(lonSqlFor("event_id")))
-      graft.streaming.EventStreams.spatioTemporalPairs(pts, "event_id", "ts",
+      SpatialJoin.spatioTemporalJoin(pts, "event_id", "ts",
           "lat", "lon", radiusM = StJoinRadiusM, windowSec = StJoinWindowSec)
         .select("id_a", "id_b")
     }),

@@ -679,7 +679,6 @@ object ImagePayload {
   def geoImageNearDup(images: DataFrame, idCol: String, latCol: String, lonCol: String,
                       level: Int, maxHamming: Int = 3,
                       maxCellSize: Int = 100000): DataFrame = {
-    import graft.functions.s2functions._
     // materialized before cap + self-join: the decode subtree otherwise
     // re-executes under the cap's per-cell count, the null filter, and
     // BOTH join branches (see imageNearDup) — (id, dhash, cell) is ~24
@@ -687,14 +686,13 @@ object ImagePayload {
     val keyed = withPerceptualHash(images)
       .where(col("dhash").isNotNull)
       .select(col(idCol), col("dhash"), lit(0).as("band"),
-        s2_tile(col(latCol), col(lonCol), level).as("bucket"))
+        SpatialJoin.cellBucket(col(latCol), col(lonCol), level).as("bucket"))
       .localCheckpoint()
     val hashed = Dedup.capBuckets(keyed, maxCellSize, "geoimage", idCol)
       .withColumnRenamed("bucket", "__cell").drop("band")
     val a = hashed.select(col(idCol).as("id_a"), col("dhash").as("__da"), col("__cell"))
     val b = hashed.select(col(idCol).as("id_b"), col("dhash").as("__db"),
-      explode(array_union(s2_all_neighbors(col("__cell"), level),
-        array(col("__cell")))).as("__cell"))
+      explode(SpatialJoin.neighborBuckets(col("__cell"), level)).as("__cell"))
     a.join(b, Seq("__cell"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),

@@ -159,14 +159,14 @@ object Knn {
       val boundM = S2Projections.MinWidth.getValue(level) * S2LatLng.EarthRadiusMeters
       val a = unresolved.select(col(idCol).as("id"),
           col(latCol).as("__alat"), col(lonCol).as("__alon"))
-        .withColumn("__c", s2_tile(col("__alat"), col("__alon"), level))
-        .withColumn("__bucket",
-          explode(array_union(array(col("__c")), s2_all_neighbors(col("__c"), level))))
+        .withColumn("__c", SpatialJoin.cellBucket(col("__alat"), col("__alon"), level))
+        .withColumn("__bucket", explode(SpatialJoin.neighborBuckets(col("__c"), level)))
         .drop("__c")
       val wRank = Window.partitionBy("id").orderBy(col("distance_m"), col("neighbor_id"))
       val wAll = Window.partitionBy("id")
       val ranked = a
-        .join(b.withColumn("__bucket", s2_tile(col("__blat"), col("__blon"), level)), "__bucket")
+        .join(b.withColumn("__bucket",
+          SpatialJoin.cellBucket(col("__blat"), col("__blon"), level)), "__bucket")
         .where(col("id") =!= col("neighbor_id"))
         .withColumn("distance_m",
           s2_distance_m(col("__alat"), col("__alon"), col("__blat"), col("__blon")))

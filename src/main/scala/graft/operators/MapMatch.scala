@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.s2functions._
-import graft.s2.{S2LatLng, S2Projections}
 
 /** HMM map matching (the Newson–Krumm shape): snap each track's GPS fixes
   * to a road network so consecutive fixes land on a COHERENT path, not
@@ -27,8 +26,8 @@ import graft.s2.{S2LatLng, S2Projections}
   * max-snap-radius contract); the step sequence is the surviving fixes in
   * (tsCol, tieCol) order.
   *
-  * Distributed shape: candidates come from the same covering-cell ∪
-  * neighbor raster equi-join as [[SpatialJoin.polylineDistanceJoin]], but
+  * Distributed shape: candidates come from the same covering-neighborhood
+  * equi-join as [[SpatialJoin.polylineDistanceJoin]], but
   * per EDGE (lines explode into 2-vertex chains executor-side) — bytes-thin
   * rows, no cross join, the big point side never shuffles for candidate
   * generation. The DP itself is ONE `groupByKey.flatMapGroups` pass per
@@ -47,15 +46,10 @@ object MapMatch {
               radiusM: Double, quantMeters: Double = 10.0,
               edgeStepCost: Long = 100L, switchPenalty: Long = 20000L,
               maxRowsPerTrack: Int = 4000000): DataFrame = {
-    require(radiusM > 0, s"radiusM must be positive: $radiusM")
     require(quantMeters > 0, s"quantMeters must be positive: $quantMeters")
     require(edgeStepCost >= 0 && switchPenalty >= 0, "costs must be non-negative")
-    val angle = radiusM / S2LatLng.EarthRadiusMeters
-    require(angle > 0 && angle <= S2Projections.MinWidth.getValue(0),
-      s"viterbi radius $radiusM m exceeds the level-0 adjacency guarantee")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
     val cands = candidateStates(points, trackCol, tsCol, tieCol, latCol, lonCol,
-        lines, lineIdCol, latsCol, lonsCol, level, radiusM, quantMeters)
+        lines, lineIdCol, latsCol, lonsCol, radiusM, quantMeters, "viterbi")
       .select(col("__track"), unix_micros(col("__ts")), col("__tie"),
         col("line_id"), col("edge_idx"), col("__e"))
 
@@ -128,10 +122,11 @@ object MapMatch {
   /** The shared candidate stage: every (line, edge) state within
     * `radiusM` of every fix, with the quantized integer emission —
     * lines exploded into per-edge 2-vertex chains executor-side, their
-    * covering∪neighbor raster equi-joined against each fix's
-    * scan-computed cell (the fix side never shuffles here). Output
-    * columns: (__track, __ts timestamp, __tie, line_id, edge_idx, __e).
-    * Used by the batch [[viterbi]] and the streaming online twin
+    * covering neighborhoods equi-joined against each fix's scan-computed
+    * cell (the fix side never shuffles here). The radius is checked, and
+    * its bucketing level derived, here, under the caller's name `op`.
+    * Output columns: (__track, __ts timestamp, __tie, line_id, edge_idx,
+    * __e). Used by the batch [[viterbi]] and the streaming online twin
     * ([[graft.streaming.MapMatchStream]] — there the raster side is
     * static and this is a stream-static join). */
   private[graft] def candidateStates(points: DataFrame, trackCol: String,
@@ -139,8 +134,9 @@ object MapMatch {
                                      latCol: String, lonCol: String,
                                      lines: DataFrame, lineIdCol: String,
                                      latsCol: String, lonsCol: String,
-                                     level: Int, radiusM: Double,
-                                     quantMeters: Double): DataFrame = {
+                                     radiusM: Double, quantMeters: Double,
+                                     op: String): DataFrame = {
+    val level = SpatialJoin.proximityLevel(radiusM, op)
     val reserved = Seq("__pcell", "__bucket", "__elats", "__elons", "__e", "__d",
       "__track", "__ts", "__tie")
     val collisions = (points.columns ++ lines.columns).filter(reserved.contains)
@@ -157,12 +153,11 @@ object MapMatch {
 
     val raster = edges.select(col("line_id"), col("edge_idx"),
       col("__elats"), col("__elons"),
-      explode(array_distinct(flatten(transform(
-        s2_polyline_covering(col("__elats"), col("__elons"), level),
-        c => array_union(array(c), s2_all_neighbors(c, level)))))).as("__bucket"))
+      explode(SpatialJoin.coveringBuckets(
+        s2_polyline_covering(col("__elats"), col("__elons"), level), level)).as("__bucket"))
 
     points
-      .withColumn("__pcell", s2_tile(col(latCol), col(lonCol), level))
+      .withColumn("__pcell", SpatialJoin.cellBucket(col(latCol), col(lonCol), level))
       .join(raster, col("__pcell") === col("__bucket"))
       .withColumn("__d",
         s2_polyline_distance_m(col("__elats"), col("__elons"), col(latCol), col(lonCol)))

@@ -252,7 +252,10 @@ object ResumableWrite {
     else spark.read.parquet(paths: _*)
   }
 
-  private def deleteRecursively(path: Path): Unit = {
+  /** Deletes `path` and everything under it, if it exists; throws when any
+    * entry cannot be deleted. The one recursive delete of the stored
+    * layouts (resumable writes, tile rewrites, IVF version sweeps). */
+  private[graft] def deleteRecursively(path: Path): Unit = {
     if (Files.exists(path)) {
       val s = Files.walk(path)
       try {

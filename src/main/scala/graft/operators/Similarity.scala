@@ -433,7 +433,7 @@ object Similarity {
         .filter(f => f.isDirectory && f.getName != live &&
           (f.getName.matches("v\\d+") ||
             Set("centroids", "codebook", "lists")(f.getName)))
-        .foreach(delete)
+        .foreach(f => ResumableWrite.deleteRecursively(f.toPath))
     }
   }
 
@@ -617,11 +617,6 @@ object Similarity {
     writeIvfLayout(lists.select("id", "vec"), "id", "vec", centroids, s"$indexDir/$v")
     publishVersion(indexDir, v)
     sweepOrphanVersions(indexDir)
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(delete)
-    f.delete(): Unit
   }
 
   /** The drift policy: rebuild the index iff the largest list exceeds
@@ -953,22 +948,33 @@ object Similarity {
   // declared floor — a silent-degradation query is impossible, the
   // property a fleet-scale ANN deployment actually monitors.
 
+  /** Raises when the exact side of a gate has no rows (`n` = 0): recall
+    * against an empty set is undefined, not "below floor". Chain the
+    * gate's own branches after it. */
+  private def requireExact(n: Column, gate: String): Column =
+    when(n === 0,
+      raise_error(lit(s"$gate: the exact set is empty, recall is undefined")).cast("boolean"))
+
   /** Gate an approximate top-k result against the exact one: both frames
-    * are (query_id, neighbor_id) relations over the same query set.
+    * are (query_id, neighbor_id) relations over the same query set, each
+    * deduplicated on that pair first, so a repeated hit counts once.
     * Output is ONE deterministic row (n_queries, k, recall_floor,
-    * recall_ok=true); if overall recall < `floor` the query raises
-    * instead of returning. */
+    * recall_ok=true); if overall recall < `floor`, or the exact set is
+    * empty, the query raises instead of returning. */
   def recallGate(approx: DataFrame, exact: DataFrame, k: Int,
                  floor: Double): DataFrame = {
-    val hits = approx.join(exact, Seq("query_id", "neighbor_id"))
+    val key = Seq("query_id", "neighbor_id")
+    val ex = exact.select(key.map(col): _*).distinct()
+    val hits = approx.select(key.map(col): _*).distinct().join(ex, key)
       .agg(count(lit(1)).as("__hits"))
-    val tot = exact.agg(countDistinct(col("query_id")).as("n_queries"),
+    val tot = ex.agg(countDistinct(col("query_id")).as("n_queries"),
       count(lit(1)).as("__n"))
     tot.crossJoin(hits)
-      .withColumn("__recall", col("__hits").cast("double") / col("__n"))
+      .withColumn("__recall", col("__hits").cast("double") / when(col("__n") > 0, col("__n")))
       .select(col("n_queries"), lit(k).as("k"),
         lit(floor).as("recall_floor"),
-        when(col("__recall") >= floor, lit(true))
+        requireExact(col("__n"), "ANN recall gate")
+          .when(col("__recall") >= floor, lit(true))
           .otherwise(raise_error(concat(lit("ANN recall "),
             format_number(col("__recall"), 3),
             lit(s" below declared floor $floor"))).cast("boolean"))
@@ -979,20 +985,24 @@ object Similarity {
     * exact pair set on BOTH axes: recall >= `floor` AND precision == 1
     * (every emitted pair must be exact-verified — the LSH paths re-check
     * the true cosine, so a single spurious pair means the verify stage
-    * broke). One deterministic row (n_exact_pairs, recall_floor,
-    * recall_ok=true, precision_ok=true) or a raised error. */
+    * broke). Both sides are deduplicated on (id_a, id_b) first. One
+    * deterministic row (n_exact_pairs, recall_floor, recall_ok=true,
+    * precision_ok=true) or a raised error; an empty exact set raises. */
   def pairRecallGate(approx: DataFrame, exact: DataFrame,
                      floor: Double): DataFrame = {
-    val hits = approx.join(exact, Seq("id_a", "id_b"))
-      .agg(count(lit(1)).as("__hits"))
-    val spurious = approx.join(exact, Seq("id_a", "id_b"), "left_anti")
-      .agg(count(lit(1)).as("__bad"))
-    exact.agg(count(lit(1)).as("n_exact_pairs"))
+    val key = Seq("id_a", "id_b")
+    val ap = approx.select(key.map(col): _*).distinct()
+    val ex = exact.select(key.map(col): _*).distinct()
+    val hits = ap.join(ex, key).agg(count(lit(1)).as("__hits"))
+    val spurious = ap.join(ex, key, "left_anti").agg(count(lit(1)).as("__bad"))
+    ex.agg(count(lit(1)).as("n_exact_pairs"))
       .crossJoin(hits).crossJoin(spurious)
-      .withColumn("__recall", col("__hits").cast("double") / col("n_exact_pairs"))
+      .withColumn("__recall",
+        col("__hits").cast("double") / when(col("n_exact_pairs") > 0, col("n_exact_pairs")))
       .select(col("n_exact_pairs"),
         lit(floor).as("recall_floor"),
-        when(col("__recall") >= floor, lit(true))
+        requireExact(col("n_exact_pairs"), "pair recall gate")
+          .when(col("__recall") >= floor, lit(true))
           .otherwise(raise_error(concat(lit("pair recall "),
             format_number(col("__recall"), 3),
             lit(s" below declared floor $floor"))).cast("boolean"))

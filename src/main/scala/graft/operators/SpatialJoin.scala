@@ -38,8 +38,74 @@ import graft.s2._
   * projection to [[graft.plans.S2PolygonTableJoinExec]], which runs the
   * same probe. Rows with a NULL or non-finite (NaN, +-Inf) coordinate never
   * match.
+  *
+  * The proximity joins (distance, kNN, region/polyline distance,
+  * spatio-temporal, Hausdorff, map matching) rest on one adjacency argument,
+  * stated here once. At the bucketing level L, the finest level whose
+  * minimum cell width is >= the search radius ([[proximityLevel]]), two
+  * points within the radius lie in the same level-L cell or in
+  * edge/vertex-adjacent ones. So one side explodes the closed neighborhood
+  * of its cell (the cell plus its <= 8 neighbors, `GetAllNeighbors`,
+  * `S2CellId.cs:813-863`), or the deduped union of those sets over a
+  * covering, the other side keeps its own single level-L cell, and a hash
+  * equi-join on that bucket plus the exact refine is complete. Each
+  * candidate pair meets once, because the un-exploded side has one key and
+  * the exploded side's buckets are distinct. No level is wider than level
+  * 0 (minimum width 2√2/3 rad, ~6000 km), so a larger radius has no
+  * bucketing level and is rejected. The intersection self-joins
+  * ([[rectIntersectJoin]], [[loopIntersectJoin]], [[polylineCrossJoin]])
+  * use the fixed-level form: a point shared by two shapes lies in one cell
+  * both coverings contain. Candidate generation for both families is the
+  * "proximity candidates" section below.
   */
 object SpatialJoin {
+
+  // ---- proximity candidates ---------------------------------------------
+  // Every proximity and intersection join builds its candidates here: the
+  // radius guard and level, the bucket keys of both sides, and the
+  // shared-cell self-join. Re-keying these joins is a change to this
+  // section only.
+
+  /** The bucketing level for a search radius in meters: the finest level
+    * whose minimum cell width is >= the radius. Rejects a radius that is
+    * <= 0, NaN, or beyond the level-0 adjacency guarantee, naming `op`. */
+  private[graft] def proximityLevel(radiusM: Double, op: String): Int = {
+    val angle = radiusM / S2LatLng.EarthRadiusMeters
+    require(angle > 0 && angle <= S2Projections.MinWidth.getValue(0),
+      s"$op: radius $radiusM m must be positive and within the level-0 " +
+        "adjacency guarantee (~6000 km)")
+    S2Projections.MinWidth.getMaxLevel(angle)
+  }
+
+  /** A point's own level-`level` cell: the key of the un-exploded side, and
+    * the cell whose neighborhood the exploded side takes. */
+  private[graft] def cellBucket(lat: Column, lon: Column, level: Int): Column =
+    s2_tile(lat, lon, level)
+
+  /** The closed neighborhood of one level-`level` cell, deduped: the
+    * exploded side's keys. */
+  private[graft] def neighborBuckets(cell: Column, level: Int): Column =
+    array_union(array(cell), s2_all_neighbors(cell, level))
+
+  /** The deduped union of [[neighborBuckets]] over a covering array;
+    * `cellOf` picks the cell out of a covering element. */
+  private[graft] def coveringBuckets(covering: Column, level: Int,
+                                     cellOf: Column => Column = c => c): Column =
+    array_distinct(flatten(transform(covering, c => neighborBuckets(cellOf(c), level))))
+
+  /** The shared-cell self-join: `cells` holds one row per (row, covering
+    * cell) with `idCol`, `__cell` and the `payload` columns (each named
+    * `__x`). Returns one row per pair of ids that share a cell, with
+    * id_a < id_b, carrying the payload as `__ax` / `__bx`. */
+  private[graft] def sharedCellPairs(cells: DataFrame, idCol: String,
+                                     payload: Seq[String]): DataFrame = {
+    def side(s: String): DataFrame = cells.select(col(idCol).as(s"id_$s") +: col("__cell") +:
+      payload.map(p => col(p).as(s"__$s${p.stripPrefix("__")}")): _*)
+    side("a").join(side("b"), "__cell")
+      .where(col("id_a") < col("id_b"))
+      .drop("__cell")
+      .dropDuplicates("id_a", "id_b")
+  }
 
   final case class CoverCell(regionId: String, cell: Long, level: Int, interior: Boolean)
 
@@ -169,32 +235,21 @@ object SpatialJoin {
   }
 
   /** Distance self-join: all point pairs within `radiusM`, WITHOUT a cross
-    * join. Bucketing level L = max level whose cell min-width >= radius
-    * (`S2Projections.MinWidth.getMaxLevel`), so any two points within the
-    * radius sit in the same or edge/vertex-adjacent level-L cells. One side
-    * explodes its cell's closed 8-neighborhood (<= 9 distinct buckets,
-    * `GetAllNeighbors`), the other keeps its own cell; a hash equi-join on
-    * the bucket + exact haversine refinement finishes. Each qualifying pair
-    * is emitted exactly once (the b-side is keyed by its unique own cell).
-    * Shuffle volume: <= 9x (id, lat, lon) on one side — never a pair blowup
-    * beyond genuine neighborhood density; skewed hot cells are AQE's
-    * skew-join case.
-    *
-    * Radius must not exceed the level-0 min width (~0.47 rad ~ 3000 km):
-    * beyond that, opposite cube faces are non-adjacent and completeness
-    * would break. */
+    * join. Candidates come from the adjacency argument in the header: side
+    * a explodes its cell's closed neighborhood (<= 9 distinct buckets),
+    * side b keeps its own cell; a hash equi-join on the bucket + exact
+    * haversine refinement finishes. Each qualifying pair is emitted exactly
+    * once. Shuffle volume: <= 9x (id, lat, lon) on one side — never a pair
+    * blowup beyond genuine neighborhood density; skewed hot cells are AQE's
+    * skew-join case. */
   def distanceJoin(points: DataFrame, latCol: String, lonCol: String,
                    idCol: String, radiusM: Double): DataFrame = {
-    val angle = radiusM / S2LatLng.EarthRadiusMeters
-    require(angle > 0 && angle <= S2Projections.MinWidth.getValue(0),
-      s"distanceJoin radius $radiusM m exceeds the level-0 adjacency guarantee (~3000 km)")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
+    val level = proximityLevel(radiusM, "distanceJoin")
     val withCell = points.select(col(idCol), col(latCol), col(lonCol))
-      .withColumn("__cell", s2_tile(col(latCol), col(lonCol), level))
+      .withColumn("__cell", cellBucket(col(latCol), col(lonCol), level))
     val a = withCell.select(col(idCol).as("id_a"),
       col(latCol).as("__lata"), col(lonCol).as("__lona"),
-      explode(array_union(array(col("__cell")),
-        s2_all_neighbors(col("__cell"), level))).as("__bucket"))
+      explode(neighborBuckets(col("__cell"), level)).as("__bucket"))
     val b = withCell.select(col(idCol).as("id_b"),
       col(latCol).as("__latb"), col(lonCol).as("__lonb"),
       col("__cell").as("__bucket"))
@@ -208,47 +263,26 @@ object SpatialJoin {
 
   /** Bichromatic distance join: every (left, right) pair within `radiusM`
     * across TWO point tables (customers × facilities, images × landmarks)
-    * — [[distanceJoin]]'s two-table sibling. Same adjacency argument:
-    * bucketing level L = max level with cell min-width ≥ radius, the LEFT
-    * side explodes its closed 8-neighborhood, the RIGHT keeps its own
-    * cell, hash equi-join + exact haversine refinement. Each qualifying
-    * pair appears exactly once (the non-exploded side is keyed by its
-    * unique own cell — no a<b filter here, the tables are distinct).
-    *
-    * `explodeRight = false` (default) explodes the LEFT side's closed
-    * 8-neighborhood; pass `true` to explode the RIGHT instead. The
-    * adjacency argument is symmetric (within-radius ⟹ same-or-adjacent
-    * cells, and cell adjacency is mutual), so BOTH variants return the
-    * identical pair set — the choice is purely physical: explode the
-    * SMALL side. A 10k-facility table exploded 9× is still a broadcast
-    * (the 100M-point side then never shuffles at all); exploding the big
-    * side there would be a pointless 9×-inflated exchange.
+    * — [[distanceJoin]]'s two-table sibling. Same adjacency argument (see
+    * the header): the LEFT side explodes its cell's closed neighborhood,
+    * the RIGHT keeps its own cell, hash equi-join + exact haversine
+    * refinement. Each qualifying pair appears exactly once (no a<b filter
+    * here, the tables are distinct).
     * Output: (id_left, id_right, distance_m). */
   def distanceJoinBetween(left: DataFrame, leftId: String,
                           leftLat: String, leftLon: String,
                           right: DataFrame, rightId: String,
                           rightLat: String, rightLon: String,
-                          radiusM: Double,
-                          explodeRight: Boolean = false): DataFrame = {
-    val angle = radiusM / S2LatLng.EarthRadiusMeters
-    require(angle > 0 && angle <= S2Projections.MinWidth.getValue(0),
-      s"distanceJoinBetween radius $radiusM m exceeds the level-0 adjacency guarantee (~3000 km)")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
-    def keyed(df: DataFrame, id: String, lat: String, lon: String,
-              outId: String, outLat: String, outLon: String,
-              explodeNeighbors: Boolean): DataFrame = {
-      val base = df.select(col(id).as(outId), col(lat).as(outLat), col(lon).as(outLon))
-        .withColumn("__cell", s2_tile(col(outLat), col(outLon), level))
-      if (explodeNeighbors)
-        base.select(col(outId), col(outLat), col(outLon),
-          explode(array_union(array(col("__cell")),
-            s2_all_neighbors(col("__cell"), level))).as("__bucket"))
-      else base.withColumnRenamed("__cell", "__bucket")
-    }
-    val a = keyed(left, leftId, leftLat, leftLon,
-      "id_left", "__lata", "__lona", explodeNeighbors = !explodeRight)
-    val b = keyed(right, rightId, rightLat, rightLon,
-      "id_right", "__latb", "__lonb", explodeNeighbors = explodeRight)
+                          radiusM: Double): DataFrame = {
+    val level = proximityLevel(radiusM, "distanceJoinBetween")
+    val a = left.select(col(leftId).as("id_left"),
+        col(leftLat).as("__lata"), col(leftLon).as("__lona"))
+      .withColumn("__cell", cellBucket(col("__lata"), col("__lona"), level))
+      .select(col("id_left"), col("__lata"), col("__lona"),
+        explode(neighborBuckets(col("__cell"), level)).as("__bucket"))
+    val b = right.select(col(rightId).as("id_right"),
+        col(rightLat).as("__latb"), col(rightLon).as("__lonb"))
+      .withColumn("__bucket", cellBucket(col("__latb"), col("__lonb"), level))
     a.join(b, "__bucket")
       .withColumn("distance_m",
         s2_distance_m(col("__lata"), col("__lona"), col("__latb"), col("__lonb")))
@@ -268,9 +302,10 @@ object SpatialJoin {
                   leftLat: String, leftLon: String,
                   right: DataFrame, rightId: String,
                   rightLat: String, rightLon: String,
-                  radiusM: Double, explodeRight: Boolean = false): DataFrame = {
+                  radiusM: Double): DataFrame = {
+    proximityLevel(radiusM, "nearestJoin") // reject a bad radius under this name
     distanceJoinBetween(left, leftId, leftLat, leftLon,
-      right, rightId, rightLat, rightLon, radiusM, explodeRight)
+      right, rightId, rightLat, rightLon, radiusM)
       .groupBy(col("id_left"))
       .agg(min_by(struct(col("distance_m"), col("id_right")),
         struct(col("distance_m"), col("id_right"))).as("__best"))
@@ -290,6 +325,7 @@ object SpatialJoin {
     * Output: (idCol, latCol, lonCol). */
   def isolatedPoints(points: DataFrame, latCol: String, lonCol: String,
                      idCol: String, radiusM: Double): DataFrame = {
+    proximityLevel(radiusM, "isolatedPoints") // reject a bad radius under this name
     val pairs = distanceJoin(points, latCol, lonCol, idCol, radiusM)
     // ONE subtree: a two-select union would compute the pair join twice
     // (different projections defeat exchange reuse); exploding both ids
@@ -325,17 +361,12 @@ object SpatialJoin {
     * one row per radius. */
   def ripleysK(points: DataFrame, latCol: String, lonCol: String, idCol: String,
                radiiM: Seq[Long]): DataFrame = {
-    require(radiiM.nonEmpty && radiiM.forall(_ > 0), s"radii must be positive: $radiiM")
-    require(radiiM.distinct.size == radiiM.size, s"duplicate radii: $radiiM")
-    val rMax = radiiM.max
-    // surface the candidate-generation bound as OUR contract, not a
-    // confusing inner failure: the bucketing level exists only while the
-    // search radius respects level-0 cell adjacency (~3000 km)
-    require((rMax + 0.5) / S2LatLng.EarthRadiusMeters <=
-      S2Projections.MinWidth.getValue(0),
-      s"largest radius $rMax m exceeds the level-0 adjacency guarantee (~3000 km)")
+    require(radiiM.nonEmpty && radiiM.forall(_ > 0), s"ripleysK: radii must be positive: $radiiM")
+    require(radiiM.distinct.size == radiiM.size, s"ripleysK: duplicate radii: $radiiM")
     // + 0.5: keep every pair whose ROUNDED distance can still be <= rMax
-    val pairs = distanceJoin(points, latCol, lonCol, idCol, rMax.toDouble + 0.5)
+    val searchM = radiiM.max.toDouble + 0.5
+    proximityLevel(searchM, "ripleysK") // reject a bad radius under this name
+    val pairs = distanceJoin(points, latCol, lonCol, idCol, searchM)
       .select(round(col("distance_m")).cast("long").as("__dm"))
     val cnt = points.agg(count(lit(1)).as("__n"))
     val sums = radiiM.map(r =>
@@ -373,7 +404,7 @@ object SpatialJoin {
     * neighbor list, not a global sort.
     *
     * Candidate generation is the [[distanceJoin]] bucket scheme: samples
-    * keep their level-L cell, queries explode the closed 9-neighborhood,
+    * keep their level-L cell, queries explode the closed neighborhood,
     * with L derived from a SAFE great-circle upper bound of the planar
     * radius (meridian+parallel path: gc_m <= (dlat + dlonWrap) * 111200 <=
     * radiusDeg * (1 + 1/IdwLonScale) * 111200). Samples at d2 = 0 are
@@ -384,20 +415,16 @@ object SpatialJoin {
                      queries: DataFrame, qidCol: String,
                      qlatCol: String, qlonCol: String,
                      radiusDeg: Double): DataFrame = {
-    require(radiusDeg > 0, s"radiusDeg must be positive: $radiusDeg")
-    val radiusM = radiusDeg * (1.0 + 1.0 / IdwLonScale) * 111200.0
-    val angle = radiusM / S2LatLng.EarthRadiusMeters
-    require(angle <= S2Projections.MinWidth.getValue(0),
-      s"idwInterpolate radius $radiusDeg deg exceeds the level-0 adjacency guarantee")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
+    val level = proximityLevel(radiusDeg * (1.0 + 1.0 / IdwLonScale) * 111200.0,
+      "idwInterpolate")
     val s = samples.select(
       col(idCol).as("__sid"), col(valCol).cast("double").as("__v"),
       col(latCol).as("__slat"), col(lonCol).as("__slon"),
-      s2_tile(col(latCol), col(lonCol), level).as("__bucket"))
-    val qCell = s2_tile(col(qlatCol), col(qlonCol), level)
+      cellBucket(col(latCol), col(lonCol), level).as("__bucket"))
     val q = queries.select(col(qidCol).as("qid"),
         col(qlatCol).as("__qlat"), col(qlonCol).as("__qlon"),
-        explode(array_union(array(qCell), s2_all_neighbors(qCell, level))).as("__bucket"))
+        explode(neighborBuckets(cellBucket(col(qlatCol), col(qlonCol), level), level))
+          .as("__bucket"))
     val dlat = col("__qlat") - col("__slat")
     val rawDlon = abs(col("__qlon") - col("__slon"))
     val dlonW = least(rawDlon, lit(360.0) - rawDlon)
@@ -431,7 +458,8 @@ object SpatialJoin {
     * (closed intervals, wrap-aware). Shuffle carries only (id, cell,
     * bounds) rows; no cross join at any scale. `level` trades explode
     * factor (finer = more cells per rect) against bucket selectivity —
-    * pick it so a typical rect covers a handful of cells. */
+    * pick it so a typical rect covers a handful of cells. The self-join is
+    * [[sharedCellPairs]]. */
   def rectIntersectJoin(rects: DataFrame, idCol: String,
                         latLoCol: String, latHiCol: String,
                         lonLoCol: String, lonHiCol: String,
@@ -458,16 +486,7 @@ object SpatialJoin {
         col(lonLoCol).as("__glo"), col(lonHiCol).as("__ghi"))
       .withColumn("__cell",
         explode(cellsUdf(col("__lo"), col("__hi"), col("__glo"), col("__ghi"))))
-    val a = withCells.select(col(idCol).as("id_a"), col("__cell"),
-      col("__lo").as("__alo"), col("__hi").as("__ahi"),
-      col("__glo").as("__aglo"), col("__ghi").as("__aghi"))
-    val b = withCells.select(col(idCol).as("id_b"), col("__cell"),
-      col("__lo").as("__blo"), col("__hi").as("__bhi"),
-      col("__glo").as("__bglo"), col("__ghi").as("__bghi"))
-    a.join(b, "__cell")
-      .where(col("id_a") < col("id_b"))
-      .drop("__cell")
-      .dropDuplicates("id_a", "id_b")
+    sharedCellPairs(withCells, idCol, Seq("__lo", "__hi", "__glo", "__ghi"))
       .where(intersectsUdf(
         col("__alo"), col("__ahi"), col("__aglo"), col("__aghi"),
         col("__blo"), col("__bhi"), col("__bglo"), col("__bghi")))
@@ -476,9 +495,7 @@ object SpatialJoin {
 
   /** k nearest POLYLINES within `radiusM` of each point — map matching:
     * "which roads could this image have been taken from". Candidate
-    * generation is [[polylineDistanceJoin]]'s (chain covering ∪ neighbor
-    * rings at the radius-derived level vs the point's single cell, complete
-    * by the min-width adjacency argument); ranking is a per-point window
+    * generation is [[polylineDistanceJoin]]'s; ranking is a per-point window
     * over the radius-bounded candidate set, ordered (distance, line id)
     * for determinism.
     *
@@ -490,6 +507,7 @@ object SpatialJoin {
                            latsCol: String, lonsCol: String,
                            radiusM: Double, k: Int): DataFrame = {
     require(k >= 1, s"nearestPolylinesJoin: k must be >= 1, got $k")
+    proximityLevel(radiusM, "nearestPolylinesJoin") // reject a bad radius under this name
     val reserved = Seq("__rank")
     val collisions = (points.columns ++ lines.columns).filter(reserved.contains)
     require(collisions.isEmpty,
@@ -510,9 +528,10 @@ object SpatialJoin {
     * chains: a proper crossing point lies ON both chains, hence in one
     * level-`level` cell that both fixed-level chain coverings contain
     * (`s2_polyline_covering` = every cell the chain passes through), so
-    * pairs sharing a covering cell are complete. Pair-id dedup before the
-    * exact refine; refinement is the robust crossing trichotomy over edge
-    * pairs (> 0 only — shared vertices and touches are NOT crossings). */
+    * pairs sharing a covering cell are complete ([[sharedCellPairs]], which
+    * dedups pair ids before the exact refine); refinement is the robust
+    * crossing trichotomy over edge pairs (> 0 only — shared vertices and
+    * touches are NOT crossings). */
   def polylineCrossJoin(lines: DataFrame, idCol: String,
                         latsCol: String, lonsCol: String,
                         level: Int = 5): DataFrame = {
@@ -521,16 +540,9 @@ object SpatialJoin {
     require(collisions.isEmpty,
       s"polylineCrossJoin: reserved column name(s) in input: ${collisions.mkString(", ")}")
     val withCells = lines
-      .select(col(idCol), col(latsCol).as("__vlats"), col(lonsCol).as("__vlons"),
+      .select(col(idCol), col(latsCol).as("__lats"), col(lonsCol).as("__lons"),
         explode(s2_polyline_covering(col(latsCol), col(lonsCol), level)).as("__cell"))
-    val a = withCells.select(col(idCol).as("id_a"), col("__cell"),
-      col("__vlats").as("__alats"), col("__vlons").as("__alons"))
-    val b = withCells.select(col(idCol).as("id_b"), col("__cell"),
-      col("__vlats").as("__blats"), col("__vlons").as("__blons"))
-    a.join(b, "__cell")
-      .where(col("id_a") < col("id_b"))
-      .drop("__cell")
-      .dropDuplicates("id_a", "id_b")
+    sharedCellPairs(withCells, idCol, Seq("__lats", "__lons"))
       .where(s2_polylines_cross(col("__alats"), col("__alons"),
         col("__blats"), col("__blons")))
       .select("id_a", "id_b")
@@ -539,44 +551,48 @@ object SpatialJoin {
   /** Spatio-temporal pair SELF-join: event pairs within `radiusM` meters
     * AND `windowSec` seconds of each other — co-occurrence detection
     * ("which images were taken near each other around the same time").
+    * One operator for batch and stream: on a `readStream` input it is a
+    * stream-stream self-join whose pairs are found across micro-batches.
     *
-    * One composite equi-join on (cell-bucket, time-bucket): the a-side
-    * explodes its cell ∪ 8 neighbors at the radius-derived level (the
-    * [[distanceJoin]] adjacency argument), the b-side explodes its time
-    * bucket ±1 (|Δt| <= W implies the buckets of width W differ by at most
-    * one). Each qualifying pair matches EXACTLY once — b's cell and a's
-    * bucket are single values joined against deduped explode sets — so no
-    * pair-dedup pass is needed. Row cost is 9|E| + 3|E| bucket rows and the
-    * only shuffle is the composite-key hash join; a hot (cell, bucket) is
-    * bounded by physical co-occurrence density, same as [[distanceJoin]].
-    * Time buckets come from exact integer division of `unix_micros` (no fp
-    * boundary wobble at 1e15-microsecond magnitudes).
+    * One composite equi-join on (cell-bucket, time-bucket): side a
+    * explodes its cell's closed neighborhood (the header's adjacency
+    * argument), side b explodes its time bucket ±1 (|Δt| <= W implies the
+    * buckets of width W differ by at most one). Each qualifying pair
+    * matches EXACTLY once — b's cell and a's bucket are single values
+    * joined against deduped explode sets — so no pair-dedup pass is needed,
+    * and a coarse hot cell never pairs events across distant times. Time
+    * buckets come from exact integer division of `unix_micros`.
+    *
+    * The event-time range |Δt| <= W sits inside the join condition, and
+    * the event time carries a 1-hour watermark: on a stream that is what
+    * bounds the join state (rows older than watermark + window are
+    * evicted); on a batch input Catalyst eliminates the watermark node.
     *
     * @return (id_a, id_b, distance_m) with id_a < id_b */
   def spatioTemporalJoin(events: DataFrame, idCol: String, tsCol: String,
                          latCol: String, lonCol: String,
                          radiusM: Double, windowSec: Long): DataFrame = {
-    val angle = radiusM / S2LatLng.EarthRadiusMeters
-    require(angle > 0 && angle <= S2Projections.MinWidth.getValue(0),
-      s"spatioTemporalJoin radius $radiusM m exceeds the level-0 adjacency guarantee")
+    val level = proximityLevel(radiusM, "spatioTemporalJoin")
     require(windowSec >= 1, s"spatioTemporalJoin: windowSec must be >= 1, got $windowSec")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
     val winUs = math.multiplyExact(windowSec, 1000000L)
-    val base = events.select(col(idCol), col(tsCol), col(latCol), col(lonCol))
-      .withColumn("__cell", s2_tile(col(latCol), col(lonCol), level))
-      .withColumn("__tus", unix_micros(col(tsCol).cast("timestamp")))
-      .withColumn("__tb", expr(s"__tus div ${winUs}L"))
-    val a = base.select(col(idCol).as("id_a"), col("__tus").as("__tusa"),
-      col(latCol).as("__lata"), col(lonCol).as("__lona"), col("__tb"),
-      explode(array_union(array(col("__cell")),
-        s2_all_neighbors(col("__cell"), level))).as("__bcell"))
-    val b = base.select(col(idCol).as("id_b"), col("__tus").as("__tusb"),
+    val win = expr(s"INTERVAL $windowSec SECONDS")
+    val marked = events
+      .select(col(idCol), col(tsCol).cast("timestamp").as("__ts"),
+        col(latCol), col(lonCol))
+      .withColumn("__cell", cellBucket(col(latCol), col(lonCol), level))
+      .withColumn("__tb", expr(s"unix_micros(__ts) div ${winUs}L"))
+      .withWatermark("__ts", "1 hour")
+    val a = marked.select(col(idCol).as("id_a"), col("__ts").as("__tsa"),
+      col(latCol).as("__lata"), col(lonCol).as("__lona"), col("__tb").as("__tba"),
+      explode(neighborBuckets(col("__cell"), level)).as("__bcella"))
+    val b = marked.select(col(idCol).as("id_b"), col("__ts").as("__tsb"),
       col(latCol).as("__latb"), col(lonCol).as("__lonb"),
-      col("__cell").as("__bcell"),
-      explode(array(col("__tb") - 1, col("__tb"), col("__tb") + 1)).as("__tb"))
-    a.join(b, Seq("__bcell", "__tb"))
+      col("__cell").as("__bcellb"),
+      explode(array(col("__tb") - 1, col("__tb"), col("__tb") + 1)).as("__tbb"))
+    a.join(b,
+        col("__bcella") === col("__bcellb") && col("__tba") === col("__tbb") &&
+          col("__tsb") >= col("__tsa") - win && col("__tsb") <= col("__tsa") + win)
       .where(col("id_a") < col("id_b"))
-      .where(abs(col("__tusa") - col("__tusb")) <= winUs)
       .withColumn("distance_m",
         s2_distance_m(col("__lata"), col("__lona"), col("__latb"), col("__lonb")))
       .where(col("distance_m") <= radiusM)
@@ -586,14 +602,12 @@ object SpatialJoin {
   /** k nearest REGIONS within `radiusM` of each point, from a TABLE of
     * single-loop polygons — "which admin areas is this image in or near",
     * the region form of kNN. Distance is 0 inside a region, else the exact
-    * boundary distance. Candidates follow the polyline join's adjacency
-    * argument extended to areas: at the level where the minimum cell width
-    * is >= the radius angle, a point INSIDE a region sits in one of its
+    * boundary distance. Candidates follow the header's adjacency argument
+    * extended to areas: a point INSIDE a region sits in one of its
     * covering cells, and a point within the radius of its boundary sits in
-    * a covering cell or one of its 8 neighbors — so bucketing regions
-    * under (covering ∪ neighbors, deduped per region before the explode)
-    * and points under their single cell is complete, with one candidate
-    * row per (point, region) pair. Ranking is a per-point window over the
+    * a covering cell or one of its neighbors — so bucketing regions under
+    * [[coveringBuckets]] and points under their single cell is complete,
+    * with one candidate row per (point, region) pair. Ranking is a per-point window over the
     * (bounded: regions within the radius) candidate set, ordered
     * (distance, region id) for determinism.
     *
@@ -605,10 +619,7 @@ object SpatialJoin {
                          latsCol: String, lonsCol: String,
                          radiusM: Double, k: Int): DataFrame = {
     require(k >= 1, s"nearestRegionsJoin: k must be >= 1, got $k")
-    val angle = radiusM / S2LatLng.EarthRadiusMeters
-    require(angle > 0 && angle <= S2Projections.MinWidth.getValue(0),
-      s"nearestRegionsJoin radius $radiusM m exceeds the level-0 adjacency guarantee")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
+    val level = proximityLevel(radiusM, "nearestRegionsJoin")
     val reserved = Seq("__pcell", "__bucket", "__rlats", "__rlons", "__rank")
     val collisions = (points.columns ++ polys.columns).filter(reserved.contains)
     require(collisions.isEmpty,
@@ -617,15 +628,13 @@ object SpatialJoin {
     val raster = polys
       .select(col(idCol).as("region_id"), col(latsCol).as("__rlats"),
         col(lonsCol).as("__rlons"),
-        explode(array_distinct(flatten(transform(
-          s2_polygon_covering(col(latsCol), col(lonsCol), level),
-          c => array_union(array(c.getField("cell")),
-            s2_all_neighbors(c.getField("cell"), level)))))).as("__bucket"))
+        explode(coveringBuckets(s2_polygon_covering(col(latsCol), col(lonsCol), level),
+          level, _.getField("cell"))).as("__bucket"))
 
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(pointIdCol)).orderBy(col("distance_m"), col("region_id"))
     points
-      .withColumn("__pcell", s2_tile(col(latCol), col(lonCol), level))
+      .withColumn("__pcell", cellBucket(col(latCol), col(lonCol), level))
       .join(raster, col("__pcell") === col("__bucket"))
       .withColumn("distance_m",
         s2_loop_region_distance_m(col("__rlats"), col("__rlons"), col(latCol), col(lonCol)))
@@ -641,8 +650,9 @@ object SpatialJoin {
     * arbitrary loops. Same candidate argument: any point of A ∩ B lies in
     * exactly one level-`level` cell, which then intersects both loops and
     * appears in both fixed-level coverings, so candidates sharing a
-    * covering cell are complete. Pairs can share several cells, so the
-    * (id_a, id_b) dedup shuffles ONLY pair ids (vertex arrays ride along
+    * covering cell are complete ([[sharedCellPairs]]). Pairs can share
+    * several cells, so the (id_a, id_b) dedup shuffles ONLY pair ids
+    * (vertex arrays ride along
     * for the post-dedup exact `s2_loops_intersect` refinement; at very
     * high vertex counts, project them out before the dedup and join them
     * back by id). */
@@ -654,17 +664,10 @@ object SpatialJoin {
     require(collisions.isEmpty,
       s"loopIntersectJoin: reserved column name(s) in input: ${collisions.mkString(", ")}")
     val withCells = polys
-      .select(col(idCol), col(latsCol).as("__vlats"), col(lonsCol).as("__vlons"),
+      .select(col(idCol), col(latsCol).as("__lats"), col(lonsCol).as("__lons"),
         explode(s2_polygon_covering(col(latsCol), col(lonsCol), level)).as("__rc"))
-      .select(col(idCol), col("__vlats"), col("__vlons"), col("__rc.cell").as("__cell"))
-    val a = withCells.select(col(idCol).as("id_a"), col("__cell"),
-      col("__vlats").as("__alats"), col("__vlons").as("__alons"))
-    val b = withCells.select(col(idCol).as("id_b"), col("__cell"),
-      col("__vlats").as("__blats"), col("__vlons").as("__blons"))
-    a.join(b, "__cell")
-      .where(col("id_a") < col("id_b"))
-      .drop("__cell")
-      .dropDuplicates("id_a", "id_b")
+      .select(col(idCol), col("__lats"), col("__lons"), col("__rc.cell").as("__cell"))
+    sharedCellPairs(withCells, idCol, Seq("__lats", "__lons"))
       .where(s2_loops_intersect(col("__alats"), col("__alons"),
         col("__blats"), col("__blons")))
       .select("id_a", "id_b")
@@ -796,15 +799,12 @@ object SpatialJoin {
 
   /** Points within `radiusM` of any polyline in a TABLE of polylines — the
     * map-matching prefilter (events near roads/tracks/routes). Candidate
-    * generation follows [[distanceJoin]]'s adjacency argument: at the level
-    * where the MINIMUM cell width is >= the radius angle, a point within
-    * the radius of some chain point q lies in q's cell or one of its 8
-    * neighbors; q's cell is in the chain's covering, so bucketing each
-    * line under (covering cells UNION their neighbors, deduped per line
-    * BEFORE the explode) and each point under its own single cell makes
-    * the equi-join complete — and ONE row per candidate (point, line) pair
-    * (the point has one cell, line buckets are distinct), so no pair
-    * dedup. Refinement is the exact kernel min-over-edges distance
+    * generation follows the header's adjacency argument: a point within
+    * the radius of some chain point q lies in q's cell or one of its
+    * neighbors, and q's cell is in the chain's covering, so bucketing each
+    * line under [[coveringBuckets]] and each point under its own single
+    * cell makes the equi-join complete — and ONE row per candidate (point,
+    * line) pair, so no pair dedup. Refinement is the exact kernel min-over-edges distance
     * (`S2EdgeUtil.cs:293-334`), chains built once per (task thread, line).
     *
     * Shuffle carries (line id, vertex arrays, bucket) on the (small) line
@@ -817,10 +817,7 @@ object SpatialJoin {
                            lines: DataFrame, idCol: String,
                            latsCol: String, lonsCol: String,
                            radiusM: Double): DataFrame = {
-    val angle = radiusM / S2LatLng.EarthRadiusMeters
-    require(angle > 0 && angle <= S2Projections.MinWidth.getValue(0),
-      s"polylineDistanceJoin radius $radiusM m exceeds the level-0 adjacency guarantee")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
+    val level = proximityLevel(radiusM, "polylineDistanceJoin")
     val reserved = Seq("__pcell", "__bucket", "__llats", "__llons")
     val collisions = (points.columns ++ lines.columns).filter(reserved.contains)
     require(collisions.isEmpty,
@@ -829,12 +826,11 @@ object SpatialJoin {
     val raster = lines
       .select(col(idCol).as("line_id"), col(latsCol).as("__llats"),
         col(lonsCol).as("__llons"),
-        explode(array_distinct(flatten(transform(
-          s2_polyline_covering(col(latsCol), col(lonsCol), level),
-          c => array_union(array(c), s2_all_neighbors(c, level)))))).as("__bucket"))
+        explode(coveringBuckets(s2_polyline_covering(col(latsCol), col(lonsCol), level),
+          level)).as("__bucket"))
 
     points
-      .withColumn("__pcell", s2_tile(col(latCol), col(lonCol), level))
+      .withColumn("__pcell", cellBucket(col(latCol), col(lonCol), level))
       .join(raster, col("__pcell") === col("__bucket"))
       .withColumn("distance_m",
         s2_polyline_distance_m(col("__llats"), col("__llons"), col(latCol), col(lonCol)))
@@ -847,8 +843,8 @@ object SpatialJoin {
     * "which road, which segment" for every GPS fix. Points with no line in
     * range emit nothing (the standard max-snap-radius contract).
     *
-    * Plan: candidates from [[polylineDistanceJoin]] (covering-cell ∪
-    * neighbor raster equi-join — no cross join, bytes-thin rows), then a
+    * Plan: candidates from [[polylineDistanceJoin]] (no cross join,
+    * bytes-thin rows), then a
     * per-point rank-1 window (WindowGroupLimit pre-truncates each map
     * partition to one row per point before the exchange) and ONE
     * nearest-edge refinement per matched point after an equi-join back to
@@ -859,6 +855,7 @@ object SpatialJoin {
                       lines: DataFrame, idCol: String,
                       latsCol: String, lonsCol: String,
                       radiusM: Double): DataFrame = {
+    proximityLevel(radiusM, "snapToPolylines") // reject a bad radius under this name
     val reserved = Seq("__slats", "__slons", "__rk")
     val collisions = (points.columns ++ lines.columns).filter(reserved.contains)
     require(collisions.isEmpty,

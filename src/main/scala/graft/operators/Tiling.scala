@@ -983,22 +983,11 @@ object Tiling {
     for (t <- touched) {
       val dst = Paths.get(dir, s"coarse_tile=$t")
       val src = staging.resolve(s"coarse_tile=$t")
-      deleteRecursively(dst)
+      ResumableWrite.deleteRecursively(dst)
       if (Files.exists(src)) Files.move(src, dst) else removed += 1
     }
-    deleteRecursively(staging)
+    ResumableWrite.deleteRecursively(staging)
     (stagedRows, removed)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(p)) {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().forEachRemaining(deleteRecursively) finally s.close()
-      }
-      Files.delete(p)
-    }
   }
 
   /** Read a clustered table restricted to the cells of a covering: the

@@ -274,11 +274,11 @@ object Trajectories {
     * doubles; the only fp hazard is the final rounding boundary, which the
     * spec pins on the fixture).
     *
-    * Distributed shape (complete by the same adjacency argument as
-    * [[SpatialJoin.distanceJoin]]): symmetric Hausdorff <= D implies SOME
-    * cross point pair within D, so candidates = entity pairs sharing a
-    * (cell, cell-or-neighbor) bucket at the level whose min cell width is
-    * >= D — built from DISTINCT (entity, cell) rows, so candidate
+    * Distributed shape (complete by the adjacency argument in the
+    * [[SpatialJoin]] header): symmetric Hausdorff <= D implies SOME cross
+    * point pair within D, so candidates = entity pairs sharing a
+    * (cell, cell-or-neighbor) bucket at D's bucketing level — built from
+    * DISTINCT (entity, cell) rows, so candidate
     * generation scales with track spatial extent, never point count. The
     * exact refine joins each candidate pair to the two collected tracks
     * (one groupBy by entity — the usual a-track-fits-in-a-task bound) and
@@ -286,22 +286,17 @@ object Trajectories {
     * already exceeds the bound. */
   def hausdorffJoin(points: DataFrame, idCol: String, latCol: String, lonCol: String,
                     maxHausdorffM: Long): DataFrame = {
-    import graft.s2.{S2LatLng, S2Projections}
-    require(maxHausdorffM > 0, s"maxHausdorffM must be positive, got $maxHausdorffM")
-    val angle = maxHausdorffM.toDouble / S2LatLng.EarthRadiusMeters
-    require(angle <= S2Projections.MinWidth.getValue(0),
-      s"hausdorffJoin bound $maxHausdorffM m exceeds the level-0 adjacency guarantee")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
+    import graft.s2.S2LatLng
+    val level = SpatialJoin.proximityLevel(maxHausdorffM.toDouble, "hausdorffJoin")
     val reserved = Seq("__cell", "__bucket", "__tid", "__trk", "id_a", "id_b", "haus_m")
     val clash = points.columns.filter(reserved.contains)
     require(clash.isEmpty, s"hausdorffJoin reserves ${reserved.mkString(", ")}; rename: " +
       clash.mkString(", "))
 
     val cells = points.select(col(idCol).as("__tid"),
-      s2_tile(col(latCol), col(lonCol), level).as("__cell")).distinct()
+      SpatialJoin.cellBucket(col(latCol), col(lonCol), level).as("__cell")).distinct()
     val a = cells.select(col("__tid").as("id_a"),
-      explode(array_union(array(col("__cell")),
-        s2_all_neighbors(col("__cell"), level))).as("__bucket")).distinct()
+      explode(SpatialJoin.neighborBuckets(col("__cell"), level)).as("__bucket")).distinct()
     val b = cells.select(col("__tid").as("id_b"), col("__cell").as("__bucket"))
     val cand = a.join(b, "__bucket")
       .where(col("id_a") < col("id_b"))

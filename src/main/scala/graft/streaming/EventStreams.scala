@@ -12,7 +12,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * these are the engine-side stream operators a geotagged-event pipeline
   * needs: watermarked windowed aggregation and stateful sessionization via
   * `flatMapGroupsWithState`. Every transform works identically on a batch
-  * DataFrame and a `readStream` source.
+  * DataFrame and a `readStream` source. The stream-stream spatio-temporal
+  * pair join is not a separate operator here: it is
+  * [[graft.operators.SpatialJoin.spatioTemporalJoin]], run on the stream.
   */
 object EventStreams {
 
@@ -47,61 +49,6 @@ object EventStreams {
       .groupBy(window(col("ts"), windowLength), col("tile_token"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"), col("tile_token"), col("n"))
-  }
-
-  /** Streaming spatio-temporal co-occurrence: the stream-stream SELF-join
-    * twin of [[graft.operators.SpatialJoin.spatioTemporalJoin]] — pairs of
-    * events within `radiusM` meters AND `windowSec` seconds, discovered
-    * across micro-batches. The join key is the SAME composite
-    * (cell-bucket, time-bucket) equi-key as the batch operator: side a
-    * explodes cell ∪ 8 neighbors at the radius-derived level, side b
-    * explodes its time bucket ±1 (|Δt| <= W implies buckets of width W
-    * differ by at most one) — each qualifying pair matches exactly once,
-    * and a coarse hot cell never pairs events across distant times (the
-    * round-3 q_st_join_stream cost: with a cell-only key the 1000-km-level
-    * buckets paired quadratically across the whole fixture's time span).
-    * The native event-time RANGE condition stays as a conjunct — it is what
-    * Structured Streaming uses to bound join state: with both sides
-    * watermarked, rows older than watermark + window are evicted. Works
-    * identically on a batch DataFrame (the watermark node is eliminated,
-    * the range becomes a theta conjunct on the composite hash join).
-    *
-    * @return (id_a, id_b, distance_m) with id_a < id_b */
-  def spatioTemporalPairs(events: DataFrame, idCol: String, tsCol: String,
-                          latCol: String, lonCol: String,
-                          radiusM: Double, windowSec: Long,
-                          watermarkDelay: String = "1 hour"): DataFrame = {
-    import graft.functions.s2functions._
-    import graft.s2.{S2LatLng, S2Projections}
-    val angle = radiusM / S2LatLng.EarthRadiusMeters
-    require(angle > 0 && angle <= S2Projections.MinWidth.getValue(0),
-      s"spatioTemporalPairs radius $radiusM m exceeds the level-0 adjacency guarantee")
-    require(windowSec >= 1, s"spatioTemporalPairs: windowSec must be >= 1, got $windowSec")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
-    val winUs = math.multiplyExact(windowSec, 1000000L)
-    val marked = events
-      .select(col(idCol), col(tsCol).cast("timestamp").as("__ts"),
-        col(latCol), col(lonCol))
-      .withColumn("__cell", s2_tile(col(latCol), col(lonCol), level))
-      .withColumn("__tb", expr(s"unix_micros(__ts) div ${winUs}L"))
-      .withWatermark("__ts", watermarkDelay)
-    val a = marked.select(col(idCol).as("id_a"), col("__ts").as("__tsa"),
-      col(latCol).as("__lata"), col(lonCol).as("__lona"), col("__tb").as("__tba"),
-      explode(array_union(array(col("__cell")),
-        s2_all_neighbors(col("__cell"), level))).as("__bcella"))
-    val b = marked.select(col(idCol).as("id_b"), col("__ts").as("__tsb"),
-      col(latCol).as("__latb"), col(lonCol).as("__lonb"),
-      col("__cell").as("__bcellb"),
-      explode(array(col("__tb") - 1, col("__tb"), col("__tb") + 1)).as("__tbb"))
-    a.join(b,
-        col("__bcella") === col("__bcellb") && col("__tba") === col("__tbb") &&
-          col("__tsb") >= col("__tsa") - expr(s"INTERVAL $windowSec SECONDS") &&
-          col("__tsb") <= col("__tsa") + expr(s"INTERVAL $windowSec SECONDS"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("distance_m",
-        s2_distance_m(col("__lata"), col("__lona"), col("__latb"), col("__lonb")))
-      .where(col("distance_m") <= radiusM)
-      .select("id_a", "id_b", "distance_m")
   }
 
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.MapMatch
-import graft.s2.{S2LatLng, S2Projections}
 
 /** ONLINE map matching — the streaming twin of
   * [[graft.operators.MapMatch.viterbi]]: as each fix arrives, emit the
@@ -44,16 +43,12 @@ object MapMatchStream {
                   edgeStepCost: Long = 100L, switchPenalty: Long = 20000L,
                   watermarkDelay: String = "10 minutes",
                   idleTtlMillis: Long = 24 * 3600 * 1000L): Dataset[MmPoint] = {
-    val angle = radiusM / S2LatLng.EarthRadiusMeters
-    require(angle > 0 && angle <= S2Projections.MinWidth.getValue(0),
-      s"matchStream radius $radiusM m exceeds the level-0 adjacency guarantee")
-    val level = S2Projections.MinWidth.getMaxLevel(angle)
     val spark0 = points.sparkSession
     import spark0.implicits._
     val isStream = points.isStreaming
     val cands0 = MapMatch.candidateStates(points, trackCol, tsCol, tieCol,
         latCol, lonCol, lines, lineIdCol, latsCol, lonsCol,
-        level, radiusM, quantMeters)
+        radiusM, quantMeters, "matchStream")
       .select(col("__track").as("track"), col("__ts").as("ts"),
         col("__tie").as("tie"), col("line_id").as("line"),
         col("edge_idx").as("edge"), col("__e").as("e"))

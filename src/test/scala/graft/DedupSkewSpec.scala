@@ -68,6 +68,19 @@ class DedupSkewSpec extends SparkTestBase {
     val chainGot = Dedup.duplicateClusters(chain)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(chainGot.size == 60 && chainGot.values.forall(_ == 100L))
+
+    // the label-sum probe is exact only over integral ids: string and
+    // fractional ids are rejected up front, naming the type
+    for ((ids, typeName) <- Seq(
+        Seq(("a", "b"), ("b", "c")).toDF("id_a", "id_b") -> "StringType",
+        Seq((1.5, 2.5), (2.5, 3.5)).toDF("id_a", "id_b") -> "DoubleType")) {
+      val e = intercept[IllegalArgumentException](Dedup.duplicateClusters(ids))
+      assert(e.getMessage.contains("duplicateClusters") && e.getMessage.contains(typeName),
+        e.getMessage)
+    }
+    // every integral width is accepted
+    val narrow = Seq((1.toShort, 2.toShort), (2.toShort, 3.toShort)).toDF("id_a", "id_b")
+    assert(Dedup.duplicateClusters(narrow).select("cluster_id").distinct().count() === 1)
   }
 
   test("dedupKeep: keeps singletons plus one canonical representative per cluster") {

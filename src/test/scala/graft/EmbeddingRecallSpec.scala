@@ -163,4 +163,39 @@ class EmbeddingRecallSpec extends SparkTestBase {
     info(f"bucketedAnn recall@5 = $recall%.3f")
     assert(recall >= 0.9, f"ANN recall $recall%.3f below 0.9")
   }
+
+  test("recall gates count a repeated true hit once") {
+    import spark.implicits._
+    // one true hit, emitted twice, against two exact neighbors: recall 0.5
+    val exact = Seq((1L, 10L), (1L, 11L)).toDF("query_id", "neighbor_id")
+    val approx = Seq((1L, 10L), (1L, 10L)).toDF("query_id", "neighbor_id")
+    val e = intercept[Exception] {
+      Similarity.recallGate(approx, exact, k = 2, floor = 0.9).collect()
+    }
+    assert(e.getMessage.contains("ANN recall 0.500 below declared floor 0.9"), e.getMessage)
+    assert(Similarity.recallGate(approx, exact, k = 2, floor = 0.5)
+      .select("n_queries", "recall_ok").as[(Long, Boolean)].collect() === Array((1L, true)))
+
+    val exactPairs = Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b")
+    val approxPairs = Seq((1L, 2L), (1L, 2L)).toDF("id_a", "id_b")
+    val ep = intercept[Exception] {
+      Similarity.pairRecallGate(approxPairs, exactPairs, floor = 0.9).collect()
+    }
+    assert(ep.getMessage.contains("pair recall 0.500 below declared floor 0.9"), ep.getMessage)
+  }
+
+  test("recall gates raise a distinct error on an empty exact set") {
+    import spark.implicits._
+    val approx = Seq((1L, 10L)).toDF("query_id", "neighbor_id")
+    val e = intercept[Exception] {
+      Similarity.recallGate(approx, approx.limit(0), k = 1, floor = 0.9).collect()
+    }
+    assert(e.getMessage.contains("ANN recall gate: the exact set is empty"), e.getMessage)
+
+    val approxPairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+    val ep = intercept[Exception] {
+      Similarity.pairRecallGate(approxPairs, approxPairs.limit(0), floor = 0.9).collect()
+    }
+    assert(ep.getMessage.contains("pair recall gate: the exact set is empty"), ep.getMessage)
+  }
 }

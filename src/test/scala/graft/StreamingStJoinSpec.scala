@@ -6,12 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.SpatialJoin
-import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 
-/** Stream-stream spatio-temporal self-join: on a real MemoryStream the
-  * operator finds the same pairs as the (brute-force-pinned) batch
-  * operator, INCLUDING pairs whose two events arrive in different
+/** Stream-stream spatio-temporal self-join: on a real MemoryStream,
+  * `spatioTemporalJoin` finds the same pairs as on the (brute-force-pinned)
+  * batch input, INCLUDING pairs whose two events arrive in different
   * micro-batches — the state the event-time range condition keeps alive. */
 class StreamingStJoinSpec extends SparkTestBase {
 
@@ -36,7 +35,7 @@ class StreamingStJoinSpec extends SparkTestBase {
     val input = MemoryStream[Event]
     input.addData(events.take(cut): _*)
 
-    val query = EventStreams.spatioTemporalPairs(geo(input.toDF()), "event_id", "ts",
+    val query = SpatialJoin.spatioTemporalJoin(geo(input.toDF()), "event_id", "ts",
         "lat", "lon", radiusM = radius, windowSec = windowSec)
       .writeStream.format("memory").queryName("st_pairs_stream")
       .outputMode("append").start()
