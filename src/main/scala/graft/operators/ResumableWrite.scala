@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
+import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import com.fasterxml.jackson.core.JsonProcessingException
@@ -56,6 +56,19 @@ object ResumableWrite {
       } else { sb.append(c); i += 1 }
     }
     sb.toString
+  }
+
+  /** The JVM's file-name encoding: how it turns a path into bytes. */
+  private[graft] def fileNameEncoding: Charset =
+    Charset.forName(System.getProperty("sun.jnu.encoding", Charset.defaultCharset().name))
+
+  /** The partition values whose directory name `<partitionCol>=<value>`
+    * `encoding` cannot encode. Hive path escaping maps only ASCII characters,
+    * so any other character reaches the file system as it is. */
+  private[graft] def unencodable(partitionCol: String, values: Seq[String],
+                                 encoding: Charset): Seq[String] = {
+    val encoder = encoding.newEncoder()
+    values.filterNot(v => encoder.canEncode(s"$partitionCol=$v"))
   }
 
   /** Committed partition values from previous runs (crash-safe: a partition
@@ -115,8 +128,12 @@ object ResumableWrite {
     * with ours, while a retry of a CRASHED run (same runId) reclaims the
     * stale lock and resumes, preserving the resume contract.
     *
-    * Null partition values are rejected explicitly (they cannot be
-    * round-tripped through directory names or resumed reliably).
+    * Null and empty partition values are rejected explicitly (they cannot
+    * be round-tripped through directory names or resumed reliably), and so
+    * is a value the executors' file-name encoding cannot encode, before
+    * anything is written. That check runs in the tasks of the distinct-value
+    * scan, so it sees an executor's encoding, not the driver's; it assumes
+    * every executor runs under the same one.
     *
     * @param maxPartitionsThisRun optional fault-injection/testing knob:
     *   commit at most this many partitions, then stop (simulates a crash)
@@ -131,14 +148,30 @@ object ResumableWrite {
     deleteRecursively(Paths.get(outDir, s"_tmp_$runId"))
 
     val done = committedPartitions(outDir)
-    // scan 1: column-pruned distinct partition values
-    val allParts = df.select(col(partitionCol).cast("string")).distinct()
-      .collect().map(r => Option(r.get(0)).map(_.toString).orNull)
+    // scan 1: column-pruned distinct partition values, each checked in the
+    // task that finds it against that executor's file-name encoding (the
+    // executors create the directories; the driver's encoding may differ)
+    val scanned = df.select(col(partitionCol).cast("string")).distinct().rdd
+      .mapPartitions { rows =>
+        val values = rows.map(r => Option(r.get(0)).map(_.toString).orNull).toVector
+        val enc = fileNameEncoding
+        val bad = unencodable(partitionCol, values.filter(_ != null), enc).toSet
+        val where = s"${enc.name} under locale ${java.util.Locale.getDefault}"
+        values.iterator.map(v => (v, if (bad(v)) where else null))
+      }.collect()
+    val allParts = scanned.map(_._1)
     require(!allParts.contains(null),
       s"null $partitionCol partition values are not resumable; filter or default them first")
     require(!allParts.contains(""),
       s"empty-string $partitionCol partition values are not resumable (hive maps them to " +
         "__HIVE_DEFAULT_PARTITION__); filter or default them first")
+    val unwritable = scanned.filter(_._2 != null).sortBy(_._1)
+    require(unwritable.isEmpty,
+      s"$partitionCol partition value(s) " +
+        s"${unwritable.take(5).map(v => s"'${v._1}'").mkString(", ")} cannot be directory " +
+        s"names: the executors' file-name encoding (sun.jnu.encoding) is " +
+        s"${unwritable.head._2}; run them under a UTF-8 locale or map the values to ones " +
+        "that encoding holds first")
     val todo = allParts.sorted.filterNot(done).take(maxPartitionsThisRun)
     if (todo.isEmpty) Nil else {
     val todoSet = todo.toSet

@@ -568,6 +568,12 @@ object Similarity {
                               nlistArg: Int, iters: Int,
                               trainLimit: Int): Unit = {
     val live = resolveIndexDir(indexDir)
+    // the rebuilt layout holds no PQ codes or codebook, and the sweep
+    // after the publish would delete the live one
+    require(!java.nio.file.Files.exists(java.nio.file.Paths.get(live, "codebook")),
+      s"rebalanceIvfIndex: $indexDir is an IVF-PQ index (its live version holds a " +
+        "codebook); rebalancing would drop its codebook and codes. Rebuild it with " +
+        "buildIvfPqIndex instead")
     val lists = spark.read.parquet(s"$live/lists")
     val counts: Array[(Int, Long)] = lists.groupBy("list").agg(count(lit(1)).as("__n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)

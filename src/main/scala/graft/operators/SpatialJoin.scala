@@ -10,7 +10,7 @@ import graft.s2._
 /** The spatial joins. The point-in-region (PIP) joins are one operator
   * family: every one probes a cell table ([[graft.plans.CellTable]]) with
   * one exact-match binary search per covering level, in one probe loop
-  * ([[graft.plans.S2PipProbeExec]]), and no PIP plan hash-joins on a cell id.
+  * ([[graft.plans.PipProbe]]), and no PIP plan hash-joins on a cell id.
   *
   * [[pipJoin]], the flagship, over a driver-side region list (designed for
   * a 10^12-row points table on a large cluster):
@@ -34,9 +34,10 @@ import graft.s2._
   *
   * The polygon-TABLE joins ([[polygonPipJoin]], [[multiPolygonPipJoin]],
   * [[polygonPipJoinAdaptive]], and through them [[polygonPipAntiJoin]] and
-  * [[zonalStats]]) cover each polygon row executor-side and broadcast that
-  * projection to [[graft.plans.S2PolygonTableJoinExec]], which runs the
-  * same probe. Rows with a NULL or non-finite (NaN, +-Inf) coordinate never
+  * [[zonalStats]]) cover each polygon row in the tasks that read the table
+  * and broadcast that projection to [[graft.plans.S2PolygonTableJoinExec]],
+  * which runs the same probe. Both probe execs run inside whole-stage
+  * codegen. Rows with a NULL or non-finite (NaN, +-Inf) coordinate never
   * match.
   *
   * The proximity joins (distance, kNN, region/polyline distance,
@@ -149,18 +150,22 @@ object SpatialJoin {
 
   /** Exact containment of a (lat, lon) point in a region, matching the
     * reference refinement pipeline bit-for-bit. */
-  def regionContains(region: S2Region, latDeg: Double, lonDeg: Double): Boolean = {
-    val ll = S2LatLng.fromDegrees(latDeg, lonDeg)
+  def regionContains(region: S2Region, latDeg: Double, lonDeg: Double): Boolean =
+    regionContains(region, S2LatLng.fromDegrees(latDeg, lonDeg).toPoint, latDeg, lonDeg)
+
+  /** [[regionContains]] for a caller that already holds the point
+    * (`S2LatLng.fromDegrees(latDeg, lonDeg).toPoint`). */
+  private[graft] def regionContains(region: S2Region, p: S2Point,
+                                    latDeg: Double, lonDeg: Double): Boolean =
     region match {
-      case p: S2Polygon => p.contains(ll.toPoint)
-      case l: S2Loop => l.contains(ll.toPoint)
-      case r: S2LatLngRect => r.contains(ll)
-      case c: S2Cap => c.contains(ll.toPoint)
-      case u: S2CellUnion => u.contains(ll.toPoint)
-      case cell: S2Cell => cell.contains(ll.toPoint)
-      case other => other.mayIntersectCell(S2Cell(S2CellId.fromLatLngRadians(ll.latRadians, ll.lngRadians)))
+      case poly: S2Polygon => poly.contains(p)
+      case l: S2Loop => l.contains(p)
+      case r: S2LatLngRect => r.contains(S2LatLng.fromDegrees(latDeg, lonDeg))
+      case c: S2Cap => c.contains(p)
+      case u: S2CellUnion => u.contains(p)
+      case cell: S2Cell => cell.contains(p)
+      case other => other.mayIntersectCell(S2Cell(S2CellId.fromPoint(p)))
     }
-  }
 
   /** Point-in-region join.
     *
@@ -678,16 +683,20 @@ object SpatialJoin {
     * plan is right for a handful of query regions; a polygon catalog is a
     * DataFrame. Plan:
     *
-    *  1. Cover the table executor-side at one fixed `level`
-    *     (`s2_polygon_covering`): one row per polygon row, holding the id,
-    *     the vertex arrays and the (cell, interior) covering.
-    *  2. Broadcast that projection to [[graft.plans.S2PolygonTableJoinExec]].
-    *     Each executor builds one [[graft.plans.CellTable]] from it; each
-    *     points row probes it with one binary search on its level-`level`
-    *     ancestor.
-    *     The points side never shuffles. The build side is bounded by
+    *  1. Cover each polygon row at one fixed `level` (`s2_polygon_covering`,
+    *     on the vertex arrays cast to double) in the tasks of the job that
+    *     reads the table for the broadcast, never on the driver. A covering
+    *     that fails (say, past the 2^17-cell cap) fails that job, and the
+    *     join, with its cause. No covering is kept past the query.
+    *  2. Broadcast that projection (id, vertex arrays, covering) to
+    *     [[graft.plans.S2PolygonTableJoinExec]]; each executor builds one
+    *     [[graft.plans.CellTable]] from it. The build side is bounded by
     *     `spark.sql.maxBroadcastTableSize` and fails loudly above it.
-    *  3. `interior` hits pass outright; boundary hits run the exact loop
+    *  3. Each points row probes the table once, on its level-`level`
+    *     ancestor, inside the whole-stage codegen stage of the points scan:
+    *     the points side never shuffles, and the columns the probe does not
+    *     read are computed for matched rows only.
+    *  4. `interior` hits pass outright; boundary hits run the exact loop
     *     containment (`s2_loop_contains`'s test), with each loop built once
     *     per task on its first boundary hit.
     *
@@ -711,7 +720,7 @@ object SpatialJoin {
     require(collisions.isEmpty,
       s"polygonPipJoin: reserved column name(s) in input: ${collisions.mkString(", ")}")
     S2PipJoin.planTable(points, latCol, lonCol, polys, idCol, latsCol, lonsCol,
-      s2_polygon_covering(col(latsCol), col(lonsCol), level))
+      (lats, lons) => s2_polygon_covering(lats, lons, level))
   }
 
   /** PIP ANTI join: the points contained by NO polygon of the table — the
@@ -744,9 +753,10 @@ object SpatialJoin {
     * contains — the raster/vector aggregation a geo pipeline runs to score
     * regions (images per country, revenue per zone). Plan:
     * [[polygonPipJoin]], then a group-by on `region_id`. The probe runs
-    * map-side and the points side never shuffles, so the partial
-    * aggregation collapses each partition to per-region (count, sum) rows
-    * and only those cross the exchange.
+    * map-side, in one whole-stage codegen stage with the points scan and
+    * the partial aggregation, and the points side never shuffles: each
+    * partition collapses to per-region (count, sum) rows and only those
+    * cross the exchange.
     *
     * `valueCol` must be integral (the sums stay integer-exact and
     * engine-order-independent); outputs `region_id, n_points, sum_value`,
@@ -794,7 +804,7 @@ object SpatialJoin {
     require(collisions.isEmpty,
       s"polygonPipJoinAdaptive: reserved column name(s) in input: ${collisions.mkString(", ")}")
     S2PipJoin.planTable(points, latCol, lonCol, polys, idCol, latsCol, lonsCol,
-      s2_polygon_covering_adaptive(col(latsCol), col(lonsCol), targetCells, quantizeLevels))
+      (lats, lons) => s2_polygon_covering_adaptive(lats, lons, targetCells, quantizeLevels))
   }
 
   /** Points within `radiusM` of any polyline in a TABLE of polylines — the
@@ -895,6 +905,6 @@ object SpatialJoin {
       s"multiPolygonPipJoin: reserved column name(s) in input: ${collisions.mkString(", ")}")
 
     S2PipJoin.planTable(points, latCol, lonCol, polys, idCol, loopLatsCol, loopLonsCol,
-      s2_multipolygon_covering(col(loopLatsCol), col(loopLonsCol), level))
+      (lats, lons) => s2_multipolygon_covering(lats, lons, level))
   }
 }

@@ -1,16 +1,20 @@
 package graft.plans
 
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet,
-  BindReferences, Cast, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference,
+  AttributeSet, BindReferences, BoundReference, Cast, Expression, GenericInternalRow, JoinedRow,
+  UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution,
   IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, ProjectExec, SQLExecution,
+  SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 import org.apache.spark.sql.Column
@@ -18,26 +22,33 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{LoopCache, PolygonCache}
 import graft.operators.SpatialJoin
-import graft.s2.{S2CellId, S2Region}
+import graft.s2.{S2CellId, S2LatLng, S2Point, S2Region}
 
 /** The physical form of every covering PIP join: custom logical nodes, one
   * planning strategy and two execs that share one probe loop
-  * ([[S2PipProbeExec]]) over one region index ([[CellTable]]).
+  * ([[PipProbe]], driven by [[S2PipProbeExec]]) over one region index
+  * ([[CellTable]]).
   *
   *  - [[S2PipJoinPlan]] / [[S2PipJoinExec]]: [[SpatialJoin.pipJoin]]'s
   *    regions, covered on the driver ([[DriverRegions]]) and shipped in the
   *    task closure.
   *  - [[S2PolygonTableJoinPlan]] / [[S2PolygonTableJoinExec]]: the
-  *    polygon-TABLE joins. The table's executor-side covering projection
-  *    (one row per polygon row: id, vertex arrays, covering) reaches the exec
-  *    through a broadcast exchange in `IdentityBroadcastMode`; each executor
-  *    builds one [[CellTable]] from the broadcast rows for its tasks.
+  *    polygon-TABLE joins. The table's covering runs in the broadcast-side
+  *    job, one task per table partition: [[S2TableCoveringPlan]] plans as a
+  *    `ProjectExec` (id, double-cast vertex arrays, covering) under the
+  *    broadcast exchange, out of reach of the optimizer rules that would
+  *    fold it into a local relation and evaluate it on the driver. Each
+  *    executor builds one [[CellTable]] from the broadcast rows for its
+  *    tasks.
   *
   * For each points row the probe encodes the leaf cell once and does one
-  * exact-match binary search per covering level; interior hits emit at once,
-  * boundary hits run the exact refinement. No row is multiplied, no hash
-  * table is built and the points side never shuffles, at the cost of
-  * stepping outside whole-stage codegen.
+  * exact-match binary search per covering level; interior hits are accepted
+  * at once, boundary hits run the exact refinement. No row is multiplied, no
+  * hash table is built and the points side never shuffles. Both execs run
+  * inside whole-stage codegen, fused with the points scan and the operator
+  * above: the generated code hands lat/lon to the probe as primitives and
+  * emits each accepted region through the parent's `consume`, so columns
+  * the probe does not read are computed only for matched rows.
   */
 case class S2PipJoinPlan(child: LogicalPlan,
                          regions: DriverRegions,
@@ -69,6 +80,19 @@ case class S2PolygonTableJoinPlan(left: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
+/** `child`'s rows plus their `covering` as `coveringAttr`: a projection the
+  * optimizer does not know, so no rule folds it into a local relation (which
+  * evaluates it on the driver, one row after another). It plans as a
+  * `ProjectExec`, evaluated in the tasks of the job that reads `child`. */
+case class S2TableCoveringPlan(child: LogicalPlan,
+                               covering: Expression,
+                               coveringAttr: Attribute) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output :+ coveringAttr
+  override def producedAttributes: AttributeSet = AttributeSet(coveringAttr)
+  override protected def withNewChildInternal(newChild: LogicalPlan): S2TableCoveringPlan =
+    copy(child = newChild)
+}
+
 /** The covering cells of many regions, indexed for point probes. Per
   * covering level it keeps a sorted array of the distinct cell ids and CSR
   * postings of the regions each cell covers (region index; bit 31 set when
@@ -87,6 +111,9 @@ final class CellTable private (levels: Array[Int],
     .foldLeft(0)(math.max)).sum
 
   def numCells: Int = cells.map(_.length).sum
+
+  /** The (cell, region) entries: the covering cells summed over regions. */
+  def numEntries: Int = postings.map(_.length).sum
 
   /** Writes the postings of the cells that contain `leaf` to `out`, from
     * index 0, and returns how many there are. */
@@ -131,50 +158,77 @@ object CellTable {
       n += 1
     }
 
+    /** Sorts the cell ids once (a cell id encodes its level, so cells of
+      * different levels never compare equal), splits the distinct ones by
+      * level and fills each level's postings by counting, in entry order.
+      * Primitive arrays throughout. */
     def build(): CellTable = {
-      val level = Array.tabulate(n)(i => S2CellId.level(cells(i)))
-      val levels = level.distinct.sorted
-      val keys = new Array[Array[Long]](levels.length)
-      val offsets = new Array[Array[Int]](levels.length)
-      val postings = new Array[Array[Int]](levels.length)
-      for (l <- levels.indices) {
-        val at = Array.range(0, n).filter(i => level(i) == levels(l))
-        val sorted = at.map(cells)
-        java.util.Arrays.sort(sorted)
-        var d = 0
-        for (c <- sorted if d == 0 || sorted(d - 1) != c) { sorted(d) = c; d += 1 }
-        val distinct = java.util.Arrays.copyOf(sorted, d)
-        val slot = at.map(i => java.util.Arrays.binarySearch(distinct, cells(i)))
-        val off = new Array[Int](d + 1)
-        slot.foreach(s => off(s + 1) += 1)
-        for (s <- 0 until d) off(s + 1) += off(s)
-        val fill = off.clone()
-        val post = new Array[Int](at.length)
-        for (k <- at.indices) {
-          post(fill(slot(k))) = entries(at(k))
-          fill(slot(k)) += 1
-        }
-        keys(l) = distinct
-        offsets(l) = off
-        postings(l) = post
+      val sorted = java.util.Arrays.copyOf(cells, n)
+      java.util.Arrays.sort(sorted)
+      var d = 0
+      var i = 0
+      while (i < n) {
+        if (d == 0 || sorted(d - 1) != sorted(i)) { sorted(d) = sorted(i); d += 1 }
+        i += 1
+      }
+      val perLevel = new Array[Int](S2CellId.MaxLevel + 1)
+      i = 0
+      while (i < d) { perLevel(S2CellId.level(sorted(i))) += 1; i += 1 }
+      val levels = perLevel.indices.filter(perLevel(_) > 0).toArray
+      val levelIndex = new Array[Int](S2CellId.MaxLevel + 1)
+      for (l <- levels.indices) levelIndex(levels(l)) = l
+      val keys = levels.map(l => new Array[Long](perLevel(l)))
+      val fill = new Array[Int](levels.length)
+      i = 0
+      while (i < d) {
+        val l = levelIndex(S2CellId.level(sorted(i)))
+        keys(l)(fill(l)) = sorted(i)
+        fill(l) += 1
+        i += 1
+      }
+      val offsets = keys.map(k => new Array[Int](k.length + 1))
+      val level = new Array[Int](n)
+      val slot = new Array[Int](n)
+      i = 0
+      while (i < n) {
+        val l = levelIndex(S2CellId.level(cells(i)))
+        val s = java.util.Arrays.binarySearch(keys(l), cells(i))
+        level(i) = l
+        slot(i) = s
+        offsets(l)(s + 1) += 1
+        i += 1
+      }
+      for (off <- offsets) {
+        var s = 0
+        while (s < off.length - 1) { off(s + 1) += off(s); s += 1 }
+      }
+      val postings = offsets.map(off => new Array[Int](off.last))
+      val next = offsets.map(_.clone())
+      i = 0
+      while (i < n) {
+        val l = level(i)
+        postings(l)(next(l)(slot(i))) = entries(i)
+        next(l)(slot(i)) += 1
+        i += 1
       }
       new CellTable(levels, keys, offsets, postings)
     }
   }
 }
 
-/** One task's regions behind a [[CellTable]]: the value each region emits
-  * as `region_id` and its exact shape. Shapes are built on the first
-  * boundary hit and kept for the task only: they cache lazy state, so they
-  * are never shared across threads. */
-final class ProbeRegions(val table: CellTable, ids: Array[Any], shape: Int => S2Region) {
-  private val shapes = new Array[S2Region](ids.length)
+/** One task's regions behind a [[CellTable]]: the one-column row each
+  * region emits as `region_id` and its exact shape. Shapes are built on the
+  * first boundary hit and kept for the task only: they cache lazy state, so
+  * they are never shared across threads. */
+final class ProbeRegions(val table: CellTable, idRows: Array[InternalRow],
+                         shape: Int => S2Region) {
+  private val shapes = new Array[S2Region](idRows.length)
 
-  def id(region: Int): Any = ids(region)
+  def idRow(region: Int): InternalRow = idRows(region)
 
-  def contains(region: Int, lat: Double, lon: Double): Boolean = {
+  def contains(region: Int, p: S2Point, lat: Double, lon: Double): Boolean = {
     if (shapes(region) == null) shapes(region) = shape(region)
-    SpatialJoin.regionContains(shapes(region), lat, lon)
+    SpatialJoin.regionContains(shapes(region), p, lat, lon)
   }
 }
 
@@ -185,6 +239,7 @@ final class ProbeRegions(val table: CellTable, ids: Array[Any], shape: Int => S2
 final class DriverRegions(regions: Seq[(String, S2Region)], maxCells: Int) extends Serializable {
   private val ids: Array[String] = regions.map(_._1).toArray
   private val shapes: Array[S2Region] = regions.map(_._2).toArray
+  private val t0 = System.nanoTime()
   val table: CellTable = {
     val b = new CellTable.Entries
     for (((id, region), r) <- regions.zipWithIndex;
@@ -192,111 +247,183 @@ final class DriverRegions(regions: Seq[(String, S2Region)], maxCells: Int) exten
       b.add(r, c.cell, c.interior)
     b.build()
   }
+  /** Driver time to cover the regions and build [[table]]. */
+  val buildMs: Long = (System.nanoTime() - t0) / 1000000
 
   /** The probe's view for one task, on the task's own deserialized copy. */
   def forTask(): ProbeRegions =
-    new ProbeRegions(table, ids.map(UTF8String.fromString), shapes(_))
+    new ProbeRegions(table,
+      ids.map(id => new GenericInternalRow(Array[Any](UTF8String.fromString(id)))), shapes(_))
 
   override def toString: String = s"${ids.length} regions, ${table.numCells} cells"
 }
 
-/** What the two PIP execs share: the SQL metrics and the one probe loop
-  * over the `streamed` (points) child. */
-trait S2PipProbeExec extends SparkPlan {
+/** The one probe loop, one instance per task: both execs, with and without
+  * whole-stage codegen, call [[accept]] once per points row and read the
+  * accepted regions' ids through [[idRow]]. The counters live in fields and
+  * reach the SQL metrics once, when the task completes. */
+final class PipProbe private[plans] (regions: ProbeRegions, metrics: Map[String, SQLMetric]) {
+  private val table = regions.table
+  private val found = new Array[Int](table.maxHits)
+  private var rowsIn = 0L
+  private var cellHits = 0L
+  private var interiorAccepts = 0L
+  private var refinements = 0L
+  private var refineRejects = 0L
+  private var numOutput = 0L
+
+  /** Skips a NULL (`isNull`) or non-finite (NaN, +-Inf) coordinate, encodes
+    * the leaf once, probes the table, accepts interior hits, refines boundary
+    * hits, and orders the accepted regions by region index. Returns how many
+    * regions contain the point; [[idRow]] gives the k-th of them. */
+  def accept(isNull: Boolean, lat: Double, lon: Double): Int = {
+    rowsIn += 1
+    if (isNull || !java.lang.Double.isFinite(lat) || !java.lang.Double.isFinite(lon)) return 0
+    // one point feeds the leaf encode and every point-based refine
+    // (S2CellId.fromLatLngDegrees does the same arithmetic)
+    val p = S2LatLng.fromDegrees(lat, lon).toPoint
+    val hits = table.probe(S2CellId.fromPoint(p), found)
+    cellHits += hits
+    var n = 0
+    var i = 0
+    while (i < hits) {
+      val region = found(i) & Int.MaxValue
+      val ok =
+        if (found(i) < 0) { interiorAccepts += 1; true }
+        else {
+          refinements += 1
+          val in = regions.contains(region, p, lat, lon)
+          if (!in) refineRejects += 1
+          in
+        }
+      if (ok) {
+        // insertion sort: hits arrive in level order, emit in region order
+        var j = n
+        while (j > 0 && found(j - 1) > region) { found(j) = found(j - 1); j -= 1 }
+        found(j) = region
+        n += 1
+      }
+      i += 1
+    }
+    numOutput += n
+    n
+  }
+
+  /** The `region_id` row of the k-th region the last [[accept]] returned. */
+  def idRow(k: Int): InternalRow = regions.idRow(found(k))
+
+  private[plans] def flush(): Unit = {
+    metrics("numInputRows") += rowsIn
+    metrics("cellHits") += cellHits
+    metrics("interiorAccepts") += interiorAccepts
+    metrics("refinements") += refinements
+    metrics("refineRejects") += refineRejects
+    metrics("numOutputRows") += numOutput
+  }
+}
+
+/** How each task opens its [[PipProbe]]: it travels in the task closure (or
+  * in the generated code's references), so `regions` must not capture an
+  * exec node. `regions` may add to the `coveringCells` and `tableBuildTime`
+  * metrics it is given. */
+final class PipProbeSource(regions: Map[String, SQLMetric] => ProbeRegions,
+                           metrics: Map[String, SQLMetric]) extends Serializable {
+  def open(): PipProbe = {
+    val probe = new PipProbe(regions(metrics), metrics)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => probe.flush()))
+    probe
+  }
+}
+
+/** What the two PIP execs share: the SQL metrics, the whole-stage codegen
+  * path and the interpreted fallback, both over [[PipProbe]]. */
+trait S2PipProbeExec extends SparkPlan with CodegenSupport {
   def streamed: SparkPlan
   def latExpr: Expression
   def lonExpr: Expression
 
+  /** Driver side, once per execution: what each task opens. */
+  protected def probeSource(): PipProbeSource
+
   /** Each (points row, region) posting a probe returns is a cell hit, and
     * is an interior accept or an exact refinement; each refinement passes
     * or is a reject. So cellHits = interiorAccepts + refinements and
-    * numOutputRows = interiorAccepts + refinements - refineRejects. */
+    * numOutputRows = interiorAccepts + refinements - refineRejects.
+    * numInputRows counts every points row, NULL and non-finite ones too;
+    * coveringCells counts the (cell, region) entries of the [[CellTable]]
+    * and tableBuildTime the time to build it: on the driver, covering
+    * included, for [[S2PipJoinExec]]; per executor, from the broadcast
+    * coverings, for [[S2PolygonTableJoinExec]]. */
   override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numInputRows" -> SQLMetrics.createMetric(sparkContext, "number of input rows"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "cellHits" -> SQLMetrics.createMetric(sparkContext, "number of cell hits"),
     "interiorAccepts" -> SQLMetrics.createMetric(sparkContext, "number of interior accepts"),
     "refinements" -> SQLMetrics.createMetric(sparkContext, "number of exact refinements"),
-    "refineRejects" -> SQLMetrics.createMetric(sparkContext, "number of refine rejects"))
+    "refineRejects" -> SQLMetrics.createMetric(sparkContext, "number of refine rejects"),
+    "coveringCells" -> SQLMetrics.createMetric(sparkContext, "number of covering cells"),
+    "tableBuildTime" -> SQLMetrics.createTimingMetric(sparkContext, "table build time"))
 
   override def producedAttributes: AttributeSet = AttributeSet(output.last)
   override def outputPartitioning: Partitioning = streamed.outputPartitioning
 
-  /** Probes every `streamed` row against the regions `regionsFor` builds
-    * once per task (`regionsFor` must not capture this node). Per row: skip
-    * NULL and non-finite (NaN, +-Inf) coordinates, encode the leaf, probe
-    * the table, accept interior hits, refine boundary hits, then emit one
-    * row per containing region, in region order. */
-  protected def probe(regionsFor: () => ProbeRegions): RDD[InternalRow] = {
+  // ---- whole-stage codegen: fused with the points side and the parent ----
+
+  /** Only the coordinates are read per row; the other points columns are
+    * computed where the parent reads them, for matched rows only. */
+  override def usedInputs: AttributeSet = latExpr.references ++ lonExpr.references
+  // a row can emit several output rows before the parent consumes them
+  override def needCopyResult: Boolean = true
+  override def inputRDDs(): Seq[RDD[InternalRow]] =
+    streamed.asInstanceOf[CodegenSupport].inputRDDs()
+  override protected def doProduce(ctx: CodegenContext): String =
+    streamed.asInstanceOf[CodegenSupport].produce(ctx, this)
+
+  override def doConsume(ctx: CodegenContext, input: Seq[ExprCode], row: ExprCode): String = {
+    val source = ctx.addReferenceObj("pipProbeSource", probeSource())
+    val probe = ctx.addMutableState(classOf[PipProbe].getName, "pipProbe",
+      v => s"$v = $source.open();", forceInline = true)
+    ctx.currentVars = input
+    val lat = BindReferences.bindReference(latExpr, streamed.output).genCode(ctx)
+    val lon = BindReferences.bindReference(lonExpr, streamed.output).genCode(ctx)
+    val n = ctx.freshName("regions")
+    val k = ctx.freshName("k")
+    val idRow = ctx.freshName("idRow")
+    ctx.currentVars = null
+    ctx.INPUT_ROW = idRow
+    val regionId = BoundReference(0, output.last.dataType, output.last.nullable).genCode(ctx)
+    s"""
+       |${lat.code}
+       |${lon.code}
+       |int $n = $probe.accept(${lat.isNull} || ${lon.isNull}, ${lat.value}, ${lon.value});
+       |for (int $k = 0; $k < $n; $k++) {
+       |  InternalRow $idRow = $probe.idRow($k);
+       |  ${consume(ctx, input :+ regionId)}
+       |}
+     """.stripMargin
+  }
+
+  // ---- interpreted fallback (whole-stage codegen off or failed) ----
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val source = probeSource()
     val lat = latExpr
     val lon = lonExpr
     val childOutput = streamed.output
     val outAttrs = output
-    val Seq(numOutput, cellHits, interiorAccepts, refinements, refineRejects) =
-      Seq("numOutputRows", "cellHits", "interiorAccepts", "refinements", "refineRejects")
-        .map(metrics)
     streamed.execute().mapPartitions({ input =>
+      val probe = source.open()
       val latEval = BindReferences.bindReference(lat, childOutput)
       val lonEval = BindReferences.bindReference(lon, childOutput)
       val proj = UnsafeProjection.create(outAttrs, childOutput :+ outAttrs.last)
-      val regions = regionsFor()
-      val table = regions.table
-      val found = new Array[Int](table.maxHits)
       val joined = new JoinedRow
-      val idRow = new GenericInternalRow(1)
-
-      new Iterator[InternalRow] {
-        private var row: InternalRow = _
-        private var n = 0 // accepted regions of `row`, in found(0 until n)
-        private var k = 0 // next of them to emit
-
-        override def hasNext: Boolean = {
-          while (k == n && input.hasNext) accept(input.next())
-          k < n
-        }
-
-        override def next(): InternalRow = {
-          if (!hasNext) throw new NoSuchElementException
-          idRow.update(0, regions.id(found(k)))
-          k += 1
-          numOutput += 1
-          proj(joined(row, idRow))
-        }
-
-        private def accept(r: InternalRow): Unit = {
-          row = r
-          k = 0
-          n = 0
-          val latV = latEval.eval(r)
-          val lonV = lonEval.eval(r)
-          if (latV != null && lonV != null) {
-            val la = latV.asInstanceOf[Double]
-            val lo = lonV.asInstanceOf[Double]
-            if (java.lang.Double.isFinite(la) && java.lang.Double.isFinite(lo)) {
-              val hits = table.probe(S2CellId.fromLatLngDegrees(la, lo), found)
-              cellHits += hits
-              var i = 0
-              while (i < hits) {
-                val region = found(i) & Int.MaxValue
-                val ok =
-                  if (found(i) < 0) { interiorAccepts += 1; true }
-                  else {
-                    refinements += 1
-                    val in = regions.contains(region, la, lo)
-                    if (!in) refineRejects += 1
-                    in
-                  }
-                if (ok) {
-                  // insertion sort: hits arrive in level order, emit in region order
-                  var j = n
-                  while (j > 0 && found(j - 1) > region) { found(j) = found(j - 1); j -= 1 }
-                  found(j) = region
-                  n += 1
-                }
-                i += 1
-              }
-            }
-          }
-        }
+      input.flatMap { r =>
+        val la = latEval.eval(r)
+        val lo = lonEval.eval(r)
+        val n =
+          if (la == null || lo == null) probe.accept(isNull = true, 0.0, 0.0)
+          else probe.accept(isNull = false, la.asInstanceOf[Double], lo.asInstanceOf[Double])
+        Iterator.tabulate(n)(k => proj(joined(r, probe.idRow(k))))
       }
     }, preservesPartitioning = true)
   }
@@ -311,9 +438,15 @@ case class S2PipJoinExec(child: SparkPlan,
   override protected def withNewChildInternal(newChild: SparkPlan): S2PipJoinExec =
     copy(child = newChild)
 
-  override protected def doExecute(): RDD[InternalRow] = {
+  /** The covering ran on the driver: its cells and time are driver metrics. */
+  override protected def probeSource(): PipProbeSource = {
+    metrics("coveringCells").set(regions.table.numEntries.toLong)
+    metrics("tableBuildTime").set(regions.buildMs)
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      Seq(metrics("coveringCells"), metrics("tableBuildTime")))
     val r = regions
-    probe(() => r.forTask())
+    new PipProbeSource(_ => r.forTask(), metrics)
   }
 }
 
@@ -331,7 +464,7 @@ case class S2PolygonTableJoinExec(left: SparkPlan,
                                                  newRight: SparkPlan): S2PolygonTableJoinExec =
     copy(left = newLeft, right = newRight)
 
-  override protected def doExecute(): RDD[InternalRow] = {
+  override protected def probeSource(): PipProbeSource = {
     val rows = right.executeBroadcast[Array[InternalRow]]()
     val ordinals = table.map(a => right.output.indexWhere(_.exprId == a.exprId))
     require(!ordinals.contains(-1), s"table columns $table not in ${right.output}")
@@ -340,30 +473,34 @@ case class S2PolygonTableJoinExec(left: SparkPlan,
       case ArrayType(_: ArrayType, _) => true
       case _ => false
     }
-    probe(() => S2PolygonTableJoinExec.regions(rows, ordinals, idType, multiLoop))
+    new PipProbeSource(m => S2PolygonTableJoinExec.regions(rows, ordinals, idType, multiLoop, m),
+      metrics)
   }
 }
 
 object S2PolygonTableJoinExec {
-  /** Each executor builds the [[CellTable]] and ids of a broadcast table
+  /** Each executor builds the [[CellTable]] and id rows of a broadcast table
     * once and its tasks share them (both are immutable); only the refine
     * shapes are per task. Keyed weakly by the broadcast value, so an entry
     * goes when the broadcast does; a value not seen before is built anew. */
   private val built =
-    new java.util.WeakHashMap[Array[InternalRow], (Seq[Int], CellTable, Array[Any])]
+    new java.util.WeakHashMap[Array[InternalRow], (Seq[Int], CellTable, Array[InternalRow])]
 
   /** One task's [[ProbeRegions]] over the broadcast table rows (columns at
     * `ordinals`: id, lats, lons, covering): one region per row, so
     * duplicate and NULL ids each keep their own entry, and a row with a
-    * NULL covering never matches. */
+    * NULL covering never matches. The executor that builds the table adds
+    * its entries to `coveringCells` and its build time to `tableBuildTime`. */
   private def regions(rows: Broadcast[Array[InternalRow]], ordinals: Seq[Int],
-                      idType: DataType, multiLoop: Boolean): ProbeRegions = {
+                      idType: DataType, multiLoop: Boolean,
+                      metrics: Map[String, SQLMetric]): ProbeRegions = {
     val Seq(id, lats, lons, covering) = ordinals
     val table = rows.value
-    val (cells, ids) = built.synchronized {
+    val (cells, idRows) = built.synchronized {
       val hit = built.get(table)
       if (hit != null && hit._1 == ordinals) (hit._2, hit._3)
       else {
+        val t0 = System.nanoTime()
         val b = new CellTable.Entries
         for (r <- table.indices if !table(r).isNullAt(covering)) {
           val cs = table(r).getArray(covering)
@@ -372,9 +509,13 @@ object S2PolygonTableJoinExec {
             b.add(r, c.getLong(0), c.getBoolean(1))
           }
         }
-        val t = (b.build(), table.map(row => if (row.isNullAt(id)) null else row.get(id, idType)))
-        built.put(table, (ordinals, t._1, t._2))
-        t
+        val cells = b.build()
+        val idRows: Array[InternalRow] = table.map(row =>
+          new GenericInternalRow(Array[Any](if (row.isNullAt(id)) null else row.get(id, idType))))
+        metrics("coveringCells") += cells.numEntries
+        metrics("tableBuildTime") += (System.nanoTime() - t0) / 1000000
+        built.put(table, (ordinals, cells, idRows))
+        (cells, idRows)
       }
     }
     def nested(a: ArrayData): Array[Array[Double]] =
@@ -384,12 +525,13 @@ object S2PolygonTableJoinExec {
       if (multiLoop) PolygonCache.build(nested(row.getArray(lats)), nested(row.getArray(lons)))
       else LoopCache.build(row.getArray(lats).toDoubleArray(), row.getArray(lons).toDoubleArray())
     }
-    new ProbeRegions(cells, ids, shape)
+    new ProbeRegions(cells, idRows, shape)
   }
 }
 
-/** Plans [[S2PipJoinPlan]] and [[S2PolygonTableJoinPlan]]; registered on the
-  * session's `spark.experimental.extraStrategies` by [[S2PipJoin]]. */
+/** Plans [[S2PipJoinPlan]], [[S2PolygonTableJoinPlan]] and
+  * [[S2TableCoveringPlan]]; registered on the session's
+  * `spark.experimental.extraStrategies` by [[S2PipJoin]]. */
 object S2PipJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: S2PipJoinPlan =>
@@ -397,6 +539,10 @@ object S2PipJoinStrategy extends SparkStrategy {
     case p: S2PolygonTableJoinPlan =>
       S2PolygonTableJoinExec(planLater(p.left), planLater(p.right), p.latExpr, p.lonExpr,
         p.table, p.output) :: Nil
+    case p: S2TableCoveringPlan =>
+      val a = p.coveringAttr
+      ProjectExec(p.child.output :+ Alias(p.covering, a.name)(exprId = a.exprId),
+        planLater(p.child)) :: Nil
     case _ => Nil
   }
 }
@@ -419,24 +565,31 @@ object S2PipJoin {
 
   /** `points` + `region_id` (the type of `idCol`) through
     * [[S2PolygonTableJoinPlan]], one row per (point, containing polygon
-    * row). `covering` is the per-row `array<struct<cell, interior>>`. The
-    * vertex columns (`array<_>` for one loop, `array<array<_>>` for a
-    * polygon's loops) are cast to double elements, as the covering and
-    * containment expressions cast them, so the refine reads the vertices the
-    * covering used. */
+    * row). The vertex columns (`array<_>` for one loop, `array<array<_>>`
+    * for a polygon's loops) are cast to double elements, as the covering and
+    * containment expressions cast them; `covering` builds the per-row
+    * `array<struct<cell, interior>>` from those cast columns, so the refine
+    * reads the vertices the covering used. The covering is an
+    * [[S2TableCoveringPlan]] over the table, so it runs in the broadcast-side
+    * job's tasks. */
   private[graft] def planTable(points: DataFrame, latCol: String, lonCol: String,
                                polys: DataFrame, idCol: String,
                                latsCol: String, lonsCol: String,
-                               covering: Column): DataFrame = {
+                               covering: (Column, Column) => Column): DataFrame = {
     import org.apache.spark.sql.functions.col
     val logical = points.queryExecution.analyzed
     val vertices = polys.select(col(latsCol)).schema.head.dataType match {
       case ArrayType(_: ArrayType, _) => ArrayType(ArrayType(DoubleType))
       case _ => ArrayType(DoubleType)
     }
-    val table = polys.select(col(idCol), col(latsCol).cast(vertices),
-        col(lonsCol).cast(vertices), covering.as("covering"))
-      .queryExecution.analyzed
+    // every caller reserves __rlats/__rlons
+    val covered = polys.select(col(idCol), col(latsCol).cast(vertices).as("__rlats"),
+        col(lonsCol).cast(vertices).as("__rlons"))
+      .select(covering(col("__rlats"), col("__rlons")).as("covering"))
+      .queryExecution.analyzed.asInstanceOf[Project]
+    val coveringExpr = covered.projectList.head.asInstanceOf[Alias].child
+    val table = S2TableCoveringPlan(covered.child, coveringExpr,
+      AttributeReference("covering", coveringExpr.dataType, coveringExpr.nullable)())
     val id = table.output.head
     build(points, S2PolygonTableJoinPlan(logical, table,
       coord(logical, latCol), coord(logical, lonCol), table.output,

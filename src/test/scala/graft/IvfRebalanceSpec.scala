@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Similarity, WriterLock}
@@ -159,6 +161,23 @@ class IvfRebalanceSpec extends SparkTestBase {
     assert(!Similarity.appendToIvfIndex(emb.limit(10).select(
       (col("vec_id") + 4000000L).as("vec_id"), col("embedding")),
       "vec_id", "embedding", idx))
+  }
+
+  test("rebalancing an IVF-PQ index fails before writing anything; queryIvfPq still answers") {
+    val idx = java.nio.file.Files.createTempDirectory("ivfpq_rebalance").toString
+    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", idx, nlist = 16)
+    def files: Seq[String] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
+      try s.iterator().asScala.map(_.toString).toSeq.sorted finally s.close()
+    }
+    val before = files
+    val e = intercept[IllegalArgumentException](Similarity.rebalanceIvfIndex(spark, idx))
+    assert(e.getMessage.contains("codebook"), e.getMessage)
+    assert(files == before, "a refused rebalance must not write or delete anything")
+    assert(WriterLock.holder(idx).isEmpty, "a refused rebalance must release the writer lock")
+    val got = Similarity.queryIvfPq(spark, idx,
+      emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 3)
+    assert(got.count() == 15, "the index must still answer")
   }
 
   test("an unpublished orphan version (crash mid-rebuild) is invisible to readers and swept") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -17,8 +18,13 @@ import graft.s2.{R1Interval, S1Interval, S2Cell, S2CellId, S2LatLng, S2LatLngRec
 class PipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
-  private def collectSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
-    df.select("region_id", "id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
+  /** The (region_id, id) pairs of `df` and its probe counters. */
+  private def pairs(df: DataFrame): (Set[(String, Long)], Map[String, Long]) = {
+    val selected = df.select("region_id", "id")
+    val got = selected.collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(got.distinct.length == got.length, s"duplicate pairs: ${got.toSeq}")
+    (got.toSet, ProbeStage.counts(selected))
+  }
 
   // NaN and +-Inf rows never match: the probe drops them before the leaf
   // encode (they would encode to the valid leaf 0x4000000000000001). Checked
@@ -28,6 +34,14 @@ class PipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   // exact test rejects them; that wrap decision and tileAssign's NULL
   // contract stay open (ROADMAP item 4).
   test("non-finite and out-of-range coordinates: pipJoin and pipJoinExec == brute force") {
+    // same rows and probe counters with whole-stage codegen on and off
+    val on = withWholeStageCodegen(on = true)(nonFiniteCounts())
+    val off = withWholeStageCodegen(on = false)(nonFiniteCounts())
+    assert(on == off, s"probe counters with codegen on $on and off $off")
+  }
+
+  /** Runs the non-finite checks; returns each join's probe counters. */
+  private def nonFiniteCounts(): Seq[Map[String, Long]] = {
     val rows = Seq(
       (1L, Double.NaN, 10.0), (2L, 10.0, Double.NaN),
       (3L, Double.PositiveInfinity, 10.0), (4L, 10.0, Double.NegativeInfinity),
@@ -46,15 +60,16 @@ class PipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val pts = rows.toDF("id", "lat", "lon")
 
     assert(brute(rect) == Set(("r", 9L)))
-    assert(collectSet(SpatialJoin.pipJoin(pts, "lat", "lon", regions)) == brute(rect), "pipJoin")
-    assert(collectSet(S2PipJoin.pipJoinExec(pts, "lat", "lon", regions)) == brute(rect),
-      "pipJoinExec")
+    val (gotRect, rectCounts) = pairs(SpatialJoin.pipJoin(pts, "lat", "lon", regions))
+    assert(gotRect == brute(rect), "pipJoin")
+    val (gotExec, execCounts) = pairs(S2PipJoin.pipJoinExec(pts, "lat", "lon", regions))
+    assert(gotExec == brute(rect), "pipJoinExec")
 
     // (a) every longitude: no lng band, so rows 2, 4, 7 and 8 reach the probe
     val fullLng: S2Region = S2LatLngRect(
       R1Interval(math.toRadians(-60.0), math.toRadians(60.0)), S1Interval.Full)
     assert(brute(fullLng) == Set(("r", 9L)))
-    val gotFull = collectSet(SpatialJoin.pipJoin(pts, "lat", "lon", Seq("r" -> fullLng)))
+    val (gotFull, fullCounts) = pairs(SpatialJoin.pipJoin(pts, "lat", "lon", Seq("r" -> fullLng)))
     assert(gotFull.forall { case (_, id) => !nonFinite(id) }, s"non-finite rows matched: $gotFull")
     assert(gotFull.filterNot { case (_, id) => unnormalizedLon(id) } == brute(fullLng),
       s"full-longitude rect: $gotFull")
@@ -70,10 +85,14 @@ class PipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(square.containsCell(S2Cell(S2CellId.parentForLevel(nanLeaf, 6))),
       "the non-finite leaf's level-6 cell is not interior to the square")
     val table = Seq(("r", lats, lons)).toDF("region_id", "lats", "lons")
-    val gotTable = collectSet(
+    val (gotTable, tableCounts) = pairs(
       SpatialJoin.polygonPipJoin(pts, "lat", "lon", table, "region_id", "lats", "lons", level = 6))
     assert(gotTable.forall { case (_, id) => !nonFinite(id) }, s"non-finite rows matched: $gotTable")
     assert(gotTable == brute(square), s"polygonPipJoin: $gotTable")
+    // every row reaches the table probe: there is no band
+    assert(tableCounts("numInputRows") == rows.size &&
+      tableCounts("numOutputRows") == gotTable.size, s"$tableCounts")
+    Seq(rectCounts, execCounts, fullCounts, tableCounts)
   }
 
   test("plan shape: S2PipJoinExec, no Generate or hash join, band pushed, pruned read") {
@@ -88,7 +107,7 @@ class PipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val joined = SpatialJoin.pipJoin(spark.read.parquet(dir), "lat", "lon", SparkEntryRegions.rects)
     assert(joined.columns.toSeq == Seq("key", "lat", "lon", "payload", "region_id"))
     val df = joined.select("region_id", "key")
-    assert(df.count() > 0)
+    assert(df.collect().nonEmpty)
     val plan = df.queryExecution.executedPlan
     def all[T](pf: PartialFunction[SparkPlan, T]): Seq[T] = collectWithSubqueries(plan)(pf)
 
@@ -105,5 +124,16 @@ class PipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val readSchema = meta("ReadSchema")
     assert(readSchema.contains("key") && readSchema.contains("lat") && readSchema.contains("lon"))
     assert(!readSchema.contains("payload"), s"payload read: $readSchema")
+
+    // one codegen stage from the scan through the probe; not so without codegen
+    val broken = ProbeStage.violation(plan, partialAgg = false)
+    assert(broken.isEmpty, broken)
+    val off = withWholeStageCodegen(on = false) {
+      val offDf = SpatialJoin.pipJoin(spark.read.parquet(dir), "lat", "lon",
+        SparkEntryRegions.rects).select("region_id", "key")
+      offDf.collect()
+      ProbeStage.violation(offDf.queryExecution.executedPlan, partialAgg = false)
+    }
+    assert(off.nonEmpty, "the codegen contract holds with whole-stage codegen off")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -9,6 +10,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHash
   SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
+import graft.functions.s2functions.s2_polygon_covering
 import graft.operators.{SpatialJoin, Vectorize}
 import graft.plans.S2PolygonTableJoinExec
 import graft.s2.{S2Cell, S2LatLng, S2Loop, S2Predicates, S2RegionCoverer}
@@ -75,13 +77,28 @@ class PolygonTableJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** `run` (rows, probe counters) with whole-stage codegen on and off: both
+    * must give the same rows and the same counters. */
+  private def bothWays[T](run: => (T, Map[String, Long])): (T, Map[String, Long]) = {
+    val on = withWholeStageCodegen(on = true)(run)
+    val off = withWholeStageCodegen(on = false)(run)
+    assert(on._1 == off._1, "whole-stage codegen on and off return different rows")
+    assert(on._2 == off._2, s"probe counters with codegen on ${on._2} and off ${off._2}")
+    on
+  }
+
+  /** `df`'s (region_id, o_orderkey) rows, sorted, and its probe counters. */
+  private def pairs(df: DataFrame): (Seq[(Long, Long)], Map[String, Long]) = {
+    val selected = df.select("region_id", "o_orderkey")
+    val rows = selected.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    (rows, ProbeStage.counts(selected))
+  }
+
   test("polygonPipJoin equals brute-force loop containment (sf0.001)") {
     import spark.implicits._
     val dir = sf("sf0.001")
-    val df = SpatialJoin.polygonPipJoin(SparkEntry.points(spark, dir), "lat", "lon",
-        SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6)
-      .select("region_id", "o_orderkey")
-    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val (rows, m) = bothWays(pairs(SpatialJoin.polygonPipJoin(SparkEntry.points(spark, dir),
+      "lat", "lon", SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6)))
     val got = rows.toSet
     val pts = SparkEntry.points(spark, dir)
       .select(col("o_orderkey").cast("long"), col("lat"), col("lon"))
@@ -117,10 +134,13 @@ class PolygonTableJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       case e: S2PolygonTableJoinExec => e }
     assert(floatExec.head.metrics("refinements").value > 0, "float run never refined")
 
-    // the probe's SQL metrics account for every cell hit and output row
-    val execs = collect(df.queryExecution.executedPlan) { case e: S2PolygonTableJoinExec => e }
-    assert(execs.size == 1)
-    val m = execs.head.metrics.map { case (k, v) => k -> v.value }
+    // the probe's SQL metrics account for every points row, covering cell,
+    // cell hit and output row
+    assert(m("numInputRows") == pts.length, s"$m")
+    val coveringCells = SparkEntry.hexPolyTable(spark, dir)
+      .select(sum(size(s2_polygon_covering(col("lats"), col("lons"), 6))))
+      .head().getLong(0)
+    assert(m("coveringCells") == coveringCells, s"$m")
     assert(m("interiorAccepts") > 0 && m("refinements") > 0 && m("refineRejects") > 0,
       s"fixture misses a probe path: $m")
     assert(m("cellHits") == m("interiorAccepts") + m("refinements"), s"$m")
@@ -196,10 +216,9 @@ class PolygonTableJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     import spark.implicits._
     import graft.s2.S2Polygon
     val dir = sf("sf0.001")
-    val got = SpatialJoin.multiPolygonPipJoin(SparkEntry.points(spark, dir), "lat", "lon",
-        SparkEntry.holedPolyTable(spark, dir), "region_id", "loop_lats", "loop_lons",
-        level = 6)
-      .select("region_id", "o_orderkey").as[(Long, Long)].collect().toSet
+    val got = bothWays(pairs(SpatialJoin.multiPolygonPipJoin(SparkEntry.points(spark, dir),
+        "lat", "lon", SparkEntry.holedPolyTable(spark, dir), "region_id", "loop_lats",
+        "loop_lons", level = 6)))._1.toSet
     val polys = SparkEntry.HoledPolys.map { case (k, loops, _) =>
       k -> new S2Polygon(loops.map(loopOf)) }
     val pts = SparkEntry.points(spark, dir)
@@ -268,10 +287,9 @@ class PolygonTableJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("polygonPipJoinAdaptive equals brute-force loop containment (sf0.001)") {
     import spark.implicits._
     val dir = sf("sf0.001")
-    val got = SpatialJoin.polygonPipJoinAdaptive(SparkEntry.points(spark, dir), "lat", "lon",
-        SparkEntry.hexPolyVarTable(spark, dir), "region_id", "lats", "lons",
-        targetCells = 32, quantizeLevels = Seq(4, 6, 8))
-      .select("region_id", "o_orderkey").as[(Long, Long)].collect().toSet
+    val got = bothWays(pairs(SpatialJoin.polygonPipJoinAdaptive(SparkEntry.points(spark, dir),
+        "lat", "lon", SparkEntry.hexPolyVarTable(spark, dir), "region_id", "lats", "lons",
+        targetCells = 32, quantizeLevels = Seq(4, 6, 8))))._1.toSet
     val loops = SparkEntry.HexPolysVar.map { case (k, vs, _) => k -> loopOf(vs) }
     val pts = SparkEntry.points(spark, dir)
       .select(col("o_orderkey").cast("long"), col("lat"), col("lon"))
@@ -316,7 +334,70 @@ class PolygonTableJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(all { case e: Exchange => e; case q: QueryStageExec => q }.isEmpty,
         s"$name: Exchange between the points scan and the probe:\n$plan")
       assert(all { case s: FileSourceScanExec => s }.size == 1, s"$name: no points scan:\n$plan")
+      // one codegen stage: points scan -> probe (-> zonalStats' partial aggregate)
+      val broken = ProbeStage.violation(plan, partialAgg = name == "zonalStats")
+      assert(broken.isEmpty, s"$name: $broken")
     }
+    val off = withWholeStageCodegen(on = false) {
+      val df = SpatialJoin.zonalStats(pts, "lat", "lon", "o_orderkey",
+        SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6)
+      df.collect()
+      ProbeStage.violation(df.queryExecution.executedPlan, partialAgg = true)
+    }
+    assert(off.nonEmpty, "the codegen contract holds with whole-stage codegen off")
+  }
+
+  /** A CCW hexagon of radius `r` degrees around (clat, clon), as perfbench's
+    * poly_hot builds them. */
+  private def hexagon(clat: Double, clon: Double, r: Double): (Array[Double], Array[Double]) = {
+    val th = (0 until 6).map(i => 2.0 * math.Pi * i / 6.0 + 0.3)
+    (th.map(t => clat + r * math.sin(t)).toArray,
+      th.map(t => clon + 1.35 * r * math.cos(t)).toArray)
+  }
+
+  test("a covering past the cell cap fails the build with its cause; no task hangs") {
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val small = (0 until 64).map { k =>
+      val (lats, lons) = hexagon(-60.0 + 2.0 * (k % 60), -170.0 + 5.0 * k, 0.5)
+      (k.toLong, lats, lons)
+    }
+    // at level 10 this hexagon's rect bound spans ~3e5 cells, past the 2^17 cap
+    val (hugeLats, hugeLons) = hexagon(0.0, 0.0, 20.0)
+    val table = (small :+ ((999L, hugeLats, hugeLons))).toDF("region_id", "lats", "lons")
+    val pts = spark.range(0, 16000, 1, 8).select(col("id"),
+      (col("id") % 160 - 80.0 + 0.25).as("lat"), (col("id") * 7 % 360 - 180.0 + 0.25).as("lon"))
+    def join(polys: DataFrame) =
+      SpatialJoin.polygonPipJoin(pts, "lat", "lon", polys, "region_id", "lats", "lons", level = 10)
+
+    val failed = Future(join(table).count())(ExecutionContext.global)
+    try Await.ready(failed, 2.minutes)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        spark.sparkContext.cancelAllJobs()
+        fail("the join over a table whose build fails did not end within 2 minutes")
+    }
+    val e = failed.value.get.failed.get
+    val causes = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c =>
+      String.valueOf(c.getMessage).contains("s2_polygon_covering would produce")),
+      s"the build failure lost its cause: $e")
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (tracker.getActiveStageIds().nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(tracker.getActiveStageIds().isEmpty, "a task of the failed join is still running")
+
+    // the next join, on a valid table in the same session, runs
+    val loops = small.map { case (k, lats, lons) =>
+      k -> loopOf(lats.indices.map(i => (lats(i), lons(i)))) }
+    val want = pts.select("id", "lat", "lon").as[(Long, Double, Double)].collect().map {
+      case (_, la, lo) =>
+        val p = S2LatLng.fromDegrees(la, lo).toPoint
+        loops.count(_._2.contains(p)).toLong
+    }.sum
+    assert(want > 0, "no point falls in a small hexagon")
+    assert(join(table.where(col("region_id") =!= 999L)).count() == want)
   }
 
   test("reserved-name collision fails loudly") {

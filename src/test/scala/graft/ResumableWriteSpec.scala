@@ -123,6 +123,38 @@ class ResumableWriteSpec extends SparkTestBase {
     assert(ResumableWrite.readCommitted(spark, outDir, "p").count() == 4)
   }
 
+  test("a partition value the file-name encoding cannot encode is rejected before any write") {
+    import spark.implicits._
+    val cafe = "caf\u00e9"
+    // the executors create the directories, so the check must use their
+    // encoding: read it in a task
+    val (encName, locale) = spark.sparkContext.parallelize(Seq(0), 1)
+      .map(_ => (ResumableWrite.fileNameEncoding.name, java.util.Locale.getDefault.toString))
+      .collect().head
+    val fileNames = java.nio.charset.Charset.forName(encName)
+    val outDir = Files.createTempDirectory("resumable_enc").toString
+    val df = Seq((1L, cafe), (2L, "ok"), (3L, cafe)).toDF("id", "p")
+    if (!fileNames.newEncoder().canEncode(cafe)) {
+      // an ASCII file-name encoding (a JVM under the C/POSIX locale)
+      val e = intercept[IllegalArgumentException] {
+        ResumableWrite.write(df, outDir, "p", runId = "r")
+      }
+      assert(e.getMessage.contains(s"'$cafe'") && e.getMessage.contains(encName) &&
+        e.getMessage.contains(locale), e.getMessage)
+      assert(Option(new java.io.File(outDir).list()).forall(_.isEmpty),
+        s"files written before the rejection: ${new java.io.File(outDir).list().mkString(", ")}")
+    } else {
+      val recs = ResumableWrite.write(df, outDir, "p", runId = "r")
+      assert(recs.map(r => r.partition -> r.rows).toSet == Set(cafe -> 2L, "ok" -> 1L))
+      assert(ResumableWrite.readCommitted(spark, outDir, "p").select("p").as[String]
+        .collect().sorted.toSeq == Seq(cafe, cafe, "ok"))
+    }
+    // the check itself, under an encoding that cannot hold the value and one that can
+    assert(ResumableWrite.unencodable("p", Seq("ok", cafe), StandardCharsets.US_ASCII) == Seq(cafe))
+    assert(ResumableWrite.unencodable("p", Seq("ok", cafe), StandardCharsets.UTF_8).isEmpty)
+    assert(ResumableWrite.unencodable(s"p$cafe", Seq("ok"), StandardCharsets.US_ASCII) == Seq("ok"))
+  }
+
   test("snapshot reads: each run is a readable point-in-time version") {
     import spark.implicits._
     val outDir = Files.createTempDirectory("resumable_snap").toString

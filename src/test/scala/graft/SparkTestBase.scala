@@ -8,6 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.sharedSession
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Runs `body` with whole-stage codegen on or off, then restores the
+    * session's setting. */
+  def withWholeStageCodegen[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.codegen.wholeStage"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, on)
+    try body
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkTestBase {
