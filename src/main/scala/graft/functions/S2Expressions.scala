@@ -3,11 +3,12 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.s2.{S2CellId, S2LatLng}
+import graft.s2.{R1Interval, S1Interval, S2Cap, S2Cell, S2CellId, S2EdgeUtil, S2LatLng,
+  S2LatLngRect, S2Loop, S2Point, S2Polygon, S2Polyline, S2Projections, S2Region, S2RegionCoverer}
 
 /** Catalyst expressions for the S2 kernels.
   *
@@ -228,13 +229,86 @@ case class S2VertexNeighbors(left: Expression, right: Expression)
   override def prettyName: String = "s2_vertex_neighbors"
 }
 
+/** Degree vertex arrays: the Catalyst types the shape expressions take and
+  * their decoding into primitive arrays. */
+private[graft] object Vertices {
+  /** `array<double>`: the latitudes or longitudes of one loop or chain. */
+  val Type: ArrayType = ArrayType(DoubleType, containsNull = false)
+  /** `array<array<double>>`: the same, one inner array per polygon loop. */
+  val LoopsType: ArrayType = ArrayType(Type, containsNull = false)
+
+  def apply(a: Any): Array[Double] = a.asInstanceOf[ArrayData].toDoubleArray()
+  def loops(a: Any): Array[Array[Double]] = {
+    val outer = a.asInstanceOf[ArrayData]
+    Array.tabulate(outer.numElements())(i => outer.getArray(i).toDoubleArray())
+  }
+  def points(lats: Array[Double], lons: Array[Double]): IndexedSeq[S2Point] =
+    Array.tabulate(lats.length)(i => S2LatLng.fromDegrees(lats(i), lons(i)).toPoint).toIndexedSeq
+}
+
+/** The fixed-level covering kernel of every `s2_*_covering` expression: the
+  * reference's flood fill (`S2RegionCoverer.cs:289-293`) from a seed point
+  * whose level-`level` cell intersects the region, behind a level check and
+  * a size guard. */
+private[graft] object Covering {
+  /** Refuse coverings estimated above this many cells: a literal-arg
+    * covering constant-folds on the DRIVER, so a 25x40-degree rect at level
+    * 20 must fail fast instead of enumerating billions of cells before the
+    * first task launches (a per-row covering fails its task the same way). */
+  val MaxCoveringCells = 1 << 17
+
+  /** `array<struct<cell: long, interior: boolean>>`: the flagged form, each
+    * cell `interior` when the region contains all of it, so a PIP join can
+    * skip exact refinement for points landing there. */
+  val FlaggedType: ArrayType = ArrayType(StructType(Seq(
+    StructField("cell", LongType, nullable = false),
+    StructField("interior", BooleanType, nullable = false))), containsNull = false)
+
+  /** Cells of the level's average area it takes to tile `area` steradians. */
+  def cellsFor(area: Double, level: Int): Double =
+    area / (4 * math.Pi / (6.0 * math.pow(4.0, level)))
+
+  /** Spherical area of a rect bound, clamped at 0 where the sine difference
+    * goes negative (an empty lat interval, or latitudes outside [-90, 90]
+    * degrees); `S2LatLngRect.area` takes its absolute value instead. */
+  def boundArea(b: S2LatLngRect): Double =
+    b.lng.length * math.max(0.0, math.sin(b.lat.hi) - math.sin(b.lat.lo))
+
+  /** `op`'s covering: checks `level`, builds `shape`, refuses it when its
+    * `estimate`d cell count exceeds [[MaxCoveringCells]] (the message reads
+    * "`op` would `verb` ~N level-L cells ...; use a coarser level for a
+    * `what`"), then flood-fills from `seed` — as cell ids, or `flagged`
+    * ([[FlaggedType]]). */
+  def apply[R <: S2Region](op: String, level: Int, shape: => R, flagged: Boolean)(
+      estimate: R => Double, seed: R => S2Point, what: String,
+      verb: String = "produce"): GenericArrayData = {
+    require(0 <= level && level <= 30, s"$op level $level outside [0, 30]")
+    val region = shape
+    val n = estimate(region)
+    require(n <= MaxCoveringCells,
+      f"$op would $verb ~$n%.0f level-$level cells (> $MaxCoveringCells); " +
+        s"use a coarser level for a $what")
+    val cells = S2RegionCoverer.getSimpleCovering(region, seed(region), level)
+    if (!flagged) new GenericArrayData(cells.toArray)
+    else {
+      val rows = new Array[Any](cells.length)
+      var i = 0
+      while (i < cells.length) {
+        rows(i) = InternalRow(cells(i), region.containsCell(S2Cell(cells(i))))
+        i += 1
+      }
+      new GenericArrayData(rows)
+    }
+  }
+}
+
 /** `s2_rect_covering(latLoDeg, latHiDeg, lonLoDeg, lonHiDeg, level)` -> the
   * fixed-level covering cell ids of a lat/lng rectangle (lonLo > lonHi
-  * wraps the antimeridian), via the reference's flood fill
-  * (`S2RegionCoverer.cs:289-293`). FOLDABLE when the bounds are literals —
-  * the usual case — so `array_contains(s2_rect_covering(...), cell)`
-  * constant-folds to a literal-array membership test at plan time: a
-  * pure-SQL covering prefilter with zero per-row covering cost. */
+  * wraps the antimeridian), via the [[Covering]] kernel. FOLDABLE when the
+  * bounds are literals — the usual case — so
+  * `array_contains(s2_rect_covering(...), cell)` constant-folds to a
+  * literal-array membership test at plan time: a pure-SQL covering
+  * prefilter with zero per-row covering cost. */
 case class S2RectCovering(children: Seq[Expression])
     extends Expression with ImplicitCastInputTypes with CodegenFallback with Serializable {
   require(children.size == 5, "s2_rect_covering(latLo, latHi, lonLo, lonHi, level)")
@@ -244,13 +318,7 @@ case class S2RectCovering(children: Seq[Expression])
   override def nullable: Boolean = children.exists(_.nullable)
   override def foldable: Boolean = children.forall(_.foldable)
 
-  /** Refuse plans whose covering would exceed this many cells: the flood
-    * fill runs on the DRIVER during constant folding, so a 25x40-degree
-    * rect at level 20 must fail fast instead of enumerating billions of
-    * cells before the first task launches. */
-  private val MaxCoveringCells = 1 << 17
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+  override def eval(input: InternalRow): Any = {
     val vs = children.map(_.eval(input))
     if (vs.contains(null)) null
     else {
@@ -259,22 +327,10 @@ case class S2RectCovering(children: Seq[Expression])
       val lonLo = vs(2).asInstanceOf[Double]
       val lonHi = vs(3).asInstanceOf[Double]
       val level = vs(4).asInstanceOf[Int]
-      require(0 <= level && level <= 30, s"s2_rect_covering level $level outside [0, 30]")
-      val rect = graft.s2.S2LatLngRect(
-        graft.s2.R1Interval(math.toRadians(latLo), math.toRadians(latHi)),
-        graft.s2.S1Interval(math.toRadians(lonLo), math.toRadians(lonHi)))
-      // fail fast on coverings too large to enumerate: spherical rect
-      // area / average cell area at the level, with slack for boundary
-      // cells
-      val area = rect.lng.length *
-        math.max(0.0, math.sin(rect.lat.hi) - math.sin(rect.lat.lo))
-      val avgCellArea = 4 * math.Pi / (6.0 * math.pow(4.0, level))
-      val estimate = area / avgCellArea
-      require(estimate <= MaxCoveringCells,
-        f"s2_rect_covering would produce ~$estimate%.0f level-$level cells " +
-          f"(> $MaxCoveringCells); use a coarser level for a rect this large")
-      new GenericArrayData(
-        graft.s2.S2RegionCoverer.getSimpleCovering(rect, rect.center.toPoint, level).toArray)
+      Covering("s2_rect_covering", level, S2LatLngRect(
+        R1Interval(math.toRadians(latLo), math.toRadians(latHi)),
+        S1Interval(math.toRadians(lonLo), math.toRadians(lonHi))), flagged = false)(
+        r => Covering.cellsFor(Covering.boundArea(r), level), _.center.toPoint, "rect this large")
     }
   }
   override protected def withNewChildrenInternal(
@@ -296,9 +352,7 @@ case class S2CapCovering(children: Seq[Expression])
   override def nullable: Boolean = children.exists(_.nullable)
   override def foldable: Boolean = children.forall(_.foldable)
 
-  private val MaxCoveringCells = 1 << 17
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+  override def eval(input: InternalRow): Any = {
     val vs = children.map(_.eval(input))
     if (vs.contains(null)) null
     else {
@@ -306,19 +360,14 @@ case class S2CapCovering(children: Seq[Expression])
       val lon = vs(1).asInstanceOf[Double]
       val radiusM = vs(2).asInstanceOf[Double]
       val level = vs(3).asInstanceOf[Int]
-      require(0 <= level && level <= 30, s"s2_cap_covering level $level outside [0, 30]")
-      require(radiusM > 0, s"s2_cap_covering radius $radiusM must be positive")
       val angle = math.min(math.Pi, radiusM / S2LatLng.EarthRadiusMeters)
-      val area = 2 * math.Pi * (1 - math.cos(angle))
-      val avgCellArea = 4 * math.Pi / (6.0 * math.pow(4.0, level))
-      val estimate = area / avgCellArea
-      require(estimate <= MaxCoveringCells,
-        f"s2_cap_covering would produce ~$estimate%.0f level-$level cells " +
-          f"(> $MaxCoveringCells); use a coarser level for a cap this large")
       val axis = S2LatLng.fromDegrees(lat, lon).toPoint
-      val cap = graft.s2.S2Cap.fromAxisAngle(axis, angle)
-      new GenericArrayData(
-        graft.s2.S2RegionCoverer.getSimpleCovering(cap, axis, level).toArray)
+      Covering("s2_cap_covering", level, {
+        require(radiusM > 0, s"s2_cap_covering radius $radiusM must be positive")
+        S2Cap.fromAxisAngle(axis, angle)
+      }, flagged = false)(
+        _ => Covering.cellsFor(2 * math.Pi * (1 - math.cos(angle)), level), _ => axis,
+        "cap this large")
     }
   }
   override protected def withNewChildrenInternal(
@@ -326,63 +375,94 @@ case class S2CapCovering(children: Seq[Expression])
   override def prettyName: String = "s2_cap_covering"
 }
 
-/** Per-thread LRU of constructed [[graft.s2.S2Loop]]s keyed by vertex
-  * content. Loop construction is O(n) (bound + origin) and `contains`
-  * lazily builds an edge index for large loops, so the refinement side of a
-  * polygon-table join — where one task streams many candidate points of the
-  * SAME few border polygons (the equi-join groups rows by covering cell) —
-  * would otherwise rebuild the loop once per (point, polygon) pair. Thread
-  * confinement also keeps the loop's lazy internal state (edge iterator,
-  * first-logical-vertex memo) race-free. */
-private[graft] object LoopCache {
-  final class Key(val lats: Array[Double], val lons: Array[Double]) {
-    override val hashCode: Int =
-      31 * java.util.Arrays.hashCode(lats) + java.util.Arrays.hashCode(lons)
-    override def equals(o: Any): Boolean = o match {
-      case k: Key => java.util.Arrays.equals(lats, k.lats) &&
-        java.util.Arrays.equals(lons, k.lons)
-      case _ => false
-    }
-  }
+/** A per-thread LRU of shapes built from degree vertex arrays, keyed by
+  * vertex content. Shape construction is O(n) (bound + origin) and
+  * containment lazily builds an edge index for large shapes, so an
+  * expression evaluated over many rows of the SAME few shapes (a
+  * refinement predicate, a per-row covering of a repeated polygon) would
+  * otherwise rebuild the shape once per row. Thread confinement also keeps
+  * a shape's lazy internal state (edge iterator, first-logical-vertex memo)
+  * race-free. */
+private[graft] abstract class ShapeCache[A <: AnyRef, S <: AnyRef] {
+  /** A fresh shape from the vertex arrays, uncached. */
+  def build(lats: A, lons: A): S
 
   private val MaxEntries = 64
 
-  private val cache = new ThreadLocal[java.util.LinkedHashMap[Key, graft.s2.S2Loop]] {
-    override def initialValue() =
-      new java.util.LinkedHashMap[Key, graft.s2.S2Loop](MaxEntries * 2, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[Key, graft.s2.S2Loop]): Boolean = size > MaxEntries
-      }
-  }
+  private val cache = ThreadLocal.withInitial[java.util.LinkedHashMap[ShapeCache.Key, S]](() =>
+    new java.util.LinkedHashMap[ShapeCache.Key, S](MaxEntries * 2, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[ShapeCache.Key, S]): Boolean =
+        size > MaxEntries
+    })
 
-  def loopFor(lats: Array[Double], lons: Array[Double]): graft.s2.S2Loop = {
-    val key = new Key(lats, lons)
+  /** The calling thread's shape for these vertices, built on a miss. */
+  def apply(lats: A, lons: A): S = {
+    val key = new ShapeCache.Key(lats, lons)
     val m = cache.get()
-    var loop = m.get(key)
-    if (loop == null) {
-      loop = build(lats, lons)
-      m.put(key, loop)
+    var shape = m.get(key)
+    if (shape == null) {
+      shape = build(lats, lons)
+      m.put(key, shape)
     }
-    loop
+    shape
   }
+}
 
-  /** A fresh loop from parallel degree vertex arrays, uncached. */
-  def build(lats: Array[Double], lons: Array[Double]): graft.s2.S2Loop = {
+private[graft] object ShapeCache {
+  /** Content equality over flat or nested primitive vertex arrays. */
+  final class Key(lats: AnyRef, lons: AnyRef) {
+    private val parts = Array(lats, lons)
+    override val hashCode: Int = java.util.Arrays.deepHashCode(parts)
+    override def equals(o: Any): Boolean = o match {
+      case k: Key => java.util.Arrays.deepEquals(parts, k.parts)
+      case _ => false
+    }
+  }
+}
+
+/** Single loops for the loop expressions; the polygon-table join builds its
+  * per-task loops with the uncached [[build]]. */
+private[graft] object LoopCache extends ShapeCache[Array[Double], S2Loop] {
+  def build(lats: Array[Double], lons: Array[Double]): S2Loop = {
     require(lats.length == lons.length,
       s"loop vertex arrays differ in length: ${lats.length} vs ${lons.length}")
     require(lats.length >= 3, s"a loop needs >= 3 vertices, got ${lats.length}")
-    new graft.s2.S2Loop(Array.tabulate(lats.length)(i =>
-      S2LatLng.fromDegrees(lats(i), lons(i)).toPoint).toIndexedSeq)
+    new S2Loop(Vertices.points(lats, lons))
+  }
+}
+
+/** Multi-loop polygons (XOR parity) from nested vertex arrays. */
+private[graft] object PolygonCache extends ShapeCache[Array[Array[Double]], S2Polygon] {
+  def build(lats: Array[Array[Double]], lons: Array[Array[Double]]): S2Polygon = {
+    require(lats.length == lons.length && lats.length >= 1,
+      s"polygon needs >= 1 loop with matching lat/lon arrays, " +
+        s"got ${lats.length}/${lons.length}")
+    var i = 0
+    while (i < lats.length) {
+      require(lats(i).length == lons(i).length && lats(i).length >= 3,
+        s"loop $i: vertex arrays ${lats(i).length}/${lons(i).length} (need >= 3, equal)")
+      i += 1
+    }
+    new S2Polygon(lats.indices.map(j => new S2Loop(Vertices.points(lats(j), lons(j)))))
+  }
+}
+
+/** Polylines (chains) for the polyline expressions. */
+private[functions] object PolylineCache extends ShapeCache[Array[Double], S2Polyline] {
+  def build(lats: Array[Double], lons: Array[Double]): S2Polyline = {
+    require(lats.length == lons.length,
+      s"polyline vertex arrays differ in length: ${lats.length} vs ${lons.length}")
+    require(lats.length >= 2, s"a polyline needs >= 2 vertices, got ${lats.length}")
+    new S2Polyline(Vertices.points(lats, lons))
   }
 }
 
 /** `s2_polygon_covering(latsDeg: array<double>, lonsDeg: array<double>,
   * level) -> array<struct<cell: long, interior: boolean>>` — the fixed-level
   * covering cells of a single-loop polygon given as parallel vertex arrays,
-  * each cell flagged `interior` when the loop fully contains it (so a PIP
-  * join can skip exact refinement for points landing there). The loop must
-  * be simple (non-self-intersecting) with vertices listed so the enclosed
-  * region is on the LEFT (counter-clockwise for small loops).
+  * in the [[Covering]] kernel's flagged form. The loop must be simple
+  * (non-self-intersecting) with vertices listed so the enclosed region is
+  * on the LEFT (counter-clockwise for small loops).
   *
   * This is the polygon member of the vector->raster family
   * ([[S2RectCovering]] / [[S2CapCovering]]): with column args the flood
@@ -394,39 +474,15 @@ private[graft] object LoopCache {
 case class S2PolygonCovering(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false), IntegerType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cell", LongType, nullable = false),
-    StructField("interior", BooleanType, nullable = false))), containsNull = false)
-
-  private val MaxCoveringCells = 1 << 17
+  override def inputTypes: Seq[DataType] = Seq(Vertices.Type, Vertices.Type, IntegerType)
+  override def dataType: DataType = Covering.FlaggedType
 
   override protected def nullSafeEval(latsAny: Any, lonsAny: Any, levelAny: Any): Any = {
-    val lats = latsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val lons = lonsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
     val level = levelAny.asInstanceOf[Int]
-    require(0 <= level && level <= 30, s"s2_polygon_covering level $level outside [0, 30]")
-    val loop = LoopCache.loopFor(lats, lons)
-    // fail fast on coverings too large to enumerate (rect-bound area over
-    // average cell area at the level, same guard as s2_rect_covering)
-    val b = loop.rectBound
-    val area = b.lng.length *
-      math.max(0.0, math.sin(b.lat.hi) - math.sin(b.lat.lo))
-    val avgCellArea = 4 * math.Pi / (6.0 * math.pow(4.0, level))
-    require(area / avgCellArea <= MaxCoveringCells,
-      f"s2_polygon_covering would produce ~${area / avgCellArea}%.0f level-$level cells " +
-        f"(> $MaxCoveringCells); use a coarser level for a polygon this large")
-    val cells = graft.s2.S2RegionCoverer.getSimpleCovering(loop, loop.vertex(0), level)
-    val rows = new Array[Any](cells.length)
-    var i = 0
-    while (i < cells.length) {
-      val interior = loop.containsCell(graft.s2.S2Cell(cells(i)))
-      rows(i) = InternalRow(cells(i), interior)
-      i += 1
-    }
-    new GenericArrayData(rows)
+    Covering("s2_polygon_covering", level, LoopCache(Vertices(latsAny), Vertices(lonsAny)),
+      flagged = true)(
+      loop => Covering.cellsFor(Covering.boundArea(loop.rectBound), level), _.vertex(0),
+      "polygon this large")
   }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): S2PolygonCovering = copy(f, s, t)
@@ -436,23 +492,19 @@ case class S2PolygonCovering(first: Expression, second: Expression, third: Expre
 /** `s2_loop_contains(latsDeg: array<double>, lonsDeg: array<double>,
   * latDeg, lonDeg) -> boolean` — exact single-loop containment
   * (`S2Loop.cs:794-833` crossing-parity semantics) with the loop built from
-  * parallel vertex arrays. The refinement predicate of the polygon-TABLE
-  * PIP join: loops are constructed at most once per (task thread, polygon)
-  * via [[LoopCache]], not once per candidate pair. */
+  * parallel vertex arrays, at most once per (task thread, polygon) via
+  * [[LoopCache]], not once per candidate pair. */
 case class S2LoopContainsPoint(first: Expression, second: Expression,
                                third: Expression, fourth: Expression)
     extends QuaternaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
   override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false), DoubleType, DoubleType)
+    Seq(Vertices.Type, Vertices.Type, DoubleType, DoubleType)
   override def dataType: DataType = BooleanType
 
   override protected def nullSafeEval(latsAny: Any, lonsAny: Any,
                                       latAny: Any, lonAny: Any): Any = {
-    val lats = latsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val lons = lonsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val loop = LoopCache.loopFor(lats, lons)
+    val loop = LoopCache(Vertices(latsAny), Vertices(lonsAny))
     loop.contains(S2LatLng.fromDegrees(latAny.asInstanceOf[Double],
       lonAny.asInstanceOf[Double]).toPoint)
   }
@@ -460,64 +512,6 @@ case class S2LoopContainsPoint(first: Expression, second: Expression,
       f: Expression, s: Expression, t: Expression, q: Expression): S2LoopContainsPoint =
     copy(f, s, t, q)
   override def prettyName: String = "s2_loop_contains"
-}
-
-/** Per-thread LRU of constructed [[graft.s2.S2Polygon]]s (multi-loop, XOR
-  * parity) keyed by nested vertex content — the multi-loop sibling of
-  * [[LoopCache]], same rationale. */
-private[graft] object PolygonCache {
-  final class Key(val lats: Array[Array[Double]], val lons: Array[Array[Double]]) {
-    override val hashCode: Int =
-      31 * java.util.Arrays.deepHashCode(lats.asInstanceOf[Array[AnyRef]]) +
-        java.util.Arrays.deepHashCode(lons.asInstanceOf[Array[AnyRef]])
-    override def equals(o: Any): Boolean = o match {
-      case k: Key =>
-        java.util.Arrays.deepEquals(lats.asInstanceOf[Array[AnyRef]],
-          k.lats.asInstanceOf[Array[AnyRef]]) &&
-          java.util.Arrays.deepEquals(lons.asInstanceOf[Array[AnyRef]],
-            k.lons.asInstanceOf[Array[AnyRef]])
-      case _ => false
-    }
-  }
-
-  private val MaxEntries = 64
-
-  private val cache = new ThreadLocal[java.util.LinkedHashMap[Key, graft.s2.S2Polygon]] {
-    override def initialValue() =
-      new java.util.LinkedHashMap[Key, graft.s2.S2Polygon](MaxEntries * 2, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[Key, graft.s2.S2Polygon]): Boolean = size > MaxEntries
-      }
-  }
-
-  def polygonFor(lats: Array[Array[Double]],
-                 lons: Array[Array[Double]]): graft.s2.S2Polygon = {
-    val key = new Key(lats, lons)
-    val m = cache.get()
-    var poly = m.get(key)
-    if (poly == null) {
-      poly = build(lats, lons)
-      m.put(key, poly)
-    }
-    poly
-  }
-
-  /** A fresh polygon from nested degree vertex arrays, uncached. */
-  def build(lats: Array[Array[Double]], lons: Array[Array[Double]]): graft.s2.S2Polygon = {
-    require(lats.length == lons.length && lats.length >= 1,
-      s"polygon needs >= 1 loop with matching lat/lon arrays, " +
-        s"got ${lats.length}/${lons.length}")
-    var i = 0
-    while (i < lats.length) {
-      require(lats(i).length == lons(i).length && lats(i).length >= 3,
-        s"loop $i: vertex arrays ${lats(i).length}/${lons(i).length} (need >= 3, equal)")
-      i += 1
-    }
-    new graft.s2.S2Polygon(lats.indices.map { j =>
-      new graft.s2.S2Loop(Array.tabulate(lats(j).length)(v =>
-        S2LatLng.fromDegrees(lats(j)(v), lons(j)(v)).toPoint).toIndexedSeq)
-    })
-  }
 }
 
 /** `s2_multipolygon_covering(loopLatsDeg: array<array<double>>,
@@ -531,42 +525,17 @@ case class S2MultiPolygonCovering(first: Expression, second: Expression, third: 
     extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
   override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false),
-      ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false),
-      IntegerType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cell", LongType, nullable = false),
-    StructField("interior", BooleanType, nullable = false))), containsNull = false)
-
-  private val MaxCoveringCells = 1 << 17
-
-  private def nested(a: Any): Array[Array[Double]] = {
-    val outer = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    Array.tabulate(outer.numElements())(i => outer.getArray(i).toDoubleArray())
-  }
+    Seq(Vertices.LoopsType, Vertices.LoopsType, IntegerType)
+  override def dataType: DataType = Covering.FlaggedType
 
   override protected def nullSafeEval(latsAny: Any, lonsAny: Any, levelAny: Any): Any = {
     val level = levelAny.asInstanceOf[Int]
-    require(0 <= level && level <= 30, s"s2_multipolygon_covering level $level outside [0, 30]")
-    val poly = PolygonCache.polygonFor(nested(latsAny), nested(lonsAny))
-    val b = poly.rectBound
-    val area = b.lng.length *
-      math.max(0.0, math.sin(b.lat.hi) - math.sin(b.lat.lo))
-    val avgCellArea = 4 * math.Pi / (6.0 * math.pow(4.0, level))
-    require(area / avgCellArea <= MaxCoveringCells,
-      f"s2_multipolygon_covering would produce ~${area / avgCellArea}%.0f level-$level " +
-        f"cells (> $MaxCoveringCells); use a coarser level for a polygon this large")
     // seed: any loop vertex lies on the region boundary, so its level-L
     // cell intersects the region and the flood fill can start there
-    val seed = poly.loop(0).vertex(0)
-    val cells = graft.s2.S2RegionCoverer.getSimpleCovering(poly, seed, level)
-    val rows = new Array[Any](cells.length)
-    var i = 0
-    while (i < cells.length) {
-      rows(i) = InternalRow(cells(i), poly.containsCell(graft.s2.S2Cell(cells(i))))
-      i += 1
-    }
-    new GenericArrayData(rows)
+    Covering("s2_multipolygon_covering", level,
+      PolygonCache(Vertices.loops(latsAny), Vertices.loops(lonsAny)), flagged = true)(
+      poly => Covering.cellsFor(Covering.boundArea(poly.rectBound), level),
+      _.loop(0).vertex(0), "polygon this large")
   }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): S2MultiPolygonCovering = copy(f, s, t)
@@ -581,19 +550,12 @@ case class S2PolygonContainsPoint(first: Expression, second: Expression,
     extends QuaternaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
   override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false),
-      ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false),
-      DoubleType, DoubleType)
+    Seq(Vertices.LoopsType, Vertices.LoopsType, DoubleType, DoubleType)
   override def dataType: DataType = BooleanType
-
-  private def nested(a: Any): Array[Array[Double]] = {
-    val outer = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    Array.tabulate(outer.numElements())(i => outer.getArray(i).toDoubleArray())
-  }
 
   override protected def nullSafeEval(latsAny: Any, lonsAny: Any,
                                       latAny: Any, lonAny: Any): Any = {
-    val poly = PolygonCache.polygonFor(nested(latsAny), nested(lonsAny))
+    val poly = PolygonCache(Vertices.loops(latsAny), Vertices.loops(lonsAny))
     poly.contains(S2LatLng.fromDegrees(latAny.asInstanceOf[Double],
       lonAny.asInstanceOf[Double]).toPoint)
   }
@@ -601,40 +563,6 @@ case class S2PolygonContainsPoint(first: Expression, second: Expression,
       f: Expression, s: Expression, t: Expression, q: Expression): S2PolygonContainsPoint =
     copy(f, s, t, q)
   override def prettyName: String = "s2_polygon_contains"
-}
-
-/** Per-thread LRU of constructed [[graft.s2.S2Polyline]]s keyed by vertex
-  * content — [[LoopCache]]'s polyline sibling, same rationale (chains are
-  * rebuilt at most once per (task thread, polyline), not per candidate
-  * pair). */
-private[functions] object PolylineCache {
-  private val MaxEntries = 64
-
-  private val cache =
-    new ThreadLocal[java.util.LinkedHashMap[LoopCache.Key, graft.s2.S2Polyline]] {
-      override def initialValue() =
-        new java.util.LinkedHashMap[LoopCache.Key, graft.s2.S2Polyline](
-          MaxEntries * 2, 0.75f, true) {
-          override def removeEldestEntry(
-              e: java.util.Map.Entry[LoopCache.Key, graft.s2.S2Polyline]): Boolean =
-            size > MaxEntries
-        }
-    }
-
-  def polylineFor(lats: Array[Double], lons: Array[Double]): graft.s2.S2Polyline = {
-    require(lats.length == lons.length,
-      s"polyline vertex arrays differ in length: ${lats.length} vs ${lons.length}")
-    require(lats.length >= 2, s"a polyline needs >= 2 vertices, got ${lats.length}")
-    val key = new LoopCache.Key(lats, lons)
-    val m = cache.get()
-    var line = m.get(key)
-    if (line == null) {
-      line = new graft.s2.S2Polyline(Array.tabulate(lats.length)(i =>
-        S2LatLng.fromDegrees(lats(i), lons(i)).toPoint).toIndexedSeq)
-      m.put(key, line)
-    }
-    line
-  }
 }
 
 /** `s2_polyline_covering(latsDeg: array<double>, lonsDeg: array<double>,
@@ -646,27 +574,16 @@ private[functions] object PolylineCache {
 case class S2PolylineCovering(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false), IntegerType)
+  override def inputTypes: Seq[DataType] = Seq(Vertices.Type, Vertices.Type, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  private val MaxCoveringCells = 1 << 17
-
   override protected def nullSafeEval(latsAny: Any, lonsAny: Any, levelAny: Any): Any = {
-    val lats = latsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val lons = lonsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
     val level = levelAny.asInstanceOf[Int]
-    require(0 <= level && level <= 30, s"s2_polyline_covering level $level outside [0, 30]")
-    val line = PolylineCache.polylineFor(lats, lons)
     // a polyline's covering grows ~linearly with arc length / cell edge
-    val arc = line.arcLengthAngle
-    val minEdge = graft.s2.S2Projections.MinWidth.getValue(level)
-    require(arc / minEdge <= MaxCoveringCells,
-      f"s2_polyline_covering would walk ~${arc / minEdge}%.0f level-$level cells " +
-        f"(> $MaxCoveringCells); use a coarser level for a chain this long")
-    new GenericArrayData(
-      graft.s2.S2RegionCoverer.getSimpleCovering(line, line.vertex(0), level).toArray)
+    Covering("s2_polyline_covering", level, PolylineCache(Vertices(latsAny), Vertices(lonsAny)),
+      flagged = false)(
+      _.arcLengthAngle / S2Projections.MinWidth.getValue(level), _.vertex(0),
+      "chain this long", verb = "walk")
   }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): S2PolylineCovering = copy(f, s, t)
@@ -683,15 +600,12 @@ case class S2PolylineDistance(first: Expression, second: Expression,
     extends QuaternaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
   override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false), DoubleType, DoubleType)
+    Seq(Vertices.Type, Vertices.Type, DoubleType, DoubleType)
   override def dataType: DataType = DoubleType
 
   override protected def nullSafeEval(latsAny: Any, lonsAny: Any,
                                       latAny: Any, lonAny: Any): Any = {
-    val lats = latsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val lons = lonsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val line = PolylineCache.polylineFor(lats, lons)
+    val line = PolylineCache(Vertices(latsAny), Vertices(lonsAny))
     line.distanceAngle(S2LatLng.fromDegrees(latAny.asInstanceOf[Double],
       lonAny.asInstanceOf[Double]).toPoint) * S2LatLng.EarthRadiusMeters
   }
@@ -712,15 +626,12 @@ case class S2PolylineNearestEdge(first: Expression, second: Expression,
     extends QuaternaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
   override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false), DoubleType, DoubleType)
+    Seq(Vertices.Type, Vertices.Type, DoubleType, DoubleType)
   override def dataType: DataType = IntegerType
 
   override protected def nullSafeEval(latsAny: Any, lonsAny: Any,
                                       latAny: Any, lonAny: Any): Any = {
-    val lats = latsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val lons = lonsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val line = PolylineCache.polylineFor(lats, lons)
+    val line = PolylineCache(Vertices(latsAny), Vertices(lonsAny))
     line.getNearestEdgeIndex(S2LatLng.fromDegrees(latAny.asInstanceOf[Double],
       lonAny.asInstanceOf[Double]).toPoint)
   }
@@ -735,12 +646,12 @@ case class S2PolylineNearestEdge(first: Expression, second: Expression,
   * [[S2PolygonCovering]]: each ROW picks its own covering level from its
   * rect-bound area so a continent-sized region and a parking lot both
   * produce ~`targetCells` cells, while quantizing to `quantizeLevels`
-  * keeps the probe side's ancestor explode bounded by the MENU size (a
-  * per-row free level would force the points side to explode once per
-  * DISTINCT level in the data — unknowable at plan time). Picks the
-  * FINEST allowed level whose estimated covering stays within
-  * `targetCells` (finer = more selective buckets); regions smaller than
-  * the finest allowed level just use it. */
+  * bounds the cell-table probe's per-level binary searches by the MENU
+  * size (a per-row free level would cost the probe one search per
+  * DISTINCT level in the data). Picks the FINEST allowed level whose
+  * estimated covering stays within `targetCells` (finer = more selective
+  * buckets); regions smaller than the finest allowed level just use it.
+  * No size guard: `targetCells` bounds the covering. */
 case class S2PolygonCoveringAdaptive(first: Expression, second: Expression,
                                      third: Expression, quantizeLevels: Seq[Int])
     extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback
@@ -748,37 +659,22 @@ case class S2PolygonCoveringAdaptive(first: Expression, second: Expression,
   require(quantizeLevels.nonEmpty && quantizeLevels == quantizeLevels.sorted &&
     quantizeLevels.forall(l => 0 <= l && l <= 30),
     s"quantizeLevels must be sorted levels in [0, 30], got $quantizeLevels")
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false), IntegerType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cell", LongType, nullable = false),
-    StructField("interior", BooleanType, nullable = false))), containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(Vertices.Type, Vertices.Type, IntegerType)
+  override def dataType: DataType = Covering.FlaggedType
 
   override protected def nullSafeEval(latsAny: Any, lonsAny: Any, targetAny: Any): Any = {
-    val lats = latsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val lons = lonsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
     val target = targetAny.asInstanceOf[Int]
     require(target >= 4, s"targetCells must be >= 4, got $target")
-    val loop = LoopCache.loopFor(lats, lons)
-    val b = loop.rectBound
-    val area = b.lng.length *
-      math.max(0.0, math.sin(b.lat.hi) - math.sin(b.lat.lo))
+    val loop = LoopCache(Vertices(latsAny), Vertices(lonsAny))
+    val area = Covering.boundArea(loop.rectBound)
     // the min level whose AVG cell area is <= area/target covers the region
     // in >= ~target cells; quantizing DOWN (coarser) keeps the count <= that
     val ideal =
       if (area <= 0) quantizeLevels.last
-      else graft.s2.S2Projections.AvgArea.getMinLevel(area / target)
+      else S2Projections.AvgArea.getMinLevel(area / target)
     val level = quantizeLevels.reverseIterator.find(_ <= ideal)
       .getOrElse(quantizeLevels.head)
-    val cells = graft.s2.S2RegionCoverer.getSimpleCovering(loop, loop.vertex(0), level)
-    val rows = new Array[Any](cells.length)
-    var i = 0
-    while (i < cells.length) {
-      rows(i) = InternalRow(cells(i), loop.containsCell(graft.s2.S2Cell(cells(i))))
-      i += 1
-    }
-    new GenericArrayData(rows)
+    Covering(prettyName, level, loop, flagged = true)(_ => 0.0, _.vertex(0), "polygon this large")
   }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): S2PolygonCoveringAdaptive =
@@ -795,19 +691,13 @@ case class S2LoopsIntersect(first: Expression, second: Expression,
     extends QuaternaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
   override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false))
+    Seq(Vertices.Type, Vertices.Type, Vertices.Type, Vertices.Type)
   override def dataType: DataType = BooleanType
-
-  private def arr(a: Any): Array[Double] =
-    a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
 
   override protected def nullSafeEval(latsA: Any, lonsA: Any,
                                       latsB: Any, lonsB: Any): Any = {
-    val a = LoopCache.loopFor(arr(latsA), arr(lonsA))
-    val b = LoopCache.loopFor(arr(latsB), arr(lonsB))
+    val a = LoopCache(Vertices(latsA), Vertices(lonsA))
+    val b = LoopCache(Vertices(latsB), Vertices(lonsB))
     a.intersects(b)
   }
   override protected def withNewChildrenInternal(
@@ -827,15 +717,12 @@ case class S2LoopRegionDistance(first: Expression, second: Expression,
     extends QuaternaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
   override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false), DoubleType, DoubleType)
+    Seq(Vertices.Type, Vertices.Type, DoubleType, DoubleType)
   override def dataType: DataType = DoubleType
 
   override protected def nullSafeEval(latsAny: Any, lonsAny: Any,
                                       latAny: Any, lonAny: Any): Any = {
-    val lats = latsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val lons = lonsAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val loop = LoopCache.loopFor(lats, lons)
+    val loop = LoopCache(Vertices(latsAny), Vertices(lonsAny))
     val p = S2LatLng.fromDegrees(latAny.asInstanceOf[Double],
       lonAny.asInstanceOf[Double]).toPoint
     if (loop.contains(p)) 0.0
@@ -857,26 +744,18 @@ case class S2PolylinesCross(first: Expression, second: Expression,
     extends QuaternaryExpression with ImplicitCastInputTypes with CodegenFallback
     with Serializable {
   override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false))
+    Seq(Vertices.Type, Vertices.Type, Vertices.Type, Vertices.Type)
   override def dataType: DataType = BooleanType
 
   override protected def nullSafeEval(latsAAny: Any, lonsAAny: Any,
                                       latsBAny: Any, lonsBAny: Any): Any = {
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    val la = PolylineCache.polylineFor(
-      latsAAny.asInstanceOf[ArrayData].toDoubleArray(),
-      lonsAAny.asInstanceOf[ArrayData].toDoubleArray())
-    val lb = PolylineCache.polylineFor(
-      latsBAny.asInstanceOf[ArrayData].toDoubleArray(),
-      lonsBAny.asInstanceOf[ArrayData].toDoubleArray())
+    val la = PolylineCache(Vertices(latsAAny), Vertices(lonsAAny))
+    val lb = PolylineCache(Vertices(latsBAny), Vertices(lonsBAny))
     var i = 0
     while (i < la.numVertices - 1) {
       var j = 0
       while (j < lb.numVertices - 1) {
-        if (graft.s2.S2EdgeUtil.robustCrossing(la.vertex(i), la.vertex(i + 1),
+        if (S2EdgeUtil.robustCrossing(la.vertex(i), la.vertex(i + 1),
           lb.vertex(j), lb.vertex(j + 1)) > 0) return true
         j += 1
       }

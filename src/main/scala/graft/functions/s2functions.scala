@@ -2,8 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.lit
+
+import graft.plans.S2RegionContains
 
 /** Column-API facade over the S2 Catalyst expressions — the engine's scalar
   * function surface (SURVEY.md section 2.1/2.2). */
@@ -129,50 +132,46 @@ object s2functions {
                                latDeg: Column, lonDeg: Column): Column =
     expr(S2PolylineNearestEdge(child(latsDeg), child(lonsDeg), child(latDeg), child(lonDeg)))
 
-  /** Register all s2_* functions for SQL use on the given session. */
+  private def sql(name: String)(builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo("graft.functions", name), builder)
+
+  /** The SQL surface: every `s2_*` function by name with its builder, the
+    * one table that [[registerAll]] and [[graft.plans.S2Extensions]] both
+    * register. `s2_polygon_covering_adaptive` is Column-API only: its level
+    * menu is a Scala `Seq`, not a SQL argument. */
+  val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    sql("s2_cell_id") { case Seq(a, b) => S2CellIdFromLatLng(a, b) },
+    sql("s2_parent") { case Seq(a, b) => S2CellParent(a, b) },
+    sql("s2_token") { case Seq(a) => S2Token(a) },
+    sql("s2_cell_from_face_pos") { case Seq(a, b, c) => S2CellFromFacePos(a, b, c) },
+    sql("s2_cell_from_token") { case Seq(a) => S2CellFromToken(a) },
+    sql("s2_level") { case Seq(a) => S2CellLevel(a) },
+    sql("s2_range_min") { case Seq(a) => S2CellRangeMin(a) },
+    sql("s2_range_max") { case Seq(a) => S2CellRangeMax(a) },
+    sql("s2_cell_contains") { case Seq(a, b) => S2CellContains(a, b) },
+    sql("s2_cell_lat") { case Seq(a) => S2CellLat(a) },
+    sql("s2_cell_lon") { case Seq(a) => S2CellLon(a) },
+    sql("s2_distance_m") { case Seq(a, b, c, d) => S2Distance(a, b, c, d) },
+    sql("s2_all_neighbors") { case Seq(a, b) => S2AllNeighbors(a, b) },
+    sql("s2_edge_neighbors") { case Seq(a) => S2EdgeNeighbors(a) },
+    sql("s2_vertex_neighbors") { case Seq(a, b) => S2VertexNeighbors(a, b) },
+    sql("s2_region_contains") { case Seq(a, b, c) => S2RegionContains(a, b, c) },
+    sql("s2_rect_covering")(S2RectCovering(_)),
+    sql("s2_cap_covering")(S2CapCovering(_)),
+    sql("s2_polygon_covering") { case Seq(a, b, c) => S2PolygonCovering(a, b, c) },
+    sql("s2_loop_contains") { case Seq(a, b, c, d) => S2LoopContainsPoint(a, b, c, d) },
+    sql("s2_multipolygon_covering") { case Seq(a, b, c) => S2MultiPolygonCovering(a, b, c) },
+    sql("s2_polygon_contains") { case Seq(a, b, c, d) => S2PolygonContainsPoint(a, b, c, d) },
+    sql("s2_polyline_covering") { case Seq(a, b, c) => S2PolylineCovering(a, b, c) },
+    sql("s2_polyline_distance_m") { case Seq(a, b, c, d) => S2PolylineDistance(a, b, c, d) },
+    sql("s2_polyline_nearest_edge") { case Seq(a, b, c, d) => S2PolylineNearestEdge(a, b, c, d) },
+    sql("s2_loops_intersect") { case Seq(a, b, c, d) => S2LoopsIntersect(a, b, c, d) },
+    sql("s2_loop_region_distance_m") { case Seq(a, b, c, d) => S2LoopRegionDistance(a, b, c, d) },
+    sql("s2_polylines_cross") { case Seq(a, b, c, d) => S2PolylinesCross(a, b, c, d) })
+
+  /** Register every [[sqlFunctions]] entry for SQL use on the given session. */
   def registerAll(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
     val registry = spark.sessionState.functionRegistry
-    def reg(name: String, builder: Seq[Expression] => Expression): Unit =
-      registry.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name), builder)
-
-    reg("s2_cell_id", { case Seq(a, b) => S2CellIdFromLatLng(a, b) })
-    reg("s2_parent", { case Seq(a, b) => S2CellParent(a, b) })
-    reg("s2_token", { case Seq(a) => S2Token(a) })
-    reg("s2_cell_from_face_pos", { case Seq(a, b, c) => S2CellFromFacePos(a, b, c) })
-    reg("s2_cell_from_token", { case Seq(a) => S2CellFromToken(a) })
-    reg("s2_level", { case Seq(a) => S2CellLevel(a) })
-    reg("s2_range_min", { case Seq(a) => S2CellRangeMin(a) })
-    reg("s2_range_max", { case Seq(a) => S2CellRangeMax(a) })
-    reg("s2_cell_contains", { case Seq(a, b) => S2CellContains(a, b) })
-    reg("s2_cell_lat", { case Seq(a) => S2CellLat(a) })
-    reg("s2_cell_lon", { case Seq(a) => S2CellLon(a) })
-    reg("s2_distance_m", { case Seq(a, b, c, d) => S2Distance(a, b, c, d) })
-    reg("s2_all_neighbors", { case Seq(a, b) => S2AllNeighbors(a, b) })
-    reg("s2_edge_neighbors", { case Seq(a) => S2EdgeNeighbors(a) })
-    reg("s2_vertex_neighbors", { case Seq(a, b) => S2VertexNeighbors(a, b) })
-    reg("s2_rect_covering", args => S2RectCovering(args))
-    reg("s2_cap_covering", args => S2CapCovering(args))
-    reg("s2_polygon_covering", { case Seq(a, b, c) => S2PolygonCovering(a, b, c) })
-    reg("s2_loop_contains", { case Seq(a, b, c, d) => S2LoopContainsPoint(a, b, c, d) })
-    reg("s2_multipolygon_covering", { case Seq(a, b, c) => S2MultiPolygonCovering(a, b, c) })
-    reg("s2_polygon_contains", { case Seq(a, b, c, d) => S2PolygonContainsPoint(a, b, c, d) })
-    reg("s2_polyline_covering", { case Seq(a, b, c) => S2PolylineCovering(a, b, c) })
-    reg("s2_polyline_distance_m", { case Seq(a, b, c, d) => S2PolylineDistance(a, b, c, d) })
-    reg("s2_polyline_nearest_edge", { case Seq(a, b, c, d) => S2PolylineNearestEdge(a, b, c, d) })
-    reg("s2_loops_intersect", { case Seq(a, b, c, d) => S2LoopsIntersect(a, b, c, d) })
-    reg("s2_loop_region_distance_m", { case Seq(a, b, c, d) => S2LoopRegionDistance(a, b, c, d) })
-    reg("s2_polylines_cross", { case Seq(a, b, c, d) => S2PolylinesCross(a, b, c, d) })
+    for ((name, info, builder) <- sqlFunctions) registry.registerFunction(name, info, builder)
   }
-}
-
-/** Test access to the package-private kernel caches (specs live in package
-  * `graft`, the caches in `graft.functions`). */
-object PolygonCacheTestAccess {
-  def contains(lats: Array[Array[Double]], lons: Array[Array[Double]],
-               latDeg: Double, lonDeg: Double): Boolean =
-    PolygonCache.polygonFor(lats, lons)
-      .contains(graft.s2.S2LatLng.fromDegrees(latDeg, lonDeg).toPoint)
 }

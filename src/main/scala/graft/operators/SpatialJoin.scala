@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual,
+  LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.s2functions._
 import graft.plans.{DriverRegions, S2PipJoin}
@@ -181,28 +184,30 @@ object SpatialJoin {
     val table = new DriverRegions(regions, maxCells)
     require(table.table.numCells > 0, "regions produced an empty covering")
 
-    // Lat band + (unless the union spans every longitude) lng band from the
-    // union of region bounds: plain comparisons Catalyst pushes into the scan.
+    // the band of the union of region bounds, which Catalyst pushes into
+    // the scan
     val bound = regions.map(_._2.rectBound).reduce(_ union _)
     val pre: DataFrame =
-      if (bound.lat.isEmpty) points.limit(0)
-      else {
-        val latLo = math.toDegrees(bound.lat.lo)
-        val latHi = math.toDegrees(bound.lat.hi)
-        val latPred = col(latCol) >= latLo && col(latCol) <= latHi
-        val pred =
-          if (bound.lng.isFull) latPred
-          else {
-            val lngLo = math.toDegrees(bound.lng.lo)
-            val lngHi = math.toDegrees(bound.lng.hi)
-            if (bound.lng.isInverted)
-              latPred && (col(lonCol) >= lngLo || col(lonCol) <= lngHi)
-            else
-              latPred && col(lonCol) >= lngLo && col(lonCol) <= lngHi
-          }
-        points.where(pred)
-      }
+      if (bound.isEmpty) points.limit(0)
+      else points.where(ColumnBridge.column(boundBand(bound,
+        ColumnBridge.expression(col(latCol)), ColumnBridge.expression(col(lonCol)))))
     S2PipJoin.plan(pre, latCol, lonCol, table)
+  }
+
+  /** The plain comparisons a point at (`lat`, `lon`) degrees passes when it
+    * lies in the non-empty rect `bound`: a lat band, and unless the bound
+    * spans every longitude an lng band, OR-ed across the antimeridian when
+    * the bound wraps it. */
+  private[graft] def boundBand(bound: S2LatLngRect, lat: Expression,
+                               lon: Expression): Expression = {
+    def deg(radians: Double) = Literal(math.toDegrees(radians))
+    val latBand = And(GreaterThanOrEqual(lat, deg(bound.lat.lo)),
+      LessThanOrEqual(lat, deg(bound.lat.hi)))
+    val lngLo = GreaterThanOrEqual(lon, deg(bound.lng.lo))
+    val lngHi = LessThanOrEqual(lon, deg(bound.lng.hi))
+    if (bound.lng.isFull) latBand
+    else if (bound.lng.isInverted) And(latBand, Or(lngLo, lngHi))
+    else And(And(latBand, lngLo), lngHi)
   }
 
   /** Doughnut (annulus) join: points with innerRadius < distance <= outer

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions._
 import graft.operators.SpatialJoin
-import graft.s2.{S2Region, S2LatLngRect}
+import graft.s2.S2Region
 
 /** Serialized-region codec: regions travel through the expression tree as
   * base64 string literals and deserialize once per executor. */
@@ -70,24 +70,8 @@ object PushS2RegionBounds extends Rule[LogicalPlan] {
       case Literal(s: UTF8String, StringType) => s.toString
       case _ => return None
     }
-    val bound: S2LatLngRect = RegionCodec.decode(enc).rectBound
-    if (bound.isEmpty) return Some(Literal(false))
-    val latLo = math.toDegrees(bound.lat.lo)
-    val latHi = math.toDegrees(bound.lat.hi)
-    val latPred: Expression = And(
-      GreaterThanOrEqual(rc.second, Literal(latLo)),
-      LessThanOrEqual(rc.second, Literal(latHi)))
-    val lngPred: Option[Expression] =
-      if (bound.lng.isFull) None
-      else {
-        val lo = math.toDegrees(bound.lng.lo)
-        val hi = math.toDegrees(bound.lng.hi)
-        if (bound.lng.isInverted)
-          Some(Or(GreaterThanOrEqual(rc.third, Literal(lo)), LessThanOrEqual(rc.third, Literal(hi))))
-        else
-          Some(And(GreaterThanOrEqual(rc.third, Literal(lo)), LessThanOrEqual(rc.third, Literal(hi))))
-      }
-    Some(lngPred.map(And(latPred, _)).getOrElse(latPred))
+    val bound = RegionCodec.decode(enc).rectBound
+    Some(if (bound.isEmpty) Literal(false) else SpatialJoin.boundBand(bound, rc.second, rc.third))
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
@@ -106,51 +90,13 @@ object PushS2RegionBounds extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extensions: SQL registration for every s2_* function plus the
-  * spatial-predicate pushdown rule. Activate with
-  * `spark.sql.extensions=graft.plans.S2Extensions` or
+/** Session extensions: SQL registration for every s2_* function
+  * ([[s2functions.sqlFunctions]]) plus the spatial-predicate pushdown rule.
+  * Activate with `spark.sql.extensions=graft.plans.S2Extensions` or
   * `S2Extensions.install(spark)` post-hoc. */
 class S2Extensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def info(name: String) = new ExpressionInfo("graft.functions", name)
-
-    ext.injectFunction((FunctionIdentifier("s2_cell_id"), info("s2_cell_id"),
-      { case Seq(a, b) => S2CellIdFromLatLng(a, b) }))
-    ext.injectFunction((FunctionIdentifier("s2_parent"), info("s2_parent"),
-      { case Seq(a, b) => S2CellParent(a, b) }))
-    ext.injectFunction((FunctionIdentifier("s2_token"), info("s2_token"),
-      { case Seq(a) => S2Token(a) }))
-    ext.injectFunction((FunctionIdentifier("s2_cell_from_token"), info("s2_cell_from_token"),
-      { case Seq(a) => S2CellFromToken(a) }))
-    ext.injectFunction((FunctionIdentifier("s2_level"), info("s2_level"),
-      { case Seq(a) => S2CellLevel(a) }))
-    ext.injectFunction((FunctionIdentifier("s2_range_min"), info("s2_range_min"),
-      { case Seq(a) => S2CellRangeMin(a) }))
-    ext.injectFunction((FunctionIdentifier("s2_range_max"), info("s2_range_max"),
-      { case Seq(a) => S2CellRangeMax(a) }))
-    ext.injectFunction((FunctionIdentifier("s2_cell_contains"), info("s2_cell_contains"),
-      { case Seq(a, b) => S2CellContains(a, b) }))
-    ext.injectFunction((FunctionIdentifier("s2_cell_lat"), info("s2_cell_lat"),
-      { case Seq(a) => S2CellLat(a) }))
-    ext.injectFunction((FunctionIdentifier("s2_cell_lon"), info("s2_cell_lon"),
-      { case Seq(a) => S2CellLon(a) }))
-    ext.injectFunction((FunctionIdentifier("s2_distance_m"), info("s2_distance_m"),
-      { case Seq(a, b, c, d) => S2Distance(a, b, c, d) }))
-    ext.injectFunction((FunctionIdentifier("s2_all_neighbors"), info("s2_all_neighbors"),
-      { case Seq(a, b) => S2AllNeighbors(a, b) }))
-    ext.injectFunction((FunctionIdentifier("s2_edge_neighbors"), info("s2_edge_neighbors"),
-      { case Seq(a) => S2EdgeNeighbors(a) }))
-    ext.injectFunction((FunctionIdentifier("s2_vertex_neighbors"), info("s2_vertex_neighbors"),
-      { case Seq(a, b) => S2VertexNeighbors(a, b) }))
-    ext.injectFunction((FunctionIdentifier("s2_region_contains"), info("s2_region_contains"),
-      { case Seq(a, b, c) => S2RegionContains(a, b, c) }))
-    ext.injectFunction((FunctionIdentifier("s2_rect_covering"), info("s2_rect_covering"),
-      args => S2RectCovering(args)))
-    ext.injectFunction((FunctionIdentifier("s2_cap_covering"), info("s2_cap_covering"),
-      args => S2CapCovering(args)))
-
+    for (f <- s2functions.sqlFunctions) ext.injectFunction(f)
     ext.injectOptimizerRule(_ => PushS2RegionBounds)
   }
 }
@@ -164,8 +110,8 @@ object S2Extensions {
       ColumnBridge.expression(latDeg), ColumnBridge.expression(lonDeg)))
   }
 
-  /** Post-hoc install on an existing session (optimizer rule only; SQL
-    * function registration additionally needs the extensions config). */
+  /** Post-hoc install on an existing session: registers the SQL functions
+    * ([[s2functions.registerAll]]) and adds the optimizer rule once. */
   def install(spark: SparkSession): Unit = {
     s2functions.registerAll(spark)
     if (!spark.sessionState.optimizer.preCBORules.contains(PushS2RegionBounds)) {

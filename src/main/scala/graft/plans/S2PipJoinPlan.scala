@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution,
   IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, ProjectExec, SQLExecution,
   SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
@@ -20,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{LoopCache, PolygonCache}
+import graft.functions.{LoopCache, PolygonCache, Vertices}
 import graft.operators.SpatialJoin
 import graft.s2.{S2CellId, S2LatLng, S2Point, S2Region}
 
@@ -518,12 +517,11 @@ object S2PolygonTableJoinExec {
         (cells, idRows)
       }
     }
-    def nested(a: ArrayData): Array[Array[Double]] =
-      Array.tabulate(a.numElements())(i => a.getArray(i).toDoubleArray())
     val shape: Int => S2Region = r => {
       val row = table(r)
-      if (multiLoop) PolygonCache.build(nested(row.getArray(lats)), nested(row.getArray(lons)))
-      else LoopCache.build(row.getArray(lats).toDoubleArray(), row.getArray(lons).toDoubleArray())
+      if (multiLoop)
+        PolygonCache.build(Vertices.loops(row.getArray(lats)), Vertices.loops(row.getArray(lons)))
+      else LoopCache.build(Vertices(row.getArray(lats)), Vertices(row.getArray(lons)))
     }
     new ProbeRegions(cells, idRows, shape)
   }

@@ -118,4 +118,96 @@ class ExtensionsSpec extends SparkTestBase {
     }
     assert(huge.getMessage.contains("coarser level"), s"unexpected guard message: ${huge.getMessage}")
   }
+
+  test("covering size guards: each op accepts just under the cell cap, refuses over it, and refuses level 31") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.functions._
+    import graft.s2.{S2LatLng, S2Loop, S2Polyline, S2Projections}
+    val cap = 1 << 17
+    def d(v: Double): Expression = Literal(v)
+    def i(v: Int): Expression = Literal(v)
+    def doubles(vs: Seq[Double]): Expression =
+      Literal.create(vs.toArray, ArrayType(DoubleType, containsNull = false))
+    def nested(vs: Seq[Double]): Expression =
+      Literal.create(Array(vs.toArray), ArrayType(ArrayType(DoubleType, containsNull = false),
+        containsNull = false))
+    // the estimates the guards state: rect-bound area over the level's
+    // average cell area; cap area likewise; arc length over the level's
+    // minimum cell width for a chain
+    def cells(area: Double, level: Int): Double = area / (4 * math.Pi / (6.0 * math.pow(4.0, level)))
+    def boundArea(latLoDeg: Double, latHiDeg: Double, lngSpanRad: Double): Double =
+      lngSpanRad * math.max(0.0, math.sin(math.toRadians(latHiDeg)) - math.sin(math.toRadians(latLoDeg)))
+    def loopCells(lats: Seq[Double], lons: Seq[Double], level: Int): Double = {
+      val b = new S2Loop(lats.indices.map(k => S2LatLng.fromDegrees(lats(k), lons(k)).toPoint)).rectBound
+      cells(b.lng.length * math.max(0.0, math.sin(b.lat.hi) - math.sin(b.lat.lo)), level)
+    }
+    def guardMessage(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        .find(m => m != null && (m.contains(" would ") || m.contains(" outside ")))
+        .getOrElse(fail(s"no guard message in $e"))
+    def refused(e: => Expression): String = guardMessage(intercept[Exception](e.eval()))
+
+    // a geodesic quad on the equator whose top edge bulges to ~29.9 / ~30.1
+    // degrees, so its rect bound sits just under / over the level-10 cap
+    val quadLons = Seq(0.0, 30.0, 30.0, 0.0)
+    def quadLats(top: Double) = Seq(0.0, 0.0, top, top)
+    val (lowTop, highTop) = (29.05, 29.2)
+    val minEdge20 = S2Projections.MinWidth.getValue(20)
+    def chainLons(frac: Double) = Seq(0.0, math.toDegrees(frac * cap * minEdge20))
+    def chainCells(frac: Double) = new S2Polyline(
+      chainLons(frac).map(lo => S2LatLng.fromDegrees(0.0, lo).toPoint).toIndexedSeq).arcLengthAngle / minEdge20
+    val capAngle = (r: Double) => math.min(math.Pi, r / S2LatLng.EarthRadiusMeters)
+
+    case class Guard(op: String, what: String, verb: String,
+                     build: (Boolean, Int) => Expression, overEstimate: Double, overLevel: Int)
+    val guards = Seq(
+      Guard("s2_rect_covering", "rect this large", "produce",
+        (over, l) => S2RectCovering(Seq(d(0.0), d(if (over) 30.1 else 29.9), d(0.0), d(30.0), i(l))),
+        cells(boundArea(0.0, 30.1, math.toRadians(30.0)), 10), 10),
+      Guard("s2_cap_covering", "cap this large", "produce",
+        (over, l) => S2CapCovering(Seq(d(10.0), d(20.0), d(if (over) 1.85e6 else 1.84e6), i(l))),
+        cells(2 * math.Pi * (1 - math.cos(capAngle(1.85e6))), 10), 10),
+      Guard("s2_polygon_covering", "polygon this large", "produce",
+        (over, l) => S2PolygonCovering(doubles(quadLats(if (over) highTop else lowTop)),
+          doubles(quadLons), i(l)),
+        loopCells(quadLats(highTop), quadLons, 10), 10),
+      Guard("s2_multipolygon_covering", "polygon this large", "produce",
+        (over, l) => S2MultiPolygonCovering(nested(quadLats(if (over) highTop else lowTop)),
+          nested(quadLons), i(l)),
+        loopCells(quadLats(highTop), quadLons, 10), 10),
+      Guard("s2_polyline_covering", "chain this long", "walk",
+        (over, l) => S2PolylineCovering(doubles(Seq(0.0, 0.0)),
+          doubles(chainLons(if (over) 1.01 else 0.99)), i(l)),
+        chainCells(1.01), 20))
+    // the inputs straddle the cap
+    assert(cells(boundArea(0.0, 29.9, math.toRadians(30.0)), 10) < cap)
+    assert(cells(2 * math.Pi * (1 - math.cos(capAngle(1.84e6))), 10) < cap)
+    assert(loopCells(quadLats(lowTop), quadLons, 10) < cap)
+    assert(chainCells(0.99) < cap)
+    for (g <- guards) {
+      assert(g.overEstimate > cap, g.op)
+      val under = g.build(false, g.overLevel).eval()
+      assert(under != null && under.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .numElements() > 1000, s"${g.op} refused or emptied an input under the cap")
+      assert(refused(g.build(true, g.overLevel)) ==
+        f"requirement failed: ${g.op} would ${g.verb} ~${g.overEstimate}%.0f level-${g.overLevel} cells " +
+          f"(> $cap); use a coarser level for a ${g.what}")
+      assert(refused(g.build(false, 31)) == s"requirement failed: ${g.op} level 31 outside [0, 30]")
+    }
+  }
+
+  test("spark.sql.extensions entry point: S2Extensions injects the whole SQL function table and the bounds rule") {
+    import org.apache.spark.sql.SparkSessionExtensions
+    import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
+    import org.apache.spark.sql.graft.ExtensionsBridge
+    val table = graft.functions.s2functions.sqlFunctions.map(_._1.funcName)
+    val ext = new SparkSessionExtensions
+    new S2Extensions()(ext)
+    val registry = ExtensionsBridge.registerFunctions(ext, new SimpleFunctionRegistry)
+    val injected = registry.listFunction().map(_.funcName)
+    assert(injected.sorted == table.sorted,
+      s"missing: ${table.diff(injected).sorted}; extra: ${injected.diff(table).sorted}")
+    assert(ExtensionsBridge.optimizerRules(ext, spark) == Seq(graft.plans.PushS2RegionBounds))
+  }
 }

@@ -102,7 +102,7 @@ class VectorizeSpec extends SparkTestBase {
     // each cap center is inside its own group's polygon, not the other's
     val polyContains = dist.map { case (g, (lats, lons)) =>
       g -> ((la: Double, lo: Double) =>
-        graft.functions.PolygonCacheTestAccess.contains(lats, lons, la, lo))
+        graft.functions.PolygonCache(lats, lons).contains(S2LatLng.fromDegrees(la, lo).toPoint))
     }
     assert(polyContains("a")(10, 10) && !polyContains("a")(-40, 100))
     assert(polyContains("b")(-40, 100) && !polyContains("b")(10, 10))
