@@ -327,9 +327,13 @@ case class S2RectCovering(children: Seq[Expression])
       val lonLo = vs(2).asInstanceOf[Double]
       val lonHi = vs(3).asInstanceOf[Double]
       val level = vs(4).asInstanceOf[Int]
-      Covering("s2_rect_covering", level, S2LatLngRect(
-        R1Interval(math.toRadians(latLo), math.toRadians(latHi)),
-        S1Interval(math.toRadians(lonLo), math.toRadians(lonHi))), flagged = false)(
+      Covering("s2_rect_covering", level, {
+        require(math.abs(latLo) <= 90 && math.abs(latHi) <= 90,
+          s"s2_rect_covering latitudes [$latLo, $latHi] must be finite and within [-90, 90]")
+        S2LatLngRect(
+          R1Interval(math.toRadians(latLo), math.toRadians(latHi)),
+          S1Interval(math.toRadians(lonLo), math.toRadians(lonHi)))
+      }, flagged = false)(
         r => Covering.cellsFor(Covering.boundArea(r), level), _.center.toPoint, "rect this large")
     }
   }

@@ -350,7 +350,9 @@ object AudioPayload {
     * (localCheckpoint — one decode per clip under the self-join), shuffled
     * equi-join on (window_idx, fp) carrying 20-byte rows — audio bytes
     * never shuffle; hot buckets (silence-adjacent jingles at 100 TB)
-    * capped loudly via [[Dedup.capBuckets]] (stage "audiodup"). Returns
+    * capped loudly by the banded candidate join's bucket cap (stage
+    * "audiodup", drop count in the observed metric
+    * `graft.banded.audiodup.dropped`, see [[Dedup.capBuckets]]). Returns
     * (id_a, id_b, shared). */
   def audioNearDup(audio: DataFrame, idCol: String,
                    minShared: Int = 6, maxBucketSize: Int = 1024): DataFrame = {
@@ -358,12 +360,7 @@ object AudioPayload {
     val sigs = audioSignatures(audio)
       .select(col(idCol).as("__aid"), col("window_idx").as("band"), col("fp").as("bucket"))
       .localCheckpoint()
-    val capped = Dedup.capBuckets(sigs, maxBucketSize, "audiodup", "__aid")
-    val a = capped.select(col("band"), col("bucket"), col("__aid").as("id_a"))
-    val b = capped.select(col("band"), col("bucket"), col("__aid").as("id_b"))
-    a.join(b, Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
-      .where(col("shared") >= minShared)
+    VideoPayload.sharedAtLeast(
+      Dedup.bandedSelfPairs(sigs, "__aid", maxBucketSize, "audiodup"), minShared)
   }
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{EmptyRelation, LogicalPlan}
+import org.apache.spark.sql.execution.{CollectMetricsExec, EmptyRelationExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -24,9 +27,12 @@ import org.apache.spark.sql.functions._
   * Candidate generation and verification run on representatives only;
   * [[expandPairs]] restores the full pair set afterwards. As a second line
   * of defense the banded joins drop buckets larger than `maxBucketSize`
-  * (residual natural collisions); [[minhashBucketStats]] /
-  * [[simhashBucketStats]] expose the bucket-size distribution so a pipeline
-  * can alert on what the cap dropped.
+  * (residual natural collisions) and report the dropped rows
+  * ([[capBuckets]]); [[minhashBucketStats]] / [[simhashBucketStats]]
+  * expose the bucket-size distribution behind that cap. Every LSH /
+  * fingerprint candidate join of the engine is one of the two banded
+  * shapes, [[bandedSelfPairs]] and [[bandedProbe]]; callers score the
+  * pair (estimated Jaccard, hamming, shared count, ...) and dedup it.
   */
 object Dedup {
 
@@ -141,48 +147,93 @@ object Dedup {
     cross.unionByName(within)
   }
 
-  /** Latest drop counter per banded stage ("minhash", "hamming64",
-    * "substring", "incremental"): signature rows of over-cap buckets the
-    * most recent capped plan in this JVM dropped. Populated when the query
-    * RUNS. Alerting semantics: nonzero iff rows were dropped — dropped
-    * buckets mean residual natural collisions the exact-dup collapse
-    * didn't explain. The magnitude is an AT-LEAST count that can read
-    * high (the capped subtree is evaluated once per plan branch — twice
-    * in a self-join — and task retries re-add); it can never read low:
-    * the filter predicate references both join sides, so Catalyst cannot
-    * push it below the join onto the per-bucket aggregate (which would
-    * count over-cap BUCKETS instead of rows). */
-  private val dropCounters =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.util.LongAccumulator]
+  // --- banded candidates --------------------------------------------------
 
-  /** Rows dropped by the `stage` banded join's bucket cap in the most
-    * recently executed plan (0 if no capped plan ran) — see
-    * [[dropCounters]] for the exact semantics. */
-  def droppedBucketRows(stage: String): Long =
-    dropCounters.get(stage).map(_.value.toLong).getOrElse(0L)
+  private val BandKeys = Seq("band", "bucket")
 
-  /** Drop rows of (band, bucket) groups larger than `maxBucketSize` —
-    * the residual-skew guard behind the exact-dup collapse. Dropped-row
-    * counts surface through [[droppedBucketRows]] (and the Spark UI, via
-    * the named accumulator) so caps never silence data loss. */
-  private[operators] def capBuckets(banded: DataFrame, maxBucketSize: Int, stage: String,
-                                    idCol: String): DataFrame =
+  private def droppedMetric(stage: String): String = s"graft.banded.$stage.dropped"
+
+  /** Rows each capped banded join of an executed query dropped, by stage
+    * ([[capBuckets]]). Reads the observed metrics of the final plan AND of
+    * the stages adaptive execution ran and then pruned: a join with an
+    * empty side becomes an empty relation, which takes the metrics below
+    * it out of `QueryExecution.observedMetrics` — just when a cap dropped
+    * every row. */
+  def droppedRows(qe: QueryExecution): Map[String, Long] = {
+    def physical(p: SparkPlan): Map[String, Row] =
+      CollectMetricsExec.collect(p) ++ CollectMetricsExec.collectWithSubqueries(p) {
+        case e: EmptyRelationExec => logical(e.logical)
+      }.flatten
+    def logical(l: LogicalPlan): Map[String, Row] = l.collect {
+      case EmptyRelation(pruned) => logical(pruned)
+      case LogicalQueryStage(_, p) => p.collect {
+        case s: QueryStageExec if s.isMaterialized => physical(s)
+      }.flatten
+    }.flatten.toMap
+    val Metric = """graft\.banded\.(.+)\.dropped""".r
+    physical(qe.executedPlan).collect { case (Metric(stage), r) => stage -> r.getLong(0) }
+  }
+
+  /** (band, bucket, size) of a banded table: the cap's size table and the
+    * bucket-stats monitors' output. */
+  private def bucketSizes(banded: DataFrame): DataFrame =
+    banded.groupBy(BandKeys.map(col): _*).agg(count(lit(1)).as("size"))
+
+  /** The hot-bucket cap: rows of `banded` whose (band, bucket) holds at
+    * most `maxBucketSize` rows of `counted` (usually `banded` itself;
+    * `Int.MaxValue` = no cap). The shapes cap ONE side of their join,
+    * which already removes every pair of a dropped bucket, so the size
+    * table sits once in the plan. Its dropped-row count (the summed size
+    * of the over-cap buckets) is the observed metric
+    * `graft.banded.<stage>.dropped`, read per query with [[droppedRows]]:
+    * nonzero iff rows were dropped, so caps never silence data loss. */
+  private[operators] def capBuckets(banded: DataFrame, counted: DataFrame,
+                                    maxBucketSize: Int, stage: String): DataFrame =
     if (maxBucketSize == Int.MaxValue) banded
-    else {
-      val acc = banded.sparkSession.sparkContext
-        .longAccumulator(s"graft.dedup.$stage.droppedBucketRows")
-      dropCounters.put(stage, acc)
-      val sizes = banded.groupBy("band", "bucket").agg(count(lit(1)).as("__bsz"))
-      // the unused id argument pins the predicate to the banded side, so
-      // the filter stays ABOVE the join and counts per banded ROW, not per
-      // bucket of the aggregated side
-      val keep = udf { (bsz: Long, id: String) =>
-        if (bsz > maxBucketSize) { acc.add(1L); false } else true
-      }
-      banded.join(sizes, Seq("band", "bucket"))
-        .where(keep(col("__bsz"), col(idCol).cast("string")))
-        .drop("__bsz")
-    }
+    else banded.join(bucketSizes(counted)
+      .observe(droppedMetric(stage),
+        coalesce(sum(when(col("size") > maxBucketSize, col("size"))), lit(0L)).as("dropped"))
+      .where(col("size") <= maxBucketSize), BandKeys, "left_semi")
+
+  /** The ONE candidate equi-join: rows of `a` and `b` (both in the
+    * (idCol, band, bucket, payload...) layout) sharing a (band, bucket),
+    * one row per shared bucket, as (id_a, id_b) with every payload column
+    * `p` as `p_a` and `p_b`. */
+  private def bucketPairs(a: DataFrame, b: DataFrame, idCol: String): DataFrame = {
+    def side(df: DataFrame, s: String) = df.select(df.columns.map {
+      case c if c == idCol => col(c).as(s"id_$s")
+      case c if BandKeys.contains(c) => col(c)
+      case c => col(c).as(s"${c}_$s")
+    }: _*)
+    side(a, "a").join(side(b, "b"), BandKeys).drop(BandKeys: _*)
+  }
+
+  /** Self-pairs shape: rows of one banded table sharing a kept bucket,
+    * oriented id_a < id_b (see [[bucketPairs]] for the columns). */
+  private[graft] def bandedSelfPairs(banded: DataFrame, idCol: String,
+                                     maxBucketSize: Int, stage: String): DataFrame =
+    bucketPairs(capBuckets(banded, banded, maxBucketSize, stage), banded, idCol)
+      .where(col("id_a") < col("id_b"))
+
+  /** Probe shape: `stored` rows paired with `batch` rows sharing a kept
+    * bucket; two rows of one side never pair. The cap counts BOTH sides,
+    * so a hot bucket is dropped whichever side grew it. The pair is
+    * (id_a, id_b) = (least, greatest) of two different ids; `directed`
+    * keeps (stored id, batch id) instead, for two id spaces or a direction
+    * the caller needs. Payload `p_a` is the stored row's, `p_b` the
+    * batch row's; `broadcastBatch` broadcasts the batch side. */
+  private[graft] def bandedProbe(stored: DataFrame, batch: DataFrame, idCol: String,
+                                 maxBucketSize: Int, stage: String, directed: Boolean = false,
+                                 broadcastBatch: Boolean = false): DataFrame = {
+    val keys = BandKeys.map(col)
+    val pairs = bucketPairs(capBuckets(stored, stored.select(keys: _*).unionByName(
+      batch.select(keys: _*)), maxBucketSize, stage),
+      if (broadcastBatch) broadcast(batch) else batch, idCol)
+    val (a, b) = (col("id_a"), col("id_b"))
+    if (directed) pairs
+    else pairs.where(a =!= b).select(Seq(least(a, b).as("id_a"), greatest(a, b).as("id_b")) ++
+      pairs.columns.filterNot(Set("id_a", "id_b")).map(col): _*)
+  }
 
   // --- MinHash + LSH ------------------------------------------------------
 
@@ -214,13 +265,14 @@ object Dedup {
       .select(col(idCol), col("__sig"), col("__bb.band"), col("__bb.bucket"))
   }
 
-  /** (id, simhash, band, bucket) rows of the SimHash 16-bit banded layout,
-    * shared by the candidate join and the monitoring stats. */
-  private def simhashBanded(sig: DataFrame, idCol: String): DataFrame =
-    sig.select(col(idCol), col("simhash"),
+  /** (id, simhash, band, bucket) rows of the 16-bit banded layout of a
+    * 64-bit hash column (`hashCol`, carried as `simhash`), shared by the
+    * candidate joins and the monitoring stats. */
+  private def hashBanded(df: DataFrame, idCol: String, hashCol: String): DataFrame =
+    df.select(col(idCol), col(hashCol).as("simhash"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"),
-          shiftright(col("simhash"), b * 16).bitwiseAND(lit(0xffffL)).as("bucket"))): _*)).as("__bb"))
+          shiftright(col(hashCol), b * 16).bitwiseAND(lit(0xffffL)).as("bucket"))): _*)).as("__bb"))
       .select(col(idCol), col("simhash"), col("__bb.band"), col("__bb.bucket"))
 
   /** Banded-LSH candidate pairs over an ALREADY-COLLAPSED (or known
@@ -231,19 +283,17 @@ object Dedup {
                          numHashes: Int, bands: Int, shingleN: Int,
                          minEstJaccard: Double, maxBucketSize: Int): DataFrame = {
     val sig = minhashSignatures(reps, idCol, textCol, numHashes, shingleN)
-    val banded = minhashBanded(sig, idCol, numHashes, bands)
-    val capped = capBuckets(banded, maxBucketSize, "minhash", idCol)
-
-    val a = capped.select(col(idCol).as("id_a"), col("__sig").as("sig_a"), col("band"), col("bucket"))
-    val b = capped.select(col(idCol).as("id_b"), col("__sig").as("sig_b"), col("band"), col("bucket"))
-    a.join(b, Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))") /
-          lit(numHashes.toDouble)).as("est_jaccard"))
+    bandedSelfPairs(minhashBanded(sig, idCol, numHashes, bands), idCol, maxBucketSize, "minhash")
+      .select(col("id_a"), col("id_b"), estJaccard(numHashes))
       .distinct()
       .where(col("est_jaccard") >= minEstJaccard)
   }
+
+  /** Estimated Jaccard of a MinHash pair's signatures (`__sig_a`,
+    * `__sig_b`): the share of agreeing positions. */
+  private def estJaccard(numHashes: Int): Column =
+    (expr("size(filter(zip_with(__sig_a, __sig_b, (x, y) -> x = y), v -> v))") /
+      lit(numHashes.toDouble)).as("est_jaccard")
 
   /** MinHash-LSH candidate pairs over the raw corpus: exact-dup collapse,
     * banded join on representatives, expansion back to all pairs
@@ -266,8 +316,7 @@ object Dedup {
                          shingleN: Int = 3): DataFrame = {
     val (reps, _) = collapseExact(df, idCol, textCol)
     val sig = minhashSignatures(reps, idCol, textCol, numHashes, shingleN)
-    minhashBanded(sig, idCol, numHashes, bands)
-      .groupBy("band", "bucket").agg(count(lit(1)).as("size"))
+    bucketSizes(minhashBanded(sig, idCol, numHashes, bands))
   }
 
   /** End-to-end near-duplicate pairs, the 100-TB composition: exact-dup
@@ -351,6 +400,10 @@ object Dedup {
     agg.select(col(idCol), sim.as("simhash"))
   }
 
+  /** Hamming distance of a pair's 64-bit hashes (`simhash_a`, `simhash_b`). */
+  private def hamming: Column =
+    bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).as("hamming")
+
   /** Banded hamming search over ANY 64-bit hash column: pairs of rows
     * within `maxHamming` bits of each other, found via the 16-bit-band
     * pigeonhole (hamming <= 3 implies at least one of 4 bands matches
@@ -360,14 +413,8 @@ object Dedup {
   def hamming64Pairs(df: DataFrame, idCol: String, hashCol: String,
                      maxHamming: Int = 3, maxBucketSize: Int = 100000): DataFrame = {
     require(maxHamming <= 3, s"4x16-bit banding is only complete for hamming <= 3, got $maxHamming")
-    val banded = simhashBanded(df.select(col(idCol), col(hashCol).as("simhash")), idCol)
-    val capped = capBuckets(banded, maxBucketSize, "hamming64", idCol)
-    val a = capped.select(col(idCol).as("id_a"), col("simhash").as("sh_a"), col("band"), col("bucket"))
-    val b = capped.select(col(idCol).as("id_b"), col("simhash").as("sh_b"), col("band"), col("bucket"))
-    a.join(b, Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
+    bandedSelfPairs(hashBanded(df, idCol, hashCol), idCol, maxBucketSize, "hamming64")
+      .select(col("id_a"), col("id_b"), hamming)
       .distinct()
       .where(col("hamming") <= maxHamming)
   }
@@ -384,20 +431,9 @@ object Dedup {
   def hamming64Probe(stored: DataFrame, batch: DataFrame, idCol: String, hashCol: String,
                      maxHamming: Int = 3, maxBucketSize: Int = 100000): DataFrame = {
     require(maxHamming <= 3, s"4x16-bit banding is only complete for hamming <= 3, got $maxHamming")
-    def banded(df: DataFrame, side: String) =
-      simhashBanded(df.select(col(idCol), col(hashCol).as("simhash")), idCol)
-        .withColumn("__side", lit(side))
-    val capped = capBuckets(banded(stored, "s").unionByName(banded(batch, "b")),
-      maxBucketSize, "hamming64probe", idCol)
-    val s = capped.where(col("__side") === "s")
-      .select(col(idCol).as("__sid"), col("simhash").as("__sh"), col("band"), col("bucket"))
-    val b = capped.where(col("__side") === "b")
-      .select(col(idCol).as("__bid"), col("simhash").as("__bh"), col("band"), col("bucket"))
-    s.join(b, Seq("band", "bucket"))
-      .where(col("__sid") =!= col("__bid"))
-      .select(least(col("__sid"), col("__bid")).as("id_a"),
-        greatest(col("__sid"), col("__bid")).as("id_b"),
-        bit_count(col("__sh").bitwiseXOR(col("__bh"))).as("hamming"))
+    bandedProbe(hashBanded(stored, idCol, hashCol), hashBanded(batch, idCol, hashCol), idCol,
+      maxBucketSize, "hamming64probe")
+      .select(col("id_a"), col("id_b"), hamming)
       .distinct()
       .where(col("hamming") <= maxHamming)
   }
@@ -421,8 +457,7 @@ object Dedup {
     * collapse). */
   def simhashBucketStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val (reps, _) = collapseExact(df, idCol, textCol)
-    simhashBanded(simhash(reps, idCol, textCol), idCol)
-      .groupBy("band", "bucket").agg(count(lit(1)).as("size"))
+    bucketSizes(hashBanded(simhash(reps, idCol, textCol), idCol, "simhash"))
   }
 
   // --- substring-level exact dedup ---------------------------------------
@@ -436,22 +471,15 @@ object Dedup {
     * n-gram set intersection on candidate pairs only (kills the ~2^-64
     * fingerprint collisions). Scale shape: exact-dup collapse first, so a
     * million identical pages contribute one fingerprint set; the
-    * per-fingerprint join reuses the capped-bucket guard (stage
-    * "substring" in [[droppedBucketRows]]) against boilerplate spans
-    * shared by everything. Output: (id_a, id_b) with a < b, expanded back
+    * per-fingerprint self-pairs join reuses the bucket cap (stage
+    * "substring", [[capBuckets]]) against boilerplate spans shared by
+    * everything. Output: (id_a, id_b) with a < b, expanded back
     * to all document pairs. */
   def substringDups(df: DataFrame, idCol: String, textCol: String,
                     n: Int = 8, maxBucketSize: Int = 100000): DataFrame = {
     val (reps, members) = collapseExact(df, idCol, textCol)
     val grams = shingles(reps, idCol, textCol, n)
-    val banded = grams.select(col(idCol), lit(0).as("band"),
-      xxhash64(col("shingle")).as("bucket"))
-    val capped = capBuckets(banded, maxBucketSize, "substring", idCol)
-    val cand = capped.select(col(idCol).as("id_a"), col("band"), col("bucket"))
-      .join(capped.select(col(idCol).as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
+    val cand = bandedSelfPairs(fingerprints(grams, idCol), idCol, maxBucketSize, "substring")
       .distinct()
     // exact verification: candidate pairs whose true n-gram sets intersect
     val sets = grams.groupBy(col(idCol)).agg(collect_set(col("shingle")).as("g"))
@@ -462,6 +490,11 @@ object Dedup {
       .select("id_a", "id_b")
     expandPairs(verified, members, Seq.empty)
   }
+
+  /** (id, band 0, bucket = xxhash64 of the n-gram) fingerprint rows of
+    * an (id, shingle) table: 8 bytes per gram, never the gram text. */
+  private def fingerprints(grams: DataFrame, idCol: String): DataFrame =
+    grams.select(col(idCol), lit(0).as("band"), xxhash64(col("shingle")).as("bucket"))
 
   /** Decontamination: corpus documents sharing any verbatim >= n-token
     * span with ANY document of an evaluation set — the test-set-overlap
@@ -475,10 +508,12 @@ object Dedup {
     * (n-gram set intersection on the true grams, killing the ~2^-64
     * fingerprint collisions) touches only candidate (doc, eval) pairs.
     * Exact-dup collapse applies to the corpus first, so a million
-    * identical pages probe once; the bucket cap (stage "decontaminate" in
-    * [[droppedBucketRows]]) guards against boilerplate spans shared by
-    * everything. Output: (idCol, eval_id) — one row per contaminated
-    * (corpus doc, eval doc) pair, expanded back to all exact-dup members.
+    * identical pages probe once; the probe's bucket cap (stage
+    * "decontaminate", [[capBuckets]]; a bucket's size counts the corpus
+    * fingerprints AND the distinct eval fingerprints) guards against
+    * boilerplate spans shared by everything. Output: (idCol, eval_id) —
+    * one row per contaminated (corpus doc, eval doc) pair, expanded back
+    * to all exact-dup members.
     * Both inputs use `idCol`/`textCol`; eval ids surface as `eval_id`. */
   def decontaminate(docs: DataFrame, evalSet: DataFrame, idCol: String, textCol: String,
                     n: Int = 8, maxBucketSize: Int = 100000): DataFrame = {
@@ -486,14 +521,10 @@ object Dedup {
     val docGrams = shingles(reps, idCol, textCol, n)
     val evalGrams = shingles(evalSet, idCol, textCol, n)
       .select(col(idCol).as("eval_id"), col("shingle"))
-    val banded = docGrams.select(col(idCol), lit(0).as("band"),
-      xxhash64(col("shingle")).as("bucket"))
-    val capped = capBuckets(banded, maxBucketSize, "decontaminate", idCol)
-    val evalFp = evalGrams.select(col("eval_id"), lit(0).as("band"),
-      xxhash64(col("shingle")).as("bucket")).distinct()
-    val cand = capped.select(col(idCol), col("band"), col("bucket"))
-      .join(broadcast(evalFp), Seq("band", "bucket"))
-      .select(col(idCol), col("eval_id")).distinct()
+    val cand = bandedProbe(fingerprints(docGrams, idCol),
+        fingerprints(evalGrams, "eval_id").withColumnRenamed("eval_id", idCol).distinct(),
+        idCol, maxBucketSize, "decontaminate", directed = true, broadcastBatch = true)
+      .select(col("id_a").as(idCol), col("id_b").as("eval_id")).distinct()
     // exact verification on candidates only: corpus gram sets are built
     // just for docs that hit an eval fingerprint (semi-join), eval gram
     // sets are small by assumption
@@ -571,27 +602,18 @@ object Dedup {
     expandPairs(verified, bMembers.unionByName(corpusIdentity), Seq("jaccard" -> lit(1.0)))
   }
 
-  /** Asymmetric banded candidate join: batch signatures (left) probe
-    * stored corpus + batch signatures (right). Exposed for the spec that
-    * asserts no corpus-corpus candidate exists. */
+  /** Asymmetric banded candidate join: batch signatures probe the stored
+    * corpus + batch signatures ([[bandedProbe]], so the cap counts a batch
+    * row on both sides). Exposed for the spec that asserts no
+    * corpus-corpus candidate exists. */
   private[graft] def incrementalCandidates(corpusBanded: DataFrame, batchBanded: DataFrame,
                                            idCol: String, numHashes: Int,
-                                           minEstJaccard: Double, maxBucketSize: Int): DataFrame = {
-    val stored = capBuckets(corpusBanded.unionByName(batchBanded), maxBucketSize, "incremental", idCol)
-    val a = batchBanded.select(col(idCol).as("__pid"), col("__sig").as("sig_a"),
-      col("band"), col("bucket"))
-    val b = stored.select(col(idCol).as("__sid"), col("__sig").as("sig_b"),
-      col("band"), col("bucket"))
-    a.join(b, Seq("band", "bucket"))
-      .where(col("__pid") =!= col("__sid"))
-      .select(
-        least(col("__pid"), col("__sid")).as("id_a"),
-        greatest(col("__pid"), col("__sid")).as("id_b"),
-        (expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))") /
-          lit(numHashes.toDouble)).as("est_jaccard"))
+                                           minEstJaccard: Double, maxBucketSize: Int): DataFrame =
+    bandedProbe(corpusBanded.unionByName(batchBanded), batchBanded, idCol,
+      maxBucketSize, "incremental")
+      .select(col("id_a"), col("id_b"), estJaccard(numHashes))
       .dropDuplicates("id_a", "id_b")
       .where(col("est_jaccard") >= minEstJaccard)
-  }
 
   /** Truncate BOTH lineage and stats at an iteration boundary.
     * `Dataset.localCheckpoint` truncates lineage but PRESERVES the origin

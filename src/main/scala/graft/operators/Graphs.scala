@@ -139,7 +139,8 @@ object Graphs {
     * implementation artifact — every common neighbor IS a wedge — so
     * unlike [[triangleCounts]] no orientation trick can shrink it; at
     * 100 TB, bound hub centers first (cap or sample centers above a
-    * degree ceiling — [[graft.operators.Dedup]]'s capBuckets discipline)
+    * degree ceiling — the banded joins' bucket cap,
+    * [[graft.operators.Dedup.capBuckets]], with its observed drop count)
     * or raise `minCommon`, which cuts the aggregate's OUTPUT, and prune
     * low-degree centers (deg < 2 emits nothing) inside the scan, as done
     * here. `minCommon >= 1`; pairs are distinct by construction. */

@@ -629,10 +629,11 @@ object ImagePayload {
     *
     * Shape at scale: one decode pass for the dhash, then only
     * (id, caption-hash, dhash) rows shuffle — bytes never move; the
-    * within-caption pair expansion is guarded by the same capped-bucket
-    * discipline as the text LSH joins (stage "caption" in
-    * [[Dedup.droppedBucketRows]] — a viral caption shared by 10^6 posts
-    * is dropped loudly, not exploded quadratically). Undecodable images
+    * within-caption pair expansion is the banded self-pairs join of the
+    * text LSH family, under its bucket cap (stage "caption", drop count in
+    * the observed metric `graft.banded.caption.dropped`, see
+    * [[Dedup.capBuckets]] — a viral caption shared by 10^6 posts is
+    * dropped loudly, not exploded quadratically). Undecodable images
     * (null dhash) are excluded. */
   def captionConsistency(images: DataFrame, idCol: String,
                          maxHamming: Int = 3, maxGroupSize: Int = 10000): DataFrame = {
@@ -643,13 +644,9 @@ object ImagePayload {
         col("dhash"))
       .where(col("dhash").isNotNull)
       .localCheckpoint()
-    val capped = Dedup.capBuckets(keyed, maxGroupSize, "caption", idCol)
-    capped.select(col(idCol).as("id_a"), col("band"), col("bucket"), col("dhash").as("__da"))
-      .join(capped.select(col(idCol).as("id_b"), col("band"), col("bucket"),
-        col("dhash").as("__db")), Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
+    Dedup.bandedSelfPairs(keyed, idCol, maxGroupSize, "caption")
       .select(col("id_a"), col("id_b"),
-        (expr("bit_count(__da ^ __db)") <= maxHamming).as("same_image"))
+        (expr("bit_count(dhash_a ^ dhash_b)") <= maxHamming).as("same_image"))
   }
 
   /** GEO-constrained image near-dup: dhash pairs within `maxHamming` bits
@@ -672,8 +669,9 @@ object ImagePayload {
     *
     * Residual-skew guard: a single pathological CELL (10^6 uploads at
     * one venue) would still pair quadratically, so cells larger than
-    * `maxCellSize` are dropped LOUDLY via the shared capped-bucket
-    * discipline (stage "geoimage" in [[Dedup.droppedBucketRows]]) — same
+    * `maxCellSize` are dropped LOUDLY by the banded joins' bucket cap
+    * (stage "geoimage", drop count in the observed metric
+    * `graft.banded.geoimage.dropped`, see [[Dedup.capBuckets]]) — same
     * contract as the caption join's viral-caption cap.
     * Output: (id_a, id_b, hamming) with a < b. */
   def geoImageNearDup(images: DataFrame, idCol: String, latCol: String, lonCol: String,
@@ -688,11 +686,10 @@ object ImagePayload {
       .select(col(idCol), col("dhash"), lit(0).as("band"),
         SpatialJoin.cellBucket(col(latCol), col(lonCol), level).as("bucket"))
       .localCheckpoint()
-    val hashed = Dedup.capBuckets(keyed, maxCellSize, "geoimage", idCol)
-      .withColumnRenamed("bucket", "__cell").drop("band")
-    val a = hashed.select(col(idCol).as("id_a"), col("dhash").as("__da"), col("__cell"))
+    val hashed = Dedup.capBuckets(keyed, keyed, maxCellSize, "geoimage")
+    val a = hashed.select(col(idCol).as("id_a"), col("dhash").as("__da"), col("bucket").as("__cell"))
     val b = hashed.select(col(idCol).as("id_b"), col("dhash").as("__db"),
-      explode(SpatialJoin.neighborBuckets(col("__cell"), level)).as("__cell"))
+      explode(SpatialJoin.neighborBuckets(col("bucket"), level)).as("__cell"))
     a.join(b, Seq("__cell"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),

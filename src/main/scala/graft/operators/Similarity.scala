@@ -148,7 +148,8 @@ object Similarity {
     math.max(1, math.ceil(math.log1p(-targetRecall) / math.log1p(-pTable)).toInt)
   }
 
-  /** Multi-table signature column: array of (table_id, bucket) structs. Using
+  /** Multi-table signature rows (id, band = table, bucket): the banded
+    * layout of [[Dedup.bandedSelfPairs]] / [[Dedup.bandedProbe]]. Using
     * L independent short signatures instead of one long one keeps recall high
     * even in the weak-similarity regime (top-k cosine ~0.3).
     *
@@ -156,7 +157,8 @@ object Similarity {
     * tables x bits dot products into higher-order-function expressions makes
     * Catalyst analysis/codegen dominate the query (observed seconds of
     * planning for 96 aggregate() terms), so one vectorized UDF wins here. */
-  private def tableBuckets(vec: Column, dim: Int, tables: Int, bits: Int, seed: Long): Column = {
+  private def tableSigs(embeddings: DataFrame, idCol: String, vecCol: String,
+                        dim: Int, tables: Int, bits: Int, seed: Long): DataFrame = {
     val planes: Array[Array[Double]] = (0 until tables).flatMap { t =>
       randomPlanes(dim, bits, seed + t * 7919).map(_.toArray)
     }.toArray
@@ -176,7 +178,9 @@ object Similarity {
         (t, bucket)
       }
     }
-    f(vec).cast("array<struct<tbl:int,bucket:bigint>>")
+    embeddings
+      .withColumn("__tb", explode(f(col(vecCol)).cast("array<struct<band:int,bucket:bigint>>")))
+      .select(col(idCol), col("__tb.band"), col("__tb.bucket"))
   }
 
   /** The cosine the ANN planner assumes for the k-th true neighbor when
@@ -205,16 +209,11 @@ object Similarity {
       s"(signature-row explosion ${t}x per input row" +
       (if (tables > 0) ", caller-specified)" else s", auto-sized for cosine $AnnPlanningCosine)"))
     val d = if (dim > 0) dim else vecDim(embeddings, vecCol)
-    val sigs = embeddings
-      .withColumn("__tb", explode(tableBuckets(col(vecCol), d, t, bits, seed)))
-      .select(col(idCol), col("__tb.tbl"), col("__tb.bucket"))
-    val probeSigs = sigs.where(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col("tbl"), col("bucket"))
-    val candIds = sigs
-      .select(col(idCol).as("neighbor_id"), col("tbl"), col("bucket"))
-      .join(broadcast(probeSigs), Seq("tbl", "bucket"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id")
+    val sigs = tableSigs(embeddings, idCol, vecCol, d, t, bits, seed)
+    val candIds = Dedup.bandedProbe(sigs, sigs.where(col(idCol).isin(queryIds: _*)), idCol,
+        Int.MaxValue, "ann", directed = true, broadcastBatch = true)
+      .where(col("id_a") =!= col("id_b"))
+      .select(col("id_b").as("query_id"), col("id_a").as("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
     val queryVecs = embeddings.where(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"),
@@ -1040,13 +1039,8 @@ object Similarity {
     log.info(s"embeddingNearDup: $t LSH tables of $bits bits for minCosine $minCosine " +
       s"(signature-row explosion ${t}x per input row)")
     val d = if (dim > 0) dim else vecDim(embeddings, vecCol)
-    val sigs = embeddings
-      .withColumn("__tb", explode(tableBuckets(col(vecCol), d, t, bits, seed)))
-      .select(col(idCol), col("__tb.tbl"), col("__tb.bucket"))
-    val candIds = sigs.select(col(idCol).as("id_a"), col("tbl"), col("bucket"))
-      .join(sigs.select(col(idCol).as("id_b"), col("tbl"), col("bucket")), Seq("tbl", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
+    val candIds = Dedup.bandedSelfPairs(tableSigs(embeddings, idCol, vecCol, d, t, bits, seed),
+        idCol, Int.MaxValue, "embedding")
       .dropDuplicates("id_a", "id_b")
     candIds
       .join(embeddings.select(col(idCol).as("id_a"), col(vecCol).as("vec_a"),

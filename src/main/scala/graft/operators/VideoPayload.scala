@@ -331,9 +331,10 @@ object VideoPayload {
     * under the self-join's two branches; candidates come from an equi-join
     * on (frame_idx, dhash) — only 20-byte signature rows shuffle, video
     * bytes never do; hot (frame_idx, dhash) buckets (boilerplate intro
-    * frames at 100 TB) are capped LOUDLY via the shared banded-cap
-    * discipline (stage "videodup", drop count in
-    * [[Dedup.droppedBucketRows]]). Returns (id_a, id_b, shared). */
+    * frames at 100 TB) are capped LOUDLY by the banded candidate join's
+    * bucket cap (stage "videodup", drop count in the observed metric
+    * `graft.banded.videodup.dropped`, see [[Dedup.capBuckets]]). Returns
+    * (id_a, id_b, shared). */
   def videoNearDup(videos: DataFrame, idCol: String, every: Int = 2,
                    minShared: Int = 2, maxBucketSize: Int = 1024): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1: $minShared")
@@ -341,41 +342,13 @@ object VideoPayload {
       .where(col("dhash").isNotNull)
       .select(col(idCol).as("__vid"), col("frame_idx").as("band"), col("dhash").as("bucket"))
       .localCheckpoint()
-    sigSelfPairs(sigs, minShared, maxBucketSize, "videodup")
+    sharedAtLeast(Dedup.bandedSelfPairs(sigs, "__vid", maxBucketSize, "videodup"), minShared)
   }
 
-  /** Self-pairs over a (__vid, band, bucket) signature table: shared
-    * same-position fingerprint counts >= minShared. */
-  private[graft] def sigSelfPairs(sigs: DataFrame, minShared: Int,
-                                  maxBucketSize: Int, stage: String): DataFrame = {
-    val capped = Dedup.capBuckets(sigs, maxBucketSize, stage, "__vid")
-    val a = capped.select(col("band"), col("bucket"), col("__vid").as("id_a"))
-    val b = capped.select(col("band"), col("bucket"), col("__vid").as("id_b"))
-    a.join(b, Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
+  /** (id_a, id_b, shared) of the banded pairs (one row per shared
+    * (position, fingerprint) bucket, from [[Dedup.bandedSelfPairs]] or
+    * [[Dedup.bandedProbe]]) sharing >= minShared positions. */
+  private[graft] def sharedAtLeast(pairs: DataFrame, minShared: Int): DataFrame =
+    pairs.groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
       .where(col("shared") >= minShared)
-  }
-
-  /** Asymmetric probe: batch signatures vs a stored corpus signature
-    * table (both in (__vid, band, bucket) form) — the store is never
-    * self-paired. Returns (id_a, id_b, shared) with ids normalized
-    * (least, greatest). */
-  private[graft] def sigProbe(stored: DataFrame, batch: DataFrame, minShared: Int,
-                              maxBucketSize: Int, stage: String): DataFrame = {
-    val capped = Dedup.capBuckets(
-      stored.withColumn("__side", lit("s")).unionByName(
-        batch.withColumn("__side", lit("b"))),
-      maxBucketSize, stage, "__vid")
-    val s = capped.where(col("__side") === "s")
-      .select(col("band"), col("bucket"), col("__vid").as("__sid"))
-    val b = capped.where(col("__side") === "b")
-      .select(col("band"), col("bucket"), col("__vid").as("__bid"))
-    s.join(b, Seq("band", "bucket"))
-      .where(col("__sid") =!= col("__bid"))
-      .select(least(col("__sid"), col("__bid")).as("id_a"),
-        greatest(col("__sid"), col("__bid")).as("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
-      .where(col("shared") >= minShared)
-  }
 }

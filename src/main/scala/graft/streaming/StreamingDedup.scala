@@ -73,16 +73,13 @@ object StreamingDedup {
         onBatch(pairs.localCheckpoint(), batchId)
         // fold the batch into the store AFTER emitting; a replayed batch
         // rewrites only its own partition
-        val conf = spark.conf
-        val prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          Dedup.minhashBandedSignatures(b, idCol, textCol, numHashes, bands, shingleN)
-            .withColumn("__ingest_batch", lit(batchId))
-            .write.partitionBy("__ingest_batch").mode("overwrite").parquet(s"$storeDir/sigs")
-          b.withColumn("__ingest_batch", lit(batchId))
-            .write.partitionBy("__ingest_batch").mode("overwrite").parquet(s"$storeDir/docs")
-        } finally conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        Dedup.minhashBandedSignatures(b, idCol, textCol, numHashes, bands, shingleN)
+          .withColumn("__ingest_batch", lit(batchId))
+          .write.partitionBy("__ingest_batch").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(s"$storeDir/sigs")
+        b.withColumn("__ingest_batch", lit(batchId))
+          .write.partitionBy("__ingest_batch").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(s"$storeDir/docs")
       }
       .start()
   }

@@ -79,12 +79,9 @@ object StreamingImageDedup {
         onBatch(cross.unionByName(within).dropDuplicates("id_a", "id_b")
           .localCheckpoint(), batchId)
         // fold AFTER emitting; a replayed batch rewrites only its own partition
-        val conf = spark.conf
-        val prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try sigs.withColumn("__ingest_batch", lit(batchId))
-          .write.partitionBy("__ingest_batch").mode("overwrite").parquet(s"$storeDir/sigs")
-        finally conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        sigs.withColumn("__ingest_batch", lit(batchId))
+          .write.partitionBy("__ingest_batch").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(s"$storeDir/sigs")
       }
       .start()
   }

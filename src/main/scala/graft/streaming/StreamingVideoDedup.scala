@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.VideoPayload
+import graft.operators.{Dedup, VideoPayload}
 
 /** Streaming VIDEO near-dedup vs a growing frame-signature store — the
   * temporal twin of [[StreamingImageDedup]]: videos arrive as a stream,
@@ -55,18 +55,15 @@ object StreamingVideoDedup {
         // decode once under the probe, the self-join and the fold
         val batchSigs = sigs(batch, idCol, every).localCheckpoint()
         val stored = spark.read.parquet(s"$storeDir/sigs").drop("__ingest_batch")
-        val cross = VideoPayload.sigProbe(stored, batchSigs, minShared,
-          maxBucketSize, "videodupprobe")
-        val within = VideoPayload.sigSelfPairs(batchSigs, minShared,
-          maxBucketSize, "videodupwithin")
+        val cross = VideoPayload.sharedAtLeast(Dedup.bandedProbe(stored, batchSigs, "__vid",
+          maxBucketSize, "videodupprobe"), minShared)
+        val within = VideoPayload.sharedAtLeast(Dedup.bandedSelfPairs(batchSigs, "__vid",
+          maxBucketSize, "videodupwithin"), minShared)
         onBatch(cross.unionByName(within).dropDuplicates("id_a", "id_b")
           .localCheckpoint(), batchId)
-        val conf = spark.conf
-        val prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try batchSigs.withColumn("__ingest_batch", lit(batchId))
-          .write.partitionBy("__ingest_batch").mode("overwrite").parquet(s"$storeDir/sigs")
-        finally conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        batchSigs.withColumn("__ingest_batch", lit(batchId))
+          .write.partitionBy("__ingest_batch").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(s"$storeDir/sigs")
       }
       .start()
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, ImagePayload}
+import graft.operators.ImagePayload
 
 /** Caption-consistency join: brute-force pair semantics, the >3-bit margin
   * that makes the planted q_caption_consistency oracle exact, and the
@@ -45,8 +45,10 @@ class CaptionConsistencySpec extends SparkTestBase {
     import spark.implicits._
     val imgs = ImagePayload.synthesize((1L to 30L).toDF("p_partkey"), "p_partkey")
       .withColumn("caption", lit("same viral caption everywhere"))
-    val got = ImagePayload.captionConsistency(imgs, "p_partkey", maxGroupSize = 10)
-    assert(got.count() === 0L)
-    assert(Dedup.droppedBucketRows("caption") > 0L)
+    val (n, dropped) = droppedRows("caption") {
+      ImagePayload.captionConsistency(imgs, "p_partkey", maxGroupSize = 10).count()
+    }
+    assert(n === 0L)
+    assert(dropped === Seq(30L), "the whole 30-image group is reported dropped")
   }
 }

@@ -57,10 +57,13 @@ class DecontaminateSpec extends SparkTestBase {
     val boiler = "standard legal footer appended to every single page here"
     val docs = (0L until 50L).map(i => (i, s"body $i " * 4 + boiler)).toDF("doc_id", "text")
     val evalSet = Seq((100L, s"quiz that quotes $boiler")).toDF("doc_id", "text")
-    val capped = Dedup.decontaminate(docs, evalSet, "doc_id", "text", n = 8, maxBucketSize = 10)
-    assert(capped.count() === 0L, "over-cap boilerplate bucket is dropped, not exploded")
-    assert(Dedup.droppedBucketRows("decontaminate") > 0L,
-      "the drop must be observable, never silent")
+    val (capped, dropped) = droppedRows("decontaminate") {
+      Dedup.decontaminate(docs, evalSet, "doc_id", "text", n = 8, maxBucketSize = 10).count()
+    }
+    assert(capped === 0L, "over-cap boilerplate bucket is dropped, not exploded")
+    // the drop is observable, never silent: the footer's two 8-grams, each
+    // in 50 corpus docs + the eval doc (the probe's cap counts both sides)
+    assert(dropped === Seq(2L * 51))
     val uncapped = Dedup.decontaminate(docs, evalSet, "doc_id", "text", n = 8)
     assert(uncapped.count() === 50L)
   }

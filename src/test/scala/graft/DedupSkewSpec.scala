@@ -110,30 +110,22 @@ class DedupSkewSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val uncapped = Dedup.minhashLshCandidates(docs, "doc_id", "text",
       numHashes = 32, bands = 16, minEstJaccard = 0.0, maxBucketSize = Int.MaxValue).count()
-    val capped = Dedup.minhashLshCandidates(docs, "doc_id", "text",
-      numHashes = 32, bands = 16, minEstJaccard = 0.0, maxBucketSize = 50).count()
+    val (capped, reported) = droppedRows("minhash") {
+      Dedup.minhashLshCandidates(docs, "doc_id", "text",
+        numHashes = 32, bands = 16, minEstJaccard = 0.0, maxBucketSize = 50).count()
+    }
     assert(uncapped > 0)
     assert(capped < uncapped)
     val stats = Dedup.minhashBucketStats(docs, "doc_id", "text", numHashes = 32, bands = 16)
       .collect().map(_.getLong(2))
     assert(stats.max > 50) // something was actually capped
-    // the cap does not drop silently: the banded stage reports its dropped
-    // ROW count (the pipeline's alert hook). The counter is at-least-exact:
-    // >= the true dropped rows (it cannot collapse to a per-BUCKET count
-    // via filter pushdown) and <= 2x (the self-join evaluates the capped
-    // subtree once per side)
+    // the cap does not drop silently: the query reports its dropped ROW
+    // count (the pipeline's alert hook) exactly — the summed size of the
+    // over-cap buckets, once, although the self-join reads the banded
+    // table on both sides
     val expectedDropped = stats.filter(_ > 50).sum
-    val reported = Dedup.droppedBucketRows("minhash")
     info(s"dropped rows: expected $expectedDropped, reported $reported")
-    assert(reported >= expectedDropped,
-      s"reported $reported under-reads the $expectedDropped dropped rows")
-    // local runs have no task retries, so the count is an exact multiple:
-    // 1x (single-branch plans) or 2x (the self-join evaluates the capped
-    // subtree once per side). Anything else is either a retry (permitted
-    // by the documented at-least semantics but absent locally) or a plan
-    // regression adding evaluations — both worth failing loudly here
-    assert(reported == expectedDropped || reported == 2 * expectedDropped,
-      s"reported $reported is not 1x or 2x the $expectedDropped dropped rows")
+    assert(reported == Seq(expectedDropped))
   }
 
   test("portableHash folds code points, not UTF-16 units (non-BMP agreement with SQL)") {

@@ -197,6 +197,22 @@ class ExtensionsSpec extends SparkTestBase {
     }
   }
 
+  test("s2_rect_covering refuses non-finite latitudes and latitudes outside [-90, 90]") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.S2RectCovering
+    def rect(latLo: Double, latHi: Double, level: Int) = S2RectCovering(
+      Seq(Literal(latLo), Literal(latHi), Literal(-180.0), Literal(180.0), Literal(level)))
+    for ((lo, hi) <- Seq((80.0, 170.0), (-95.0, -80.0), (Double.NaN, 10.0),
+        (0.0, Double.PositiveInfinity))) {
+      val e = intercept[IllegalArgumentException](rect(lo, hi, 12).eval())
+      assert(e.getMessage == s"requirement failed: s2_rect_covering latitudes [$lo, $hi] " +
+        "must be finite and within [-90, 90]", e.getMessage)
+    }
+    // the valid polar band is covered, up to the pole
+    val polar = rect(80.0, 90.0, 4).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    assert(polar.numElements() > 0)
+  }
+
   test("spark.sql.extensions entry point: S2Extensions injects the whole SQL function table and the bounds rule") {
     import org.apache.spark.sql.SparkSessionExtensions
     import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry

@@ -49,17 +49,18 @@ class GeoImageNearDupSpec extends SparkTestBase {
     assert(got == expect, s"missing=${expect -- got}, extra=${got -- expect}")
   }
 
-  test("hot-cell cap drops loudly and reports via droppedBucketRows(\"geoimage\")") {
+  test("hot-cell cap drops loudly and reports its dropped rows") {
     val keys = spark.read.parquet(s"${sf("sf0.001")}/part.parquet")
       .select("p_partkey").orderBy("p_partkey").limit(30)
     val base = ImagePayload.synthesize(keys, "p_partkey")
     // relocate ALL 30 images to one venue -> one cell far over the cap
     val colocated = base.withColumn("lat", lit(48.2)).withColumn("lon", lit(16.37))
-    val pairs = ImagePayload.geoImageNearDup(colocated, "p_partkey", "lat", "lon",
-      level = 6, maxHamming = 3, maxCellSize = 10)
-    assert(pairs.count() == 0, "over-cap cell must produce no pairs")
-    assert(graft.operators.Dedup.droppedBucketRows("geoimage") >= 30,
-      "the cap must report the dropped signature rows")
+    val (pairs, dropped) = droppedRows("geoimage") {
+      ImagePayload.geoImageNearDup(colocated, "p_partkey", "lat", "lon",
+        level = 6, maxHamming = 3, maxCellSize = 10).count()
+    }
+    assert(pairs == 0, "over-cap cell must produce no pairs")
+    assert(dropped == Seq(30L), "the cap must report the dropped signature rows")
     // under a generous cap the same venue pairs normally (byte-identical
     // copies planted at the venue)
     val copies = colocated.withColumn("p_partkey", col("p_partkey") + 1000000L)

@@ -1,6 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.ListenerBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +22,24 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set(key, on)
     try body
     finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Runs `body`; returns its value and the rows the `stage` bucket cap
+    * reported dropped (`Dedup.droppedRows`), one entry per query `body`
+    * ran through a capped banded join of that stage, in completion order. */
+  def droppedRows[T](stage: String)(body: => T): (T, Seq[Long]) = {
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        graft.operators.Dedup.droppedRows(qe).get(stage).foreach(n => rows.add(n))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      ListenerBridge.drain(spark)
+      (out, rows.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
 
