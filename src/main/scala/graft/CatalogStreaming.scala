@@ -1,8 +1,12 @@
 package graft
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.s2functions._
 import graft.operators._
@@ -14,6 +18,37 @@ import graft.sources.GeoJson
   * `queries` map; the 247-row correctness gate pins that nothing moved). */
 private[graft] object CatalogStreaming {
   import SparkEntry._
+
+  /** The streaming-dedup harness: `seed` a fresh store directory (the
+    * store MUTATES during the run, so never a shared fixture), then run
+    * `stream(input, storeDir, onBatch)` over a MemoryStream with columns
+    * `names` fed `batch1` and then `batch2`; returns the `cols` of every
+    * pair either micro-batch emitted, collected to the driver, so the store
+    * is deleted on return. */
+  private def twoBatchPairs[T <: Product : TypeTag](
+      s: SparkSession, names: Seq[String], batch1: Seq[T], batch2: Seq[T], cols: String*)(
+      seed: String => Unit,
+      stream: (DataFrame, String, (DataFrame, Long) => Unit) => StreamingQuery): DataFrame = {
+    import s.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft_stream_dedup")
+    val acc = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    try {
+      seed(store.toString)
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+      val input = MemoryStream[T]
+      val q = stream(input.toDF().toDF(names: _*), store.toString, (pairs, _) => acc.synchronized {
+        val emitted = pairs.select(cols.map(col): _*)
+        acc += s.createDataFrame(java.util.Arrays.asList(emitted.collect(): _*), emitted.schema)
+      })
+      try {
+        input.addData(batch1)
+        q.processAllAvailable()
+        input.addData(batch2)
+        q.processAllAvailable()
+      } finally q.stop()
+    } finally ResumableWrite.deleteRecursively(store)
+    acc.reduce(_ unionByName _)
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -174,31 +209,15 @@ private[graft] object CatalogStreaming {
     // only the store probe can make; bytes never enter the store or a join
     "q_stream_image_dedup" -> ((s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val images = ImagePayload.synthesize(part(s, dir).select("p_partkey"), "p_partkey")
-      val storeDir = java.nio.file.Files
-        .createTempDirectory("graft_stream_imgdedup").toString
-      graft.streaming.StreamingImageDedup.initStore(s, storeDir, images, "p_partkey")
       val planted = ImagePayload.withPatch(images.where(col("p_partkey") % 40 === 0), 2, 2, 1)
       val rows = planted.select(col("p_partkey"), col("bytes"))
-        .as[(Long, Array[Byte])].collect()
-      val batch1 = rows.map { case (k, bs) => (k + 100000000L, bs) }
-      val batch2 = rows.map { case (k, bs) => (k + 200000000L, bs) }
-      val acc = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val input = MemoryStream[(Long, Array[Byte])]
-      val q = graft.streaming.StreamingImageDedup.nearDupStream(
-        input.toDF().toDF("p_partkey", "bytes"), storeDir, "p_partkey",
-        (pairs, _) => acc.synchronized {
-          acc ++= pairs.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-        })
-      try {
-        input.addData(batch1.toSeq)
-        q.processAllAvailable()
-        input.addData(batch2.toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      acc.toSeq.toDF("id_a", "id_b")
+        .as[(Long, Array[Byte])].collect().toSeq
+      twoBatchPairs(s, Seq("p_partkey", "bytes"),
+        rows.map { case (k, bs) => (k + 100000000L, bs) },
+        rows.map { case (k, bs) => (k + 200000000L, bs) }, "id_a", "id_b")(
+        graft.streaming.StreamingImageDedup.initStore(s, _, images, "p_partkey"),
+        graft.streaming.StreamingImageDedup.nearDupStream(_, _, "p_partkey", _))
     }),
 
     // STREAMING video near-dedup vs the growing frame-signature store:
@@ -208,33 +227,17 @@ private[graft] object CatalogStreaming {
     // second only findable through the store fold). Exact planted oracle
     "q_stream_video_dedup" -> ((s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val keys = part(s, dir).select("p_partkey")
       val corpus = VideoPayload.synthesize(keys, "p_partkey")
-      val storeDir = java.nio.file.Files
-        .createTempDirectory("graft_stream_viddedup").toString
-      graft.streaming.StreamingVideoDedup.initStore(s, storeDir, corpus, "p_partkey")
-      def reposts(offset: Long): Array[(Long, Array[Byte])] =
+      def reposts(offset: Long): Seq[(Long, Array[Byte])] =
         VideoPayload.synthesizeReposts(keys, "p_partkey", idOffset = offset)
           .where(col("p_partkey") >= offset)
           .select(col("p_partkey"), col("bytes"))
-          .as[(Long, Array[Byte])].collect()
-      val acc = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val input = MemoryStream[(Long, Array[Byte])]
-      val q = graft.streaming.StreamingVideoDedup.nearDupStream(
-        input.toDF().toDF("p_partkey", "bytes"), storeDir, "p_partkey",
-        (pairs, _) => acc.synchronized {
-          acc ++= pairs.select("id_a", "id_b", "shared").collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        })
-      try {
-        input.addData(reposts(1000000000L).toSeq)
-        q.processAllAvailable()
-        input.addData(reposts(2000000000L).toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      acc.toSeq.toDF("id_a", "id_b", "shared")
+          .as[(Long, Array[Byte])].collect().toSeq
+      twoBatchPairs(s, Seq("p_partkey", "bytes"),
+        reposts(1000000000L), reposts(2000000000L), "id_a", "id_b", "shared")(
+        graft.streaming.StreamingVideoDedup.initStore(s, _, corpus, "p_partkey"),
+        graft.streaming.StreamingVideoDedup.nearDupStream(_, _, "p_partkey", _))
     }),
 
     // STREAMING corpus dedup: the %10==0 docs arrive over a real 2-batch
@@ -243,32 +246,14 @@ private[graft] object CatalogStreaming {
     // one-shot incremental batch run — same oracle as q_incremental_dedup
     "q_stream_dedup" -> ((s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = documents(s, dir).select("doc_id", "text")
       val corpus = docs.where(col("doc_id") % 10 =!= 0)
-      // the store MUTATES during the run — a fresh dir per invocation, not
-      // a shared fixture
-      val storeDir = java.nio.file.Files
-        .createTempDirectory("graft_stream_dedup").toString
-      graft.streaming.StreamingDedup.initStore(s, storeDir, corpus, "doc_id", "text")
       val streamed = docs.where(col("doc_id") % 10 === 0)
-        .select("doc_id", "text").as[(Long, String)].collect()
+        .select("doc_id", "text").as[(Long, String)].collect().toSeq
       val (batch1, batch2) = streamed.partition { case (id, _) => (id / 10) % 2 == 0 }
-      val acc = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val input = MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingDedup.nearDupStream(
-        input.toDF().toDF("doc_id", "text"), storeDir, "doc_id", "text",
-        (pairs, _) => acc.synchronized {
-          acc ++= pairs.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-        })
-      try {
-        input.addData(batch1.toSeq)
-        q.processAllAvailable()
-        input.addData(batch2.toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      acc.toSeq.toDF("id_a", "id_b")
+      twoBatchPairs(s, Seq("doc_id", "text"), batch1, batch2, "id_a", "id_b")(
+        graft.streaming.StreamingDedup.initStore(s, _, corpus, "doc_id", "text"),
+        graft.streaming.StreamingDedup.nearDupStream(_, _, "doc_id", "text", _))
     }),
 
     // streaming CDC upsert into the clustered store: batch 1 moves keys
@@ -278,7 +263,6 @@ private[graft] object CatalogStreaming {
     // table must equal the one simulated merge in the oracle
     "q_stream_upsert" -> ((s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val base = points(s, dir)
         .select(col("o_orderkey").cast("long"), col("lat"), col("lon"))
       val tmp = java.nio.file.Files.createTempDirectory("graft_stream_upsert").toString

@@ -564,9 +564,10 @@ object Dedup {
     * re-read only for corpus docs that actually appear as candidates
     * (semi-join). Exact-dup collapse applies to the batch; corpus docs
     * identical to each other each probe independently (their signatures
-    * are equal, so completeness is unaffected). Output: verified pairs
-    * (id_a, id_b, jaccard >= minJaccard) touching the batch, expanded to
-    * all batch-member pairs. */
+    * are equal, so completeness is unaffected). A batch row supersedes a
+    * corpus row of the same id. Output: verified pairs (id_a, id_b,
+    * jaccard >= minJaccard) touching the batch, expanded to all
+    * batch-member pairs. */
   def incrementalNearDup(corpus: DataFrame, batch: DataFrame,
                          idCol: String, textCol: String,
                          numHashes: Int = 32, bands: Int = 16, shingleN: Int = 3,
@@ -588,17 +589,20 @@ object Dedup {
                                minJaccard: Double = 0.9, minEstJaccard: Double = 0.5,
                                maxBucketSize: Int = 100000): DataFrame = {
     val (bReps, bMembers) = collapseExact(batch, idCol, textCol)
+    // a corpus row whose id the batch re-sends is superseded: it neither
+    // verifies nor expands, so the id never pairs with its own stored copy
+    val stored = corpus.select(col(idCol), col(textCol))
+      .join(batch.select(idCol), Seq(idCol), "left_anti")
     val cand = incrementalCandidates(
       corpusBanded,
       minhashBandedSignatures(bReps, idCol, textCol, numHashes, bands, shingleN),
       idCol, numHashes, minEstJaccard, maxBucketSize)
     val candIds = cand.select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
-    val texts = corpus.select(col(idCol), col(textCol))
-      .unionByName(bReps.select(col(idCol), col(textCol)))
+    val texts = stored.unionByName(bReps.select(col(idCol), col(textCol)))
       .join(candIds, Seq(idCol), "left_semi")
     val verified = ngramJaccard(texts, idCol, textCol, cand.select("id_a", "id_b"), shingleN)
       .where(col("jaccard") >= minJaccard)
-    val corpusIdentity = corpus.select(col(idCol).as("__id"), col(idCol).as("__rep"))
+    val corpusIdentity = stored.select(col(idCol).as("__id"), col(idCol).as("__rep"))
     expandPairs(verified, bMembers.unionByName(corpusIdentity), Seq("jaccard" -> lit(1.0)))
   }
 

@@ -134,6 +134,23 @@ object Similarity {
   private def vecDim(embeddings: DataFrame, vecCol: String): Int =
     embeddings.select(size(col(vecCol))).head().getInt(0)
 
+  /** Dot product of a float vector with a double one over their common
+    * prefix, summed left to right: the one kernel of the LSH-signature and
+    * centroid UDFs. */
+  private def dotPrefix(v: Seq[Float], p: Array[Double]): Double = {
+    var d = 0.0
+    var j = 0
+    val n = math.min(v.length, p.length)
+    while (j < n) { d += v(j) * p(j); j += 1 }
+    d
+  }
+
+  /** `v` scaled to unit L2 norm (a zero vector is returned as is). */
+  private def normalized(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(v.map(x => x * x).sum)
+    if (n == 0) v else v.map(_ / n)
+  }
+
   /** How many b-bit hyperplane-LSH tables are needed so a pair at exactly
     * `minCosine` lands in a shared bucket with probability >= targetRecall:
     * per-bit agreement p1 = 1 - acos(c)/pi, per-table collision p1^b,
@@ -167,12 +184,7 @@ object Similarity {
         var bucket = 0L
         var i = 0
         while (i < bits) {
-          val p = planes(t * bits + i)
-          var d = 0.0
-          var j = 0
-          val n = math.min(v.length, p.length)
-          while (j < n) { d += v(j) * p(j); j += 1 }
-          if (d > 0) bucket |= 1L << i
+          if (dotPrefix(v, planes(t * bits + i)) > 0) bucket |= 1L << i
           i += 1
         }
         (t, bucket)
@@ -242,10 +254,6 @@ object Similarity {
                         nlist: Int, iters: Int = 5,
                         trainLimit: Int = 20000): Array[Array[Double]] = {
     val spark = embeddings.sparkSession
-    def normalized(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v else v.map(_ / n)
-    }
     val train = embeddings.select(col(idCol), col(vecCol)).orderBy(col(idCol))
       .limit(trainLimit).cache()
     var centroids: Array[Array[Double]] = train.orderBy(col(idCol)).limit(nlist)
@@ -261,10 +269,6 @@ object Similarity {
   private def lloydIterate(train: DataFrame, vecCol: String,
                            init: Array[Array[Double]], iters: Int): Array[Array[Double]] = {
     val spark = train.sparkSession
-    def normalized(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v else v.map(_ / n)
-    }
     var centroids = init
     for (_ <- 0 until iters) {
       val assign = assignUdf(spark, centroids)
@@ -301,11 +305,7 @@ object Similarity {
       var bestDot = Double.MinValue
       var c = 0
       while (c < cs.length) {
-        val p = cs(c)
-        var d = 0.0
-        var j = 0
-        val n = math.min(v.length, p.length)
-        while (j < n) { d += v(j) * p(j); j += 1 }
+        val d = dotPrefix(v, cs(c))
         if (d > bestDot) { bestDot = d; best = c }
         c += 1
       }
@@ -319,14 +319,7 @@ object Similarity {
     val bc = spark.sparkContext.broadcast(centroids)
     udf { v: Seq[Float] =>
       val cs = bc.value
-      cs.indices.map { c =>
-        val p = cs(c)
-        var d = 0.0
-        var j = 0
-        val n = math.min(v.length, p.length)
-        while (j < n) { d += v(j) * p(j); j += 1 }
-        (-d, c)
-      }.sorted.take(nprobe).map(_._2)
+      cs.indices.map(c => (-dotPrefix(v, cs(c)), c)).sorted.take(nprobe).map(_._2)
     }
   }
 
@@ -606,10 +599,6 @@ object Similarity {
         .join(qdf, "list")
         .where(((col("__rn") - 1) * col("__q")) % col("__n") < col("__q"))
     }
-    def normalized(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v else v.map(_ / n)
-    }
     val seeds = evenSelect(seedQuota)
       .orderBy("list", "id").select("vec")
       .collect().map(r => normalized(r.getSeq[Float](0).toArray.map(_.toDouble)))
@@ -647,14 +636,6 @@ object Similarity {
     spark.read.parquet(s"${resolveIndexDir(indexDir)}/centroids").orderBy("list").collect()
       .map(_.getAs[Seq[Double]]("centroid").toArray)
 
-  /** Query a persisted IVF index: each query probes its `nprobe` nearest
-    * lists; the scan carries a LITERAL IN-list on the hive partition
-    * column `list`, so only the probed list directories are opened
-    * (partition pruning — PLANS.md shows the pruned scan). One small job
-    * computes the probe set (queries are the broadcast side by
-    * construction); candidates get the exact cosine re-rank against the
-    * index's precomputed norms. Output: (query_id, neighbor_id, cosine,
-    * rank). */
   /** Shared probe preamble of [[queryIvf]]/[[queryIvfPq]]: the query frame
     * (query_id, __qvec, __qnorm, list) with probes exploded — PINNED so
     * the norm + centroid-probe UDFs evaluate once, not once per plan
@@ -674,6 +655,14 @@ object Similarity {
     (q, lists)
   }
 
+  /** Query a persisted IVF index: each query probes its `nprobe` nearest
+    * lists; the scan carries a LITERAL IN-list on the hive partition
+    * column `list`, so only the probed list directories are opened
+    * (partition pruning — PLANS.md shows the pruned scan). One small job
+    * computes the probe set (queries are the broadcast side by
+    * construction); candidates get the exact cosine re-rank against the
+    * index's precomputed norms. Output: (query_id, neighbor_id, cosine,
+    * rank). */
   def queryIvf(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                queries: DataFrame, idCol: String, vecCol: String,
                k: Int, nprobe: Int = 20): DataFrame = {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.functions.s2functions._
 
@@ -627,8 +628,8 @@ object Tiling {
     * pruning via the partition column (equality when the query prefix
     * covers it, prefix match when shorter) plus a `StartsWith` filter on
     * the sorted geohash column that reaches parquet row-group stats.
-    * Partition-type inference is disabled for the read — digit-only
-    * prefixes like "00" must stay strings, not collapse to integer 0. */
+    * The partition column is read as a string — digit-only prefixes like
+    * "00" must stay strings, not collapse to integer 0. */
   def geohashPrefixScan(spark: SparkSession, dir: String,
                         prefix: String, prefixLen: Int = 2): DataFrame = {
     require(prefix.nonEmpty && prefix.forall(GeohashAlphabet.contains(_)),
@@ -840,6 +841,21 @@ object Tiling {
   final case class CompactStats(compactedPartitions: Int, filesBefore: Int,
                                 filesAfter: Int)
 
+  /** Read a clustered layout with its partition columns (`coarse_tile`,
+    * `gh_prefix`) typed as strings: numeric-looking hex tokens ("04",
+    * "89") would otherwise be inferred as integers, corrupting the token
+    * ("04" -> 4 -> directory `coarse_tile=4`) exactly where the maintenance
+    * ops swap directories by token. A user-specified partition type is
+    * honoured without inference, so the caller's session is never
+    * touched. */
+  private def readLayoutStringParts(spark: SparkSession, dir: String): DataFrame = {
+    val schema = StructType(spark.read.parquet(dir).schema.map {
+      case f if f.name == "coarse_tile" || f.name == "gh_prefix" => f.copy(dataType = StringType)
+      case f => f
+    })
+    spark.read.schema(schema).parquet(dir)
+  }
+
   /** MERGE (upsert) a batch into a [[clusteredWrite]] layout, rewriting ONLY
     * the coarse-tile partitions the batch touches — the table-maintenance
     * operation a mutable geo catalog runs on every ingest, shaped like an
@@ -857,24 +873,6 @@ object Tiling {
     * never opened for data. The staged-dir swap is local-fs rename here —
     * on an object store this step is the atomic metadata commit a table
     * format provides; pair with [[ResumableWrite]] manifests for lineage. */
-  /** Read a clustered layout with partition-column TYPE INFERENCE OFF:
-    * numeric-looking hex tokens ("04", "89") would otherwise be inferred as
-    * integers, corrupting the token ("04" -> 4 -> directory
-    * `coarse_tile=4`) exactly where the maintenance ops swap directories by
-    * token. Inference runs eagerly at relation resolution, so toggling the
-    * conf around the read is sufficient and thread-confined enough for
-    * these driver-side maintenance entry points. */
-  private def readLayoutStringParts(spark: SparkSession, dir: String): DataFrame = {
-    val k = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, "false")
-    try spark.read.parquet(dir)
-    finally old match {
-      case Some(v) => spark.conf.set(k, v)
-      case None    => spark.conf.unset(k)
-    }
-  }
-
   def mergeClustered(spark: SparkSession, dir: String, updates: DataFrame,
                      keyCol: String, latCol: String, lonCol: String,
                      coarseLevel: Int = 5): MergeStats =
@@ -1014,7 +1012,7 @@ object Tiling {
       col("__leaf_ord").between(
         S2CellId.rangeMin(c) ^ Long.MinValue, S2CellId.rangeMax(c) ^ Long.MinValue)
     }.reduce(_ || _)
-    // inference-off read: an all-numeric-token directory set ("04", "11",
+    // string-typed read: an all-numeric-token directory set ("04", "11",
     // ...) would otherwise infer coarse_tile as an integer and the string
     // IN-list would silently prune EVERYTHING (leading zeros don't survive
     // the int round-trip)

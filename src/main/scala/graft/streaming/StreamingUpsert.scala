@@ -11,8 +11,9 @@ import graft.operators.Tiling
   * coordinates, payload) is MERGE-upserted per micro-batch into a
   * [[Tiling.clusteredWrite]] table — the continuous-ingest path of the
   * mutable spatially-clustered store ([[Tiling.mergeClustered]] is the
-  * batch half; this is its `foreachBatch` twin, the same idiom as
-  * [[StreamingDedup]]).
+  * batch half; this is its per-micro-batch twin — kept apart from the
+  * dedup streams' shared [[StoreProbeFold]] protocol, because an upsert
+  * merges by key instead of folding a partition per batch).
   *
   * Semantics per batch: multiple CDC events for one key within a batch are
   * collapsed to the LAST by `orderCol` (last-writer-wins needs a total
@@ -23,7 +24,7 @@ import graft.operators.Tiling
   *
   * Replay safety: unlike appends, an upsert keyed by `keyCol` is
   * idempotent — re-running a batch against the post-batch table is a
-  * no-op on table CONTENT (pinned in StreamingUpsertSpec), so foreachBatch
+  * no-op on table CONTENT (pinned in StreamingUpsertSpec), so micro-batch
   * retries converge without dedup bookkeeping. */
 object StreamingUpsert {
 
