@@ -76,9 +76,10 @@ object ResumableWrite {
   def committedPartitions(outDir: String): Set[String] =
     readManifest(outDir).map(_.partition).toSet
 
-  /** The manifest's one JSON codec; a line with anything after its
-    * closing brace is not a record. */
-  private val Json = new ObjectMapper()
+  /** The store's one JSON codec (manifest lines and [[WriterLock]]
+    * payloads); a line with anything after its closing brace is not a
+    * record. */
+  private[operators] val Json = new ObjectMapper()
     .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   /** A manifest line as a record, or None unless it is a complete record:

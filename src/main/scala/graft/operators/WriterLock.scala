@@ -3,14 +3,16 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, FileAlreadyExistsException, StandardCopyOption}
 
+import com.fasterxml.jackson.core.JsonProcessingException
+
 /** Exclusive maintenance lock for the mutable clustered-store directories
   * (round-3 verdict ask #6). MERGE, compaction, resumable commits and the
   * IVF index lifecycle (append / rebalance) all mutate a store through
   * staged-swap + manifest append, which is crash-safe for ONE writer but
   * corruptible by TWO: interleaved swaps can resurrect deleted partitions
   * or drop staged ones. The lock is a CREATE-EXCLUSIVE `_writer.lock`
-  * file carrying the owner id and pid — `Files.createFile` is atomic on a
-  * POSIX filesystem (on an object store, substitute its
+  * file carrying the owner id, pid and host — `Files.createFile` is atomic
+  * on a POSIX filesystem (on an object store, substitute its
   * conditional-create/CAS primitive), so exactly one contender wins and
   * every loser fails LOUDLY naming the holder, with the store untouched.
   *
@@ -26,8 +28,11 @@ import java.nio.file.{Files, Paths, FileAlreadyExistsException, StandardCopyOpti
   * contract needs — retries reuse their runId; merge/compaction/IVF
   * maintenance pass a fresh UUID per invocation precisely so they can
   * never reclaim each other) is race-safe against CONCURRENT same-owner
-  * retries: a stale lock is reclaimable only when its recorded pid is
-  * this process or provably dead, the stale file is claimed by an ATOMIC
+  * retries: a stale lock is reclaimable only when it was written on this
+  * host and its recorded pid is this process or provably dead (a pid names
+  * a process only on its own host, so a lock from another host sharing the
+  * store is never reclaimed; a lock without a host field is taken as this
+  * host's), the stale file is claimed by an ATOMIC
   * rename (at most one contender succeeds; POSIX rename of an existing
   * file is atomic and fails for everyone else), and the fresh lock then
   * goes through the normal create-exclusive race — a losing contender
@@ -49,15 +54,25 @@ object WriterLock {
     h.isPresent && h.get.isAlive
   }
 
-  private def holderPid(payload: String): Option[Long] =
-    """"pid":(\d+)""".r.findFirstMatchIn(payload).map(_.group(1).toLong)
+  /** The host this JVM runs on, recorded in every lock it writes. */
+  private lazy val host: String = java.net.InetAddress.getLocalHost.getHostName
+
+  /** A lock payload's (owner, pid, host), or None if it is not a lock
+    * record; the host is None for a lock written without one. */
+  private def parse(payload: String): Option[(String, Long, Option[String])] = {
+    val n = try ResumableWrite.Json.readTree(payload)
+      catch { case _: JsonProcessingException => null }
+    def field(k: String) = Option(n).flatMap(n => Option(n.get(k)))
+    for (owner <- field("owner").filter(_.isTextual);
+         pid <- field("pid").filter(v => v.isIntegralNumber && v.canConvertToLong))
+      yield (owner.asText, pid.asLong, field("host").filter(_.isTextual).map(_.asText))
+  }
 
   /** Run `body` holding the exclusive writer lock on `dir`; releases on
     * every exit path. Throws `IllegalStateException` naming the current
     * holder if the lock is held by a DIFFERENT owner, by the same owner
     * in a live different process, or by this JVM itself. */
   def withLock[T](dir: String, owner: String)(body: => T): T = {
-    require(!owner.contains("\""), s"owner must not contain quotes: $owner")
     val p = lockPath(dir)
     val key = p.toAbsolutePath.toString
     heldInJvm.synchronized {
@@ -66,8 +81,8 @@ object WriterLock {
           "(by this very process) — concurrent in-JVM maintenance on one " +
           "store is not supported")
     }
-    val payload =
-      s"""{"owner":"$owner","pid":${ProcessHandle.current.pid}}"""
+    val payload = ResumableWrite.Json.writeValueAsString(ResumableWrite.Json.createObjectNode()
+      .put("owner", owner).put("pid", ProcessHandle.current.pid).put("host", host))
     def create(): Unit =
       Files.write(p, payload.getBytes(StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE_NEW): Unit
@@ -82,9 +97,10 @@ object WriterLock {
           val holder =
             try new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
             catch { case _: Exception => "<unreadable>" }
-          val stale = holder.startsWith(s"""{"owner":"$owner",""") &&
-            holderPid(holder).exists(hp =>
-              hp == ProcessHandle.current.pid || !pidAlive(hp))
+          val stale = parse(holder).exists { case (o, hp, h) =>
+            o == owner && h.forall(_ == host) &&
+              (hp == ProcessHandle.current.pid || !pidAlive(hp))
+          }
           if (!stale) loudFail(holder)
           // claim the stale file atomically: rename it to a unique
           // graveyard name — exactly one concurrent contender's rename

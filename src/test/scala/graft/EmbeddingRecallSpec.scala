@@ -44,47 +44,49 @@ class EmbeddingRecallSpec extends SparkTestBase {
     val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 5)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val idx = java.nio.file.Files.createTempDirectory("ivf_index").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx)
-    val q = Similarity.queryIvf(spark, idx,
-      emb.where(col("vec_id") < 20), "vec_id", "embedding", k = 5)
-    // the probe must reach the index as a partition-pruned scan: the lists
-    // read carries the literal probe IN-list as a PartitionFilter
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list#"),
-      s"expected a partition-pruned lists scan, got:\n$plan")
-    val approx = q.select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
-    info(f"persisted IVF recall@5 = $recall%.3f (nlist=64, nprobe=20)")
-    assert(recall >= 0.9, f"IVF recall $recall%.3f below 0.9")
-    // ad-hoc per-call variant agrees with the persisted path (same
-    // quantizer seeds, same probe rule)
-    val adhoc = Similarity.ivfAnn(emb, "vec_id", "embedding", queries, 5)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(adhoc === approx)
+    withTempDir("ivf_index") { idx =>
+      Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx)
+      val q = Similarity.queryIvf(spark, idx,
+        emb.where(col("vec_id") < 20), "vec_id", "embedding", k = 5)
+      // the probe must reach the index as a partition-pruned scan: the lists
+      // read carries the literal probe IN-list as a PartitionFilter
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("list#"),
+        s"expected a partition-pruned lists scan, got:\n$plan")
+      val approx = q.select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val recall = (exact intersect approx).size.toDouble / exact.size
+      info(f"persisted IVF recall@5 = $recall%.3f (nlist=64, nprobe=20)")
+      assert(recall >= 0.9, f"IVF recall $recall%.3f below 0.9")
+      // ad-hoc per-call variant agrees with the persisted path (same
+      // quantizer seeds, same probe rule)
+      val adhoc = Similarity.ivfAnn(emb, "vec_id", "embedding", queries, 5)
+        .select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(adhoc === approx)
+    }
   }
 
   test("IVF incremental append: batch joins the index without retrain, recall holds") {
     val queries = 0L until 20L
-    val idx = java.nio.file.Files.createTempDirectory("ivf_incr").toString
-    // build on even ids only (nlist sized to the halved corpus: 32 ~
-    // sqrt-n scaling), then append the odd ids as a daily batch
-    Similarity.buildIvfIndex(emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-      nlist = 32)
-    Similarity.appendToIvfIndex(emb.where(col("vec_id") % 2 =!= 0), "vec_id", "embedding", idx)
-    val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 5)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.queryIvf(spark, idx,
-      emb.where(col("vec_id") < 20), "vec_id", "embedding", k = 5, nprobe = 24)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
-    info(f"post-append IVF recall@5 = $recall%.3f (nlist=32, nprobe=24)")
-    assert(recall >= 0.9, f"recall $recall%.3f below 0.9 after append")
-    assert(approx.exists(_._2 % 2 == 1), "appended (odd) rows must be retrievable")
+    withTempDir("ivf_incr") { idx =>
+      // build on even ids only (nlist sized to the halved corpus: 32 ~
+      // sqrt-n scaling), then append the odd ids as a daily batch
+      Similarity.buildIvfIndex(emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
+        nlist = 32)
+      Similarity.appendToIvfIndex(emb.where(col("vec_id") % 2 =!= 0), "vec_id", "embedding", idx)
+      val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 5)
+        .select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val approx = Similarity.queryIvf(spark, idx,
+        emb.where(col("vec_id") < 20), "vec_id", "embedding", k = 5, nprobe = 24)
+        .select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val recall = (exact intersect approx).size.toDouble / exact.size
+      info(f"post-append IVF recall@5 = $recall%.3f (nlist=32, nprobe=24)")
+      assert(recall >= 0.9, f"recall $recall%.3f below 0.9 after append")
+      assert(approx.exists(_._2 % 2 == 1), "appended (odd) rows must be retrievable")
+    }
   }
 
   test("persisted IVF-PQ index: recall@5 >= 0.9, probe scan partition-pruned and vector-free") {
@@ -92,25 +94,26 @@ class EmbeddingRecallSpec extends SparkTestBase {
     val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 5)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val idx = java.nio.file.Files.createTempDirectory("ivfpq_index").toString
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", idx)
-    val q = Similarity.queryIvfPq(spark, idx,
-      emb.where(col("vec_id") < 20), "vec_id", "embedding", k = 5)
-    // both contracts in the executed plan: the lists scan is
-    // partition-pruned by the literal probe IN-list, and the SHORTLIST
-    // branch's read schema carries codes but no vec column
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list#"),
-      s"expected a partition-pruned lists scan, got:\n$plan")
-    val shortlistScans = plan.linesIterator.filter(l =>
-      l.contains("ReadSchema") && l.contains("codes")).toSeq
-    assert(shortlistScans.nonEmpty && shortlistScans.forall(!_.contains("vec")),
-      s"shortlist scan must not read vectors:\n${shortlistScans.mkString("\n")}")
-    val approx = q.select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
-    info(f"persisted IVF-PQ recall@5 = $recall%.3f (nlist=64, nprobe=20, m=8, shortlist 10k)")
-    assert(recall >= 0.9, f"IVF-PQ recall $recall%.3f below 0.9")
+    withTempDir("ivfpq_index") { idx =>
+      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", idx)
+      val q = Similarity.queryIvfPq(spark, idx,
+        emb.where(col("vec_id") < 20), "vec_id", "embedding", k = 5)
+      // both contracts in the executed plan: the lists scan is
+      // partition-pruned by the literal probe IN-list, and the SHORTLIST
+      // branch's read schema carries codes but no vec column
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("list#"),
+        s"expected a partition-pruned lists scan, got:\n$plan")
+      val shortlistScans = plan.linesIterator.filter(l =>
+        l.contains("ReadSchema") && l.contains("codes")).toSeq
+      assert(shortlistScans.nonEmpty && shortlistScans.forall(!_.contains("vec")),
+        s"shortlist scan must not read vectors:\n${shortlistScans.mkString("\n")}")
+      val approx = q.select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val recall = (exact intersect approx).size.toDouble / exact.size
+      info(f"persisted IVF-PQ recall@5 = $recall%.3f (nlist=64, nprobe=20, m=8, shortlist 10k)")
+      assert(recall >= 0.9, f"IVF-PQ recall $recall%.3f below 0.9")
+    }
   }
 
   test("pqAnn recall@5 >= 0.9 vs brute force; shortlist never reads vectors") {

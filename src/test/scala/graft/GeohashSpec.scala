@@ -106,31 +106,32 @@ class GeohashSpec extends SparkTestBase {
   }
 
   test("geohashClusteredWrite + prefix scan: exact rows, directory pruning, inference-proof digits") {
-    val dir = java.nio.file.Files.createTempDirectory("ghspec").toString
-    val pts = SparkEntry.points(spark, sf("sf0.001")).select("o_orderkey", "lat", "lon")
-    Tiling.geohashClusteredWrite(pts, "lat", "lon", dir, precision = 6, prefixLen = 2)
-    val all = Tiling.geohashEncode(pts, "lat", "lon", 6)
-      .select("o_orderkey", "geohash").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    // prefix longer than the partition key: dir equality + row StartsWith
-    val somePrefix = all.values.head.take(3)
-    val scan = Tiling.geohashPrefixScan(spark, dir, somePrefix, prefixLen = 2)
-    val got = scan.select("o_orderkey").collect().map(_.getLong(0)).toSet
-    val want = all.filter(_._2.startsWith(somePrefix)).keySet
-    assert(got == want && got.nonEmpty)
-    val planStr = scan.queryExecution.executedPlan.toString
-    assert(planStr.contains("PartitionFilters") && planStr.contains("gh_prefix"),
-      s"no partition filter in plan:\n$planStr")
-    // prefix SHORTER than the partition key: startsWith dir pruning
-    val short = somePrefix.take(1)
-    val gotShort = Tiling.geohashPrefixScan(spark, dir, short, prefixLen = 2)
-      .select("o_orderkey").collect().map(_.getLong(0)).toSet
-    assert(gotShort == all.filter(_._2.startsWith(short)).keySet)
-    // digit-only partition tokens survive the read as strings (no int
-    // inference): every returned geohash still has 6 chars
-    val ghs = Tiling.geohashPrefixScan(spark, dir, short, prefixLen = 2)
-      .select("gh_prefix").distinct().collect().map(_.getString(0))
-    assert(ghs.forall(_.length == 2), s"partition tokens mangled: ${ghs.toSeq}")
+    withTempDir("ghspec") { dir =>
+      val pts = SparkEntry.points(spark, sf("sf0.001")).select("o_orderkey", "lat", "lon")
+      Tiling.geohashClusteredWrite(pts, "lat", "lon", dir, precision = 6, prefixLen = 2)
+      val all = Tiling.geohashEncode(pts, "lat", "lon", 6)
+        .select("o_orderkey", "geohash").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      // prefix longer than the partition key: dir equality + row StartsWith
+      val somePrefix = all.values.head.take(3)
+      val scan = Tiling.geohashPrefixScan(spark, dir, somePrefix, prefixLen = 2)
+      val got = scan.select("o_orderkey").collect().map(_.getLong(0)).toSet
+      val want = all.filter(_._2.startsWith(somePrefix)).keySet
+      assert(got == want && got.nonEmpty)
+      val planStr = scan.queryExecution.executedPlan.toString
+      assert(planStr.contains("PartitionFilters") && planStr.contains("gh_prefix"),
+        s"no partition filter in plan:\n$planStr")
+      // prefix SHORTER than the partition key: startsWith dir pruning
+      val short = somePrefix.take(1)
+      val gotShort = Tiling.geohashPrefixScan(spark, dir, short, prefixLen = 2)
+        .select("o_orderkey").collect().map(_.getLong(0)).toSet
+      assert(gotShort == all.filter(_._2.startsWith(short)).keySet)
+      // digit-only partition tokens survive the read as strings (no int
+      // inference): every returned geohash still has 6 chars
+      val ghs = Tiling.geohashPrefixScan(spark, dir, short, prefixLen = 2)
+        .select("gh_prefix").distinct().collect().map(_.getString(0))
+      assert(ghs.forall(_.length == 2), s"partition tokens mangled: ${ghs.toSeq}")
+    }
   }
 
   test("geohashTrend: window split partitions the in-range rows; pct_change formula holds") {
@@ -177,17 +178,18 @@ class GeohashSpec extends SparkTestBase {
   }
 
   test("geohashRegionScan == driver rect filter over the layout (sf0.001)") {
-    val dir = java.nio.file.Files.createTempDirectory("ghregion").toString
-    val pts = SparkEntry.points(spark, sf("sf0.001")).select("o_orderkey", "lat", "lon")
-    Tiling.geohashClusteredWrite(pts, "lat", "lon", dir, precision = 6, prefixLen = 2)
-    val (la, lb, lo, hi) = (35.005, 60.005, -10.005, 30.005)
-    val got = Tiling.geohashRegionScan(spark, dir, la, lb, lo, hi)
-      .select("o_orderkey").collect().map(_.getLong(0)).toSet
-    val want = pts.collect()
-      .filter(r => r.getDouble(1) >= la && r.getDouble(1) <= lb &&
-        r.getDouble(2) >= lo && r.getDouble(2) <= hi)
-      .map(_.getLong(0)).toSet
-    assert(got == want && got.nonEmpty)
+    withTempDir("ghregion") { dir =>
+      val pts = SparkEntry.points(spark, sf("sf0.001")).select("o_orderkey", "lat", "lon")
+      Tiling.geohashClusteredWrite(pts, "lat", "lon", dir, precision = 6, prefixLen = 2)
+      val (la, lb, lo, hi) = (35.005, 60.005, -10.005, 30.005)
+      val got = Tiling.geohashRegionScan(spark, dir, la, lb, lo, hi)
+        .select("o_orderkey").collect().map(_.getLong(0)).toSet
+      val want = pts.collect()
+        .filter(r => r.getDouble(1) >= la && r.getDouble(1) <= lb &&
+          r.getDouble(2) >= lo && r.getDouble(2) <= hi)
+        .map(_.getLong(0)).toSet
+      assert(got == want && got.nonEmpty)
+    }
   }
 
   test("edge clamps: lat=90 / lon=180 land in the last cell, known vector checks out") {

@@ -276,26 +276,27 @@ class GraphsSpec extends SparkTestBase {
     } yield (i, j)).toDF("id_a", "id_b").localCheckpoint()
     val oneShot = Graphs.pageRankScaled(edges, 3)
       .as[(Long, Long)].collect().toMap
-    val state = java.nio.file.Files.createTempDirectory("pr_state_").toString
-    // crash after one committed round
-    Graphs.pageRankCheckpointed(edges, 3, state, maxRoundsThisRun = 1)
-    assert(ResumableWrite.committedPartitions(state) == Set("1"))
-    // resume: only rounds 2 and 3 commit, and the result matches one-shot
-    val resumed = Graphs.pageRankCheckpointed(edges, 3, state)
-      .as[(Long, Long)].collect().toMap
-    assert(resumed == oneShot)
-    assert(ResumableWrite.committedPartitions(state) == Set("1", "2", "3"))
-    assert(ResumableWrite.readManifest(state).map(_.runId).sorted ==
-      Seq("round_1", "round_2", "round_3"))
-    // every intermediate round stays readable (iteration time-travel)
-    val r1 = ResumableWrite.readCommitted(spark, state, "round")
-      .where(col("round") === 1).count()
-    assert(r1 == oneShot.size)
-    // idempotent re-run: nothing new commits, same answer
-    val again = Graphs.pageRankCheckpointed(edges, 3, state)
-      .as[(Long, Long)].collect().toMap
-    assert(again == oneShot)
-    assert(ResumableWrite.readManifest(state).size == 3)
+    withTempDir("pr_state_") { state =>
+      // crash after one committed round
+      Graphs.pageRankCheckpointed(edges, 3, state, maxRoundsThisRun = 1)
+      assert(ResumableWrite.committedPartitions(state) == Set("1"))
+      // resume: only rounds 2 and 3 commit, and the result matches one-shot
+      val resumed = Graphs.pageRankCheckpointed(edges, 3, state)
+        .as[(Long, Long)].collect().toMap
+      assert(resumed == oneShot)
+      assert(ResumableWrite.committedPartitions(state) == Set("1", "2", "3"))
+      assert(ResumableWrite.readManifest(state).map(_.runId).sorted ==
+        Seq("round_1", "round_2", "round_3"))
+      // every intermediate round stays readable (iteration time-travel)
+      val r1 = ResumableWrite.readCommitted(spark, state, "round")
+        .where(col("round") === 1).count()
+      assert(r1 == oneShot.size)
+      // idempotent re-run: nothing new commits, same answer
+      val again = Graphs.pageRankCheckpointed(edges, 3, state)
+        .as[(Long, Long)].collect().toMap
+      assert(again == oneShot)
+      assert(ResumableWrite.readManifest(state).size == 3)
+    }
   }
 
   test("kCore: hand-checked K5-with-tail and the empty-core case") {

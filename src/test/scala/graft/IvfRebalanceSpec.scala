@@ -39,167 +39,172 @@ class IvfRebalanceSpec extends SparkTestBase {
   private def dim = emb.select(col("embedding")).head.getSeq[Float](0).length
 
   test("drifted appends trip the skew policy; rebuild restores balance, recall and pruning") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_drift").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 32)
-    val (max0, med0, _) = Similarity.ivfListStats(spark, idx)
-    assert(max0 <= 4.0 * med0,
-      s"fresh index should start balanced: max=$max0 median=$med0")
-    assert(!Similarity.maybeRebalanceIvfIndex(spark, idx, nlist = 32),
-      "balanced index must not trigger a rebuild")
+    withTempDir("ivf_drift") { idx =>
+      Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 32)
+      val (max0, med0, _) = Similarity.ivfListStats(spark, idx)
+      assert(max0 <= 4.0 * med0,
+        s"fresh index should start balanced: max=$max0 median=$med0")
+      assert(!Similarity.maybeRebalanceIvfIndex(spark, idx, nlist = 32),
+        "balanced index must not trigger a rebuild")
 
-    val n = emb.count()
-    val drifted = driftedWave(1000000L, 2 * n, dim)
-    // explicit lifecycle under test here: suppress the in-append policy
-    assert(!Similarity.appendToIvfIndex(drifted, "vec_id", "embedding", idx,
-      autoRebalance = false))
+      val n = emb.count()
+      val drifted = driftedWave(1000000L, 2 * n, dim)
+      // explicit lifecycle under test here: suppress the in-append policy
+      assert(!Similarity.appendToIvfIndex(drifted, "vec_id", "embedding", idx,
+        autoRebalance = false))
 
-    val (max1, med1, _) = Similarity.ivfListStats(spark, idx)
-    assert(max1 > 4.0 * med1,
-      s"drifted appends must skew the lists: max=$max1 median=$med1")
-    assert(Similarity.maybeRebalanceIvfIndex(spark, idx, nlist = 32),
-      "skewed index must trigger the rebuild")
+      val (max1, med1, _) = Similarity.ivfListStats(spark, idx)
+      assert(max1 > 4.0 * med1,
+        s"drifted appends must skew the lists: max=$max1 median=$med1")
+      assert(Similarity.maybeRebalanceIvfIndex(spark, idx, nlist = 32),
+        "skewed index must trigger the rebuild")
 
-    val (max2, med2, _) = Similarity.ivfListStats(spark, idx)
-    info(s"list skew: fresh $max0/$med0 -> drifted $max1/$med1 -> rebuilt $max2/$med2")
-    assert(max2 <= max1 / 2,
-      s"rebuild must split the hot list: drifted max=$max1 rebuilt max=$max2")
+      val (max2, med2, _) = Similarity.ivfListStats(spark, idx)
+      info(s"list skew: fresh $max0/$med0 -> drifted $max1/$med1 -> rebuilt $max2/$med2")
+      assert(max2 <= max1 / 2,
+        s"rebuild must split the hot list: drifted max=$max1 rebuilt max=$max2")
 
-    // the versioned root after maintenance: exactly one version dir,
-    // `_current` naming it, no legacy flat dirs, no lock left behind
-    val root = new java.io.File(idx)
-    val vdirs = root.listFiles().filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-    assert(vdirs.length == 1, s"one live version expected: ${root.listFiles().mkString(",")}")
-    val cur = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(idx, "_current"))).trim
-    assert(cur == vdirs.head.getName, s"_current=$cur vs dir=${vdirs.head.getName}")
-    assert(!new java.io.File(idx, "lists").exists(), "legacy flat layout must be swept")
-    assert(WriterLock.holder(idx).isEmpty, "maintenance must release the writer lock")
+      // the versioned root after maintenance: exactly one version dir,
+      // `_current` naming it, no legacy flat dirs, no lock left behind
+      val root = new java.io.File(idx)
+      val vdirs = root.listFiles().filter(f => f.isDirectory && f.getName.matches("v\\d+"))
+      assert(vdirs.length == 1, s"one live version expected: ${root.listFiles().mkString(",")}")
+      val cur = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(idx, "_current"))).trim
+      assert(cur == vdirs.head.getName, s"_current=$cur vs dir=${vdirs.head.getName}")
+      assert(!new java.io.File(idx, "lists").exists(), "legacy flat layout must be swept")
+      assert(WriterLock.holder(idx).isEmpty, "maintenance must release the writer lock")
 
-    // the rebuilt index still answers: recall@5 vs brute force over the
-    // GROWN corpus, probes still partition-pruned
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-      .unionByName(drifted)
-      .localCheckpoint()
-    val queries = 0L until 20L
-    val exact = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", queries, 5)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val q = Similarity.queryIvf(spark, idx,
-      corpus.where(col("vec_id") < 20), "vec_id", "embedding", k = 5, nprobe = 18)
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list#"),
-      s"rebuilt index must still probe partition-pruned, got:\n$plan")
-    val approx = q.select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
-    info(f"post-rebalance IVF recall@5 = $recall%.3f")
-    assert(recall >= 0.9, f"recall $recall%.3f below 0.9 after rebalance")
+      // the rebuilt index still answers: recall@5 vs brute force over the
+      // GROWN corpus, probes still partition-pruned
+      val corpus = emb.select(col("vec_id"), col("embedding"))
+        .unionByName(drifted)
+        .localCheckpoint()
+      val queries = 0L until 20L
+      val exact = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", queries, 5)
+        .select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val q = Similarity.queryIvf(spark, idx,
+        corpus.where(col("vec_id") < 20), "vec_id", "embedding", k = 5, nprobe = 18)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("list#"),
+        s"rebuilt index must still probe partition-pruned, got:\n$plan")
+      val approx = q.select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val recall = (exact intersect approx).size.toDouble / exact.size
+      info(f"post-rebalance IVF recall@5 = $recall%.3f")
+      assert(recall >= 0.9, f"recall $recall%.3f below 0.9 after rebalance")
+    }
   }
 
   test("sustained drifted waves auto-heal: the in-append policy rebalances each time it trips") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_auto").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 32)
-    val n = emb.count()
-    var waves = Seq.empty[org.apache.spark.sql.DataFrame]
-    var rebalances = 0
-    // three drifted waves, each 1x the base corpus, all near the same
-    // new region: with NO lifecycle calls beyond the append itself, the
-    // policy must fire at least once and keep gross skew bounded. (A
-    // single rebuild may land a hair over the 4x policy line — the next
-    // wave's policy check then fires again — so the per-wave bound here
-    // is 2x the policy threshold, not the threshold itself.)
-    for (w <- 0 until 3) {
-      val wave = driftedWave(2000000L + w * 100000L, n, dim)
-      waves :+= wave
-      if (Similarity.appendToIvfIndex(wave, "vec_id", "embedding", idx)) rebalances += 1
-      val (mx, md, _) = Similarity.ivfListStats(spark, idx)
-      info(s"wave $w: max=$mx median=$md")
-      assert(mx <= 8.0 * md,
-        s"wave $w left gross skew despite the auto policy: max=$mx median=$md")
-    }
-    assert(rebalances >= 1, "sustained drift must trigger at least one auto-rebalance")
-    info(s"auto-rebalances across 3 drifted waves: $rebalances")
+    withTempDir("ivf_auto") { idx =>
+      Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 32)
+      val n = emb.count()
+      var waves = Seq.empty[org.apache.spark.sql.DataFrame]
+      var rebalances = 0
+      // three drifted waves, each 1x the base corpus, all near the same
+      // new region: with NO lifecycle calls beyond the append itself, the
+      // policy must fire at least once and keep gross skew bounded. (A
+      // single rebuild may land a hair over the 4x policy line — the next
+      // wave's policy check then fires again — so the per-wave bound here
+      // is 2x the policy threshold, not the threshold itself.)
+      for (w <- 0 until 3) {
+        val wave = driftedWave(2000000L + w * 100000L, n, dim)
+        waves :+= wave
+        if (Similarity.appendToIvfIndex(wave, "vec_id", "embedding", idx)) rebalances += 1
+        val (mx, md, _) = Similarity.ivfListStats(spark, idx)
+        info(s"wave $w: max=$mx median=$md")
+        assert(mx <= 8.0 * md,
+          s"wave $w left gross skew despite the auto policy: max=$mx median=$md")
+      }
+      assert(rebalances >= 1, "sustained drift must trigger at least one auto-rebalance")
+      info(s"auto-rebalances across 3 drifted waves: $rebalances")
 
-    // recall on the fully grown corpus through the auto-maintained index
-    val corpus = waves.foldLeft(emb.select(col("vec_id"), col("embedding")))(_ unionByName _)
-      .localCheckpoint()
-    val exact = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", 0L until 20L, 5)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.queryIvf(spark, idx,
-      corpus.where(col("vec_id") < 20), "vec_id", "embedding", k = 5, nprobe = 18)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
-    info(f"post-auto-maintenance IVF recall@5 = $recall%.3f")
-    assert(recall >= 0.9, f"recall $recall%.3f below 0.9 after auto maintenance")
+      // recall on the fully grown corpus through the auto-maintained index
+      val corpus = waves.foldLeft(emb.select(col("vec_id"), col("embedding")))(_ unionByName _)
+        .localCheckpoint()
+      val exact = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", 0L until 20L, 5)
+        .select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val approx = Similarity.queryIvf(spark, idx,
+        corpus.where(col("vec_id") < 20), "vec_id", "embedding", k = 5, nprobe = 18)
+        .select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val recall = (exact intersect approx).size.toDouble / exact.size
+      info(f"post-auto-maintenance IVF recall@5 = $recall%.3f")
+      assert(recall >= 0.9, f"recall $recall%.3f below 0.9 after auto maintenance")
+    }
   }
 
   test("two writers: append and rebalance fail loudly under a held lock, index untouched") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_lock").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 16)
-    val liveBefore = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(idx, "_current"))).trim
-    val rowsBefore = spark.read.parquet(s"$idx/$liveBefore/lists").count()
-    WriterLock.withLock(idx, "maintainer-A") {
-      val ea = intercept[IllegalStateException] {
-        Similarity.appendToIvfIndex(driftedWave(3000000L, 100L, dim),
-          "vec_id", "embedding", idx)
+    withTempDir("ivf_lock") { idx =>
+      Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 16)
+      val liveBefore = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(idx, "_current"))).trim
+      val rowsBefore = spark.read.parquet(s"$idx/$liveBefore/lists").count()
+      WriterLock.withLock(idx, "maintainer-A") {
+        val ea = intercept[IllegalStateException] {
+          Similarity.appendToIvfIndex(driftedWave(3000000L, 100L, dim),
+            "vec_id", "embedding", idx)
+        }
+        assert(ea.getMessage.contains("maintainer-A"), ea.getMessage)
+        val er = intercept[IllegalStateException] {
+          Similarity.rebalanceIvfIndex(spark, idx)
+        }
+        assert(er.getMessage.contains("maintainer-A"), er.getMessage)
       }
-      assert(ea.getMessage.contains("maintainer-A"), ea.getMessage)
-      val er = intercept[IllegalStateException] {
-        Similarity.rebalanceIvfIndex(spark, idx)
-      }
-      assert(er.getMessage.contains("maintainer-A"), er.getMessage)
+      val liveAfter = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(idx, "_current"))).trim
+      assert(liveAfter == liveBefore, "losing writers must not publish")
+      assert(spark.read.parquet(s"$idx/$liveAfter/lists").count() == rowsBefore,
+        "losing writers must not write rows")
+      // lock released -> maintenance proceeds
+      assert(!Similarity.appendToIvfIndex(emb.limit(10).select(
+        (col("vec_id") + 4000000L).as("vec_id"), col("embedding")),
+        "vec_id", "embedding", idx))
     }
-    val liveAfter = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(idx, "_current"))).trim
-    assert(liveAfter == liveBefore, "losing writers must not publish")
-    assert(spark.read.parquet(s"$idx/$liveAfter/lists").count() == rowsBefore,
-      "losing writers must not write rows")
-    // lock released -> maintenance proceeds
-    assert(!Similarity.appendToIvfIndex(emb.limit(10).select(
-      (col("vec_id") + 4000000L).as("vec_id"), col("embedding")),
-      "vec_id", "embedding", idx))
   }
 
   test("rebalancing an IVF-PQ index fails before writing anything; queryIvfPq still answers") {
-    val idx = java.nio.file.Files.createTempDirectory("ivfpq_rebalance").toString
-    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", idx, nlist = 16)
-    def files: Seq[String] = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
-      try s.iterator().asScala.map(_.toString).toSeq.sorted finally s.close()
+    withTempDir("ivfpq_rebalance") { idx =>
+      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", idx, nlist = 16)
+      def files: Seq[String] = {
+        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
+        try s.iterator().asScala.map(_.toString).toSeq.sorted finally s.close()
+      }
+      val before = files
+      val e = intercept[IllegalArgumentException](Similarity.rebalanceIvfIndex(spark, idx))
+      assert(e.getMessage.contains("codebook"), e.getMessage)
+      assert(files == before, "a refused rebalance must not write or delete anything")
+      assert(WriterLock.holder(idx).isEmpty, "a refused rebalance must release the writer lock")
+      val got = Similarity.queryIvfPq(spark, idx,
+        emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 3)
+      assert(got.count() == 15, "the index must still answer")
     }
-    val before = files
-    val e = intercept[IllegalArgumentException](Similarity.rebalanceIvfIndex(spark, idx))
-    assert(e.getMessage.contains("codebook"), e.getMessage)
-    assert(files == before, "a refused rebalance must not write or delete anything")
-    assert(WriterLock.holder(idx).isEmpty, "a refused rebalance must release the writer lock")
-    val got = Similarity.queryIvfPq(spark, idx,
-      emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 3)
-    assert(got.count() == 15, "the index must still answer")
   }
 
   test("an unpublished orphan version (crash mid-rebuild) is invisible to readers and swept") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_orphan").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 16)
-    val live = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(idx, "_current"))).trim
-    // fake a crashed rebuild: a half-written higher version dir, never published
-    val orphan = new java.io.File(idx, "v999")
-    assert(orphan.mkdirs())
-    java.nio.file.Files.write(orphan.toPath.resolve("junk"), Array[Byte](1, 2, 3))
-    val got = Similarity.queryIvf(spark, idx,
-      emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 3)
-      .count()
-    assert(got == 15, s"readers must resolve through _current, got $got rows")
-    // next locked maintenance sweeps the orphan and reuses nothing of it
-    Similarity.appendToIvfIndex(emb.limit(5).select(
-      (col("vec_id") + 5000000L).as("vec_id"), col("embedding")),
-      "vec_id", "embedding", idx): Unit
-    assert(!orphan.exists(), "locked maintenance must sweep orphan versions")
-    val liveNow = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(idx, "_current"))).trim
-    assert(liveNow == live, "an append does not publish a new version")
+    withTempDir("ivf_orphan") { idx =>
+      Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 16)
+      val live = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(idx, "_current"))).trim
+      // fake a crashed rebuild: a half-written higher version dir, never published
+      val orphan = new java.io.File(idx, "v999")
+      assert(orphan.mkdirs())
+      java.nio.file.Files.write(orphan.toPath.resolve("junk"), Array[Byte](1, 2, 3))
+      val got = Similarity.queryIvf(spark, idx,
+        emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 3)
+        .count()
+      assert(got == 15, s"readers must resolve through _current, got $got rows")
+      // next locked maintenance sweeps the orphan and reuses nothing of it
+      Similarity.appendToIvfIndex(emb.limit(5).select(
+        (col("vec_id") + 5000000L).as("vec_id"), col("embedding")),
+        "vec_id", "embedding", idx): Unit
+      assert(!orphan.exists(), "locked maintenance must sweep orphan versions")
+      val liveNow = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(idx, "_current"))).trim
+      assert(liveNow == live, "an append does not publish a new version")
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -96,44 +94,45 @@ class PipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("plan shape: S2PipJoinExec, no Generate or hash join, band pushed, pruned read") {
-    val dir = Files.createTempDirectory("pip-plan").toString
-    spark.range(0, 2000, 1, 2)
-      .select(col("id").as("key"),
-        (col("id") % 180 - 90.0 + 0.5).as("lat"),
-        (col("id") * 7 % 360 - 180.0 + 0.5).as("lon"),
-        lit("unused").as("payload"))
-      .write.mode("overwrite").parquet(dir)
+    withTempDir("pip-plan") { dir =>
+      spark.range(0, 2000, 1, 2)
+        .select(col("id").as("key"),
+          (col("id") % 180 - 90.0 + 0.5).as("lat"),
+          (col("id") * 7 % 360 - 180.0 + 0.5).as("lon"),
+          lit("unused").as("payload"))
+        .write.mode("overwrite").parquet(dir)
 
-    val joined = SpatialJoin.pipJoin(spark.read.parquet(dir), "lat", "lon", SparkEntryRegions.rects)
-    assert(joined.columns.toSeq == Seq("key", "lat", "lon", "payload", "region_id"))
-    val df = joined.select("region_id", "key")
-    assert(df.collect().nonEmpty)
-    val plan = df.queryExecution.executedPlan
-    def all[T](pf: PartialFunction[SparkPlan, T]): Seq[T] = collectWithSubqueries(plan)(pf)
+      val joined = SpatialJoin.pipJoin(spark.read.parquet(dir), "lat", "lon", SparkEntryRegions.rects)
+      assert(joined.columns.toSeq == Seq("key", "lat", "lon", "payload", "region_id"))
+      val df = joined.select("region_id", "key")
+      assert(df.collect().nonEmpty)
+      val plan = df.queryExecution.executedPlan
+      def all[T](pf: PartialFunction[SparkPlan, T]): Seq[T] = collectWithSubqueries(plan)(pf)
 
-    assert(all { case e: S2PipJoinExec => e }.size == 1, s"no S2PipJoinExec in:\n$plan")
-    assert(all { case g: GenerateExec => g }.isEmpty, s"GenerateExec in:\n$plan")
-    assert(all { case j: BroadcastHashJoinExec => j }.isEmpty, s"BroadcastHashJoinExec in:\n$plan")
+      assert(all { case e: S2PipJoinExec => e }.size == 1, s"no S2PipJoinExec in:\n$plan")
+      assert(all { case g: GenerateExec => g }.isEmpty, s"GenerateExec in:\n$plan")
+      assert(all { case j: BroadcastHashJoinExec => j }.isEmpty, s"BroadcastHashJoinExec in:\n$plan")
 
-    val scans = all { case s: FileSourceScanExec => s }
-    assert(scans.size == 1, s"expected one scan in:\n$plan")
-    val meta = scans.head.metadata
-    val pushed = meta("PushedFilters")
-    assert(pushed.contains("GreaterThanOrEqual(lat,") && pushed.contains("LessThanOrEqual(lat,"),
-      s"lat band not pushed: $pushed")
-    val readSchema = meta("ReadSchema")
-    assert(readSchema.contains("key") && readSchema.contains("lat") && readSchema.contains("lon"))
-    assert(!readSchema.contains("payload"), s"payload read: $readSchema")
+      val scans = all { case s: FileSourceScanExec => s }
+      assert(scans.size == 1, s"expected one scan in:\n$plan")
+      val meta = scans.head.metadata
+      val pushed = meta("PushedFilters")
+      assert(pushed.contains("GreaterThanOrEqual(lat,") && pushed.contains("LessThanOrEqual(lat,"),
+        s"lat band not pushed: $pushed")
+      val readSchema = meta("ReadSchema")
+      assert(readSchema.contains("key") && readSchema.contains("lat") && readSchema.contains("lon"))
+      assert(!readSchema.contains("payload"), s"payload read: $readSchema")
 
-    // one codegen stage from the scan through the probe; not so without codegen
-    val broken = ProbeStage.violation(plan, partialAgg = false)
-    assert(broken.isEmpty, broken)
-    val off = withWholeStageCodegen(on = false) {
-      val offDf = SpatialJoin.pipJoin(spark.read.parquet(dir), "lat", "lon",
-        SparkEntryRegions.rects).select("region_id", "key")
-      offDf.collect()
-      ProbeStage.violation(offDf.queryExecution.executedPlan, partialAgg = false)
+      // one codegen stage from the scan through the probe; not so without codegen
+      val broken = ProbeStage.violation(plan, partialAgg = false)
+      assert(broken.isEmpty, broken)
+      val off = withWholeStageCodegen(on = false) {
+        val offDf = SpatialJoin.pipJoin(spark.read.parquet(dir), "lat", "lon",
+          SparkEntryRegions.rects).select("region_id", "key")
+        offDf.collect()
+        ProbeStage.violation(offDf.queryExecution.executedPlan, partialAgg = false)
+      }
+      assert(off.nonEmpty, "the codegen contract holds with whole-stage codegen off")
     }
-    assert(off.nonEmpty, "the codegen contract holds with whole-stage codegen off")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
@@ -307,44 +305,45 @@ class PolygonTableJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("plan shape: each polygon-table join probes a broadcast cell table, points never shuffle") {
     val dir = sf("sf0.001")
-    val pq = Files.createTempDirectory("poly-plan").toString
-    SparkEntry.points(spark, dir).select("o_orderkey", "lat", "lon")
-      .write.mode("overwrite").parquet(pq)
-    val pts = spark.read.parquet(pq)
-    val joins = Seq(
-      "polygonPipJoin" -> SpatialJoin.polygonPipJoin(pts, "lat", "lon",
-        SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6),
-      "multiPolygonPipJoin" -> SpatialJoin.multiPolygonPipJoin(pts, "lat", "lon",
-        SparkEntry.holedPolyTable(spark, dir), "region_id", "loop_lats", "loop_lons", level = 6),
-      "polygonPipJoinAdaptive" -> SpatialJoin.polygonPipJoinAdaptive(pts, "lat", "lon",
-        SparkEntry.hexPolyVarTable(spark, dir), "region_id", "lats", "lons",
-        targetCells = 32, quantizeLevels = Seq(4, 6, 8)),
-      "zonalStats" -> SpatialJoin.zonalStats(pts, "lat", "lon", "o_orderkey",
-        SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6))
-    for ((name, df) <- joins) {
-      assert(df.collect().nonEmpty, s"$name: empty result")
-      val plan = df.queryExecution.executedPlan
-      val probes = collectWithSubqueries(plan) { case e: S2PolygonTableJoinExec => e }
-      assert(probes.size == 1, s"$name: expected one probe exec in:\n$plan")
-      val pointsSide = probes.head.left
-      def all[T](pf: PartialFunction[SparkPlan, T]): Seq[T] = collect(pointsSide)(pf)
-      assert(all { case j: BroadcastHashJoinExec => j; case j: ShuffledHashJoinExec => j;
-        case j: SortMergeJoinExec => j; case g: GenerateExec => g }.isEmpty,
-        s"$name: join or Generate on the points side:\n$plan")
-      assert(all { case e: Exchange => e; case q: QueryStageExec => q }.isEmpty,
-        s"$name: Exchange between the points scan and the probe:\n$plan")
-      assert(all { case s: FileSourceScanExec => s }.size == 1, s"$name: no points scan:\n$plan")
-      // one codegen stage: points scan -> probe (-> zonalStats' partial aggregate)
-      val broken = ProbeStage.violation(plan, partialAgg = name == "zonalStats")
-      assert(broken.isEmpty, s"$name: $broken")
+    withTempDir("poly-plan") { pq =>
+      SparkEntry.points(spark, dir).select("o_orderkey", "lat", "lon")
+        .write.mode("overwrite").parquet(pq)
+      val pts = spark.read.parquet(pq)
+      val joins = Seq(
+        "polygonPipJoin" -> SpatialJoin.polygonPipJoin(pts, "lat", "lon",
+          SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6),
+        "multiPolygonPipJoin" -> SpatialJoin.multiPolygonPipJoin(pts, "lat", "lon",
+          SparkEntry.holedPolyTable(spark, dir), "region_id", "loop_lats", "loop_lons", level = 6),
+        "polygonPipJoinAdaptive" -> SpatialJoin.polygonPipJoinAdaptive(pts, "lat", "lon",
+          SparkEntry.hexPolyVarTable(spark, dir), "region_id", "lats", "lons",
+          targetCells = 32, quantizeLevels = Seq(4, 6, 8)),
+        "zonalStats" -> SpatialJoin.zonalStats(pts, "lat", "lon", "o_orderkey",
+          SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6))
+      for ((name, df) <- joins) {
+        assert(df.collect().nonEmpty, s"$name: empty result")
+        val plan = df.queryExecution.executedPlan
+        val probes = collectWithSubqueries(plan) { case e: S2PolygonTableJoinExec => e }
+        assert(probes.size == 1, s"$name: expected one probe exec in:\n$plan")
+        val pointsSide = probes.head.left
+        def all[T](pf: PartialFunction[SparkPlan, T]): Seq[T] = collect(pointsSide)(pf)
+        assert(all { case j: BroadcastHashJoinExec => j; case j: ShuffledHashJoinExec => j;
+          case j: SortMergeJoinExec => j; case g: GenerateExec => g }.isEmpty,
+          s"$name: join or Generate on the points side:\n$plan")
+        assert(all { case e: Exchange => e; case q: QueryStageExec => q }.isEmpty,
+          s"$name: Exchange between the points scan and the probe:\n$plan")
+        assert(all { case s: FileSourceScanExec => s }.size == 1, s"$name: no points scan:\n$plan")
+        // one codegen stage: points scan -> probe (-> zonalStats' partial aggregate)
+        val broken = ProbeStage.violation(plan, partialAgg = name == "zonalStats")
+        assert(broken.isEmpty, s"$name: $broken")
+      }
+      val off = withWholeStageCodegen(on = false) {
+        val df = SpatialJoin.zonalStats(pts, "lat", "lon", "o_orderkey",
+          SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6)
+        df.collect()
+        ProbeStage.violation(df.queryExecution.executedPlan, partialAgg = true)
+      }
+      assert(off.nonEmpty, "the codegen contract holds with whole-stage codegen off")
     }
-    val off = withWholeStageCodegen(on = false) {
-      val df = SpatialJoin.zonalStats(pts, "lat", "lon", "o_orderkey",
-        SparkEntry.hexPolyTable(spark, dir), "region_id", "lats", "lons", level = 6)
-      df.collect()
-      ProbeStage.violation(df.queryExecution.executedPlan, partialAgg = true)
-    }
-    assert(off.nonEmpty, "the codegen contract holds with whole-stage codegen off")
   }
 
   /** A CCW hexagon of radius `r` degrees around (clat, clon), as perfbench's

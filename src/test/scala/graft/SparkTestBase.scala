@@ -14,6 +14,14 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.sharedSession
   def sf(name: String): String = s"/root/testdata/$name"
 
+  /** Runs `body` on a fresh temp directory whose name starts with
+    * `prefix`; the directory and everything in it are deleted when `body`
+    * returns or throws. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString) finally graft.operators.ResumableWrite.deleteRecursively(dir)
+  }
+
   /** Runs `body` with whole-stage codegen on or off, then restores the
     * session's setting. */
   def withWholeStageCodegen[T](on: Boolean)(body: => T): T = {

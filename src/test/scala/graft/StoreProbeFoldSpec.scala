@@ -18,12 +18,6 @@ class StoreProbeFoldSpec extends SparkTestBase {
   private def text(tag: String) =
     (1 to 12).map(i => s"$tag$i word$i token$i").mkString(" ")
 
-  /** Runs `body` on a fresh store directory, deleted afterwards. */
-  private def withStore[T](prefix: String)(body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    try body(dir.toString) finally graft.operators.ResumableWrite.deleteRecursively(dir)
-  }
-
   /** Runs one micro-batch of `fold` and returns the rows it emitted. */
   private def step(fold: graft.streaming.StoreProbeFold, batch: DataFrame,
                    batchId: Long): Seq[Row] = {
@@ -48,7 +42,7 @@ class StoreProbeFoldSpec extends SparkTestBase {
 
   test("text stream: re-sending an exact-duplicate pair emits it once, with no self-pair") {
     import spark.implicits._
-    withStore("spf_text") { dir =>
+    withTempDir("spf_text") { dir =>
       StreamingDedup.initStore(spark, dir, Seq((1L, text("a"))).toDF("doc_id", "text"),
         "doc_id", "text")
       val fold = StreamingDedup.fold(dir, "doc_id", "text", 32, 16, 3)
@@ -62,7 +56,7 @@ class StoreProbeFoldSpec extends SparkTestBase {
     import spark.implicits._
     // hand-built (__vid, band = frame position, bucket = fingerprint) rows:
     // 14 and 15 share only position 0; 16 shares positions 0 and 2 with 14
-    withStore("spf_video") { dir =>
+    withTempDir("spf_video") { dir =>
       val fold = StreamingVideoDedup.fold(dir, "k", every = 2, minShared = 2)
         .copy(project = identity)
       fold.seed(Seq((1L, 0, 555L), (1L, 2, 556L)).toDF("__vid", "band", "bucket"))
@@ -80,7 +74,7 @@ class StoreProbeFoldSpec extends SparkTestBase {
 
   test("a replayed micro-batch emits its first attempt's pairs; re-seeding leaves only -1") {
     import spark.implicits._
-    withStore("spf_replay") { dir =>
+    withTempDir("spf_replay") { dir =>
       val corpus = Seq((1L, text("a")), (2L, text("b"))).toDF("doc_id", "text")
       StreamingDedup.initStore(spark, dir, corpus, "doc_id", "text")
       val fold = StreamingDedup.fold(dir, "doc_id", "text", 32, 16, 3)

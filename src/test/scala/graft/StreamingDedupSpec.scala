@@ -31,39 +31,40 @@ class StreamingDedupSpec extends SparkTestBase {
     // batch2: 12=copy of Y (cross-batch streamed-streamed), 13=copy of B
     val batch2 = Seq((12L, text("y")), (13L, text("b")))
 
-    val storeDir = java.nio.file.Files.createTempDirectory("sd_spec").toString
-    StreamingDedup.initStore(spark, storeDir, corpus, "doc_id", "text")
+    withTempDir("sd_spec") { storeDir =>
+      StreamingDedup.initStore(spark, storeDir, corpus, "doc_id", "text")
 
-    val perBatch = scala.collection.mutable.Map[Long, Set[(Long, Long)]]()
-    val input = MemoryStream[(Long, String)]
-    val q = StreamingDedup.nearDupStream(
-      input.toDF().toDF("doc_id", "text"), storeDir, "doc_id", "text",
-      (pairs, id) => perBatch.synchronized {
-        perBatch(id) = pairs.select("id_a", "id_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      })
-    try {
-      input.addData(batch1)
-      q.processAllAvailable()
-      input.addData(batch2)
-      q.processAllAvailable()
-    } finally q.stop()
+      val perBatch = scala.collection.mutable.Map[Long, Set[(Long, Long)]]()
+      val input = MemoryStream[(Long, String)]
+      val q = StreamingDedup.nearDupStream(
+        input.toDF().toDF("doc_id", "text"), storeDir, "doc_id", "text",
+        (pairs, id) => perBatch.synchronized {
+          perBatch(id) = pairs.select("id_a", "id_b").collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+        })
+      try {
+        input.addData(batch1)
+        q.processAllAvailable()
+        input.addData(batch2)
+        q.processAllAvailable()
+      } finally q.stop()
 
-    assert(perBatch(0L) === Set((1L, 10L), (14L, 15L)))
-    assert(perBatch(1L) === Set((11L, 12L), (2L, 13L)))
+      assert(perBatch(0L) === Set((1L, 10L), (14L, 15L)))
+      assert(perBatch(1L) === Set((11L, 12L), (2L, 13L)))
 
-    // store grew: one partition per ingest batch plus the seed
-    // hive partition values read back type-inferred (int) — normalize
-    val sigBatches = spark.read.parquet(s"$storeDir/sigs")
-      .select(col("__ingest_batch").cast("long")).distinct().collect().map(_.getLong(0)).toSet
-    assert(sigBatches === Set(-1L, 0L, 1L))
+      // store grew: one partition per ingest batch plus the seed
+      // hive partition values read back type-inferred (int) — normalize
+      val sigBatches = spark.read.parquet(s"$storeDir/sigs")
+        .select(col("__ingest_batch").cast("long")).distinct().collect().map(_.getLong(0)).toSet
+      assert(sigBatches === Set(-1L, 0L, 1L))
 
-    // one-shot incremental over the same split must agree with the union
-    val oneShot = Dedup.incrementalNearDup(corpus,
-      (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text",
-      minJaccard = 0.9, minEstJaccard = 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(perBatch.values.flatten.toSet === oneShot)
+      // one-shot incremental over the same split must agree with the union
+      val oneShot = Dedup.incrementalNearDup(corpus,
+        (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text",
+        minJaccard = 0.9, minEstJaccard = 0.5)
+        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(perBatch.values.flatten.toSet === oneShot)
+    }
   }
 
   test("batch input is rejected (streaming-only API)") {

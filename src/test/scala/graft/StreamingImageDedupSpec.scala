@@ -37,42 +37,43 @@ class StreamingImageDedupSpec extends SparkTestBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val corpus = ImagePayload.synthesize((1L to 30L).toDF("id"), "id")
-    val storeDir = java.nio.file.Files.createTempDirectory("imgdedup_spec").toString
-    StreamingImageDedup.initStore(spark, storeDir, corpus, "id")
+    withTempDir("imgdedup_spec") { storeDir =>
+      StreamingImageDedup.initStore(spark, storeDir, corpus, "id")
 
-    def patched(key: Long): Array[Byte] =
-      ImagePayload.patchImage(ImagePayload.encodePng(key, 16, 16), 2, 2, 1)
-    // batch 1: a patched copy of corpus image 5 and an unrelated raster;
-    // batch 2: a byte-identical RE-POST of batch 1's patched raster plus a
-    // patched copy of corpus image 10
-    val batch1 = Seq((105L, patched(5L)), (900L, ImagePayload.encodePng(900L, 16, 16)))
-    val batch2 = Seq((205L, patched(5L)), (110L, patched(10L)))
+      def patched(key: Long): Array[Byte] =
+        ImagePayload.patchImage(ImagePayload.encodePng(key, 16, 16), 2, 2, 1)
+      // batch 1: a patched copy of corpus image 5 and an unrelated raster;
+      // batch 2: a byte-identical RE-POST of batch 1's patched raster plus a
+      // patched copy of corpus image 10
+      val batch1 = Seq((105L, patched(5L)), (900L, ImagePayload.encodePng(900L, 16, 16)))
+      val batch2 = Seq((205L, patched(5L)), (110L, patched(10L)))
 
-    val acc = scala.collection.mutable.ArrayBuffer[(Long, Long, Int)]()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(Long, Array[Byte])]
-    val q = StreamingImageDedup.nearDupStream(
-      input.toDF().toDF("id", "bytes"), storeDir, "id",
-      (pairs, _) => acc.synchronized {
-        acc ++= pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      })
-    try {
-      input.addData(batch1)
-      q.processAllAvailable()
-      val afterB1 = acc.map(p => (p._1, p._2)).toSet
-      assert(afterB1 === Set((5L, 105L)), s"batch 1 pairs: $afterB1")
-      input.addData(batch2)
-      q.processAllAvailable()
-    } finally q.stop()
+      val acc = scala.collection.mutable.ArrayBuffer[(Long, Long, Int)]()
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val input = MemoryStream[(Long, Array[Byte])]
+      val q = StreamingImageDedup.nearDupStream(
+        input.toDF().toDF("id", "bytes"), storeDir, "id",
+        (pairs, _) => acc.synchronized {
+          acc ++= pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+        })
+      try {
+        input.addData(batch1)
+        q.processAllAvailable()
+        val afterB1 = acc.map(p => (p._1, p._2)).toSet
+        assert(afterB1 === Set((5L, 105L)), s"batch 1 pairs: $afterB1")
+        input.addData(batch2)
+        q.processAllAvailable()
+      } finally q.stop()
 
-    val pairs = acc.map(p => (p._1, p._2)).toSet
-    assert(pairs === Set((5L, 105L), (5L, 205L), (105L, 205L), (10L, 110L)),
-      s"got $pairs")
-    // the re-post is byte-identical to batch 1's raster: hamming 0, found
-    // via the STORE (batch 1 was already folded in when batch 2 arrived)
-    assert(acc.exists(p => p._1 == 105L && p._2 == 205L && p._3 == 0))
-    // corpus-corpus pairs are never emitted (5 and 10 both sit in the
-    // store; nothing pairs them with each other or any other corpus image)
-    assert(!pairs.exists(p => p._1 <= 30L && p._2 <= 30L))
+      val pairs = acc.map(p => (p._1, p._2)).toSet
+      assert(pairs === Set((5L, 105L), (5L, 205L), (105L, 205L), (10L, 110L)),
+        s"got $pairs")
+      // the re-post is byte-identical to batch 1's raster: hamming 0, found
+      // via the STORE (batch 1 was already folded in when batch 2 arrived)
+      assert(acc.exists(p => p._1 == 105L && p._2 == 205L && p._3 == 0))
+      // corpus-corpus pairs are never emitted (5 and 10 both sit in the
+      // store; nothing pairs them with each other or any other corpus image)
+      assert(!pairs.exists(p => p._1 <= 30L && p._2 <= 30L))
+    }
   }
 }

@@ -14,6 +14,13 @@ class StreamingSpec extends SparkTestBase {
 
   private def ts(minutes: Int): Timestamp = new Timestamp(1700000000000L + minutes * 60000L)
 
+  /** `ts(minutes)` plus `us` microseconds (under one millisecond). */
+  private def atUs(minutes: Int, us: Int): Timestamp = {
+    val t = ts(minutes)
+    t.setNanos(us * 1000)
+    t
+  }
+
   test("watermarked windowed counts over a MemoryStream") {
     val spark0 = spark
     import spark0.implicits._
@@ -76,21 +83,26 @@ class StreamingSpec extends SparkTestBase {
       Event(3, ts(100), 1, "b", 3.0), // > 30 min gap: new session
       Event(4, ts(0), 2, "a", 4.0),
       Event(5, ts(200), 2, "a", 5.0), // new session
-      Event(6, ts(205), 2, "a", 6.0))
+      Event(6, ts(205), 2, "a", 6.0),
+      // 30 min + 500 µs apart, one millisecond-truncated gap of exactly
+      // 30 min: the µs gap test starts a new session
+      Event(7, atUs(0, 300), 3, "a", 7.0),
+      Event(8, atUs(30, 800), 3, "a", 8.0))
 
     val streaming = EventStreams.sessionize(events.toDS(), gapMillis = 30 * 60 * 1000L)
       .collect()
-      .map(s => (s.user_id, s.session_start.getTime, s.n_events, s.total_value))
+      .map(s => (s.user_id, s.session_start, s.session_end, s.n_events, s.total_value))
       .toSet
 
     val batch = EventStreams.sessionizeBatch(events.toDF(), gapMillis = 30 * 60 * 1000L)
       .collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Timestamp]("session_start").getTime,
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Timestamp]("session_start"),
+        r.getAs[Timestamp]("session_end"),
         r.getAs[Long]("n_events").toInt, r.getAs[Double]("total_value")))
       .toSet
 
     assert(streaming == batch)
-    assert(streaming.size == 4)
+    assert(streaming.size == 6)
   }
 
   test("a session spanning two micro-batches is emitted exactly once (event-time timeout)") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.ZOrder
@@ -22,17 +20,18 @@ class ZOrderSpec extends SparkTestBase {
 
   test("pruned read returns exactly the full-scan answer for any box") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("zorder_").toString
-    val df = data(5000).toDF("id", "x", "y")
-    ZOrder.zorderWrite(df, xd, yd, Bits, Coarse, dir)
-    for ((xLo, xHi, yLo, yHi) <- Seq((0.0, 100.0, 0.0, 100.0),
-      (500.0, 700.0, 100.0, 900.0), (1000.0, 1024.0, 1000.0, 1024.0))) {
-      val got = ZOrder.readForBox(spark, dir, xd, yd, Bits, Coarse, xLo, xHi, yLo, yHi)
-        .where(col("x").between(xLo, xHi) && col("y").between(yLo, yHi))
-        .select("id").collect().map(_.getLong(0)).toSet
-      val want = data(5000).filter(p =>
-        p._2 >= xLo && p._2 <= xHi && p._3 >= yLo && p._3 <= yHi).map(_._1).toSet
-      assert(got == want, s"box ($xLo,$xHi,$yLo,$yHi)")
+    withTempDir("zorder_") { dir =>
+      val df = data(5000).toDF("id", "x", "y")
+      ZOrder.zorderWrite(df, xd, yd, Bits, Coarse, dir)
+      for ((xLo, xHi, yLo, yHi) <- Seq((0.0, 100.0, 0.0, 100.0),
+        (500.0, 700.0, 100.0, 900.0), (1000.0, 1024.0, 1000.0, 1024.0))) {
+        val got = ZOrder.readForBox(spark, dir, xd, yd, Bits, Coarse, xLo, xHi, yLo, yHi)
+          .where(col("x").between(xLo, xHi) && col("y").between(yLo, yHi))
+          .select("id").collect().map(_.getLong(0)).toSet
+        val want = data(5000).filter(p =>
+          p._2 >= xLo && p._2 <= xHi && p._3 >= yLo && p._3 <= yHi).map(_._1).toSet
+        assert(got == want, s"box ($xLo,$xHi,$yLo,$yHi)")
+      }
     }
   }
 
@@ -52,13 +51,14 @@ class ZOrderSpec extends SparkTestBase {
 
   test("out-of-range values clamp consistently and are never lost") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("zorder_clamp_").toString
-    val df = Seq((1L, -50.0, 9999.0), (2L, 512.0, 512.0), (3L, 2000.0, -1.0))
-      .toDF("id", "x", "y")
-    ZOrder.zorderWrite(df, xd, yd, Bits, Coarse, dir)
-    // a box reaching the edges must surface the clamped rows
-    val got = ZOrder.readForBox(spark, dir, xd, yd, Bits, Coarse, -100.0, 2100.0, -10.0, 10000.0)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(got == Set(1L, 2L, 3L))
+    withTempDir("zorder_clamp_") { dir =>
+      val df = Seq((1L, -50.0, 9999.0), (2L, 512.0, 512.0), (3L, 2000.0, -1.0))
+        .toDF("id", "x", "y")
+      ZOrder.zorderWrite(df, xd, yd, Bits, Coarse, dir)
+      // a box reaching the edges must surface the clamped rows
+      val got = ZOrder.readForBox(spark, dir, xd, yd, Bits, Coarse, -100.0, 2100.0, -10.0, 10000.0)
+        .select("id").collect().map(_.getLong(0)).toSet
+      assert(got == Set(1L, 2L, 3L))
+    }
   }
 }
