@@ -19,24 +19,21 @@ import graft.sources.GeoJson
 private[graft] object CatalogStreaming {
   import SparkEntry._
 
-  /** The streaming-dedup harness: `seed` a fresh store directory (the
-    * store MUTATES during the run, so never a shared fixture), then run
+  /** The streaming-dedup harness: `seed` a [[scratchStore]], then run
     * `stream(input, storeDir, onBatch)` over a MemoryStream with columns
     * `names` fed `batch1` and then `batch2`; returns the `cols` of every
-    * pair either micro-batch emitted, collected to the driver, so the store
-    * is deleted on return. */
+    * pair either micro-batch emitted. */
   private def twoBatchPairs[T <: Product : TypeTag](
       s: SparkSession, names: Seq[String], batch1: Seq[T], batch2: Seq[T], cols: String*)(
       seed: String => Unit,
-      stream: (DataFrame, String, (DataFrame, Long) => Unit) => StreamingQuery): DataFrame = {
-    import s.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft_stream_dedup")
-    val acc = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
-      seed(store.toString)
+      stream: (DataFrame, String, (DataFrame, Long) => Unit) => StreamingQuery): DataFrame =
+    scratchStore(s, "graft_stream_dedup") { store =>
+      import s.implicits._
+      val acc = scala.collection.mutable.ArrayBuffer[DataFrame]()
+      seed(store)
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val input = MemoryStream[T]
-      val q = stream(input.toDF().toDF(names: _*), store.toString, (pairs, _) => acc.synchronized {
+      val q = stream(input.toDF().toDF(names: _*), store, (pairs, _) => acc.synchronized {
         val emitted = pairs.select(cols.map(col): _*)
         acc += s.createDataFrame(java.util.Arrays.asList(emitted.collect(): _*), emitted.schema)
       })
@@ -46,9 +43,8 @@ private[graft] object CatalogStreaming {
         input.addData(batch2)
         q.processAllAvailable()
       } finally q.stop()
-    } finally ResumableWrite.deleteRecursively(store)
-    acc.reduce(_ unionByName _)
-  }
+      acc.reduce(_ unionByName _)
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -261,11 +257,10 @@ private[graft] object CatalogStreaming {
     // carries an in-batch superseded event per key (within-batch
     // last-wins by seq) plus fresh inserts for keys % 11 == 0; the final
     // table must equal the one simulated merge in the oracle
-    "q_stream_upsert" -> ((s, dir) => {
+    "q_stream_upsert" -> ((s, dir) => scratchStore(s, "graft_stream_upsert") { tmp =>
       import s.implicits._
       val base = points(s, dir)
         .select(col("o_orderkey").cast("long"), col("lat"), col("lon"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_upsert").toString
       Tiling.clusteredWrite(base, "lat", "lon", tmp, coarseLevel = 2)
       def rowsOf(df: DataFrame): Seq[(Long, Double, Double, Long)] =
         df.as[(Long, Double, Double, Long)].collect().toSeq
@@ -295,7 +290,7 @@ private[graft] object CatalogStreaming {
         input.addData(batch2)
         q.processAllAvailable()
       } finally q.stop()
-      s.read.parquet(tmp).select("o_orderkey", "lat", "lon")
+      Tiling.readClustered(s, tmp).select("o_orderkey", "lat", "lon")
     })
   
   )

@@ -321,10 +321,8 @@ private[graft] object CatalogTiling {
     // Spec pins that untouched partition files are byte-identical after).
     // The fixture write is part of the measured op: merge is a mutation,
     // so each invocation starts from a fresh base.
-    "q_merge_upsert" -> ((s, dir) => {
+    "q_merge_upsert" -> ((s, dir) => scratchStore(s, "graft_merge") { tmp =>
       val base = points(s, dir).select(col("o_orderkey").cast("long"), col("lat"), col("lon"))
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_merge_" +
-        java.util.UUID.randomUUID().toString.take(8)
       Tiling.clusteredWrite(base, "lat", "lon", tmp, coarseLevel = 2)
       val upd = orders(s, dir).where(col("o_orderkey") % 7 === 0)
         .select(col("o_orderkey").cast("long"),
@@ -336,7 +334,7 @@ private[graft] object CatalogTiling {
           expr(lonSqlFor("(o_orderkey * 5 + 2)")).as("lon"))
       Tiling.mergeClustered(s, tmp, upd.unionByName(ins), "o_orderkey", "lat", "lon",
         coarseLevel = 2)
-      s.read.parquet(tmp).select("o_orderkey", "lat", "lon")
+      Tiling.readClustered(s, tmp).select("o_orderkey", "lat", "lon")
     }),
 
     // small-file compaction: a 3-batch fragmented clustered layout is
@@ -344,10 +342,8 @@ private[graft] object CatalogTiling {
     // invariant (the layout changes, not the content — same contract as
     // q_bucketed_join), file-count/sort/pruning effects are pinned in
     // TableMaintenanceSpec
-    "q_compact_scan" -> ((s, dir) => {
+    "q_compact_scan" -> ((s, dir) => scratchStore(s, "graft_compact") { tmp =>
       val base = points(s, dir).select(col("o_orderkey").cast("long"), col("lat"), col("lon"))
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_compact_" +
-        java.util.UUID.randomUUID().toString.take(8)
       base
         .withColumn("__leaf", s2_cell_id(col("lat"), col("lon")))
         .withColumn("coarse_tile", s2_token(s2_parent(col("__leaf"), 2)))
@@ -359,7 +355,7 @@ private[graft] object CatalogTiling {
         .sortWithinPartitions("coarse_tile", "__leaf_ord")
         .write.partitionBy("coarse_tile").parquet(tmp)
       Tiling.compactClustered(s, tmp)
-      s.read.parquet(tmp).select("o_orderkey", "lat", "lon")
+      Tiling.readClustered(s, tmp).select("o_orderkey", "lat", "lon")
     }),
 
     // --- covering PIP joins ---

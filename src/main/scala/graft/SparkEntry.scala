@@ -185,6 +185,19 @@ object SparkEntry {
 
   private[graft] val FixtureVersion = "r5a"
 
+  /** For queries whose store MUTATES (so never a shared [[fixture]]): runs
+    * `body` on a fresh store path inside a new temp directory whose name
+    * starts with `prefix`, and returns the rows of the frame it yields
+    * collected to the driver, so the directory is deleted on return. */
+  private[graft] def scratchStore(s: SparkSession, prefix: String)(
+      body: String => DataFrame): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      val df = body(s"$root/store")
+      s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    } finally ResumableWrite.deleteRecursively(root)
+  }
+
   /** q_bloom_index_scan probe set: seven present doc ids + two absent
     * ones (the absent probes prove Bloom false positives never become
     * result rows — only possibly extra files). Shared verbatim by the

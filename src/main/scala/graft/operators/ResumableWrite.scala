@@ -144,9 +144,9 @@ object ResumableWrite {
             input: String = "", maxPartitionsThisRun: Int = Int.MaxValue): Seq[PartitionRecord] = {
     Files.createDirectories(Paths.get(outDir))
     WriterLock.withLock(outDir, s"resumable:$runId") {
-    // idempotent: clear OUR OWN torn temp root from a crashed attempt with
-    // this runId (the lock guarantees no other writer is live here).
-    deleteRecursively(Paths.get(outDir, s"_tmp_$runId"))
+    // clear every crashed run's temp root, whether or not its runId ever
+    // retries (the lock guarantees no other writer is live here)
+    StoreVersions.sweep(outDir)
 
     val done = committedPartitions(outDir)
     // scan 1: column-pruned distinct partition values, each checked in the
@@ -192,6 +192,7 @@ object ResumableWrite {
       } else pending
     val t0 = System.nanoTime()
     observed.write.mode("overwrite").partitionBy("__part").parquet(tmpRoot.toString)
+    StoreVersions.crashPoint(outDir, "written")
     val writeMillis = (System.nanoTime() - t0) / 1000000
 
     val rowCounts: Map[String, Long] =
@@ -219,6 +220,7 @@ object ResumableWrite {
       val finalDir = Paths.get(outDir, s"$partitionCol=${tmpDir.getFileName.toString.stripPrefix("__part=")}")
       deleteRecursively(finalDir)
       Files.move(tmpDir, finalDir, StandardCopyOption.ATOMIC_MOVE)
+      StoreVersions.crashPoint(outDir, s"moved $value")
       val rows = rowCounts.getOrElse(value, 0L)
       val moveMillis = (System.nanoTime() - tMove) / 1000000
       val rec = PartitionRecord(value, rows, dirBytes(finalDir),
@@ -227,6 +229,7 @@ object ResumableWrite {
         // ~1e13-row partitions at ~1e6 ms write passes)
         (writeMillis * (rows.toDouble / totalRows)).toLong + moveMillis, runId, input)
       appendManifest(outDir, rec) // commit point: manifest line makes it durable
+      StoreVersions.crashPoint(outDir, s"committed $value")
       out += rec
     }
     deleteRecursively(tmpRoot)

@@ -361,73 +361,10 @@ object Similarity {
 
   // --- persisted IVF index: build once at ingest, probe partition-pruned ---
 
-  // The index root is VERSIONED: `indexDir/_current` (one line: the live
-  // version directory name) -> `indexDir/v<N>/{centroids,codebook,lists}`.
-  // Every maintenance action (build, rebalance) materializes a COMPLETE
-  // new version directory first and then publishes it with ONE atomic
-  // rename of the `_current` pointer — a crash at any instant leaves
-  // either the old or the new index, never new centroids over old lists
-  // (the round-4 two-rename swap had exactly that torn-state window).
-  // Orphan version dirs left by a crash are swept by the next locked
-  // maintenance action. Readers resolve `_current` per call and never
-  // lock; a reader that raced a rebalance's orphan sweep fails on a
-  // missing file and simply re-runs against the published version.
-
-  private def currentPointer(indexDir: String) =
-    java.nio.file.Paths.get(indexDir, "_current")
-
-  /** The live version directory of a persisted index ("indexDir/vN"), or
-    * `indexDir` itself for a legacy flat layout with no pointer. */
-  private[graft] def resolveIndexDir(indexDir: String): String = {
-    val p = currentPointer(indexDir)
-    if (java.nio.file.Files.exists(p))
-      s"$indexDir/${new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8).trim}"
-    else indexDir
-  }
-
-  /** Next unused version name: one past the max over existing v<N> dirs
-    * (scanning the dirs, not just `_current`, so an unpublished orphan
-    * from a crashed rebuild is never reused before the sweep). */
-  private def nextVersion(indexDir: String): String = {
-    val root = new java.io.File(indexDir)
-    val existing = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(_.getName.drop(1).toLong)
-    s"v${(if (existing.isEmpty) 0L else existing.max) + 1L}"
-  }
-
-  /** Publish `version` as the live index in ONE atomic step: write the
-    * pointer to a unique temp file and ATOMIC_MOVE it onto `_current`
-    * (POSIX rename replaces atomically; on an object store substitute
-    * its atomic-put/CAS primitive). */
-  private def publishVersion(indexDir: String, version: String): Unit = {
-    val tmp = java.nio.file.Paths.get(indexDir,
-      s"_current.tmp.${java.util.UUID.randomUUID}")
-    java.nio.file.Files.write(tmp,
-      version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, currentPointer(indexDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
-
-  /** Delete every version directory except the live one, plus the legacy
-    * flat `centroids`/`codebook`/`lists` dirs once a pointer exists —
-    * the orphans a crash between publish and cleanup (or mid-rebuild)
-    * leaves behind. Caller holds the writer lock. */
-  private def sweepOrphanVersions(indexDir: String): Unit = {
-    val p = currentPointer(indexDir)
-    if (java.nio.file.Files.exists(p)) {
-      val live = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      val root = new java.io.File(indexDir)
-      Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName != live &&
-          (f.getName.matches("v\\d+") ||
-            Set("centroids", "codebook", "lists")(f.getName)))
-        .foreach(f => ResumableWrite.deleteRecursively(f.toPath))
-    }
-  }
+  // The index root is a [[StoreVersions]] store of `v<N>/{centroids,
+  // codebook,lists}`; each maintenance action below is one commit body.
+  // Each public reader resolves the live version ONCE, so a query never
+  // pairs one version's centroids with another's lists.
 
   /** Build a persisted IVF index under `indexDir`: train the spherical
     * k-means coarse quantizer ONCE, assign every row to its nearest
@@ -438,69 +375,73 @@ object Similarity {
     * corpus needs (the ad-hoc [[ivfAnn]] retrains per call and exists for
     * exploratory use only).
     *
-    * Layout (inside the live version dir — see the versioned-root note
-    * above): `centroids` (list, centroid) — nlist small rows — and
-    * `lists/list=<k>/` (id, vec, norm). Holds the index's [[WriterLock]]
-    * with a fresh owner id, like every maintenance action here. */
+    * Layout of a version: `centroids` (list, centroid) — nlist small rows —
+    * and `lists/list=<k>/` (id, vec, norm). */
   def buildIvfIndex(embeddings: DataFrame, idCol: String, vecCol: String,
                     indexDir: String, nlist: Int = 64, iters: Int = 5,
                     trainLimit: Int = 20000): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir)): Unit
-    WriterLock.withLock(indexDir, s"ivf-build:${java.util.UUID.randomUUID()}") {
+    StoreVersions.commit(indexDir, "ivf-build") { (_, next) =>
       val centroids = trainIvfCentroids(embeddings, idCol, vecCol, nlist, iters, trainLimit)
-      val v = nextVersion(indexDir)
-      writeIvfLayout(embeddings, idCol, vecCol, centroids, s"$indexDir/$v")
-      publishVersion(indexDir, v)
-      sweepOrphanVersions(indexDir)
+      writeIvfLayout(ivfRows(embeddings, idCol, vecCol), centroids, indexDir, next)
     }
   }
 
-  /** Write the clustered (centroids + hive-partitioned lists) layout for
-    * GIVEN centroids — shared by [[buildIvfIndex]] and
-    * [[rebalanceIvfIndex]]. */
-  private def writeIvfLayout(df: DataFrame, idCol: String, vecCol: String,
-                             centroids: Array[Array[Double]], indexDir: String): Unit = {
-    val spark = df.sparkSession
+  /** A table's rows as index list rows: (id, vec, norm). */
+  private def ivfRows(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).as("vec"), norm(col(vecCol)).as("norm"))
+
+  /** Write the clustered (centroids + hive-partitioned lists) layout of
+    * list `rows` ([[ivfRows]], plus `codes` on an IVF-PQ index) for GIVEN
+    * centroids into version directory `next` of store `indexDir` — shared
+    * by the builds and [[rebalanceIvfIndex]]. */
+  private def writeIvfLayout(rows: DataFrame, centroids: Array[Array[Double]],
+                             indexDir: String, next: String): Unit = {
+    val spark = rows.sparkSession
     import spark.implicits._
     centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toDF("list", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
+      .coalesce(1).write.mode("overwrite").parquet(s"$next/centroids")
+    StoreVersions.crashPoint(indexDir, "centroids written")
     val assign = assignUdf(spark, centroids)
-    df.select(col(idCol).as("id"), col(vecCol).as("vec"), norm(col(vecCol)).as("norm"))
-      .withColumn("list", assign(col("vec")))
+    rows.withColumn("list", assign(col("vec")))
       .repartition(col("list"))
-      .write.mode("overwrite").partitionBy("list").parquet(s"$indexDir/lists")
+      .write.mode("overwrite").partitionBy("list").parquet(s"$next/lists")
+    StoreVersions.crashPoint(indexDir, "lists written")
   }
 
   /** Append a new batch to a persisted IVF index WITHOUT retraining: rows
-    * are assigned with the STORED centroids and appended to the clustered
-    * layout (dynamic partition append — each batch adds files only to the
-    * list directories it touches). The index-maintenance companion of
-    * [[graft.operators.Dedup.incrementalNearDup]]: daily ingest is
-    * O(batch), never O(corpus). The append itself holds the index's
-    * [[WriterLock]] (fresh owner id — an append racing a rebalance's
-    * publish fails loudly instead of writing into a swept version dir).
+    * are assigned with the STORED centroids (and, on an IVF-PQ index,
+    * encoded with the stored codebook) and added to the lists they land
+    * in. The new version links the live one's files and adds the batch's
+    * files to the list directories it touches, so the append is O(batch),
+    * never O(corpus) — the index-maintenance companion of
+    * [[graft.operators.Dedup.incrementalNearDup]] — and a crashed or
+    * refused append leaves no partial batch in the live index.
     *
     * Centroid drift under sustained appends is handled INSIDE the append
-    * wave by default: after the locked append commits, the drift policy
-    * runs ([[maybeRebalanceIvfIndex]] — threshold-gated, so routine
-    * balanced ingest never pays a rebuild) and the wave's return value
-    * says whether a rebalance ran. Pass `autoRebalance = false` to drive
-    * the [[ivfListStats]] / [[rebalanceIvfIndex]] lifecycle explicitly. */
+    * wave by default: after the append commits, the drift policy runs
+    * ([[maybeRebalanceIvfIndex]] — threshold-gated, so routine balanced
+    * ingest never pays a rebuild) and the wave's return value says whether
+    * a rebalance ran. Pass `autoRebalance = false` to drive the
+    * [[ivfListStats]] / [[rebalanceIvfIndex]] lifecycle explicitly. */
   def appendToIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
                        indexDir: String, autoRebalance: Boolean = true,
                        maxMedianRatio: Double = 4.0, iters: Int = 5,
                        trainLimit: Int = 20000): Boolean = {
     val spark = batch.sparkSession
-    WriterLock.withLock(indexDir, s"ivf-append:${java.util.UUID.randomUUID()}") {
-      sweepOrphanVersions(indexDir) // crash debris from an older maintainer
-      val live = resolveIndexDir(indexDir)
-      val assign = assignUdf(spark, loadCentroids(spark, indexDir))
-      batch
-        .select(col(idCol).as("id"), col(vecCol).as("vec"), norm(col(vecCol)).as("norm"))
-        .withColumn("list", assign(col("vec")))
+    StoreVersions.commit(indexDir, "ivf-append") { (live, next) =>
+      val rows = ivfRows(batch, idCol, vecCol)
+      val coded =
+        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(live, "codebook"))) rows
+        else rows.withColumn("codes", encodeUdf(spark, loadCodebook(spark, live))(col("vec")))
+      val assign = assignUdf(spark, loadCentroids(spark, live))
+      StoreVersions.link(live, next)
+      StoreVersions.crashPoint(indexDir, "linked")
+      coded.withColumn("list", assign(col("vec")))
         .repartition(col("list"))
-        .write.mode("append").partitionBy("list").parquet(s"$live/lists")
+        .write.mode("append").partitionBy("list").parquet(s"$next/lists")
+      StoreVersions.crashPoint(indexDir, "appended")
     }
     // the drift check takes its own lock: the policy read and a triggered
     // rebuild must also exclude concurrent maintainers
@@ -519,15 +460,15 @@ object Similarity {
     * probe pruning (one probed partition carries most of the data). */
   def ivfListStats(spark: org.apache.spark.sql.SparkSession,
                    indexDir: String): (Long, Long, DataFrame) = {
-    val counts = spark.read.parquet(s"${resolveIndexDir(indexDir)}/lists")
+    val counts = spark.read.parquet(s"${StoreVersions.live(indexDir)}/lists")
       .groupBy("list").agg(count(lit(1)).as("n"))
     val sizes = counts.select("n").collect().map(_.getLong(0)).sorted
     require(sizes.nonEmpty, s"ivfListStats: empty index at $indexDir")
     (sizes.last, sizes((sizes.length - 1) / 2), counts)
   }
 
-  /** Re-train and re-assign a persisted IVF index in place — the drift
-    * recovery action. Plain retraining cannot fix append drift: the
+  /** Re-train and re-assign a persisted IVF index — the drift recovery
+    * action. Plain retraining cannot fix append drift: the
     * quantizer's lowest-id seeding never places a centroid among the
     * appended (high-id) rows, so Lloyd parks exactly ONE centroid on a
     * drifted cluster however large it grows. Rebalance therefore seeds
@@ -538,13 +479,8 @@ object Similarity {
     * design-size lists while every already-balanced list keeps its one
     * centroid (a fixed point; existing regions lose no resolution — the
     * rebuilt index grows its list count instead, the natural lifecycle
-    * for a growing corpus). The refined layout is rebuilt into a NEW
-    * version directory and fully materialized BEFORE the single-step
-    * atomic `_current` publish (a crash at any instant leaves the old or
-    * the new index whole, never new centroids over old lists), all under
-    * the index's [[WriterLock]] with a fresh owner id — a concurrent
-    * append or second rebalance fails loudly instead of corrupting the
-    * swap.
+    * for a growing corpus). The refined layout is the next version of the
+    * index, streamed out of the live one.
     *
     * `nlist = 0` (the auto-rebalance default) uses the LIVE index's list
     * count as the design divisor — the occupancy target each rebuild was
@@ -552,66 +488,56 @@ object Similarity {
   def rebalanceIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                         nlist: Int = 0, iters: Int = 5,
                         trainLimit: Int = 20000): Unit =
-    WriterLock.withLock(indexDir, s"ivf-rebalance:${java.util.UUID.randomUUID()}") {
-      rebalanceLocked(spark, indexDir, nlist, iters, trainLimit)
+    StoreVersions.commit(indexDir, "ivf-rebalance") { (live, next) =>
+      // the rebuilt layout holds no PQ codes or codebook, and the sweep
+      // after the publish would delete the live one
+      require(!java.nio.file.Files.exists(java.nio.file.Paths.get(live, "codebook")),
+        s"rebalanceIvfIndex: $indexDir is an IVF-PQ index (its live version holds a " +
+          "codebook); rebalancing would drop its codebook and codes. Rebuild it with " +
+          "buildIvfPqIndex instead")
+      val lists = spark.read.parquet(s"$live/lists")
+      val counts: Array[(Int, Long)] = lists.groupBy("list").agg(count(lit(1)).as("__n"))
+        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      val total = counts.map(_._2).sum
+      require(total > 0, s"rebalanceIvfIndex: empty index at $indexDir")
+      val design = if (nlist > 0) nlist
+        else spark.read.parquet(s"$live/centroids").count().toInt
+      // seed quotas: each existing list receives ceil(size / target) seeds,
+      // where target = total/nlist is the DESIGN occupancy the index was
+      // built for. Balanced lists keep exactly one seed (their existing
+      // neighborhood — a fixed point), while a hot drifted list receives
+      // one seed per target-size slice of its rows, so the rebuilt index
+      // GROWS its list count to give the new region capacity instead of
+      // confiscating centroids from (and degrading recall in) the regions
+      // the index already serves — the list-count lifecycle a growing
+      // corpus needs (nlist here is the target-size divisor, not a cap).
+      val target = math.max(1L, total / design)
+      val seedQuota = counts.map { case (lid, n) => (lid, (n + target - 1) / target, n) }
+      // training sample quotas: proportional to occupancy within trainLimit
+      val trainQuota = counts.map { case (lid, n) =>
+        (lid, math.max(1L, trainLimit.toLong * n / total), n)
+      }
+      import spark.implicits._
+      def evenSelect(quota: Seq[(Int, Long, Long)]): DataFrame = {
+        // per list, the q rows whose id-rank satisfies the classic even-
+        // selection predicate ((rn-1)*q) % n < q — exactly q of n, evenly
+        val qdf = broadcast(quota.toDF("list", "__q", "__n"))
+        val w = Window.partitionBy("list").orderBy("id")
+        lists.select(col("list"), col("id"), col("vec"))
+          .withColumn("__rn", row_number().over(w))
+          .join(qdf, "list")
+          .where(((col("__rn") - 1) * col("__q")) % col("__n") < col("__q"))
+      }
+      val seeds = evenSelect(seedQuota)
+        .orderBy("list", "id").select("vec")
+        .collect().map(r => normalized(r.getSeq[Float](0).toArray.map(_.toDouble)))
+      val train = evenSelect(trainQuota.toSeq).select("id", "vec").localCheckpoint()
+      val centroids = lloydIterate(train, "vec", seeds, iters)
+      // the rebuilt layout streams straight out of the live version, which
+      // stays whole until the post-publish sweep — no need to pin the
+      // corpus in memory
+      writeIvfLayout(lists.select("id", "vec", "norm"), centroids, indexDir, next)
     }
-
-  private def rebalanceLocked(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                              nlistArg: Int, iters: Int,
-                              trainLimit: Int): Unit = {
-    val live = resolveIndexDir(indexDir)
-    // the rebuilt layout holds no PQ codes or codebook, and the sweep
-    // after the publish would delete the live one
-    require(!java.nio.file.Files.exists(java.nio.file.Paths.get(live, "codebook")),
-      s"rebalanceIvfIndex: $indexDir is an IVF-PQ index (its live version holds a " +
-        "codebook); rebalancing would drop its codebook and codes. Rebuild it with " +
-        "buildIvfPqIndex instead")
-    val lists = spark.read.parquet(s"$live/lists")
-    val counts: Array[(Int, Long)] = lists.groupBy("list").agg(count(lit(1)).as("__n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val total = counts.map(_._2).sum
-    require(total > 0, s"rebalanceIvfIndex: empty index at $indexDir")
-    val nlist = if (nlistArg > 0) nlistArg
-      else spark.read.parquet(s"$live/centroids").count().toInt
-    // seed quotas: each existing list receives ceil(size / target) seeds,
-    // where target = total/nlist is the DESIGN occupancy the index was
-    // built for. Balanced lists keep exactly one seed (their existing
-    // neighborhood — a fixed point), while a hot drifted list receives
-    // one seed per target-size slice of its rows, so the rebuilt index
-    // GROWS its list count to give the new region capacity instead of
-    // confiscating centroids from (and degrading recall in) the regions
-    // the index already serves — the list-count lifecycle a growing
-    // corpus needs (nlist here is the target-size divisor, not a cap).
-    val target = math.max(1L, total / nlist)
-    val seedQuota = counts.map { case (lid, n) => (lid, (n + target - 1) / target, n) }
-    // training sample quotas: proportional to occupancy within trainLimit
-    val trainQuota = counts.map { case (lid, n) =>
-      (lid, math.max(1L, trainLimit.toLong * n / total), n)
-    }
-    import spark.implicits._
-    def evenSelect(quota: Seq[(Int, Long, Long)]): DataFrame = {
-      // per list, the q rows whose id-rank satisfies the classic even-
-      // selection predicate ((rn-1)*q) % n < q — exactly q of n, evenly
-      val qdf = broadcast(quota.toDF("list", "__q", "__n"))
-      val w = Window.partitionBy("list").orderBy("id")
-      lists.select(col("list"), col("id"), col("vec"))
-        .withColumn("__rn", row_number().over(w))
-        .join(qdf, "list")
-        .where(((col("__rn") - 1) * col("__q")) % col("__n") < col("__q"))
-    }
-    val seeds = evenSelect(seedQuota)
-      .orderBy("list", "id").select("vec")
-      .collect().map(r => normalized(r.getSeq[Float](0).toArray.map(_.toDouble)))
-    val train = evenSelect(trainQuota.toSeq).select("id", "vec").localCheckpoint()
-    val centroids = lloydIterate(train, "vec", seeds, iters)
-    // the rebuilt layout streams straight out of the OLD version dir,
-    // which stays whole until the post-publish sweep — no need to pin
-    // the corpus in memory
-    val v = nextVersion(indexDir)
-    writeIvfLayout(lists.select("id", "vec"), "id", "vec", centroids, s"$indexDir/$v")
-    publishVersion(indexDir, v)
-    sweepOrphanVersions(indexDir)
-  }
 
   /** The drift policy: rebuild the index iff the largest list exceeds
     * `maxMedianRatio` times the median list (both from [[ivfListStats]]).
@@ -630,27 +556,27 @@ object Similarity {
     skewed
   }
 
-  /** Centroids of a persisted index (nlist rows, driver-side). */
+  /** Centroids of the index version `live` (nlist rows, driver-side). */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String): Array[Array[Double]] =
-    spark.read.parquet(s"${resolveIndexDir(indexDir)}/centroids").orderBy("list").collect()
+                            live: String): Array[Array[Double]] =
+    spark.read.parquet(s"$live/centroids").orderBy("list").collect()
       .map(_.getAs[Seq[Double]]("centroid").toArray)
 
-  /** Shared probe preamble of [[queryIvf]]/[[queryIvfPq]]: the query frame
-    * (query_id, __qvec, __qnorm, list) with probes exploded — PINNED so
-    * the norm + centroid-probe UDFs evaluate once, not once per plan
-    * branch that broadcasts it — and the partition-pruned lists scan. */
-  private def probePreamble(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+  /** Shared probe preamble of [[queryIvf]]/[[queryIvfPq]] over the index
+    * version `live`: the query frame (query_id, __qvec, __qnorm, list) with
+    * probes exploded — PINNED so the norm + centroid-probe UDFs evaluate
+    * once, not once per plan branch that broadcasts it — and the
+    * partition-pruned lists scan. */
+  private def probePreamble(spark: org.apache.spark.sql.SparkSession, live: String,
                             queries: DataFrame, idCol: String, vecCol: String,
                             nprobe: Int): (DataFrame, DataFrame) = {
-    val centroids = loadCentroids(spark, indexDir)
-    val probes = probeUdf(spark, centroids, nprobe)
+    val probes = probeUdf(spark, loadCentroids(spark, live), nprobe)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qvec"),
         norm(col(vecCol)).as("__qnorm"))
       .withColumn("list", explode(probes(col("__qvec"))))
       .localCheckpoint()
     val probedLists = q.select("list").distinct().collect().map(_.getInt(0)).toSeq
-    val lists = spark.read.parquet(s"${resolveIndexDir(indexDir)}/lists")
+    val lists = spark.read.parquet(s"$live/lists")
       .where(col("list").isin(probedLists: _*))
     (q, lists)
   }
@@ -666,7 +592,8 @@ object Similarity {
   def queryIvf(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                queries: DataFrame, idCol: String, vecCol: String,
                k: Int, nprobe: Int = 20): DataFrame = {
-    val (q, lists) = probePreamble(spark, indexDir, queries, idCol, vecCol, nprobe)
+    val (q, lists) = probePreamble(spark, StoreVersions.live(indexDir), queries, idCol,
+      vecCol, nprobe)
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("id"))
     lists
       .join(broadcast(q), Seq("list"))
@@ -806,10 +733,8 @@ object Similarity {
     * recompute; recall on the harness embeddings is
     * EmbeddingRecallSpec-pinned.
     *
-    * Layout (inside the live version dir — the same versioned root +
-    * atomic `_current` publish + [[WriterLock]] as [[buildIvfIndex]]):
-    * `centroids` (list, centroid), `codebook` (sub, code, centroid),
-    * `lists/list=<k>/` (id, vec, norm, codes). */
+    * Layout of a version: `centroids` (list, centroid), `codebook` (sub,
+    * code, centroid), `lists/list=<k>/` (id, vec, norm, codes). */
   def buildIvfPqIndex(embeddings: DataFrame, idCol: String, vecCol: String,
                       indexDir: String, nlist: Int = 64, m: Int = 8,
                       kc: Int = 256, iters: Int = 5,
@@ -817,27 +742,16 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir)): Unit
-    WriterLock.withLock(indexDir, s"ivfpq-build:${java.util.UUID.randomUUID()}") {
+    StoreVersions.commit(indexDir, "ivfpq-build") { (_, next) =>
       val centroids = trainIvfCentroids(embeddings, idCol, vecCol, nlist, iters, trainLimit)
-      val v = nextVersion(indexDir)
-      centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-        .toDF("list", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/$v/centroids")
       val codebook = trainPqCodebook(embeddings, idCol, vecCol, m, kc, iters, trainLimit)
       (for { sub <- codebook.indices; code <- codebook(sub).indices }
         yield (sub, code, codebook(sub)(code).toSeq))
         .toDF("sub", "code", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/$v/codebook")
-      val assign = assignUdf(spark, centroids)
-      val enc = encodeUdf(spark, codebook)
-      embeddings
-        .select(col(idCol).as("id"), col(vecCol).as("vec"), norm(col(vecCol)).as("norm"))
-        .withColumn("codes", enc(col("vec")))
-        .withColumn("list", assign(col("vec")))
-        .repartition(col("list"))
-        .write.mode("overwrite").partitionBy("list").parquet(s"$indexDir/$v/lists")
-      publishVersion(indexDir, v)
-      sweepOrphanVersions(indexDir)
+        .coalesce(1).write.mode("overwrite").parquet(s"$next/codebook")
+      StoreVersions.crashPoint(indexDir, "codebook written")
+      writeIvfLayout(ivfRows(embeddings, idCol, vecCol)
+        .withColumn("codes", encodeUdf(spark, codebook)(col("vec"))), centroids, indexDir, next)
     }
   }
 
@@ -882,9 +796,10 @@ object Similarity {
     }
   }
 
+  /** PQ codebook of the index version `live` (driver-side). */
   private def loadCodebook(spark: org.apache.spark.sql.SparkSession,
-                           indexDir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"${resolveIndexDir(indexDir)}/codebook").collect()
+                           live: String): Array[Array[Array[Double]]] = {
+    val rows = spark.read.parquet(s"$live/codebook").collect()
       .map(r => ((r.getAs[Int]("sub"), r.getAs[Int]("code")),
         r.getAs[Seq[Double]]("centroid").toArray)).toMap
     val m = rows.keys.map(_._1).max + 1
@@ -904,8 +819,9 @@ object Similarity {
   def queryIvfPq(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                  queries: DataFrame, idCol: String, vecCol: String,
                  k: Int, nprobe: Int = 20, shortlistFactor: Int = 10): DataFrame = {
-    val codebook = loadCodebook(spark, indexDir)
-    val (q, lists) = probePreamble(spark, indexDir, queries, idCol, vecCol, nprobe)
+    val live = StoreVersions.live(indexDir)
+    val codebook = loadCodebook(spark, live)
+    val (q, lists) = probePreamble(spark, live, queries, idCol, vecCol, nprobe)
     // the PINNED probe frame already holds the query vectors: one
     // driver-side pass over its nprobe-per-query rows builds the LUTs
     val qVecs = q.select(col("query_id"), col("__qvec")).dropDuplicates("query_id")

@@ -611,7 +611,7 @@ object Tiling {
                         maxPrecision: Int = 4): DataFrame = {
     val prefixes = geohashCovering(latLo, latHi, lonLo, lonHi, maxPrefixes, maxPrecision)
     require(prefixes.nonEmpty, "empty covering: the rect intersects no geohash cell")
-    val df = readLayoutStringParts(spark, dir)
+    val df = readClustered(spark, dir)
     val dirPred = prefixes.map { p =>
       if (p.length >= prefixLen) col("gh_prefix") === p.substring(0, prefixLen)
       else col("gh_prefix").startsWith(p)
@@ -634,7 +634,7 @@ object Tiling {
                         prefix: String, prefixLen: Int = 2): DataFrame = {
     require(prefix.nonEmpty && prefix.forall(GeohashAlphabet.contains(_)),
       s"not a geohash prefix: '$prefix'")
-    val df = readLayoutStringParts(spark, dir)
+    val df = readClustered(spark, dir)
     require(df.columns.contains("gh_prefix") && df.columns.contains("geohash"),
       s"geohashPrefixScan: $dir is not a geohashClusteredWrite layout")
     val dirPred =
@@ -841,26 +841,31 @@ object Tiling {
   final case class CompactStats(compactedPartitions: Int, filesBefore: Int,
                                 filesAfter: Int)
 
-  /** Read a clustered layout with its partition columns (`coarse_tile`,
+  /** Read the live version of a clustered store ([[StoreVersions.live]],
+    * resolved once) with its partition columns (`coarse_tile`,
     * `gh_prefix`) typed as strings: numeric-looking hex tokens ("04",
     * "89") would otherwise be inferred as integers, corrupting the token
     * ("04" -> 4 -> directory `coarse_tile=4`) exactly where the maintenance
-    * ops swap directories by token. A user-specified partition type is
+    * ops address partitions by token. A user-specified partition type is
     * honoured without inference, so the caller's session is never
     * touched. */
-  private def readLayoutStringParts(spark: SparkSession, dir: String): DataFrame = {
-    val schema = StructType(spark.read.parquet(dir).schema.map {
+  private[graft] def readClustered(spark: SparkSession, store: String): DataFrame = {
+    val dir = StoreVersions.live(store)
+    // only the layout's partition directories: a flat store's root also
+    // holds the next version while the first commit builds it
+    val parts = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.contains("=")).map(_.getPath).sorted.toSeq
+    val schema = StructType(spark.read.option("basePath", dir).parquet(parts: _*).schema.map {
       case f if f.name == "coarse_tile" || f.name == "gh_prefix" => f.copy(dataType = StringType)
       case f => f
     })
-    spark.read.schema(schema).parquet(dir)
+    spark.read.option("basePath", dir).schema(schema).parquet(parts: _*)
   }
 
   /** MERGE (upsert) a batch into a [[clusteredWrite]] layout, rewriting ONLY
     * the coarse-tile partitions the batch touches — the table-maintenance
     * operation a mutable geo catalog runs on every ingest, shaped like an
-    * Iceberg MERGE commit: stage replacement files, then swap them in as a
-    * per-partition metadata move.
+    * Iceberg MERGE commit (one [[StoreVersions.commit]]).
     *
     * Semantics: rows whose `keyCol` appears in `updates` are replaced (rows
     * may MOVE to a different coarse tile — the old copy is found and
@@ -870,14 +875,12 @@ object Tiling {
     * Scale shape: victim partitions are found by ONE key-semi-join scan
     * that reads only (key, partition) columns; the rewrite reads and
     * shuffles ONLY touched partitions; untouched partition directories are
-    * never opened for data. The staged-dir swap is local-fs rename here —
-    * on an object store this step is the atomic metadata commit a table
-    * format provides; pair with [[ResumableWrite]] manifests for lineage. */
+    * never opened for data. */
   def mergeClustered(spark: SparkSession, dir: String, updates: DataFrame,
                      keyCol: String, latCol: String, lonCol: String,
                      coarseLevel: Int = 5): MergeStats =
-      WriterLock.withLock(dir, s"mergeClustered:${java.util.UUID.randomUUID()}") {
-    val existing = readLayoutStringParts(spark, dir)
+      StoreVersions.commit(dir, "mergeClustered") { (live, next) =>
+    val existing = readClustered(spark, live)
     require(existing.columns.contains("coarse_tile") &&
       existing.columns.contains("__leaf_ord"),
       s"mergeClustered: $dir is not a clusteredWrite layout (coarse_tile/__leaf_ord missing)")
@@ -890,7 +893,7 @@ object Tiling {
           .as("nulls")).head()
     // null keys can't be matched and null coordinates can't be placed — a
     // null coarse tile would otherwise land in __HIVE_DEFAULT_PARTITION__
-    // and corrupt the token-addressed directory swap
+    // and corrupt the token-addressed partition rewrite
     require(batchStats.getLong(2) == 0,
       s"mergeClustered: batch has ${batchStats.getLong(2)} rows with null " +
         s"'$keyCol'/'$latCol'/'$lonCol' — filter or default them first")
@@ -915,7 +918,7 @@ object Tiling {
     val survivors = existing.where(col("coarse_tile").isin(touched: _*))
       .join(broadcast(keys), Seq(keyCol), "left_anti")
     val merged = survivors.unionByName(incoming.select(survivors.columns.map(col): _*))
-    val (stagedRows, removed) = rewritePartitions(spark, dir, touched, merged)
+    val (stagedRows, removed) = rewritePartitions(dir, live, next, touched, merged)
     MergeStats(touched.length, removed, stagedRows)
   }
 
@@ -930,20 +933,19 @@ object Tiling {
                        minFilesToCompact: Int = 2): CompactStats = {
     require(minFilesToCompact >= 2,
       s"compactClustered: minFilesToCompact must be >= 2, got $minFilesToCompact")
-    WriterLock.withLock(dir, s"compactClustered:${java.util.UUID.randomUUID()}") {
-      val inventory = partitionFileCounts(dir)
+    StoreVersions.commit(dir, "compactClustered") { (live, next) =>
+      val inventory = partitionFileCounts(live)
       val toCompact = inventory.filter(_._2 >= minFilesToCompact)
       if (toCompact.isEmpty)
         CompactStats(0, inventory.map(_._2).sum, inventory.map(_._2).sum)
       else {
         val tokens = toCompact.map(_._1)
-        val rows = readLayoutStringParts(spark, dir)
-          .where(col("coarse_tile").isin(tokens: _*))
-        val (_, removed) = rewritePartitions(spark, dir, tokens, rows)
+        val rows = readClustered(spark, live).where(col("coarse_tile").isin(tokens: _*))
+        val (_, removed) = rewritePartitions(dir, live, next, tokens, rows)
         require(removed == 0,
           s"compactClustered: $removed partitions vanished during compaction — " +
             "layout mutated concurrently")
-        val after = partitionFileCounts(dir)
+        val after = partitionFileCounts(next)
         CompactStats(toCompact.length, inventory.map(_._2).sum, after.map(_._2).sum)
       }
     }
@@ -961,31 +963,26 @@ object Tiling {
       }
   }
 
-  /** Stage `rows` (repartitioned + sorted per the clustered layout) into a
-    * temp dir, then swap each touched partition's directory for its staged
-    * replacement (delete when nothing was staged — the partition lost all
-    * its rows). Returns (staged row count, partitions removed). */
-  private def rewritePartitions(spark: SparkSession, dir: String,
+  /** Build version `next` of clustered store `dir` from `live`: link every
+    * partition not in `touched`, then write `rows` (repartitioned + sorted
+    * per the clustered layout) as the touched ones; a touched partition
+    * that gets no rows is gone. Returns (rows written, partitions
+    * removed). */
+  private def rewritePartitions(dir: String, live: String, next: String,
                                 touched: Seq[String], rows: DataFrame): (Long, Int) = {
     import java.nio.file.{Files, Paths}
-    touched.foreach(t => require(t.matches("[0-9a-fX]+"),
-      s"rewritePartitions: unexpected coarse_tile token '$t'"))
-    val staging = Paths.get(dir + "_staging_" + java.util.UUID.randomUUID().toString.take(8))
+    Files.createDirectories(Paths.get(next))
+    for ((t, _) <- partitionFileCounts(live) if !touched.contains(t))
+      StoreVersions.link(s"$live/coarse_tile=$t", s"$next/coarse_tile=$t")
+    StoreVersions.crashPoint(dir, "linked")
     val obs = org.apache.spark.sql.Observation()
     rows.observe(obs, count(lit(1)).as("n"))
       .repartition(col("coarse_tile"))
       .sortWithinPartitions("coarse_tile", "__leaf_ord")
-      .write.mode("overwrite").partitionBy("coarse_tile").parquet(staging.toString)
-    val stagedRows = obs.get("n").asInstanceOf[Long]
-    var removed = 0
-    for (t <- touched) {
-      val dst = Paths.get(dir, s"coarse_tile=$t")
-      val src = staging.resolve(s"coarse_tile=$t")
-      ResumableWrite.deleteRecursively(dst)
-      if (Files.exists(src)) Files.move(src, dst) else removed += 1
-    }
-    ResumableWrite.deleteRecursively(staging)
-    (stagedRows, removed)
+      .write.mode("append").partitionBy("coarse_tile").parquet(next)
+    StoreVersions.crashPoint(dir, "written")
+    (obs.get("n").asInstanceOf[Long],
+      touched.count(t => !Files.exists(Paths.get(next, s"coarse_tile=$t"))))
   }
 
   /** Read a clustered table restricted to the cells of a covering: the
@@ -1016,7 +1013,7 @@ object Tiling {
     // ...) would otherwise infer coarse_tile as an integer and the string
     // IN-list would silently prune EVERYTHING (leading zeros don't survive
     // the int round-trip)
-    readLayoutStringParts(spark, dir)
+    readClustered(spark, dir)
       .where(col("coarse_tile").isin(coarse: _*))
       .where(rangePred)
   }

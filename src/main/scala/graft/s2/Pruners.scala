@@ -1,9 +1,8 @@
 package graft.s2
 
-/** Cheap chain-rejection tests (`OpenSky.S2Geometry/S2EdgeUtil.cs:396-500,
-  * 703-734`): executor-side micro-optimizations for long vertex chains. The
-  * engine's plan-level analogue is the rect-bound pushdown
-  * (`PushS2RegionBounds`), but these are kept for chain-local use. */
+/** Cheap chain-rejection test (`OpenSky.S2Geometry/S2EdgeUtil.cs:703-734`):
+  * an executor-side micro-optimization for long vertex chains. The engine's
+  * plan-level analogue is the rect-bound pushdown (`PushS2RegionBounds`). */
 
 /** Rejects chain edges whose longitude span cannot intersect the given
   * interval (`S2EdgeUtil.cs:703-734`). */
@@ -15,57 +14,6 @@ final class LongitudePruner(interval: S1Interval, v0: S2Point) {
     val lng1 = S2LatLng.longitude(v1)
     val result = interval.intersects(S1Interval.fromPointPair(lng0, lng1))
     lng0 = lng1
-    result
-  }
-}
-
-/** Deformation-aware xyz bounding box for chain-vs-region quick rejection
-  * (`S2EdgeUtil.cs:396-500`). */
-final class XyzPruner {
-  private var boundSet = false
-  private var lastVertex: S2Point = _
-  private var maxDeformation = 0.0
-  private var xmin, ymin, zmin = 0.0
-  private var xmax, ymax, zmax = 0.0
-
-  /** Grow the bound by an edge, padding for geodesic deformation. */
-  def addEdgeToBounds(from: S2Point, to: S2Point): Unit = {
-    if (!boundSet) {
-      boundSet = true
-      xmin = from.x; xmax = from.x
-      ymin = from.y; ymax = from.y
-      zmin = from.z; zmax = from.z
-    }
-    xmin = math.min(xmin, math.min(to.x, from.x))
-    ymin = math.min(ymin, math.min(to.y, from.y))
-    zmin = math.min(zmin, math.min(to.z, from.z))
-    xmax = math.max(xmax, math.max(to.x, from.x))
-    ymax = math.max(ymax, math.max(to.y, from.y))
-    zmax = math.max(zmax, math.max(to.z, from.z))
-
-    // geodesics bow outside the endpoint box; pad by an empirical bound on
-    // the deformation as a function of arc length
-    val approxArcLen =
-      math.abs(from.x - to.x) + math.abs(from.y - to.y) + math.abs(from.z - to.z)
-    if (approxArcLen < 0.025) maxDeformation = math.max(maxDeformation, approxArcLen * 0.0025)
-    else if (approxArcLen < 1.0) maxDeformation = math.max(maxDeformation, approxArcLen * 0.11)
-    else maxDeformation = approxArcLen * 0.5
-  }
-
-  def setFirstIntersectPoint(v0: S2Point): Unit = {
-    xmin -= maxDeformation; ymin -= maxDeformation; zmin -= maxDeformation
-    xmax += maxDeformation; ymax += maxDeformation; zmax += maxDeformation
-    lastVertex = v0
-  }
-
-  /** False only if the edge from the previous point to v1 certainly misses
-    * the bound; saves v1 as the next chain point. */
-  def intersects(v1: S2Point): Boolean = {
-    var result = true
-    if ((v1.x < xmin && lastVertex.x < xmin) || (v1.x > xmax && lastVertex.x > xmax)) result = false
-    else if ((v1.y < ymin && lastVertex.y < ymin) || (v1.y > ymax && lastVertex.y > ymax)) result = false
-    else if ((v1.z < zmin && lastVertex.z < zmin) || (v1.z > zmax && lastVertex.z > zmax)) result = false
-    lastVertex = v1
     result
   }
 }

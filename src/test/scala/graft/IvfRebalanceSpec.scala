@@ -204,7 +204,23 @@ class IvfRebalanceSpec extends SparkTestBase {
       assert(!orphan.exists(), "locked maintenance must sweep orphan versions")
       val liveNow = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(idx, "_current"))).trim
-      assert(liveNow == live, "an append does not publish a new version")
+      assert(liveNow == s"v${live.drop(1).toLong + 1}", "an append publishes exactly one version")
+    }
+  }
+
+  test("appending to an IVF-PQ index encodes the batch: queryIvfPq finds an appended row") {
+    withTempDir("ivfpq_append") { idx =>
+      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", idx, nlist = 16)
+      // exact copies of five query vectors under new ids: each is its
+      // query's nearest neighbour (cosine 1)
+      val copies = emb.where(col("vec_id") < 5)
+        .select((col("vec_id") + 9000000L).as("vec_id"), col("embedding"))
+      assert(!Similarity.appendToIvfIndex(copies, "vec_id", "embedding", idx))
+      val got = Similarity.queryIvfPq(spark, idx,
+        emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 3)
+        .where(col("rank") === 1)
+        .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(got.toSet == (0L until 5L).map(q => (q, q + 9000000L)).toSet, got.mkString(","))
     }
   }
 }

@@ -58,7 +58,8 @@ class ResumableWriteSpec extends SparkTestBase {
     withTempDir("resumable2") { outDir =>
       val df = tiledPoints
       // simulate a crash mid-write: a stale temp root for THIS runId, plus a
-      // foreign runId's root that must be left alone (concurrent writer)
+      // foreign runId's root; the run holds the store's writer lock, so no
+      // other run is live and that root is a crashed run's debris too
       val torn = java.nio.file.Paths.get(outDir, "_tmp_recovery")
       Files.createDirectories(torn)
       Files.write(torn.resolve("garbage"), Array[Byte](1, 2, 3))
@@ -69,7 +70,7 @@ class ResumableWriteSpec extends SparkTestBase {
       val readBack = ResumableWrite.readCommitted(spark, outDir, "tile_token").count()
       assert(readBack == df.count())
       assert(!Files.exists(torn))
-      assert(Files.exists(foreign), "a concurrent writer's temp root must not be deleted")
+      assert(!Files.exists(foreign), "a crashed run's temp root is swept whatever its runId")
     }
   }
 

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Tiling
+import graft.operators.{StoreVersions, Tiling}
 
 /** Clustered-layout maintenance: MERGE rewrites exactly the touched
   * partitions (untouched files byte-identical), keys move across partitions
@@ -20,9 +20,10 @@ class TableMaintenanceSpec extends SparkTestBase {
   private def withStoreDir[T](tag: String)(body: String => T): T =
     withTempDir(s"graft_tm_$tag")(root => body(s"$root/store"))
 
-  /** (partition token -> file names) snapshot of a clustered layout. */
+  /** (partition token -> file names) snapshot of a clustered layout's live
+    * version. */
   private def layoutSnapshot(dir: String): Map[String, Set[String]] =
-    Files.list(Paths.get(dir)).iterator().asScala
+    Files.list(Paths.get(StoreVersions.live(dir))).iterator().asScala
       .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("coarse_tile="))
       .map { p =>
         p.getFileName.toString.stripPrefix("coarse_tile=") ->
@@ -43,7 +44,7 @@ class TableMaintenanceSpec extends SparkTestBase {
 
   private def readBack(dir: String): Set[(Long, Double, Double)] = {
     import spark.implicits._
-    spark.read.parquet(dir).select("id", "lat", "lon")
+    spark.read.parquet(StoreVersions.live(dir)).select("id", "lat", "lon")
       .as[(Long, Double, Double)].collect().toSet
   }
 
@@ -157,7 +158,7 @@ class TableMaintenanceSpec extends SparkTestBase {
 
       // per-file sort restored: __leaf_ord non-decreasing inside each file
       for (t <- fragmented) {
-        val f = Files.list(Paths.get(dir, s"coarse_tile=$t")).iterator().asScala
+        val f = Files.list(Paths.get(StoreVersions.live(dir), s"coarse_tile=$t")).iterator().asScala
           .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
         val ords = spark.read.parquet(f.toString).select("__leaf_ord")
           .as[Long].collect()
