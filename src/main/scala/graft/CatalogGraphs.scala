@@ -176,13 +176,12 @@ private[graft] object CatalogGraphs {
     // committed round, abandon the session state, resume from the durable
     // round-1 manifest to completion — final ranks must be hash-identical
     // to the one-shot oracle (integer rounds make resume bit-safe)
-    "q_pagerank_resume" -> ((s, dir) => {
+    "q_pagerank_resume" -> ((s, dir) => scratchStore(s, "graft_pr_state_") { state =>
       val pts = customer(s, dir).select("c_custkey")
         .withColumn("lat", expr(CustLatSql))
         .withColumn("lon", expr(CustLonSql))
       val edges = SpatialJoin.distanceJoin(pts, "lat", "lon", "c_custkey", radiusM = 500000.0)
         .select("id_a", "id_b")
-      val state = java.nio.file.Files.createTempDirectory("graft_pr_state_").toString
       Graphs.pageRankCheckpointed(edges, rounds = 3, state, maxRoundsThisRun = 1)
       Graphs.pageRankCheckpointed(edges, rounds = 3, state)
     }),

@@ -586,9 +586,8 @@ private[graft] object CatalogTiling {
     // smallest — the write's documented sorted commit order), and the
     // snapshot read at run 1 must see exactly those, with run 2's
     // partitions invisible
-    "q_snapshot_read" -> ((s, dir) => {
+    "q_snapshot_read" -> ((s, dir) => scratchStore(s, "graft_snapshot") { tmp =>
       val docs = documents(s, dir).select("doc_id", "lang")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_snapshot").toString + "/t"
       ResumableWrite.write(docs, tmp, "lang", "run_1", input = dir,
         maxPartitionsThisRun = 2)
       ResumableWrite.write(docs, tmp, "lang", "run_2", input = dir)

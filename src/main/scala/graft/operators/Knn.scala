@@ -1,27 +1,30 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.s2functions._
 import graft.s2._
 
-/** k-nearest-neighbor join via cell-neighbor ring expansion.
+/** k-nearest-neighbor join via cell-neighbor ring expansion, in two scans of
+  * the points:
   *
-  * Two exact phases, both broadcast-only on the big side:
-  *
-  *  - Phase A (bound discovery): starting from each query's cell at
-  *    `startLevel`, expand rings of neighbors (`GetAllNeighbors`,
-  *    `S2CellId.cs:813-863`) until the candidate cells hold >= k points per
-  *    query; the k-th smallest candidate distance is then an upper bound
-  *    d_k on the true k-th neighbor distance. Each round is one broadcast
-  *    semi-join + count — the ring sets stay tiny.
-  *  - Phase B (exact): a spherical cap of radius d_k per query is covered
+  *  - Population: one aggregate counts the points of each `startLevel` cell.
+  *    Only rows the probe can match count; like [[SpatialJoin.pipJoin]], it
+  *    skips a NULL or non-finite coordinate.
+  *  - Bound (driver only): from each query's cell, rings of neighbors
+  *    (`GetAllNeighbors`, `S2CellId.cs:813-863`) are added until the covered
+  *    cells hold >= k points. A point of cell c lies within
+  *    `angle(q, c.capBound.axis) + c.capBound.angle` of the query q, so the
+  *    largest such angle over the populated covered cells bounds the k-th
+  *    neighbor distance. A query whose rings still hold < k points after
+  *    `maxRounds` rounds takes the whole sphere (exact, just unpruned).
+  *  - Exact top-k: a spherical cap of that radius per query is covered
   *    ([[S2RegionCoverer]]) and fed through the covering join; every true
   *    neighbor lies inside by construction. Exact haversine distance +
-  *    `row_number()` top-k finishes the job with a partial-aggregated
-  *    shuffle that only carries candidate rows.
+  *    `row_number()` over `(distance_m, idCols.head)` keeps the k nearest,
+  *    with a shuffle that only carries candidate rows.
   *
   * The reference's analogue is the linear min-scan over loop vertices
   * (`S2Loop.cs:841-854`) plus ring expansion via `S2CellUnion.Expand`
@@ -46,73 +49,34 @@ object Knn {
 
     require(queries.nonEmpty && k > 0)
 
-    val withLeaf = points.withColumn("__leaf", s2_cell_id(col(latCol), col(lonCol)))
-
-    // --- Phase A: ring expansion until every query has >= k candidates ---
-    // One pass precomputes per-cell population at startLevel (bounded by the
-    // cell count at that level, e.g. ~393k cells at level 8 for the whole
-    // planet), so the ring expansion itself is a pure driver-side loop —
-    // the big table is scanned exactly 3x total regardless of ring count.
-    val cellPop: Map[Long, Long] = withLeaf
-      .groupBy(s2_parent(col("__leaf"), startLevel).as("__cell"))
+    // NULL, NaN and +-Inf all fail `< Infinity`
+    def finite(c: String) = abs(col(c)) < Double.PositiveInfinity
+    val cellPop: Map[Long, Long] = points
+      .where(finite(latCol) && finite(lonCol))
+      .groupBy(s2_tile(col(latCol), col(lonCol), startLevel).as("__cell"))
       .count()
       .as[(Long, Long)].collect().toMap
 
-    var frontier: Map[String, Set[Long]] = queries.map { case (qid, lat, lon) =>
-      qid -> Set(S2CellId.parentForLevel(S2CellId.fromLatLngDegrees(lat, lon), startLevel))
-    }.toMap
-    var covered: Map[String, Set[Long]] = frontier
-
-    val queryDf = queries.toDF("__qid", "__qlat", "__qlon")
-
-    def countOf(cells: Set[Long]): Long = cells.iterator.map(cellPop.getOrElse(_, 0L)).sum
-
-    var round = 0
-    while (round < maxRounds && queries.exists { case (qid, _, _) => countOf(covered(qid)) < k }) {
-      // expand the ring for under-filled queries only
-      val next = covered.map { case (qid, cs) =>
-        if (countOf(cs) >= k) qid -> cs
-        else {
-          val ring = frontier(qid).flatMap(c => S2CellId.allNeighbors(c, startLevel)) -- cs
-          qid -> (cs ++ ring)
-        }
-      }
-      frontier = covered.keys.map(qid => qid -> (next(qid) -- covered(qid))).toMap
-      covered = next
-      round += 1
-    }
-
-    // queries whose expanded rings still hold < k points: a d_k computed
-    // from fewer than k candidates would NOT bound the true k-th neighbor
-    // distance, so these fall back to the whole sphere in Phase B (exact,
-    // just unpruned) rather than silently returning incomplete results
-    val underfilled: Set[String] =
-      queries.collect { case (qid, _, _) if countOf(covered(qid)) < k => qid }.toSet
-
-    // k-th smallest candidate distance per query = upper bound d_k
-    val candCellDf = covered.toSeq.flatMap { case (qid, cs) => cs.map(c => (qid, c)) }
-      .toDF("__qid", "__cell")
-    val w = Window.partitionBy("__qid").orderBy(col("__d"), col(idCols.head))
-    val dk: Map[String, Double] = withLeaf
-      .withColumn("__cell", s2_parent(col("__leaf"), startLevel))
-      .join(broadcast(candCellDf), "__cell")
-      .join(broadcast(queryDf), "__qid")
-      .withColumn("__d", s2_distance_m(col(latCol), col(lonCol), col("__qlat"), col("__qlon")))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k)
-      .groupBy("__qid").agg(max("__d").as("__dk"))
-      .as[(String, Double)].collect().toMap
-
-    // --- Phase B: exact top-k inside the d_k cap covering ---
     val regions: Seq[(String, S2Region)] = queries.map { case (qid, lat, lon) =>
       val axis = S2LatLng.fromDegrees(lat, lon).toPoint
-      val dkM =
-        if (underfilled(qid)) math.Pi * S2LatLng.EarthRadiusMeters
-        else dk.getOrElse(qid, math.Pi * S2LatLng.EarthRadiusMeters)
-      val angle = math.min(math.Pi, dkM / S2LatLng.EarthRadiusMeters * (1 + 1e-9) + 1e-12)
+      val start = Set(S2CellId.parentForLevel(S2CellId.fromLatLngDegrees(lat, lon), startLevel))
+      // the covered cells after 0, 1, ..., maxRounds rings: the first that
+      // holds >= k points
+      val filled = Iterator.iterate((start, start)) { case (covered, ring) =>
+        val next = ring.flatMap(S2CellId.allNeighbors(_, startLevel)) -- covered
+        (covered ++ next, next)
+      }.map(_._1).take(maxRounds + 1).find(_.iterator.map(cellPop.getOrElse(_, 0L)).sum >= k)
+      val angle = filled.fold(math.Pi) { cells =>
+        val bound = cells.iterator.filter(cellPop.contains).map { c =>
+          val cap = S2Cell(c).capBound
+          axis.angle(cap.axis) + cap.angle
+        }.max
+        math.min(math.Pi, bound * (1 + 1e-9) + 1e-12)
+      }
       qid -> (S2Cap.fromAxisAngle(axis, angle): S2Region)
     }
 
+    val queryDf = queries.toDF("__qid", "__qlat", "__qlon")
     val wFinal = Window.partitionBy("__qid").orderBy(col("distance_m"), col(idCols.head))
     SpatialJoin.pipJoin(points, latCol, lonCol, regions, maxCells = 32)
       .withColumnRenamed("region_id", "__qid")

@@ -1,6 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.functions.s2functions._
 import graft.operators._
@@ -10,7 +19,7 @@ import graft.s2._
   * driver-side brute-force evaluation using the same kernel — the covering
   * join must return exactly the rows the reference's `Contains` semantics
   * accept. */
-class OperatorSpec extends SparkTestBase {
+class OperatorSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private val dir = sf("sf0.001")
 
@@ -133,6 +142,92 @@ class OperatorSpec extends SparkTestBase {
     assert(result == expected)
     assert(result.map(_._2).intersect(Set(1L, 2L, 3L)).size == 3,
       "near points present plus the true far 4th/5th neighbors")
+  }
+
+  /** The (key, rank) rows knnJoin returns for one query, in rank order, and
+    * the brute-force top-k over the rows with finite coordinates. */
+  private def knnVsBrute(pts: DataFrame, q: (String, Double, Double),
+                         k: Int): (Seq[(Long, Int)], Seq[(Long, Int)]) = {
+    val got = Knn.knnJoin(pts, "lat", "lon", Seq("key"), Seq(q), k)
+      .select("key", "rank").orderBy("rank")
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    val qll = S2LatLng.fromDegrees(q._2, q._3)
+    val expected = pts.collect().toSeq
+      .filter(r => !r.isNullAt(1) && !r.isNullAt(2) &&
+        java.lang.Double.isFinite(r.getDouble(1)) && java.lang.Double.isFinite(r.getDouble(2)))
+      .map(r => (r.getLong(0), S2LatLng.fromDegrees(r.getDouble(1), r.getDouble(2)).getEarthDistance(qll)))
+      .sortBy(t => (t._2, t._1)).take(k).map(_._1).zipWithIndex.map { case (key, i) => (key, i + 1) }
+    (got, expected)
+  }
+
+  /** Three points around the centre of the level-8 cell that
+    * `s2_cell_id(NaN, NaN)` = 0x4000000000000001 falls in: two in that cell,
+    * the third outside it, plus one `bad` row. */
+  private def aroundNanCell(bad: (Long, Option[Double], Option[Double])) = {
+    import spark.implicits._
+    val (qlat, qlon) = (35.405416, 45.0)
+    def cell(lat: Double, lon: Double) = S2CellId.parentForLevel(S2CellId.fromLatLngDegrees(lat, lon), 8)
+    assert(cell(qlat, qlon) == cell(Double.NaN, Double.NaN))
+    assert(cell(35.415, 45.0) == cell(qlat, qlon) && cell(35.405, 45.012) == cell(qlat, qlon))
+    assert(cell(35.7, 45.0) != cell(qlat, qlon))
+    val pts = Seq((1L, Option(35.415), Option(45.0)), (2L, Option(35.405), Option(45.012)),
+      (3L, Option(35.7), Option(45.0)), bad).toDF("key", "lat", "lon")
+    (pts, ("q", qlat, qlon))
+  }
+
+  test("knnJoin skips a NaN point: it does not count toward the ring population") {
+    val (pts, q) = aroundNanCell((4L, Some(Double.NaN), Some(Double.NaN)))
+    val (got, expected) = knnVsBrute(pts, q, k = 3)
+    assert(expected.map(_._1) == Seq(1L, 2L, 3L))
+    assert(got == expected)
+  }
+
+  test("knnJoin skips a NULL point") {
+    val (pts, q) = aroundNanCell((4L, None, None))
+    val (got, expected) = knnVsBrute(pts, q, k = 3)
+    assert(expected.map(_._1) == Seq(1L, 2L, 3L))
+    assert(got == expected)
+  }
+
+  test("knnJoin breaks a tie at the k-th distance by the smaller id") {
+    import spark.implicits._
+    // 7 and 3 mirror each other across the equator; k = 2 cuts between them
+    val pts = Seq((7L, 0.5, 0.0), (3L, -0.5, 0.0), (5L, 0.0, 0.25), (9L, 10.0, 10.0))
+      .toDF("key", "lat", "lon")
+    val q = S2LatLng.fromDegrees(0.0, 0.0)
+    assert(S2LatLng.fromDegrees(0.5, 0.0).getEarthDistance(q) ==
+      S2LatLng.fromDegrees(-0.5, 0.0).getEarthDistance(q))
+    val (got, expected) = knnVsBrute(pts, ("q", 0.0, 0.0), k = 2)
+    assert(expected == Seq((5L, 1), (3L, 2)))
+    assert(got == expected)
+  }
+
+  test("knnJoin scans the points twice and joins only on the query id") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(Knn.knnJoin(pointsDf, "lat", "lon", Seq("o_orderkey"),
+        Seq(("qa", 48.2, 16.37), ("qb", -33.87, 151.2)), k = 5, startLevel = 4).collect().length == 10)
+      ListenerBridge.drain(spark)
+    } finally spark.listenerManager.unregister(listener)
+    val executed = plans.asScala.toSeq
+    def all[T](pf: PartialFunction[SparkPlan, T]): Seq[T] = executed.flatMap(collectWithSubqueries(_)(pf))
+    val shown = executed.mkString("\n")
+    assert(all { case s: FileSourceScanExec => s }.size == 2, s"expected two scans of the points in:\n$shown")
+    val joins = all { case j: BaseJoinExec => j }
+    assert(joins.nonEmpty, shown)
+    for (j <- joins) {
+      val keys = j.leftKeys ++ j.rightKeys
+      assert(keys.nonEmpty && keys.forall {
+        case a: AttributeReference => a.name == "__qid"
+        case _ => false
+      }, s"join not keyed on the query id: $j")
+    }
   }
 
   test("distanceJoin == brute force haversine pairs at several radii") {

@@ -26,7 +26,7 @@ class StreamingUpsertSpec extends SparkTestBase {
 
   private def content(dir: String): Set[(Long, Double, Double)] = {
     import spark.implicits._
-    spark.read.parquet(dir).select("id", "lat", "lon")
+    Tiling.readClustered(spark, dir).select("id", "lat", "lon")
       .as[(Long, Double, Double)].collect().toSet
   }
 

@@ -97,8 +97,8 @@ class TableMaintenanceSpec extends SparkTestBase {
       assert(stats.removedPartitions >= 1, s"expected a removed partition, got $stats")
       val remaining = layoutSnapshot(dir).keySet
       assert(remaining.subsetOf(northTokens))
-      assert(spark.read.parquet(dir).count() == 100)
-      assert(spark.read.parquet(dir).where(col("lat") > 0).count() == 0)
+      assert(Tiling.readClustered(spark, dir).count() == 100)
+      assert(Tiling.readClustered(spark, dir).where(col("lat") > 0).count() == 0)
     }
   }
 
